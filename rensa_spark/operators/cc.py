@@ -4,16 +4,17 @@ The reference's README dedup recipe (/root/reference/README.md:100-122) is a
 greedy "keep min id per verified pair" loop; its transitive closure is
 exactly connected components with min-id labels. Implemented as the
 alternating large-star / small-star algorithm (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14) as iterative DataFrame joins —
-O(log n) rounds, each round one groupBy + one join, with per-round
-localCheckpoint to truncate lineage (SURVEY.md §7 hard part 4).
+Components in MapReduce and Beyond", SoCC'14) as iterative DataFrame passes
+— O(log n) rounds, each star one ``min over Window.partitionBy(src)`` (one
+exchange, no join back), with per-round localCheckpoint to truncate lineage
+(SURVEY.md §7 hard part 4).
 
 Output: (key, cluster_id) where cluster_id = min key of the component.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -25,31 +26,35 @@ def _symmetrize(edges: DataFrame) -> DataFrame:
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """For each node u: attach every strictly-larger neighbor to
-    min(N(u) ∪ {u})."""
-    nbrs = _symmetrize(edges)
-    mins = nbrs.groupBy("src").agg(F.min("dst").alias("min_nbr"))
+    min(N(u) ∪ {u}). The result may repeat an edge (at most one row per
+    input edge direction): its only consumer, :func:`_small_star`, takes a
+    min and a distinct over it, so a distinct here would only add an
+    exchange."""
+    nbrs = _symmetrize(edges).withColumn(
+        "min_nbr", F.min("dst").over(Window.partitionBy("src"))
+    )
     m = F.least(F.col("src"), F.col("min_nbr"))
     return (
-        nbrs.join(mins, "src")
-        .filter(F.col("dst") > F.col("src"))
+        nbrs.filter(F.col("dst") > F.col("src"))
         .select(F.col("dst").alias("src"), m.alias("dst"))
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
     )
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
     """For each node u: attach u and all smaller-or-equal neighbors to the
     minimum of that set."""
-    nbrs = _symmetrize(edges).filter(F.col("dst") <= F.col("src"))
-    mins = nbrs.groupBy("src").agg(F.min("dst").alias("min_nbr"))
-    attached = (
-        nbrs.join(mins, "src")
-        .select(F.col("dst").alias("src"), F.col("min_nbr").alias("dst"))
+    nbrs = (
+        _symmetrize(edges)
+        .filter(F.col("dst") <= F.col("src"))
+        .withColumn("min_nbr", F.min("dst").over(Window.partitionBy("src")))
     )
-    self_edges = mins.select(F.col("src"), F.col("min_nbr").alias("dst"))
+    # the neighbors (dst) and u itself (src) all attach to min_nbr
     return (
-        attached.union(self_edges)
+        nbrs.select(
+            F.explode(F.array("dst", "src")).alias("src"),
+            F.col("min_nbr").alias("dst"),
+        )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
@@ -60,45 +65,39 @@ def connected_components(
     src_col: str = "a",
     dst_col: str = "b",
     max_iterations: int = 25,
-    checkpoint_each_round: bool = True,
 ) -> DataFrame:
     """(a, b) undirected edges -> (key, cluster_id=min of component).
 
     Isolated nodes are not emitted; callers left-join and coalesce
     (cluster_id := own key) for singleton semantics.
+
+    Each round is ONE eager checkpoint: the round fingerprint
+    (edge count, bit_xor of per-edge xxhash64 — a cheap probabilistic
+    set-equality) rides along as an Observation on that same job, so a
+    round costs no separate aggregate, and an empty input stops after its
+    first (empty) round without a probe of its own.
     """
     edges = (
         pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    if checkpoint_each_round:
-        # materialize once: the input lineage (pair generation + verify) is
-        # otherwise re-evaluated by each of round 1's two self-references
-        edges = edges.localCheckpoint(eager=True)
-    if not edges.take(1):
-        return edges.select(
-            F.col("src").alias("key"), F.col("dst").alias("cluster_id")
-        )
-
-    def _fingerprint(e: DataFrame) -> tuple:
-        # cheap probabilistic set-equality: (count, sum of per-edge hashes)
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
     prev_fp = None
     for _ in range(max_iterations):
-        new_edges = _small_star(_large_star(edges))
-        if checkpoint_each_round:
-            new_edges = new_edges.localCheckpoint(eager=True)
-        fp = _fingerprint(new_edges)
-        edges = new_edges
+        obs = Observation()
+        edges = (
+            _small_star(_large_star(edges))
+            .observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        fp = (obs.get["n"], obs.get["h"])
         # converged when the edge set is stable round-over-round (it is then
         # a star forest rooted at component minima — fixpoint of both stars)
-        if fp == prev_fp:
+        if fp[0] == 0 or fp == prev_fp:
             break
         prev_fp = fp
 

@@ -22,7 +22,6 @@ from rensa_spark.functions.udfs import (
     rminhash_bands_udf,
 )
 from rensa_spark.operators.cc import connected_components, survivors
-from rensa_spark.operators.lsh import candidate_pairs
 
 
 def sketch_rminhash(
@@ -77,38 +76,40 @@ def verified_pairs(
 ) -> DataFrame:
     """Candidate pairs from band co-membership, verified by signature-slot
     jaccard >= threshold (README.md:100-122 recipe). Input needs `sig` and
-    `bands` columns. Signatures are re-joined to pairs rather than carried
-    through the band explode (keeps the wide column out of the band shuffle).
-    ``capped_metrics`` forwards to candidate_pairs (CollectMetrics signal;
-    pass an Observation to read bucket stats after the first action)."""
-    pairs = candidate_pairs(
-        sketched.select(F.col(key_col).alias("key"), "bands"),
-        "key",
-        hot_bucket_cap=cfg.hot_bucket_cap,
-        # >cap buckets: exact in-task verify up to exact_task_cap members
-        # (capped == uncapped), hub + sig-sorted ring beyond that
-        sort_keys=sketched.select(
-            F.col(key_col).alias("key"), F.col("sig").alias("sort_key")
-        ),
-        verify_threshold=cfg.threshold,
+    `bands` columns; the band arrays are exploded into the band-row layout
+    of :func:`verified_pairs_from_band_rows`."""
+    from rensa_spark.operators.lsh import explode_bands
+
+    return verified_pairs_from_band_rows(
+        explode_bands(sketched, key_col),
+        sketched.select(F.col(key_col).alias("key"), "sig"),
+        cfg,
         capped_metrics=capped_metrics,
     )
-    sigs = sketched.select(F.col(key_col).alias("key"), "sig")
-    return _verify_pairs(pairs, sigs, cfg)
 
 
 def verified_pairs_from_band_rows(
-    band_rows: DataFrame, sigs: DataFrame, cfg: RensaConfig
+    band_rows: DataFrame,
+    sigs: DataFrame,
+    cfg: RensaConfig,
+    capped_metrics="rensa_capped_buckets",
 ) -> DataFrame:
-    """Same, from (key, band_idx, band_hash) rows + (key, sig) table —
-    the checkpointed-pipeline path (band order already positional)."""
+    """Same, from (key, band_idx, band_hash) rows + (key, sig) table (band
+    order already positional). Signatures are re-joined to pairs rather than
+    carried through the band shuffle (keeps the wide column out of it).
+    ``capped_metrics`` forwards to candidate_pairs_from_band_rows
+    (CollectMetrics signal; pass an Observation to read bucket stats after
+    the first action)."""
     from rensa_spark.operators.lsh import candidate_pairs_from_band_rows
 
     pairs = candidate_pairs_from_band_rows(
         band_rows,
         cfg.hot_bucket_cap,
+        # >cap buckets: exact in-task verify up to exact_task_cap members
+        # (capped == uncapped), hub + sig-sorted ring beyond that
         sort_keys=sigs.select("key", F.col("sig").alias("sort_key")),
         verify_threshold=cfg.threshold,
+        capped_metrics=capped_metrics,
     )
     return _verify_pairs(pairs, sigs, cfg)
 
@@ -124,13 +125,10 @@ def _verify_pairs(pairs: DataFrame, sigs: DataFrame, cfg: RensaConfig) -> DataFr
     )
 
 
-def dedup_edges(
-    sketched: DataFrame,
-    cfg: RensaConfig,
-    capped_metrics="rensa_capped_buckets",
-) -> DataFrame:
-    """Duplicate-graph edges (a, b) for clustering: identical-signature
-    collapse + verified pairs among representatives.
+def collapse_identical(sketched: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Identical-signature collapse of (key, sig, ...) rows ->
+    (trivial edges (a=rep, b=key), representative rows with the input
+    columns).
 
     Rows with IDENTICAL signatures are unconditionally duplicates (equal-slot
     fraction 1.0 >= any threshold), so each identical-sig group collapses to
@@ -147,19 +145,27 @@ def dedup_edges(
     without re-running the shuffle."""
     from pyspark.sql import Window
 
-    with_rep = (
-        sketched.select("key", "sig", "bands")
-        .withColumn("rep", F.min("key").over(Window.partitionBy("sig")))
-        .localCheckpoint(eager=False)
-    )
+    with_rep = sketched.withColumn(
+        "rep", F.min("key").over(Window.partitionBy("sig"))
+    ).localCheckpoint(eager=False)
     trivial = with_rep.filter(F.col("key") != F.col("rep")).select(
         F.col("rep").alias("a"), F.col("key").alias("b")
     )
-    rep_rows = with_rep.filter(F.col("key") == F.col("rep")).select("key", "sig", "bands")
-    rep_pairs = verified_pairs(
-        rep_rows, cfg, capped_metrics=capped_metrics
-    ).select("a", "b")
-    return trivial.unionByName(rep_pairs)
+    reps = with_rep.filter(F.col("key") == F.col("rep")).drop("rep")
+    return trivial, reps
+
+
+def dedup_edges(
+    sketched: DataFrame,
+    cfg: RensaConfig,
+    capped_metrics="rensa_capped_buckets",
+) -> DataFrame:
+    """Duplicate-graph edges (a, b) for clustering: identical-signature
+    collapse (:func:`collapse_identical`) + verified pairs among
+    representatives."""
+    trivial, reps = collapse_identical(sketched.select("key", "sig", "bands"))
+    rep_pairs = verified_pairs(reps, cfg, capped_metrics=capped_metrics)
+    return trivial.unionByName(rep_pairs.select("a", "b"))
 
 
 def dedup_clusters(

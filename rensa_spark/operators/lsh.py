@@ -347,27 +347,6 @@ def one_shot_dup_flags_rho(
     )
 
 
-def candidate_pairs(
-    df: DataFrame,
-    key_col: str,
-    bands_col: str = "bands",
-    hot_bucket_cap: int = 4096,
-    sort_keys: DataFrame | None = None,
-    capped_metrics="rensa_capped_buckets",
-    verify_threshold: float | None = None,
-    exact_task_cap: int = 8192,
-) -> DataFrame:
-    """Array-column wrapper over :func:`candidate_pairs_from_band_rows`."""
-    return candidate_pairs_from_band_rows(
-        explode_bands(df, key_col, bands_col),
-        hot_bucket_cap,
-        sort_keys,
-        capped_metrics=capped_metrics,
-        verify_threshold=verify_threshold,
-        exact_task_cap=exact_task_cap,
-    )
-
-
 def candidate_pairs_from_band_rows(
     bands: DataFrame,
     hot_bucket_cap: int = 4096,

@@ -309,7 +309,7 @@ def bucketed_topk_join(
        Small-SF oracles never reach the cap, so duck_sql.ann_topk_many_sql
        is unchanged. Entering the regime is observable via
        ``capped_metrics`` (capped_buckets, max_bucket_rows; string name
-       (uniquified), Observation, or None — the candidate_pairs contract).
+       (uniquified), Observation, or None — the candidate_pairs_from_band_rows contract).
 
     Round-6 optimizations (results bit-identical on every path):
 
@@ -721,7 +721,7 @@ def ann_near_dup_pairs(
        small-SF oracles never reach the cap, so the SQL oracle is
        unchanged. Entering this regime is observable via
        ``capped_metrics`` (CollectMetrics: capped_buckets,
-       max_bucket_distinct — same contract as candidate_pairs).
+       max_bucket_distinct — same contract as candidate_pairs_from_band_rows).
     """
     if dim is None:
         dim = len(
@@ -1278,7 +1278,7 @@ def ivf_topk(
       n_centroids grows.
     - ``bucket_metrics``: CollectMetrics over home-bucket membership
       (``n_buckets``, ``max_bucket_members``) — skewed quantizers are
-      observable without the Spark UI, same contract as candidate_pairs.
+      observable without the Spark UI, same contract as candidate_pairs_from_band_rows.
       String name (uniquified), Observation, or None.
     - re-rank: at dim <= IVF_UNROLL_MAX_DIM the squared-L2 is an UNROLLED
       sum of dim getItem terms (Spark higher-order lambdas evaluate

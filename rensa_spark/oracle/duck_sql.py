@@ -626,7 +626,11 @@ def add_if_unique_sql(cfg: RensaConfig) -> str:
     doc iff no earlier KEPT doc is an LSH candidate (shares a band bucket)
     with signature jaccard >= threshold. Computed per connected component of
     the conflict graph with an in-order list_reduce (components are small at
-    oracle SF; the decision never crosses components)."""
+    oracle SF; the decision never crosses components). Each doc carries its
+    earlier conflict neighbours (``pre``) into the reduce, so the lambda is
+    single-level and captures no outer column: DuckDB 1.0.0 evaluates a
+    nested lambda over an outer per-component column against the wrong
+    row when all components are reduced together."""
     thr = cfg.threshold
     return f"""
 WITH RECURSIVE {shingle_hash_ctes(cfg)},
@@ -654,24 +658,22 @@ reach(v, u) AS (
     UNION
     SELECT r.v, e.b FROM reach r JOIN sym e ON r.u = e.a),
 comp AS (SELECT v AS doc_id, min(u) AS cid FROM reach GROUP BY v),
-comp_members AS (
-    SELECT cid, list(doc_id ORDER BY doc_id) AS members FROM comp GROUP BY cid),
-comp_edges AS (
-    SELECT cm.cid, coalesce(list([e.a, e.b]), []) AS edges
-    FROM comp_members cm
-    LEFT JOIN (SELECT c.a, c.b, p.cid
-               FROM conflict c JOIN comp p ON p.doc_id = c.a) e ON e.cid = cm.cid
-    GROUP BY cm.cid),
+earlier AS (
+    SELECT c.doc_id, c.cid, coalesce(list(k.a), []::BIGINT[]) AS pre
+    FROM comp c LEFT JOIN conflict k ON k.b = c.doc_id
+    GROUP BY c.doc_id, c.cid),
 greedy AS (
-    SELECT m.cid,
+    SELECT cid,
            list_reduce(
-               list_prepend([]::BIGINT[], m.members_wrapped),
-               (acc, x) -> CASE WHEN len(list_filter(e.edges,
-                        p -> p[2] = x[1] AND list_contains(acc, p[1]))) = 0
-                   THEN list_append(acc, x[1]) ELSE acc END) AS kept_keys
-    FROM (SELECT cid, list_transform(members, v -> [v]) AS members_wrapped
-          FROM comp_members) m
-    JOIN comp_edges e ON e.cid = m.cid)
+               list_prepend({{'v': NULL::BIGINT, 'pre': []::BIGINT[],
+                              'acc': []::BIGINT[]}},
+                            list({{'v': doc_id, 'pre': pre, 'acc': []::BIGINT[]}}
+                                 ORDER BY doc_id)),
+               (s, x) -> {{'v': x.v, 'pre': x.pre,
+                          'acc': CASE WHEN len(list_intersect(s.acc, x.pre)) = 0
+                                 THEN list_append(s.acc, x.v) ELSE s.acc END}}
+           ).acc AS kept_keys
+    FROM earlier GROUP BY cid)
 SELECT c.doc_id, list_contains(g.kept_keys, c.doc_id) AS kept
 FROM comp c JOIN greedy g ON g.cid = c.cid
 ORDER BY c.doc_id"""

@@ -6,48 +6,114 @@ North-rule requirement: "every stage checkpoints signatures and cluster state
 The reference persists engine state via pickle (src/rminhash/py.rs:421-455,
 src/lsh/py.rs:342-368); at cluster scale the equivalent durable state is the
 stage output *table*. Each stage here writes its output to
-``<base>/<stage>/`` plus a row in ``<base>/lineage/`` with per-partition row
+``<base>/<stage>/`` plus rows in ``<base>/lineage/`` with per-partition row
 counts, and records completion in ``<base>/manifest.json`` keyed by the
 config hash. A re-run with the same config skips completed stages by reading
 their tables back (kill -9 between stages loses nothing but the in-flight
 stage).
 
-Storage format is parquet in this sandbox; the writer/reader indirection in
-``CheckpointStore`` is the single place to swap in Iceberg
-(``format("iceberg")`` + MERGE for upserts) on a real deployment — no other
-code changes.
+The fixed cost per run is kept to the stage writes themselves:
+
+- the text is sketched ONCE: the fused sig+bands UDF result is persisted,
+  ``signatures`` writes its (key, sig) columns and ``bands`` a JVM
+  posexplode of its band array, then it is unpersisted (a persist, unlike a
+  localCheckpoint, can be rebuilt after an executor loss);
+- lineage row counts come from the written files' parquet footers and are
+  appended with no Spark job;
+- pairs come straight from the stage tables (band rows + signatures) after
+  the identical-signature collapse shared with ``dedup_edges``;
+- each stage runs under its own job group, and its manifest metrics record
+  how many Spark jobs it took (``spark_jobs``, read from the status tracker).
+
+Storage format is parquet in this sandbox; ``CheckpointStore`` is the single
+place to swap in Iceberg (``format("iceberg")`` + MERGE for upserts,
+snapshot summaries for row counts) on a real deployment — no other code
+changes.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import time
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from rensa_spark.config import RensaConfig
+
+_PART_FILE = re.compile(r"part-(\d+).*\.parquet$")
 
 
 @dataclass
 class CheckpointStore:
+    """Stage tables as parquet directories. Row counts are read from the
+    parquet footers, so the format is fixed here, the one module that knows
+    it."""
+
     base_dir: str
-    fmt: str = "parquet"
 
     def path(self, stage: str) -> str:
         return os.path.join(self.base_dir, stage)
 
-    def write(self, df: DataFrame, stage: str) -> None:
-        df.write.format(self.fmt).mode("overwrite").save(self.path(stage))
+    def write(self, df: DataFrame, stage: str) -> dict[int, int]:
+        """Write the stage table; returns its per-partition row counts."""
+        df.write.mode("overwrite").parquet(self.path(stage))
+        return self.row_counts(stage)
 
-    def read(self, spark: SparkSession, stage: str) -> DataFrame:
-        return spark.read.format(self.fmt).load(self.path(stage))
+    def read(
+        self, spark: SparkSession, stage: str, schema: StructType | None = None
+    ) -> DataFrame:
+        reader = spark.read
+        if schema is not None:  # skips schema inference over the footers
+            reader = reader.schema(schema)
+        return reader.parquet(self.path(stage))
 
     def exists(self, stage: str) -> bool:
         # parquet success marker; Iceberg would check snapshot existence
         return os.path.exists(os.path.join(self.path(stage), "_SUCCESS"))
+
+    def row_counts(self, stage: str) -> dict[int, int]:
+        """{writer partition id: rows} from the parquet footers — a metadata
+        read on the driver, no Spark job."""
+        import pyarrow.parquet as pq
+
+        counts: dict[int, int] = {}
+        path = self.path(stage)
+        for name in sorted(os.listdir(path)):
+            m = _PART_FILE.match(name)
+            if m:
+                n = pq.read_metadata(os.path.join(path, name)).num_rows
+                counts[int(m.group(1))] = counts.get(int(m.group(1)), 0) + n
+        return counts
+
+    def append_lineage(self, columns: dict[str, list]) -> None:
+        """Append rows to the ``lineage`` table as one new file, written on
+        the driver (no Spark job) under a hidden name, then renamed: readers
+        never see a partial file."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        schema = pa.schema(
+            [
+                ("part_id", pa.int32()),
+                ("rows_out", pa.int64()),
+                ("stage", pa.string()),
+                ("wall_ms", pa.int32()),
+                ("config_hash", pa.string()),
+                ("run_id", pa.string()),
+            ]
+        )
+        path = self.path("lineage")
+        os.makedirs(path, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(path, "." + name)
+        pq.write_table(pa.table(columns, schema=schema), tmp)
+        os.replace(tmp, os.path.join(path, name))
 
 
 @dataclass
@@ -101,99 +167,135 @@ class DedupPipeline:
         cfg: RensaConfig,
         base_dir: str,
         run_id: str = "run-0",
-        fmt: str = "parquet",
     ) -> None:
         self.spark = spark
         self.cfg = cfg
-        self.store = CheckpointStore(base_dir, fmt)
+        self.store = CheckpointStore(base_dir)
         self.manifest = Manifest.load(base_dir)
         self.run_id = run_id
         self.config_hash = cfg.config_hash()
         self.stage_log: list[dict] = []
 
     # ---- lineage ----
-    def _record_lineage(self, df: DataFrame, stage: str, wall_ms: int) -> int:
-        """Per-partition row counts for the stage output -> lineage table."""
-        per_part = (
-            df.groupBy(F.spark_partition_id().alias("part_id"))
-            .agg(F.count(F.lit(1)).alias("rows_out"))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("wall_ms", F.lit(wall_ms))
-            .withColumn("config_hash", F.lit(self.config_hash))
-            .withColumn("run_id", F.lit(self.run_id))
+    def _record_lineage(
+        self, stage: str, counts: dict[int, int], wall_ms: int
+    ) -> int:
+        """Per-partition row counts of the written stage -> lineage table."""
+        parts = sorted(counts)
+        self.store.append_lineage(
+            {
+                "part_id": parts,
+                "rows_out": [counts[p] for p in parts],
+                "stage": [stage] * len(parts),
+                "wall_ms": [wall_ms] * len(parts),
+                "config_hash": [self.config_hash] * len(parts),
+                "run_id": [self.run_id] * len(parts),
+            }
         )
-        per_part.write.format(self.store.fmt).mode("append").save(
-            os.path.join(self.store.base_dir, "lineage")
-        )
-        return per_part.agg(F.sum("rows_out")).collect()[0][0] or 0
+        return sum(counts.values())
 
     def _run_stage(self, stage: str, build, metrics_fn=None) -> DataFrame:
         """``metrics_fn``: called AFTER the stage's write action completes,
         returns a small dict recorded into the manifest alongside the
         lineage row counts (e.g. the candidate-bucket CollectMetrics — the
         north rule's per-stage metrics, so production runs can see from the
-        manifest alone whether a run entered the >cap heuristic regime)."""
+        manifest alone whether a run entered the >cap heuristic regime).
+        Every written stage's metrics also carry ``spark_jobs``: the jobs
+        run under the stage's job group."""
         if self.manifest.stage_done(stage, self.config_hash) and self.store.exists(stage):
             self.stage_log.append({"stage": stage, "skipped": True})
             return self.store.read(self.spark, stage)
-        t0 = time.perf_counter()
-        out = build()
-        self.store.write(out, stage)
-        wall_ms = int((time.perf_counter() - t0) * 1000)
-        metrics = metrics_fn() if metrics_fn is not None else None
-        persisted = self.store.read(self.spark, stage)
-        rows = self._record_lineage(persisted, stage, wall_ms)
-        self.manifest.mark_done(
-            stage, self.config_hash, int(rows), wall_ms, metrics=metrics
-        )
+        sc = self.spark.sparkContext
+        group = f"rensa-pipeline-{stage}-{uuid.uuid4().hex[:12]}"
+        prev_group = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            t0 = time.perf_counter()
+            out = build()
+            counts = self.store.write(out, stage)
+            wall_ms = int((time.perf_counter() - t0) * 1000)
+            metrics = metrics_fn() if metrics_fn is not None else {}
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev_group)
+        metrics["spark_jobs"] = self._jobs_in_group(group)
+        rows = self._record_lineage(stage, counts, wall_ms)
+        self.manifest.mark_done(stage, self.config_hash, rows, wall_ms, metrics=metrics)
         self.stage_log.append(
             {
                 "stage": stage,
                 "skipped": False,
-                "rows": int(rows),
+                "rows": rows,
                 "wall_ms": wall_ms,
-                **({"metrics": metrics} if metrics else {}),
+                "metrics": metrics,
             }
         )
-        return persisted
+        return self.store.read(self.spark, stage, schema=out.schema)
+
+    def _jobs_in_group(self, group: str) -> int:
+        """Jobs started under ``group``, from the status tracker. Job-start
+        events reach it through the listener bus, so drain the bus first."""
+        sc = self.spark.sparkContext
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
 
     # ---- stages ----
     def run(self, df: DataFrame, key_col: str, text_col: str) -> DataFrame:
-        from rensa_spark.functions.udfs import rminhash_sig_udf
+        from pyspark.sql import Observation
+
         from rensa_spark.operators.cc import connected_components, survivors
-        from rensa_spark.operators.dedup import dedup_edges
+        from rensa_spark.operators.dedup import (
+            collapse_identical,
+            sketch_rminhash,
+            verified_pairs_from_band_rows,
+        )
         from rensa_spark.operators.lsh import one_shot_flags_from_bands
-        from rensa_spark.operators.sketch import rminhash_band_rows
 
         src = df.select(F.col(key_col).alias("key"), F.col(text_col).alias("text"))
+        sketch: list[DataFrame] = []
 
-        sigs = self._run_stage(
-            "signatures",
-            lambda: src.withColumn("sig", rminhash_sig_udf(self.cfg)("text")).select(
-                "key", "sig"
+        def sketched() -> DataFrame:
+            # built on first use, so a resumed run whose `signatures` stage
+            # is skipped still rebuilds `bands` from the same fused UDF
+            if not sketch:
+                sketch.append(
+                    sketch_rminhash(src, self.cfg, "key", "text")
+                    .select("key", "sig", "bands")
+                    .persist()
+                )
+            return sketch[0]
+
+        try:
+            sigs = self._run_stage(
+                "signatures", lambda: sketched().select("key", "sig")
+            )
+            bands = self._run_stage(
+                "bands",
+                lambda: sketched().select(
+                    "key", F.posexplode("bands").alias("band_idx", "band_hash")
+                ),
+            )
+        finally:
+            if sketch:
+                sketch[0].unpersist()
+        self._run_stage(
+            "flags",
+            lambda: one_shot_flags_from_bands(
+                bands,
+                keys=sigs.select("key", F.lit(self.cfg.num_bands).alias("n_bands")),
             ),
         )
-        bands = self._run_stage(
-            "bands", lambda: rminhash_band_rows(src, self.cfg, "key", "text")
-        )
-        self._run_stage("flags", lambda: one_shot_flags_from_bands(bands))
-
-        from pyspark.sql import Observation
 
         obs = Observation("pipeline_pairs_buckets")
 
         def _build_pairs():
-            sketched = sigs.join(
-                bands.groupBy("key").agg(
-                    F.sort_array(
-                        F.collect_list(F.struct("band_idx", "band_hash"))
-                    ).alias("_b")
-                ).select(
-                    "key", F.col("_b.band_hash").alias("bands")
-                ),
-                "key",
+            trivial, reps = collapse_identical(sigs)
+            rep_pairs = verified_pairs_from_band_rows(
+                bands.join(reps.select("key"), "key", "leftsemi"),
+                reps,
+                self.cfg,
+                capped_metrics=obs,
             )
-            return dedup_edges(sketched, self.cfg, capped_metrics=obs)
+            return trivial.unionByName(rep_pairs.select("a", "b"))
 
         def _pairs_metrics() -> dict:
             m = dict(obs.get)

@@ -135,6 +135,10 @@ def test_connected_components_vs_union_find(spark):
     touched = {k for e in edges for k in e}
     for k in touched:
         assert got.get(k, k) == want[k], k
+    # no edges (or self-loops only): one empty round, empty output
+    assert connected_components(df.limit(0)).collect() == []
+    loops = spark.createDataFrame([("k1", "k1")], ["a", "b"])
+    assert connected_components(loops).collect() == []
 
 
 def test_add_if_unique_driver_greedy_matches_loop(spark, corpus):

@@ -14,6 +14,7 @@ from rensa_spark.config import RensaConfig
 from rensa_spark.sources.synthetic import generate_corpus
 
 CFG = RensaConfig(num_perm=128, seed=42, threshold=0.8, num_bands=8)
+STAGES = ("signatures", "bands", "flags", "pairs", "clusters", "survivors")
 
 
 @pytest.fixture()
@@ -45,23 +46,29 @@ def test_resume_skips_completed_stages(spark, corpus_df, tmp_path):
 def test_resume_mid_pipeline_after_crash(spark, corpus_df, tmp_path):
     base = str(tmp_path / "ckpt")
     pipe1, rows1 = _run(spark, corpus_df, base, "run-1")
+    bands1 = sorted(tuple(r) for r in spark.read.parquet(os.path.join(base, "bands")).collect())
 
-    # simulate a crash after 'pairs': later stage outputs lost
+    # simulate a crash after 'pairs', then one right after 'signatures' (the
+    # bands must then be rebuilt from a fresh sketch): later outputs lost
     manifest_path = os.path.join(base, "manifest.json")
-    with open(manifest_path) as f:
-        manifest = json.load(f)
-    for stage in ("clusters", "survivors"):
-        manifest["stages"].pop(stage)
-        shutil.rmtree(os.path.join(base, stage))
-    with open(manifest_path, "w") as f:
-        json.dump(manifest, f)
+    for last_done in ("pairs", "signatures"):
+        done = STAGES[: STAGES.index(last_done) + 1]
+        with open(manifest_path) as f:
+            manifest = json.load(f)
+        for stage in STAGES[len(done) :]:
+            manifest["stages"].pop(stage)
+            shutil.rmtree(os.path.join(base, stage))
+        with open(manifest_path, "w") as f:
+            json.dump(manifest, f)
 
-    pipe2, rows2 = _run(spark, corpus_df, base, "run-3")
-    skipped = {s["stage"] for s in pipe2.stage_log if s["skipped"]}
-    recomputed = {s["stage"] for s in pipe2.stage_log if not s["skipped"]}
-    assert skipped == {"signatures", "bands", "flags", "pairs"}
-    assert recomputed == {"clusters", "survivors"}
-    assert rows1 == rows2
+        pipe2, rows2 = _run(spark, corpus_df, base, f"run-after-{last_done}")
+        skipped = {s["stage"] for s in pipe2.stage_log if s["skipped"]}
+        recomputed = {s["stage"] for s in pipe2.stage_log if not s["skipped"]}
+        assert skipped == set(done)
+        assert recomputed == set(STAGES) - set(done)
+        assert rows1 == rows2
+    bands2 = sorted(tuple(r) for r in spark.read.parquet(os.path.join(base, "bands")).collect())
+    assert bands1 == bands2
 
 
 def test_config_change_invalidates_checkpoints(spark, corpus_df, tmp_path):
@@ -110,3 +117,197 @@ def test_pairs_stage_records_bucket_metrics(spark, corpus_df, tmp_path):
     assert {"capped_buckets", "heuristic_buckets", "max_bucket_size"} <= set(m)
     assert m["heuristic_buckets"] == 0  # tiny corpus never exceeds the cap
     assert m["max_bucket_size"] >= 1
+
+
+# Jobs a fresh run of the previous pipeline took on ``corpus_df`` (local[4],
+# 8 shuffle partitions): two sketch passes, a scan-based lineage write per
+# stage, a collect_list band regroup before the pairs, and CC rounds built
+# from groupBy + join-back with a separate fingerprint aggregate.
+PREVIOUS_PIPELINE_JOBS = 81
+
+
+def test_fresh_run_job_count_halved(spark, corpus_df, tmp_path):
+    """Each written stage records its Spark job count in the manifest; a
+    fresh run takes at most half the previous pipeline's jobs."""
+    base = str(tmp_path / "ckpt_jobs")
+    _run(spark, corpus_df, base, "run-j")
+    with open(os.path.join(base, "manifest.json")) as f:
+        stages = json.load(f)["stages"]
+    jobs = {s: info["metrics"]["spark_jobs"] for s, info in stages.items()}
+    assert set(jobs) == set(STAGES)
+    assert all(n >= 1 for n in jobs.values()), jobs
+    assert sum(jobs.values()) <= PREVIOUS_PIPELINE_JOBS // 2, jobs
+
+
+def _chain_corpus(seed: int = 5):
+    """Captions plus identical-signature groups and near-duplicate edit
+    chains: 6 chains of 12 members over long (3-caption) sources, each one
+    token edit from the member before; some members repeated with only
+    case/whitespace changes (same shingles, so identical signatures)."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    texts = list(generate_corpus(240, seed=seed, with_images=False)["caption"])
+    vocab = sorted({w for t in texts for w in t.split()})
+    long_texts = [t for t in texts if len(t.split()) >= 12]
+    for c in range(6):
+        cur = " ".join(long_texts[3 * c : 3 * c + 3]).split()
+        for _ in range(12):
+            pos = int(rng.integers(len(cur)))
+            word = vocab[int(rng.integers(len(vocab)))]
+            op = int(rng.integers(3))
+            if op == 0:
+                cur.pop(pos)
+            elif op == 1:
+                cur[pos] = word
+            else:
+                cur.insert(pos, word)
+            member = " ".join(cur)
+            texts.append(member)
+            if rng.random() < 0.3:
+                texts.append("  " + member.upper())
+    texts = [texts[i] for i in rng.permutation(len(texts))]
+    return texts
+
+
+def _union_find_clusters(texts, cfg):
+    """cluster id (min key) per key from union-find over EVERY pair that
+    shares a band and has equal-slot fraction >= threshold."""
+    import numpy as np
+
+    from rensa_spark.functions.udfs import _band_hash_matrix, _perms
+    from rensa_spark.kernels.rminhash import rminhash_matrix
+    from rensa_spark.kernels.shingle import shingle_hashes_batch
+
+    flat, offs = shingle_hashes_batch(texts, cfg.ngram_size)
+    a, b = _perms(cfg.num_perm, cfg.seed)
+    sig = rminhash_matrix(flat, offs, a, b)
+    bands = _band_hash_matrix(sig, cfg.num_bands, 1)
+    n = len(texts)
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for i in range(n):
+        share = (bands[i + 1 :] == bands[i]).any(axis=1)
+        sim = (sig[i + 1 :] == sig[i]).mean(axis=1)
+        for j in np.nonzero(share & (sim >= cfg.threshold))[0] + i + 1:
+            ri, rj = find(i), find(int(j))
+            if ri != rj:
+                parent[max(ri, rj)] = min(ri, rj)
+    n_identical = n - len({row.tobytes() for row in sig})
+    return {k: find(k) for k in range(n)}, n_identical
+
+
+def test_pipeline_matches_dedup_clusters_and_union_find(spark, tmp_path):
+    """The pipeline's pairs come from the band-row tables, the array path
+    (dedup_clusters) from per-row band arrays: both must give the clusters
+    of a union-find over all exact verified pairs, on a corpus where the
+    identical-signature collapse and long chains both matter."""
+    from rensa_spark.operators.dedup import dedup_clusters
+    from rensa_spark.plans.pipeline import DedupPipeline
+
+    texts = _chain_corpus()
+    want, n_identical = _union_find_clusters(texts, CFG)
+    assert n_identical >= 20
+    chain_sizes = {}
+    for c in want.values():
+        chain_sizes[c] = chain_sizes.get(c, 0) + 1
+    assert sum(1 for s in chain_sizes.values() if s >= 10) >= 4
+
+    df = spark.createDataFrame(
+        [(k, t) for k, t in enumerate(texts)], "key long, text string"
+    )
+
+    def rows(out):
+        return sorted(
+            (r["key"], r["cluster_id"], r["is_survivor"]) for r in out.collect()
+        )
+
+    expected = sorted((k, c, k == c) for k, c in want.items())
+    pipe = DedupPipeline(spark, CFG, str(tmp_path / "ckpt_uf"))
+    assert rows(pipe.run(df, "key", "text")) == expected
+    assert rows(dedup_clusters(df, CFG, "key", "text")) == expected
+
+
+def _survivor_rows(spark, base):
+    return sorted(
+        tuple(r)
+        for r in spark.read.parquet(os.path.join(base, "survivors"))
+        .select("key", "cluster_id", "is_survivor")
+        .collect()
+    )
+
+
+def test_kill9_mid_stage_then_resume(spark, tmp_path):
+    """``tools/run_pipeline.py`` is SIGKILLed (with its JVM) once
+    `signatures` is in the manifest but `pairs` is not; the re-run skips
+    exactly the completed stages and its survivors equal an uninterrupted
+    run's."""
+    import signal
+    import subprocess
+    import sys
+    import time
+
+    from rensa_spark.plans.pipeline import DedupPipeline
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pdf = generate_corpus(400, seed=42, with_images=False)[["image_id", "caption"]]
+    inp = str(tmp_path / "input.parquet")
+    pdf.to_parquet(inp)
+    base = str(tmp_path / "ckpt_kill")
+    manifest_path = os.path.join(base, "manifest.json")
+    cmd = [
+        sys.executable, os.path.join(repo, "tools", "run_pipeline.py"),
+        "--input", inp, "--checkpoint-dir", base,
+    ]
+    env = dict(
+        os.environ,
+        PYTHONPATH=repo,
+        PYSPARK_SUBMIT_ARGS="--master local[2] --driver-memory 1g pyspark-shell",
+    )
+
+    def done_stages():
+        try:
+            with open(manifest_path) as f:
+                return set(json.load(f)["stages"])
+        except (OSError, ValueError, KeyError):
+            return set()
+
+    proc = subprocess.Popen(
+        cmd, env=env, stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
+        start_new_session=True,
+    )
+    try:
+        deadline = time.monotonic() + 300
+        while "signatures" not in done_stages():
+            assert proc.poll() is None, "pipeline exited before the kill"
+            assert time.monotonic() < deadline, "signatures stage never finished"
+            time.sleep(0.02)
+        os.killpg(proc.pid, signal.SIGKILL)
+    finally:
+        if proc.poll() is None:
+            os.killpg(proc.pid, signal.SIGKILL)
+        proc.wait()
+    completed = done_stages()
+    assert "signatures" in completed and "pairs" not in completed, completed
+
+    rerun = subprocess.run(
+        cmd + ["--run-id", "run-resume"], env=env, capture_output=True,
+        text=True, timeout=600,
+    )
+    assert rerun.returncode == 0, rerun.stderr[-2000:]
+    log = json.loads(rerun.stdout.strip().splitlines()[-1])["stages"]
+    assert [s["stage"] for s in log] == list(STAGES)
+    assert {s["stage"] for s in log if s["skipped"]} == completed
+
+    cfg = RensaConfig(num_perm=128, num_bands=8, threshold=0.8, ngram_size=3, seed=42)
+    clean = str(tmp_path / "ckpt_clean")
+    DedupPipeline(spark, cfg, clean).run(
+        spark.read.parquet(inp), "image_id", "caption"
+    )
+    assert _survivor_rows(spark, base) == _survivor_rows(spark, clean)
