@@ -192,7 +192,7 @@ def _q_shingle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_cc_exact_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components driven by exact-text-duplicate edges; the CC
-    operator (large-star/small-star) must reproduce min-doc_id-per-text-group."""
+    operator (local contraction) must reproduce min-doc_id-per-text-group."""
     from rensa_spark.operators.cc import connected_components, survivors
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
@@ -662,7 +662,7 @@ def _q_ann_topk_many(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     return bucketed_topk_join(
         emb, "vec_id", "embedding", emb, "vec_id", "embedding",
-        k=3, n_planes=6, dim=64,
+        k=3, n_planes=6, dim=64, capped_metrics=None,
     ).select(
         F.col("qid").cast("long").alias("qid"),
         F.col("rank").cast("long").alias("rank"),

@@ -275,6 +275,11 @@ def add_if_unique(
     frontier loop remains the scale path, bit-equal by construction
     (pinned by test_add_if_unique_driver_greedy_matches_loop).
 
+    Runs Spark jobs when called (the row and edge counts, the edge
+    checkpoint, the driver collect or the frontier rounds): the path is
+    decided from the data at that time and frozen into the returned
+    DataFrame.
+
     Returns (key, kept boolean).
     """
     import os

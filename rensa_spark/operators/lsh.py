@@ -167,6 +167,11 @@ def one_shot_dup_flags_rho(
 
     ``key_col`` must be an orderable id matching the reference's row order
     (the candidate cap is row-order-dependent, one_shot.rs:408-411).
+
+    Runs a Spark job when called if the recall rescue is configured (a
+    one-row probe for rescue candidates): whether the rescue branch enters
+    the plan is decided from the data at that time and frozen into the
+    returned DataFrame.
     """
     sv_enabled = cfg.rho_sparse_verify_enabled and cfg.sparse_verify_perm_clamped > 0
     required_sparse = cfg.rho_sparse_required_band_matches

@@ -139,9 +139,14 @@ def hyperplane_bucket_topk(
     k: int = 10,
     n_planes: int = 8,
     seed: int = 42,
+    qid_type: str | None = None,
 ) -> DataFrame:
     """ANN top-k: random-hyperplane sign buckets + 1-bit multiprobe, exact
     re-rank within candidate buckets. Recall < 1 by design; the scale path.
+
+    ``qid_type``: Spark type of the output ``qid`` column; callers whose
+    queries come from a DataFrame pass its schema's type. When omitted it is
+    inferred from the pandas ``qid`` values (string or long).
 
     All math is int64 fixed-point (floor(x * 2^20) planes AND vectors):
     bucket signs are exact integer comparisons and the re-rank score is a
@@ -171,7 +176,8 @@ def hyperplane_bucket_topk(
     qids = list(queries["qid"])
 
     id_type = df.schema[id_col].dataType.simpleString()
-    qid_type = "string" if isinstance(qids[0], str) else "long"
+    if qid_type is None:
+        qid_type = "string" if isinstance(qids[0], str) else "long"
     schema = f"qid {qid_type}, neighbor_id {id_type}, score double"
 
     def gen(batches):
@@ -319,15 +325,17 @@ def bucketed_topk_join(
       corpus and query sides are projections of it.
     - SMALL-INPUT BYPASS (round-5 verdict ask #2): a self-join whose corpus
       has <= ``broadcast_max_rows`` rows (env RENSA_TOPK_BCAST_MAX, default
-      4096) dispatches to the broadcast scorer ``hyperplane_bucket_topk`` —
-      the same probe set, the same exact int64 fixed-point scores and the
-      same (score desc, id asc) tie-break, so the output rows are identical
-      — skipping ~5s of collapse/cogroup machinery that only pays for
-      itself at scale. The threshold bounds driver+executor memory at
-      n*(dim*8+8) bytes (~2 MB at dim 64) and the full score matmul at
-      n^2*dim flops (~1 GFLOP) — input-size-adaptive like AQE's broadcast
-      decision, not a local[32] tuning. Skipped when ``capped_metrics`` is
-      an Observation (the caller asked to read bucket stats).
+      4096) and whose largest bucket holds <= ``hot_bucket_cap`` rows
+      dispatches to the broadcast scorer ``hyperplane_bucket_topk`` — the
+      same probe set, the same exact int64 fixed-point scores and the same
+      (score desc, id asc) tie-break, and no bucket the scale path would
+      sub-split, so the output rows are identical — skipping ~5s of
+      collapse/cogroup machinery that only pays for itself at scale. The
+      threshold bounds driver+executor memory at n*(dim*8+8) bytes (~2 MB
+      at dim 64) and the full score matmul at n^2*dim flops (~1 GFLOP) —
+      input-size-adaptive like AQE's broadcast decision, not a local[32]
+      tuning. Taken only when ``capped_metrics`` is None: the broadcast
+      scorer computes no bucket metrics to report.
     - QUERY-SIDE GROUP BOUND (round-5 verdict ask #1): a one-row probe
       aggregate decides adaptively whether any bucket's probing-query
       count exceeds ``query_group_cap`` (env RENSA_TOPK_QUERY_CAP, default
@@ -339,6 +347,10 @@ def bucketed_topk_join(
       keep the salt-free round-5 plan. Each (query, corpus) pair still
       meets exactly once; the final per-qid window merges partials, so
       results are unchanged either way.
+
+    Runs a Spark job when called (the probe-count aggregate above, which
+    also materializes the query side): the bypass and the salt are decided
+    from the data at that time and frozen into the returned plan.
     """
     if broadcast_max_rows is None:
         import os
@@ -408,28 +420,35 @@ def bucketed_topk_join(
     # counts collapse map-side; max drives the adaptive query-side salt
     # (round-5 verdict ask #1) and sum recovers the exact query count
     # (every query emits exactly n_planes+1 probe rows) for the
-    # small-input bypass — a single tiny job instead of two driver
-    # actions. It also materializes the side checkpoint.
-    qcnt = qprobes.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_q"))
+    # small-input bypass, as does the largest own-bucket count (on a
+    # self-join, the corpus bucket size before the identical-vector
+    # collapse) — a single tiny job instead of several driver actions.
+    # It also materializes the side checkpoint.
+    qcnt = qprobes.groupBy("bucket").agg(
+        F.count(F.lit(1)).alias("n_q"),
+        F.sum((F.col("qbucket") == F.col("bucket")).cast("long")).alias("n_own"),
+    )
     _stats = qcnt.agg(
-        F.max("n_q").alias("mx"), F.sum("n_q").alias("tot")
+        F.max("n_q").alias("mx"),
+        F.sum("n_q").alias("tot"),
+        F.max("n_own").alias("own_mx"),
     ).first()
     max_nq = _stats["mx"]
     n_queries = (_stats["tot"] or 0) // (n_planes + 1)
-    from pyspark.sql import Observation
-
     if (
         shared
-        and not isinstance(capped_metrics, Observation)
-        and n_queries <= broadcast_max_rows
-        and n_queries > 0
+        and capped_metrics is None
+        and 0 < n_queries <= broadcast_max_rows
+        and _stats["own_mx"] <= hot_bucket_cap
     ):
         # small-input bypass: same probes, same exact scores, same
-        # tie-break — identical rows via the broadcast scorer
+        # tie-break, no bucket over the cap — identical rows via the
+        # broadcast scorer
         qpdf = queries_df.select(qid_col, qvec_col).toPandas()
         q = pd.DataFrame({"qid": qpdf[qid_col], "vec": qpdf[qvec_col]})
         return hyperplane_bucket_topk(
-            df, id_col, vec_col, q, k=k, n_planes=n_planes, seed=seed
+            df, id_col, vec_col, q, k=k, n_planes=n_planes, seed=seed,
+            qid_type=queries_df.schema[qid_col].dataType.simpleString(),
         )
     if shared:
         corpus = side.select(

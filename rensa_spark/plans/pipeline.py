@@ -22,6 +22,10 @@ The fixed cost per run is kept to the stage writes themselves:
   appended with no Spark job;
 - pairs come straight from the stage tables (band rows + signatures) after
   the identical-signature collapse shared with ``dedup_edges``;
+- clusters are one local union-find contraction of the pair table (AQE
+  coalesces a small one into a single task, which then labels every
+  component with no star round); the manifest metrics record which way it
+  went (``contraction_partitions``, ``star_edges``, ``star_rounds``);
 - each stage runs under its own job group, and its manifest metrics record
   how many Spark jobs it took (``spark_jobs``, read from the status tracker).
 
@@ -302,7 +306,12 @@ class DedupPipeline:
             return {k: int(v) if v is not None else 0 for k, v in m.items()}
 
         pairs = self._run_stage("pairs", _build_pairs, metrics_fn=_pairs_metrics)
-        clusters = self._run_stage("clusters", lambda: connected_components(pairs))
+        cc_stats: dict = {}
+        clusters = self._run_stage(
+            "clusters",
+            lambda: connected_components(pairs, stats=cc_stats),
+            metrics_fn=lambda: dict(cc_stats),
+        )
         return self._run_stage(
             "survivors", lambda: survivors(clusters, sigs.select("key"))
         )

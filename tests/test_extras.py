@@ -996,24 +996,33 @@ def test_bucketed_topk_join_matches_broadcast_lane(spark, emb_df):
 
 
 def test_bucketed_topk_bypass_matches_cogroup(spark, emb_df):
-    """Round 6 small-input bypass: the self-join at tiny n dispatches to
-    the broadcast scorer — the rows must be IDENTICAL to the forced
-    cogroup path (same probes, same exact fixed-point scores, same
-    tie-break)."""
+    """Small-input bypass: the self-join at tiny n dispatches to the
+    broadcast scorer — the rows must be IDENTICAL to the forced scale path
+    (same probes, same exact fixed-point scores, same tie-break). Pinned in
+    both regimes: every bucket under ``hot_bucket_cap`` (the bypass runs),
+    and n <= broadcast_max_rows with buckets over the cap, where only the
+    scale path's sub-split gives the right rows (the bypass must not run).
+    The bypass is taken only without ``capped_metrics``."""
     from rensa_spark.operators.similarity import bucketed_topk_join
 
-    kw = dict(k=3, n_planes=4, dim=64)
-    via_bypass = bucketed_topk_join(
-        emb_df, "vec_id", "embedding", emb_df, "vec_id", "embedding", **kw
-    ).toPandas()
-    via_cogroup = bucketed_topk_join(
-        emb_df, "vec_id", "embedding", emb_df, "vec_id", "embedding",
-        broadcast_max_rows=0, **kw
-    ).toPandas()
-    a = via_bypass.sort_values(["qid", "rank"]).reset_index(drop=True)
-    b = via_cogroup.sort_values(["qid", "rank"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a[["qid", "rank", "neighbor_id"]],
-                                  b[["qid", "rank", "neighbor_id"]])
+    for kw in (
+        dict(k=3, n_planes=4, dim=64),
+        # 500 rows in 4 buckets of ~125 > cap 50
+        dict(k=3, n_planes=2, dim=64, hot_bucket_cap=50, extra_planes=4),
+    ):
+        default = bucketed_topk_join(
+            emb_df, "vec_id", "embedding", emb_df, "vec_id", "embedding",
+            capped_metrics=None, **kw
+        ).toPandas()
+        via_cogroup = bucketed_topk_join(
+            emb_df, "vec_id", "embedding", emb_df, "vec_id", "embedding",
+            broadcast_max_rows=0, **kw
+        ).toPandas()
+        a = default.sort_values(["qid", "rank"]).reset_index(drop=True)
+        b = via_cogroup.sort_values(["qid", "rank"]).reset_index(drop=True)
+        assert a["qid"].dtype == b["qid"].dtype
+        pd.testing.assert_frame_equal(a[["qid", "rank", "neighbor_id"]],
+                                      b[["qid", "rank", "neighbor_id"]])
 
 
 def test_bucketed_topk_query_salt_bounds_groups(spark):
@@ -1290,43 +1299,90 @@ def test_video_frame_sample_and_audio_features(spark):
 
 
 def test_connected_components_fuzz_large(spark):
-    """CC large/small-star vs union-find on denser random graphs (multiple
-    seeds, n=2000) — the round-1 test covered n=200; this covers long
-    chains, multi-merge rounds, and self-loop-free dense components."""
+    """CC vs union-find on denser random graphs (n=2000) and an adversarial
+    edge list, in BOTH regimes: the default session, where AQE coalesces
+    the edges into one partition and the local contraction alone labels
+    every component (no star round), and a session with coalescing off and
+    8 shuffle partitions, where per-partition stars are finished by star
+    rounds. Covers long chains, multi-merge rounds, dense components,
+    duplicate and reversed edges, self-loops, a null endpoint (ignored),
+    and long as well as string keys."""
     import random
 
     from rensa_spark.operators.cc import connected_components
 
-    for seed, n, m in [(7, 2000, 1500), (8, 2000, 4000)]:
-        rng = random.Random(seed)
-        edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
-        edges = [(f"n{a:05d}", f"n{b:05d}") for a, b in edges if a != b]
-        parent = {f"n{i:05d}": f"n{i:05d}" for i in range(n)}
+    def union_find(edges):
+        parent = {}
 
         def find(x):
-            while parent[x] != x:
+            while parent.setdefault(x, x) != x:
                 parent[x] = parent[parent[x]]
                 x = parent[x]
             return x
 
         for x, y in edges:
-            rx, ry = find(x), find(y)
-            if rx != ry:
-                parent[max(rx, ry)] = min(rx, ry)
-        want = {}
-        for node in parent:
-            root = find(node)
-            want.setdefault(root, set()).add(node)
-        want_min = {node: min(members) for members in want.values() for node in members}
+            if x is not None and y is not None:
+                rx, ry = find(x), find(y)
+                if rx != ry:
+                    parent[max(rx, ry)] = min(rx, ry)
+        return {node: find(node) for node in list(parent)}
 
-        df = spark.createDataFrame(edges, "a string, b string")
-        got = {r["key"]: r["cluster_id"] for r in connected_components(df).collect()}
-        touched = {v for e in edges for v in e}
+    def graphs():
+        for seed, n, m in [(7, 2000, 1500), (8, 2000, 4000)]:
+            rng = random.Random(seed)
+            yield [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
+        # a 40-node chain over shuffled keys, with duplicate and reversed
+        # edges, self-loops, a null endpoint and a second small component
+        rng = random.Random(9)
+        chain = rng.sample(range(10_000), 40)
+        edges = list(zip(chain, chain[1:]))
+        edges += [(b, a) for a, b in edges[::3]] + edges[::5]
+        edges += [(k, k) for k in chain[::7]] + [(chain[3], None)]
+        edges += [(20_001, 20_000), (20_000, 20_002), (20_002, 20_001)]
+        rng.shuffle(edges)
+        yield edges
+
+    def run(df, want, touched, regime):
+        stats = {}
+        got = {
+            r["key"]: r["cluster_id"]
+            for r in connected_components(df, stats=stats).collect()
+        }
         # contract: nodes that ARE their component's minimum may be omitted
         # (survivors() fills them with their own key)
         for k in touched:
-            assert got.get(k, k) == want_min[k], (k, got.get(k), want_min[k])
+            assert got.get(k, k) == want[k], (regime, k, got.get(k), want[k])
         assert set(got) <= touched
+        return stats
+
+    conf = spark.conf
+    for raw in graphs():
+        for key_type, fmt in (("long", lambda k: k), ("string", lambda k: f"n{k:05d}")):
+            edges = [
+                tuple(None if k is None else fmt(k) for k in e) for e in raw
+            ]
+            want = union_find(edges)
+            touched = {v for e in edges if None not in e for v in e}
+            df = spark.createDataFrame(edges, f"a {key_type}, b {key_type}")
+            stats = run(df, want, touched, "one partition")
+            assert stats["contraction_partitions"] == 1, stats
+            assert stats["star_rounds"] == 0, stats
+            saved = {
+                k: conf.get(k)
+                for k in (
+                    "spark.sql.adaptive.coalescePartitions.enabled",
+                    "spark.sql.shuffle.partitions",
+                )
+            }
+            try:
+                conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+                conf.set("spark.sql.shuffle.partitions", "8")
+                stats = run(df, want, touched, "star rounds")
+            finally:
+                for k, v in saved.items():
+                    conf.set(k, v)
+            assert stats["contraction_partitions"] > 1, stats
+            assert stats["star_rounds"] >= 1, stats
 
 
 def test_simhash_near_pairs_complete_vs_bruteforce(spark):

@@ -135,7 +135,7 @@ def test_connected_components_vs_union_find(spark):
     touched = {k for e in edges for k in e}
     for k in touched:
         assert got.get(k, k) == want[k], k
-    # no edges (or self-loops only): one empty round, empty output
+    # no edges (or self-loops only): an empty contraction, empty output
     assert connected_components(df.limit(0)).collect() == []
     loops = spark.createDataFrame([("k1", "k1")], ["a", "b"])
     assert connected_components(loops).collect() == []

@@ -119,16 +119,18 @@ def test_pairs_stage_records_bucket_metrics(spark, corpus_df, tmp_path):
     assert m["max_bucket_size"] >= 1
 
 
-# Jobs a fresh run of the previous pipeline took on ``corpus_df`` (local[4],
-# 8 shuffle partitions): two sketch passes, a scan-based lineage write per
-# stage, a collect_list band regroup before the pairs, and CC rounds built
-# from groupBy + join-back with a separate fingerprint aggregate.
-PREVIOUS_PIPELINE_JOBS = 81
+# Jobs a fresh run of the pipeline takes on ``corpus_df`` (local[4], 8
+# shuffle partitions): signatures 1, bands 1, flags 3, pairs 8, clusters 3
+# (the contraction's shuffle map, the contraction, the write), survivors 2.
+# The pipeline before the single sketch pass, footer lineage and band-row
+# pairs took 81.
+FRESH_RUN_JOBS = 18
 
 
 def test_fresh_run_job_count_halved(spark, corpus_df, tmp_path):
     """Each written stage records its Spark job count in the manifest; a
-    fresh run takes at most half the previous pipeline's jobs."""
+    fresh run takes no more jobs than measured, and its clusters stage
+    labels the small pair graph in one contraction with no star round."""
     base = str(tmp_path / "ckpt_jobs")
     _run(spark, corpus_df, base, "run-j")
     with open(os.path.join(base, "manifest.json")) as f:
@@ -136,7 +138,11 @@ def test_fresh_run_job_count_halved(spark, corpus_df, tmp_path):
     jobs = {s: info["metrics"]["spark_jobs"] for s, info in stages.items()}
     assert set(jobs) == set(STAGES)
     assert all(n >= 1 for n in jobs.values()), jobs
-    assert sum(jobs.values()) <= PREVIOUS_PIPELINE_JOBS // 2, jobs
+    assert sum(jobs.values()) <= FRESH_RUN_JOBS, jobs
+    cc = stages["clusters"]["metrics"]
+    assert cc["spark_jobs"] <= 4, cc
+    assert cc["contraction_partitions"] == 1 and cc["star_rounds"] == 0, cc
+    assert cc["star_edges"] == stages["clusters"]["rows"], cc
 
 
 def _chain_corpus(seed: int = 5):
