@@ -45,7 +45,7 @@ class RMinHashEngine:
 
         return df.select(
             F.col(key_col).alias("key"),
-            rminhash_sig_udf(self.cfg, from_hashes=True)(F.col(hashes_col)).alias("sig"),
+            rminhash_sig_udf(self.cfg, tokens="hashes")(F.col(hashes_col)).alias("sig"),
         )
 
     def band_rows(self, df: DataFrame, key_col: str, text_col: str) -> DataFrame:

@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
@@ -77,14 +76,34 @@ def _flat_from_byte_series(series: pd.Series) -> tuple[np.ndarray, np.ndarray]:
     return fxhash64(all_tokens), offsets
 
 
-def _flat_for(col: pd.Series, cfg: RensaConfig, input_kind: str):
-    """Dispatch the three reference input forms (token strings via shingling,
-    pre-hashed u64 tokens, raw byte tokens) to one flat layout."""
-    if input_kind == "hashes":
+_TOKEN_KINDS = ("text", "hashes", "bytes")
+
+
+def _check_tokens(tokens: str) -> None:
+    if tokens not in _TOKEN_KINDS:
+        raise ValueError(f"tokens must be one of {_TOKEN_KINDS}, got {tokens!r}")
+
+
+def _flat_for(col: pd.Series, cfg: RensaConfig, tokens: str):
+    """Dispatch the three reference input forms (``"text"``: token strings
+    via shingling, ``"hashes"``: pre-hashed u64 tokens, ``"bytes"``: raw
+    byte tokens) to one flat layout."""
+    if tokens == "hashes":
         return _flat_from_series(col)
-    if input_kind == "bytes":
+    if tokens == "bytes":
         return _flat_from_byte_series(col)
+    _check_tokens(tokens)
     return shingle_hashes_batch(col, cfg.ngram_size)
+
+
+def rminhash_batch(col: pd.Series, cfg: RensaConfig, tokens: str = "text") -> np.ndarray:
+    """(rows, num_perm) uint32 R-MinHash signatures of one Arrow batch — the
+    one sketch every R-MinHash UDF and band-row generator calls, so the
+    per-call cost (permutation lookup, token dispatch) is paid once per
+    batch. Null and empty rows get the all-u32::MAX signature."""
+    a, b = _perms(cfg.num_perm, cfg.seed)
+    flat, offsets = _flat_for(col, cfg, tokens)
+    return rminhash_matrix(flat, offsets, a, b)
 
 
 def _sig_matrix_from_series(series: pd.Series, num_perm: int) -> np.ndarray:
@@ -128,48 +147,16 @@ def shingle_hashes_udf(cfg: RensaConfig):
     return _udf
 
 
-def rminhash_sig_udf(cfg: RensaConfig, from_hashes: bool = False, from_bytes: bool = False):
+def rminhash_sig_udf(cfg: RensaConfig, tokens: str = "text"):
     """text (or token-hash array, or binary-token array) -> array<int>
-    R-MinHash signature. ``from_bytes`` accepts array<binary> token columns
-    (digest_matrix_from_token_byte_sets, src/rminhash/py.rs bytes path)."""
-    a, b = None, None
-    kind = "hashes" if from_hashes else ("bytes" if from_bytes else "text")
+    R-MinHash signature. ``tokens="bytes"`` accepts array<binary> token
+    columns (digest_matrix_from_token_byte_sets, src/rminhash/py.rs bytes
+    path)."""
+    _check_tokens(tokens)
 
     @pandas_udf(ArrayType(IntegerType()))
     def _udf(col: pd.Series) -> pd.Series:
-        nonlocal a, b
-        if a is None:
-            a, b = _perms(cfg.num_perm, cfg.seed)
-        flat, offsets = _flat_for(col, cfg, kind)
-        sig = rminhash_matrix(flat, offsets, a, b)
-        return _as_list_series(sig, np.int32)
-
-    return _udf
-
-
-def rminhash_bands_udf(
-    cfg: RensaConfig,
-    fold: int = 1,
-    from_hashes: bool = False,
-    from_bytes: bool = False,
-):
-    """Fused hot path: text -> array<bigint> effective band hashes.
-
-    One Python crossing per batch; the signature matrix never leaves the
-    executor. This is the sketch+banding stage of the flagship one-shot
-    pipeline (src/lsh/one_shot.rs:294-332 fast path)."""
-    a, b = None, None
-    kind = "hashes" if from_hashes else ("bytes" if from_bytes else "text")
-
-    @pandas_udf(ArrayType(LongType()))
-    def _udf(col: pd.Series) -> pd.Series:
-        nonlocal a, b
-        if a is None:
-            a, b = _perms(cfg.num_perm, cfg.seed)
-        flat, offsets = _flat_for(col, cfg, kind)
-        sig = rminhash_matrix(flat, offsets, a, b)
-        bands = _band_hash_matrix(sig, cfg.num_bands, fold)
-        return _as_list_series(bands, np.int64)
+        return _as_list_series(rminhash_batch(col, cfg, tokens), np.int32)
 
     return _udf
 
@@ -182,28 +169,17 @@ SIG_BANDS_SCHEMA = StructType(
 )
 
 
-def rminhash_sig_bands_udf(
-    cfg: RensaConfig,
-    fold: int = 1,
-    from_hashes: bool = False,
-    from_bytes: bool = False,
-):
+def rminhash_sig_bands_udf(cfg: RensaConfig, tokens: str = "text"):
     """Fused text -> struct(sig, bands): ONE shingle+MinHash pass feeding
-    both the signature and its band hashes (round 6 — the separate
-    rminhash_sig_udf + rminhash_bands_udf pair recomputed the full
-    shingle+min-fold twice for every clusters/pairs lane; band hashing is
-    a pure function of the signature, so fusing is bit-identical)."""
-    a, b = None, None
-    kind = "hashes" if from_hashes else ("bytes" if from_bytes else "text")
+    both the signature and its band hashes (band hashing is a pure
+    function of the signature, so fusing is bit-identical to hashing the
+    signature separately). Bands are unfolded: ``cfg.num_bands`` per row."""
+    _check_tokens(tokens)
 
     @pandas_udf(SIG_BANDS_SCHEMA)
     def _udf(col: pd.Series) -> pd.DataFrame:
-        nonlocal a, b
-        if a is None:
-            a, b = _perms(cfg.num_perm, cfg.seed)
-        flat, offsets = _flat_for(col, cfg, kind)
-        sig = rminhash_matrix(flat, offsets, a, b)
-        bands = _band_hash_matrix(sig, cfg.num_bands, fold)
+        sig = rminhash_batch(col, cfg, tokens)
+        bands = _band_hash_matrix(sig, cfg.num_bands, 1)
         return pd.DataFrame(
             {
                 "sig": list(sig.view(np.int32)),
@@ -214,34 +190,16 @@ def rminhash_sig_bands_udf(
     return _udf
 
 
-def band_hashes_udf(cfg: RensaConfig, fold: int = 1):
-    """array<int> signature -> array<bigint> effective band hashes
-    (digest_band_hashes, src/lsh/index.rs:73-81)."""
-
-    @pandas_udf(ArrayType(LongType()))
-    def _udf(sigs: pd.Series) -> pd.Series:
-        sig = _sig_matrix_from_series(sigs, cfg.num_perm)
-        bands = _band_hash_matrix(sig, cfg.num_bands, fold)
-        return _as_list_series(bands, np.int64)
-
-    return _udf
-
-
-def cminhash_sig_udf(
-    cfg: RensaConfig,
-    bits: int = 32,
-    from_hashes: bool = False,
-    from_bytes: bool = False,
-):
+def cminhash_sig_udf(cfg: RensaConfig, bits: int = 32, tokens: str = "text"):
     """text -> C-MinHash signature; bits=32 -> array<int> (digest()),
-    bits=64 -> array<bigint> (digest_u64()). ``from_bytes`` accepts
-    array<binary> token columns (bytes-token input path)."""
+    bits=64 -> array<bigint> (digest_u64()). ``tokens`` as for
+    :func:`rminhash_sig_udf`."""
     ret = ArrayType(IntegerType()) if bits == 32 else ArrayType(LongType())
-    kind = "hashes" if from_hashes else ("bytes" if from_bytes else "text")
+    _check_tokens(tokens)
 
     @pandas_udf(ret)
     def _udf(col: pd.Series) -> pd.Series:
-        flat, offsets = _flat_for(col, cfg, kind)
+        flat, offsets = _flat_for(col, cfg, tokens)
         sig64 = cminhash_matrix64(flat, offsets, cfg.num_perm, cfg.seed)
         if bits == 32:
             return _as_list_series(cminhash_digest32(sig64), np.int32)
@@ -263,18 +221,17 @@ RHO_SKETCH_SCHEMA = StructType(
 )
 
 
-def rho_sketch_udf(cfg: RensaConfig, from_hashes: bool = False):
+def rho_sketch_udf(cfg: RensaConfig, tokens: str = "text"):
     """text -> full Rho sketch struct: digest + sidecar columns + both band
     granularities (effective folded bands for the main scan, unfolded bands
-    for recall rescue — src/lsh/one_shot.rs:492-577)."""
+    for recall rescue — src/lsh/one_shot.rs:492-577). ``tokens`` as for
+    :func:`rminhash_sig_udf`."""
     fold = cfg.effective_band_fold(rho_sidecar_present=True, has_existing_entries=False)
+    _check_tokens(tokens)
 
     @pandas_udf(RHO_SKETCH_SCHEMA)
     def _udf(col: pd.Series) -> pd.DataFrame:
-        if from_hashes:
-            flat, offsets = _flat_from_series(col)
-        else:
-            flat, offsets = shingle_hashes_batch(col, cfg.ngram_size)
+        flat, offsets = _flat_for(col, cfg, tokens)
         m = rho_matrix(flat, offsets, cfg)
         bands = _band_hash_matrix(m.digest, cfg.num_bands, fold)
         rescue = (
@@ -309,43 +266,3 @@ def jaccard_udf(cfg: RensaConfig):
         return pd.Series((a == b).mean(axis=1))
 
     return _udf
-
-
-def sparse_verify_sim_udf():
-    """(sparse_sig_a, sparse_sig_b) -> equal-slot fraction over the 8-slot
-    verify signatures (src/lsh/config.rs:126-139); null sig -> 1.0 (missing
-    signature passes, src/lsh/one_shot.rs:433-451)."""
-
-    @pandas_udf(DoubleType())
-    def _udf(sig_a: pd.Series, sig_b: pd.Series) -> pd.Series:
-        out = np.ones(len(sig_a))
-        for i, (x, y) in enumerate(zip(sig_a, sig_b)):
-            if x is None or y is None:
-                continue
-            xa = np.asarray(x)
-            ya = np.asarray(y)
-            out[i] = (xa == ya).mean() if len(xa) == len(ya) and len(xa) else 0.0
-        return pd.Series(out)
-
-    return _udf
-
-
-def raw_fxhash_udf():
-    """text -> bigint calculate_hash_fast of the whole UTF-8 string (exact-hash
-    keying; also the phash-style single-token path)."""
-
-    @pandas_udf(LongType())
-    def _udf(texts: pd.Series) -> pd.Series:
-        hashes = fxhash64([(t or "").encode("utf-8") for t in texts])
-        return pd.Series(hashes.view(np.int64))
-
-    return _udf
-
-
-def explode_bands(df, key_col: str, bands_col: str = "bands"):
-    """(key, bands[...]) -> (key, band_idx, band_hash) rows
-    (banding projection, src/lsh/index.rs:73-81 -> posexplode)."""
-    return df.select(
-        F.col(key_col),
-        F.posexplode(bands_col).alias("band_idx", "band_hash"),
-    )

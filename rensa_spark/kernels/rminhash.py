@@ -91,8 +91,3 @@ def rminhash_matrix(
             slab[valid] = mins
         row_start = row_end
     return out
-
-
-def jaccard_matrix(sig_a: np.ndarray, sig_b: np.ndarray) -> np.ndarray:
-    """Pairwise (row-aligned) equal-slot fraction (src/rminhash.rs:266-294)."""
-    return (sig_a == sig_b).mean(axis=1)

@@ -1,3 +1,3 @@
 """DataFrame operators: LSH banding, one-shot duplicate flags, pair
 verification, connected components, dedup pipelines, similarity search,
-text analysis, multimodal plumbing."""
+text analysis, image codecs."""

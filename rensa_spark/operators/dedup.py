@@ -19,31 +19,21 @@ from rensa_spark.config import RensaConfig
 from rensa_spark.functions.udfs import (
     jaccard_udf,
     rho_sketch_udf,
-    rminhash_bands_udf,
+    rminhash_sig_bands_udf,
 )
 from rensa_spark.operators.cc import connected_components, survivors
 
 
-def sketch_rminhash(
-    df: DataFrame, cfg: RensaConfig, key_col: str, text_col: str, with_sig: bool = True
-) -> DataFrame:
-    """Add `sig` (and `bands`) columns. Hot path: only `bands` when the
-    signature itself is not needed downstream (flags-only pipelines).
-    With the signature, ONE fused UDF computes both (round 6): the former
-    separate sig/bands UDFs each re-ran the full shingle+MinHash pass —
-    banding is a pure function of the signature, so fusing is bit-equal."""
-    if with_sig:
-        from rensa_spark.functions.udfs import rminhash_sig_bands_udf
-
-        sb = rminhash_sig_bands_udf(cfg)
-        return (
-            df.withColumn("_sb", sb(F.col(text_col)))
-            .withColumn("bands", F.col("_sb.bands"))
-            .withColumn("sig", F.col("_sb.sig"))
-            .drop("_sb")
-        )
-    bands = rminhash_bands_udf(cfg)
-    return df.withColumn("bands", bands(F.col(text_col)))
+def sketch_rminhash(df: DataFrame, cfg: RensaConfig, key_col: str, text_col: str) -> DataFrame:
+    """Add `sig` and `bands` columns, both from ONE fused UDF: banding is a
+    pure function of the signature, so one shingle+MinHash pass feeds both."""
+    sb = rminhash_sig_bands_udf(cfg)
+    return (
+        df.withColumn("_sb", sb(F.col(text_col)))
+        .withColumn("bands", F.col("_sb.bands"))
+        .withColumn("sig", F.col("_sb.sig"))
+        .drop("_sb")
+    )
 
 
 def sketch_rho(df: DataFrame, cfg: RensaConfig, key_col: str, text_col: str) -> DataFrame:
@@ -249,7 +239,7 @@ def add_if_unique(
     max_rounds: int = 30,
     use_lsh: bool = True,
     brute_force_max_rows: int = 100_000,
-    driver_max_edges: int | None = None,
+    driver_max_edges: int = 200_000,
 ) -> DataFrame:
     """Batch emulation of RMinHashDeduplicator.add_pairs with use_lsh=True
     (src/inline_dedup/rminhash.rs:233-299): process rows in ``order_col``
@@ -266,9 +256,9 @@ def add_if_unique(
     (SURVEY.md §7 hard part 2), so rounds ~= chain length.
 
     Round 6: when the verified conflict-edge set is small
-    (``driver_max_edges``, env RENSA_AIU_DRIVER_MAX_EDGES, default
-    200_000 — a few MB collected), the greedy recursion kept(v) =
-    not any(kept(u) for u -> v) is evaluated directly on the driver in
+    (``driver_max_edges``, default 200_000 — a few MB collected), the
+    greedy recursion kept(v) = not any(kept(u) for u -> v) is evaluated
+    directly on the driver in
     topological order and broadcast-joined back: the edge set is already
     materialized (and counted) for the frontier loop, so the small case
     replaces rounds of checkpoint+count jobs with one tiny collect. The
@@ -282,10 +272,6 @@ def add_if_unique(
 
     Returns (key, kept boolean).
     """
-    import os
-
-    if driver_max_edges is None:
-        driver_max_edges = int(os.environ.get("RENSA_AIU_DRIVER_MAX_EDGES", "200000"))
     order_col = order_col or key_col
     base = df.select(
         F.col(key_col).alias("key"),

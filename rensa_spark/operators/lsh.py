@@ -80,13 +80,13 @@ def one_shot_flags_from_bands(
     (the bands are lazily checkpointed in that case).
 
     CONTRACT when passing ``keys`` explicitly: ``n_bands`` must equal the
-    EXACT number of band rows the generator emits per key — the number of
-    EFFECTIVE bands after any folding (``cfg.num_bands // fold``), NOT
-    ``cfg.num_bands``. Overstating it (e.g. passing cfg.num_bands against
-    fold>1 rows) makes sum(inc) < max(n_bands) vacuously true and flags
-    every key a duplicate. The band-row generators in operators/sketch.py
-    validate fold | num_bands and document rows-per-key so callers can
-    derive the literal safely.
+    EXACT number of band rows emitted per key. The R-MinHash and C-MinHash
+    band rows (operators/sketch.py, ``rminhash_sig_bands_udf``) carry
+    ``cfg.num_bands``; only the Rho path folds, and its effective bands
+    number ``cfg.num_bands // fold`` (``cfg.effective_band_fold``).
+    Overstating it (e.g. cfg.num_bands against folded Rho rows) makes
+    sum(inc) < max(n_bands) vacuously true and flags every key a
+    duplicate.
     """
     if keys is None:
         bands = bands.localCheckpoint(eager=False)
@@ -123,15 +123,6 @@ def one_shot_flags_from_bands_window(bands: DataFrame) -> DataFrame:
         .groupBy("key")
         .agg(F.max(F.col("bucket_size") >= 2).alias("is_dup"))
     )
-
-
-def one_shot_dup_flags(
-    df: DataFrame, key_col: str, bands_col: str = "bands"
-) -> DataFrame:
-    """Array-column variant of :func:`one_shot_flags_from_bands` for inputs
-    that carry a precomputed ``bands`` array (e.g. a checkpointed signature
-    table)."""
-    return one_shot_flags_from_bands(explode_bands(df, key_col, bands_col))
 
 
 def _sparse_verify_match_col(my_sig, cand_sig, thr: float):

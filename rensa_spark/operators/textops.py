@@ -110,12 +110,3 @@ def fingerprint(text: str | Column) -> Column:
         F.lit(0).cast("long"),
         lambda acc, ch: (acc * FP_BASE + F.ascii(ch)) % FP_MOD,
     )
-
-
-def fingerprint_sql(text_expr: str = "text") -> str:
-    """DuckDB-equivalent SQL expression for :func:`fingerprint`."""
-    return (
-        f"list_reduce(list_prepend(0::BIGINT, [unicode(ch)::BIGINT for ch in "
-        f"string_split_regex({text_expr}, '')]), "
-        f"(acc, cp) -> (acc * {FP_BASE} + cp) % {FP_MOD})"
-    )

@@ -8,7 +8,7 @@ Spark operators are tested against.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from rensa_spark.config import RensaConfig
 
@@ -402,23 +402,3 @@ def one_shot_flags_rho_py(rho_rows: list[RhoRow], cfg: RensaConfig) -> list[bool
                     counts[i] = required[i]
 
     return [counts[i] >= required[i] for i in range(n)]
-
-
-# ---------------------------------------------------------------- deduplicator
-@dataclass
-class AddIfUniqueDedup:
-    """RMinHashDeduplicator semantics (src/inline_dedup/rminhash.rs:233-299):
-    sequential add-if-unique; duplicate iff key already present OR some
-    earlier *kept* signature has jaccard >= threshold."""
-
-    threshold: float
-    kept: dict[str, list[int]] = field(default_factory=dict)
-
-    def add(self, key: str, sig: list[int]) -> bool:
-        if key in self.kept:
-            return False
-        for other in self.kept.values():
-            if jaccard_py(sig, other) >= self.threshold:
-                return False
-        self.kept[key] = sig
-        return True

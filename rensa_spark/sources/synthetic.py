@@ -171,28 +171,3 @@ def generate_corpus(n_rows: int, seed: int = 42, with_images: bool = True) -> pd
     df["phash"] = df["phash"].astype("int64")
     df["gt_cluster"] = df["gt_cluster"].astype("int64")
     return df
-
-
-def corpus_to_spark(spark, pdf: pd.DataFrame):
-    from pyspark.sql.types import (
-        BinaryType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("image_id", StringType()),
-            StructField("bytes", BinaryType()),
-            StructField("w", IntegerType()),
-            StructField("h", IntegerType()),
-            StructField("fmt", StringType()),
-            StructField("caption", StringType()),
-            StructField("phash", LongType()),
-            StructField("gt_cluster", LongType()),
-        ]
-    )
-    return spark.createDataFrame(pdf, schema=schema)

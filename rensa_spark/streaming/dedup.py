@@ -237,34 +237,19 @@ def band_state_flag_rows(
     key_type = stream_df.schema[key_col].dataType.simpleString()
     num_perm = cfg.num_perm
     thr = cfg.threshold
-    fold = 1
 
     def gen(batches):
         import numpy as np
-        import pandas as pd
 
-        from rensa_spark.functions.udfs import _band_hash_matrix, _perms
-        from rensa_spark.kernels.rminhash import rminhash_matrix
-        from rensa_spark.kernels.shingle import shingle_hashes_batch
+        from rensa_spark.functions.udfs import _band_hash_matrix, rminhash_batch
+        from rensa_spark.operators.sketch import band_rows_frame
 
-        a, b = _perms(num_perm, cfg.seed)
         for pdf in batches:
-            flat, offs = shingle_hashes_batch(pdf[text_col], cfg.ngram_size)
-            sig = rminhash_matrix(flat, offs, a, b)
-            bands = _band_hash_matrix(sig, cfg.num_bands, fold).view(np.int64)
-            n, nb = bands.shape
-            yield pd.DataFrame(
-                {
-                    "key": np.repeat(pdf[key_col].values, nb),
-                    "band_idx": np.tile(np.arange(nb, dtype=np.int32), n),
-                    "band_hash": bands.reshape(-1),
-                    "sig": list(
-                        np.repeat(
-                            sig.astype(np.int64), nb, axis=0
-                        )
-                    ),
-                }
-            )
+            sig = rminhash_batch(pdf[text_col], cfg)
+            bands = _band_hash_matrix(sig, cfg.num_bands, 1)
+            rows = band_rows_frame(pdf[key_col].values, bands)
+            rows["sig"] = list(np.repeat(sig.astype(np.int64), bands.shape[1], axis=0))
+            yield rows
 
     band_rows = stream_df.select(key_col, text_col).mapInPandas(
         gen, f"key {key_type}, band_idx int, band_hash long, sig array<long>"

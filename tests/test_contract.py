@@ -3,7 +3,11 @@ column aliases line up (the driver hash-compares by sorted column names)."""
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
+
 import __spark_entry__ as em
+import rensa_spark
 
 
 def test_contract_shapes():
@@ -32,3 +36,16 @@ def test_queries_run_at_smallest_sf(spark):
         out = fn(spark, "/root/testdata/sf0.001")
         assert out.columns, name
         out.limit(3).collect()
+
+
+def test_package_imports():
+    """Every module under rensa_spark imports: a module-level import of a
+    deleted name fails here, by module name, not as collection errors in
+    whichever test files happen to import it."""
+    names = [
+        m.name
+        for m in pkgutil.walk_packages(rensa_spark.__path__, prefix="rensa_spark.")
+    ]
+    assert "rensa_spark.operators.sketch" in names
+    for name in names:
+        importlib.import_module(name)

@@ -17,34 +17,82 @@ CFG = RensaConfig(num_perm=128, seed=42, threshold=0.8, num_bands=8)
 
 
 def test_prehashed_path_equivalence(spark):
-    """UDFs fed pre-hashed token arrays must equal the text path bit-for-bit
-    (reference flat-hash path equivalence, tests/test_rensa.py:236-260)."""
+    """Every R-MinHash sketch site equals rminhash_matrix + _band_hash_matrix
+    computed directly in numpy: rminhash_sig_udf on text and on pre-hashed
+    token arrays (reference flat-hash path equivalence,
+    tests/test_rensa.py:236-260), both fields of rminhash_sig_bands_udf, its
+    bands posexploded (the pipeline's band rows) and rminhash_band_rows (the
+    dup_flags band rows). The corpus carries a null, an empty, a one-word
+    and a 2,000-word caption. The C-MinHash text and pre-hashed paths agree
+    too, and an unknown ``tokens`` kind is refused."""
     from pyspark.sql import functions as F
 
     from rensa_spark.functions.udfs import (
+        _band_hash_matrix,
         cminhash_sig_udf,
+        rho_sketch_udf,
+        rminhash_sig_bands_udf,
         rminhash_sig_udf,
         shingle_hashes_udf,
     )
+    from rensa_spark.kernels.prng import rminhash_permutations
+    from rensa_spark.kernels.rminhash import rminhash_matrix
+    from rensa_spark.operators.sketch import rminhash_band_rows
 
-    pdf = generate_corpus(150, seed=42, with_images=False)
-    df = spark.createDataFrame(pdf[["image_id", "caption"]])
-    hashes = shingle_hashes_udf(CFG)
-    pre = df.withColumn("th", hashes("caption"))
+    rng = np.random.default_rng(5)
+    long_caption = " ".join(f"w{i}" for i in rng.integers(0, 500, size=2000))
+    pdf = pd.concat(
+        [
+            generate_corpus(150, seed=42, with_images=False)[["image_id", "caption"]],
+            pd.DataFrame(
+                {
+                    "image_id": ["null", "empty", "one", "long"],
+                    "caption": [None, "", "solitary", long_caption],
+                }
+            ),
+        ],
+        ignore_index=True,
+    )
+    df = spark.createDataFrame(pdf, "image_id string, caption string")
+    pre = df.withColumn("th", shingle_hashes_udf(CFG)("caption"))
 
-    for udf_text, udf_hash in [
-        (rminhash_sig_udf(CFG), rminhash_sig_udf(CFG, from_hashes=True)),
-        (cminhash_sig_udf(CFG), cminhash_sig_udf(CFG, from_hashes=True)),
-    ]:
-        a = {
-            r["image_id"]: list(r["s"])
-            for r in pre.select("image_id", udf_text("caption").alias("s")).collect()
-        }
-        b = {
-            r["image_id"]: list(r["s"])
-            for r in pre.select("image_id", udf_hash("th").alias("s")).collect()
-        }
-        assert a == b
+    flat, offs = shingle_hashes_batch(list(pdf["caption"]), CFG.ngram_size)
+    sig = rminhash_matrix(flat, offs, *rminhash_permutations(CFG.num_perm, CFG.seed))
+    bands = _band_hash_matrix(sig, CFG.num_bands, 1)
+    keys = list(pdf["image_id"])
+    want_sig = dict(zip(keys, sig.view(np.int32).tolist()))
+    want_bands = dict(zip(keys, bands.view(np.int64).tolist()))
+    want_rows = sorted(
+        (k, i, h) for k, row in want_bands.items() for i, h in enumerate(row)
+    )
+    # the kernel gives null and empty text the same all-u32::MAX signature
+    assert want_sig["null"] == want_sig["empty"] == [-1] * CFG.num_perm
+
+    def by_key(frame, col):
+        return {r["image_id"]: list(r[col]) for r in frame.collect()}
+
+    text, hashed = rminhash_sig_udf(CFG), rminhash_sig_udf(CFG, tokens="hashes")
+    assert by_key(pre.select("image_id", text("caption").alias("s")), "s") == want_sig
+    assert by_key(pre.select("image_id", hashed("th").alias("s")), "s") == want_sig
+    sb = df.select("image_id", rminhash_sig_bands_udf(CFG)("caption").alias("sb"))
+    assert by_key(sb.select("image_id", "sb.sig"), "sig") == want_sig
+    assert by_key(sb.select("image_id", "sb.bands"), "bands") == want_bands
+    exploded = sb.select(
+        F.col("image_id").alias("key"),
+        F.posexplode("sb.bands").alias("band_idx", "band_hash"),
+    )
+    for rows in (exploded, rminhash_band_rows(df, CFG, "image_id", "caption")):
+        got = sorted((r["key"], r["band_idx"], r["band_hash"]) for r in rows.collect())
+        assert got == want_rows
+
+    text, hashed = cminhash_sig_udf(CFG), cminhash_sig_udf(CFG, tokens="hashes")
+    assert by_key(pre.select("image_id", text("caption").alias("s")), "s") == by_key(
+        pre.select("image_id", hashed("th").alias("s")), "s"
+    )
+
+    for factory in (rminhash_sig_udf, rminhash_sig_bands_udf, cminhash_sig_udf, rho_sketch_udf):
+        with pytest.raises(ValueError, match="tokens"):
+            factory(CFG, tokens="words")
 
 
 def test_rho_sparse_gating_monotonicity():
