@@ -141,7 +141,9 @@ class RensaConfig:
 
     # Spark-side knobs (no reference counterpart — distribution hygiene)
     shuffle_partitions: int = 32
-    hot_bucket_cap: int = 1 << 20  # guard: buckets above this only flag, never pair
+    # buckets above max(hot_bucket_cap, exact_task_cap) pair via hub + ring
+    # edges instead of every pair (operators/dedup.verified_pairs_from_band_rows)
+    hot_bucket_cap: int = 1 << 20
 
     def __post_init__(self) -> None:
         if self.num_perm <= 0:

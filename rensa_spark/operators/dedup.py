@@ -83,36 +83,89 @@ def verified_pairs_from_band_rows(
     sigs: DataFrame,
     cfg: RensaConfig,
     capped_metrics="rensa_capped_buckets",
+    exact_task_cap: int = 8192,
 ) -> DataFrame:
-    """Same, from (key, band_idx, band_hash) rows + (key, sig) table (band
-    order already positional). Signatures are re-joined to pairs rather than
-    carried through the band shuffle (keeps the wide column out of it).
-    ``capped_metrics`` forwards to candidate_pairs_from_band_rows
-    (CollectMetrics signal; pass an Observation to read bucket stats after
-    the first action)."""
-    from rensa_spark.operators.lsh import candidate_pairs_from_band_rows
+    """Same, from (key, band_idx, band_hash) rows + a (key, sig) table (band
+    order already positional), in ONE pass over the buckets.
 
-    pairs = candidate_pairs_from_band_rows(
-        band_rows,
-        cfg.hot_bucket_cap,
-        # >cap buckets: exact in-task verify up to exact_task_cap members
-        # (capped == uncapped), hub + sig-sorted ring beyond that
-        sort_keys=sigs.select("key", F.col("sig").alias("sort_key")),
-        verify_threshold=cfg.threshold,
-        capped_metrics=capped_metrics,
+    Bucket sizes come from a map-side count; each member row of a bucket
+    with >= 2 members is joined to its signature once, the rows are
+    hash-partitioned by (band_idx, band_hash) and sorted within partitions,
+    and one ``mapInPandas`` walk hands every bucket to the numpy kernel
+    :func:`rensa_spark.kernels.bucket_verify.verify_bucket_pairs`, which
+    emits (a < b, sim) for pairs with sim >= threshold. A signature thus
+    travels once per member band row — never twice per candidate pair, and
+    never as a whole signature table per pair join — and no candidate pair
+    crosses a shuffle. A task holds at most one bucket plus one Arrow
+    batch: a bucket cut at a batch boundary is carried into the next batch.
+
+    Buckets with <= ``max(cfg.hot_bucket_cap, exact_task_cap)`` members
+    verify every pair (exact). Larger buckets verify hub edges plus a ring
+    over members sorted by (signature, key): a heuristic subgraph, exact for
+    families whose similarity is transitive along the signature order.
+
+    ``capped_metrics``: CollectMetrics over the bucket sizes emitting
+    ``capped_buckets`` (buckets over ``cfg.hot_bucket_cap``),
+    ``heuristic_buckets`` (buckets over ``max(cfg.hot_bucket_cap,
+    exact_task_cap)``, the only regime with approximate results) and
+    ``max_bucket_size``; a name, a ``pyspark.sql.Observation`` or None, as
+    for :func:`rensa_spark.operators.lsh.bucket_sizes`."""
+    from rensa_spark.operators.lsh import bucket_sizes
+
+    exact_cap = max(cfg.hot_bucket_cap, exact_task_cap)
+    sizes = bucket_sizes(band_rows, cfg.hot_bucket_cap, exact_cap, capped_metrics)
+    members = (
+        band_rows.select("key", "band_idx", "band_hash")
+        .join(sizes.filter(F.col("bucket_size") >= 2), ["band_idx", "band_hash"], "leftsemi")
+        .join(sigs.select("key", "sig"), "key")
+        .repartition("band_idx", "band_hash")
+        .sortWithinPartitions("band_idx", "band_hash")
     )
-    return _verify_pairs(pairs, sigs, cfg)
+    key_type = band_rows.schema["key"].dataType.simpleString()
+    return members.mapInPandas(
+        _bucket_walk(exact_cap, cfg.threshold), f"a {key_type}, b {key_type}, sim double"
+    ).distinct()
 
 
-def _verify_pairs(pairs: DataFrame, sigs: DataFrame, cfg: RensaConfig) -> DataFrame:
-    jac = jaccard_udf(cfg)
-    return (
-        pairs.join(sigs.withColumnRenamed("key", "a").withColumnRenamed("sig", "sig_a"), "a")
-        .join(sigs.withColumnRenamed("key", "b").withColumnRenamed("sig", "sig_b"), "b")
-        .withColumn("sim", jac("sig_a", "sig_b"))
-        .select("a", "b", "sim")
-        .filter(F.col("sim") >= cfg.threshold)
-    )
+def _bucket_walk(exact_cap: int, threshold: float):
+    """mapInPandas body over (key, band_idx, band_hash, sig) rows sorted so
+    that every bucket is one contiguous run of a partition."""
+
+    def walk(batches):
+        import numpy as np
+        import pandas as pd
+
+        from rensa_spark.kernels.bucket_verify import verify_bucket_pairs
+
+        def pairs(keys, sig, bounds):
+            i, j, sim = verify_bucket_pairs(sig, keys, bounds, exact_cap, threshold)
+            return pd.DataFrame({"a": keys[i], "b": keys[j], "sim": sim})
+
+        carry = None
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            arrs = (
+                pdf["band_idx"].to_numpy(),
+                pdf["band_hash"].to_numpy(),
+                pdf["key"].to_numpy(),
+                np.stack(pdf["sig"].to_numpy()),
+            )
+            if carry is not None:
+                arrs = tuple(np.concatenate([c, a]) for c, a in zip(carry, arrs))
+            bidx, bhash, keys, sig = arrs
+            new = np.ones(len(keys), dtype=bool)
+            new[1:] = (bidx[1:] != bidx[:-1]) | (bhash[1:] != bhash[:-1])
+            starts = np.nonzero(new)[0]
+            # the last bucket may continue into the next batch: carry it
+            cut = starts[-1]
+            carry = tuple(a[cut:] for a in arrs)
+            if cut:
+                yield pairs(keys[:cut], sig[:cut], starts)
+        if carry is not None:
+            yield pairs(carry[2], carry[3], [0, len(carry[2])])
+
+    return walk
 
 
 def collapse_identical(sketched: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -278,9 +331,9 @@ def add_if_unique(
         F.col(order_col).alias("ord"),
         F.col(text_col).alias("text"),
     )
-    # the fused sketch is consumed up to 4x by verified_pairs (band rows,
-    # mid-path sort keys, both signature join sides) — checkpoint it once
-    # (round 6: each consumer used to re-run the shingle+MinHash UDFs)
+    # the fused sketch is consumed twice by verified_pairs (band rows and
+    # the signature join) — checkpoint it once so the shingle+MinHash UDF
+    # runs once
     sk = (
         sketch_rminhash(base, cfg, "key", "text")
         .select("key", "sig", "bands")

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from rensa_spark.config import RensaConfig
 
 # suffix source for per-call default CollectMetrics names (see
-# candidate_pairs_from_band_rows)
+# bucket_sizes)
 _METRICS_SEQ = itertools.count()
 
 
@@ -343,59 +343,21 @@ def one_shot_dup_flags_rho(
     )
 
 
-def candidate_pairs_from_band_rows(
-    bands: DataFrame,
-    hot_bucket_cap: int = 4096,
-    sort_keys: DataFrame | None = None,
-    capped_metrics="rensa_capped_buckets",
-    verify_threshold: float | None = None,
-    exact_task_cap: int = 8192,
+def bucket_sizes(
+    bands: DataFrame, hot_bucket_cap: int, heuristic_cap: int, capped_metrics
 ) -> DataFrame:
-    """Distinct candidate pairs (a < b) sharing >=1 band bucket, from
-    (key, band_idx, band_hash) rows.
-
-    Buckets larger than ``hot_bucket_cap`` would emit O(n^2) pairs through
-    the bucket self-join; they take one of two bounded paths instead:
-
-    - MID buckets (cap < size <= ``exact_task_cap``), when ``sort_keys``
-      carries the signature AND ``verify_threshold`` is given (round-3
-      verdict ask #5): the bucket's members + signatures are grouped into
-      ONE applyInPandas task that computes the EXACT pairwise
-      equal-slot-fraction >= threshold decision vectorized (slot-chunked
-      numpy, ~n^2*num_perm byte-ops per bucket) and emits only the
-      verified pairs — the true answer for that bucket, never the O(n^2)
-      candidate multiset through a shuffle. Downstream verification
-      re-checks and keeps all of them, so capped results are EXACTLY the
-      uncapped results for every bucket up to exact_task_cap — including
-      adversarial non-chain families (pinned by
-      test_hot_bucket_exact_midpath_matches_uncapped).
-    - HUGE buckets (> exact_task_cap — at the default, >8192 DISTINCT
-      members sharing one band hash): hub edges (min key to each member)
-      PLUS ring edges over members sorted by ``sort_key`` (near-identical
-      rows sort adjacent, so transitive chains keep verified adjacent
-      edges). O(2n) edges; the verified graph there is a heuristic
-      subgraph, exact for families whose similarity is transitive along
-      the signature order — the caveat now applies ONLY beyond
-      exact_task_cap, and entering it is observable (heuristic_buckets).
-      Without ``sort_keys``/``verify_threshold`` mid buckets fall back to
-      this path too (legacy behavior).
-
-    The reference never materializes pairs at all for flags (flags need
-    only bucket size >= 2); pairs exist here for the verification +
-    clustering stages (README.md:100-122 recipe).
+    """(band_idx, band_hash, bucket_size) by a map-side count.
 
     ``capped_metrics``: observable signal (round-3 advice): a
     CollectMetrics node over the bucket sizes emitting ``capped_buckets``
-    (count over hot_bucket_cap), ``heuristic_buckets`` (count over
-    exact_task_cap — the only regime with approximate semantics) and
+    (count over ``hot_bucket_cap``), ``heuristic_buckets`` (count over
+    ``heuristic_cap`` — the only regime with approximate semantics) and
     ``max_bucket_size``. Pass a string name to ship the metrics to every
     QueryExecutionListener / the Spark UI event log, a
     ``pyspark.sql.Observation`` to read them programmatically after the
     first action, or None to disable. The DEFAULT string is uniquified
     per call (``rensa_capped_buckets_<n>``) so composing several pair
-    operators in one plan never collides on observed-metric names.
-    """
-    exact_mid = sort_keys is not None and verify_threshold is not None
+    operators in one plan never collides on observed-metric names."""
     if capped_metrics == "rensa_capped_buckets":
         # Spark's analyzer rejects two CollectMetrics nodes with the SAME
         # name in one plan (round-4 advice: unioning two pair operators
@@ -407,21 +369,43 @@ def candidate_pairs_from_band_rows(
     sizes = bands.groupBy("band_idx", "band_hash").agg(
         F.count(F.lit(1)).alias("bucket_size")
     )
-    if capped_metrics is not None:
-        sizes = sizes.observe(
-            capped_metrics,
-            F.sum(
-                F.when(F.col("bucket_size") > hot_bucket_cap, 1).otherwise(0)
-            ).alias("capped_buckets"),
-            F.sum(
-                F.when(
-                    F.col("bucket_size")
-                    > (exact_task_cap if exact_mid else hot_bucket_cap),
-                    1,
-                ).otherwise(0)
-            ).alias("heuristic_buckets"),
-            F.max("bucket_size").alias("max_bucket_size"),
-        )
+    if capped_metrics is None:
+        return sizes
+    return sizes.observe(
+        capped_metrics,
+        F.sum(
+            F.when(F.col("bucket_size") > hot_bucket_cap, 1).otherwise(0)
+        ).alias("capped_buckets"),
+        F.sum(
+            F.when(F.col("bucket_size") > heuristic_cap, 1).otherwise(0)
+        ).alias("heuristic_buckets"),
+        F.max("bucket_size").alias("max_bucket_size"),
+    )
+
+
+def candidate_pairs_from_band_rows(
+    bands: DataFrame,
+    hot_bucket_cap: int = 4096,
+    capped_metrics="rensa_capped_buckets",
+) -> DataFrame:
+    """Distinct candidate pairs (a < b) sharing >=1 band bucket, from
+    (key, band_idx, band_hash) rows.
+
+    Buckets larger than ``hot_bucket_cap`` would emit O(n^2) pairs through
+    the bucket self-join; they emit hub edges (min key to each member) PLUS
+    ring edges over members sorted by key instead: O(2n) edges that keep
+    every member connected. Verified pairs do not come from here (see
+    :func:`rensa_spark.operators.dedup.verified_pairs_from_band_rows`,
+    which verifies inside each bucket); this operator measures the
+    candidate set.
+
+    The reference never materializes pairs at all for flags (flags need
+    only bucket size >= 2).
+
+    ``capped_metrics``: see :func:`bucket_sizes`; ``heuristic_buckets``
+    equals ``capped_buckets`` here.
+    """
+    sizes = bucket_sizes(bands, hot_bucket_cap, hot_bucket_cap, capped_metrics)
     bands_sized = bands.join(
         sizes.filter(F.col("bucket_size") >= 2), ["band_idx", "band_hash"]
     )
@@ -432,89 +416,26 @@ def candidate_pairs_from_band_rows(
     small_pairs = left.join(right, ["band_idx", "band_hash"]).filter(
         F.col("a") < F.col("b")
     )
-    key_type = bands.schema["key"].dataType.simpleString()
 
-    if exact_mid:
-        mid = bands_sized.filter(
-            (F.col("bucket_size") > hot_bucket_cap)
-            & (F.col("bucket_size") <= exact_task_cap)
-        )
-        mid_m = mid.select("band_idx", "band_hash", "key").join(
-            sort_keys.select("key", "sort_key"), "key"
-        )
-        thr = float(verify_threshold)
-
-        def bucket_verify(pdf):
-            import numpy as np
-            import pandas as pd
-
-            sig = np.stack([np.asarray(s, dtype=np.int64) for s in pdf["sort_key"]])
-            keys = pdf["key"].values
-            n, p = sig.shape
-            need = int(np.ceil(thr * p - 1e-9))
-            a_parts, b_parts = [], []
-            # slot-chunked pairwise equal counts: row-chunk x all-rows,
-            # accumulated per signature slot — peak memory chunk*n bytes
-            chunk = max(1, min(n, (1 << 22) // max(n, 1)))
-            for lo in range(0, n, chunk):
-                hi = min(n, lo + chunk)
-                eq = np.zeros((hi - lo, n), dtype=np.int32)
-                for s in range(p):
-                    eq += sig[lo:hi, s, None] == sig[None, :, s]
-                ii, jj = np.nonzero(eq >= need)
-                keep = (lo + ii) < jj  # upper triangle by row index
-                # vectorized pair assembly (round-4 advice: a dense
-                # near-dup bucket emits millions of pairs — no per-pair
-                # Python loop): fancy-index the keys, order each pair
-                # with an elementwise where-swap
-                ka = keys[ii[keep] + lo]
-                kb = keys[jj[keep]]
-                sw = kb < ka
-                a_parts.append(np.where(sw, kb, ka))
-                b_parts.append(np.where(sw, ka, kb))
-            return pd.DataFrame(
-                {
-                    "a": np.concatenate(a_parts) if a_parts else [],
-                    "b": np.concatenate(b_parts) if b_parts else [],
-                }
-            )
-
-        mid_pairs = mid_m.groupBy("band_idx", "band_hash").applyInPandas(
-            bucket_verify, f"a {key_type}, b {key_type}"
-        )
-        big = bands_sized.filter(F.col("bucket_size") > exact_task_cap)
-    else:
-        mid_pairs = None
-        big = bands_sized.filter(F.col("bucket_size") > hot_bucket_cap)
-
+    big = bands_sized.filter(F.col("bucket_size") > hot_bucket_cap)
     hubs = big.groupBy("band_idx", "band_hash").agg(F.min("key").alias("hub"))
     big_pairs = (
         big.join(hubs, ["band_idx", "band_hash"])
         .filter(F.col("key") != F.col("hub"))
         .select(F.col("hub").alias("a"), F.col("key").alias("b"))
     )
-    if sort_keys is not None:
-        big_sorted = big.select("band_idx", "band_hash", "key").join(
-            sort_keys.select("key", "sort_key"), "key"
-        )
-        order = [F.col("sort_key"), F.col("key")]
-    else:
-        big_sorted = big.select("band_idx", "band_hash", "key")
-        order = [F.col("key")]
-    w = Window.partitionBy("band_idx", "band_hash").orderBy(*order)
+    w = Window.partitionBy("band_idx", "band_hash").orderBy("key")
     ring_pairs = (
-        big_sorted.withColumn("prev", F.lag("key").over(w))
+        big.withColumn("prev", F.lag("key").over(w))
         .filter(F.col("prev").isNotNull() & (F.col("prev") != F.col("key")))
         .select(
             F.least("prev", "key").alias("a"),
             F.greatest("prev", "key").alias("b"),
         )
     )
-    out = (
+    return (
         small_pairs.select("a", "b")
         .unionByName(big_pairs.select("a", "b"))
         .unionByName(ring_pairs)
+        .distinct()
     )
-    if mid_pairs is not None:
-        out = out.unionByName(mid_pairs)
-    return out.distinct()

@@ -315,7 +315,7 @@ def bucketed_topk_join(
        Small-SF oracles never reach the cap, so duck_sql.ann_topk_many_sql
        is unchanged. Entering the regime is observable via
        ``capped_metrics`` (capped_buckets, max_bucket_rows; string name
-       (uniquified), Observation, or None — the candidate_pairs_from_band_rows contract).
+       (uniquified), Observation, or None — the lsh.bucket_sizes contract).
 
     Round-6 optimizations (results bit-identical on every path):
 
@@ -732,7 +732,7 @@ def ann_near_dup_pairs(
        small-SF oracles never reach the cap, so the SQL oracle is
        unchanged. Entering this regime is observable via
        ``capped_metrics`` (CollectMetrics: capped_buckets,
-       max_bucket_distinct — same contract as candidate_pairs_from_band_rows).
+       max_bucket_distinct — same contract as lsh.bucket_sizes).
     """
     if dim is None:
         dim = len(
@@ -1289,7 +1289,7 @@ def ivf_topk(
       n_centroids grows.
     - ``bucket_metrics``: CollectMetrics over home-bucket membership
       (``n_buckets``, ``max_bucket_members``) — skewed quantizers are
-      observable without the Spark UI, same contract as candidate_pairs_from_band_rows.
+      observable without the Spark UI, same contract as lsh.bucket_sizes.
       String name (uniquified), Observation, or None.
     - re-rank: at dim <= IVF_UNROLL_MAX_DIM the squared-L2 is an UNROLLED
       sum of dim getItem terms (Spark higher-order lambdas evaluate

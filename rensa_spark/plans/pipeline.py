@@ -21,7 +21,9 @@ The fixed cost per run is kept to the stage writes themselves:
 - lineage row counts come from the written files' parquet footers and are
   appended with no Spark job;
 - pairs come straight from the stage tables (band rows + signatures) after
-  the identical-signature collapse shared with ``dedup_edges``;
+  the identical-signature collapse shared with ``dedup_edges``, verified
+  inside each band bucket in one ``mapInPandas`` walk (each member's
+  signature joined once; no candidate pair crosses a shuffle);
 - clusters are one local union-find contraction of the pair table (AQE
   coalesces a small one into a single task, which then labels every
   component with no star round); the manifest metrics record which way it
@@ -203,7 +205,7 @@ class DedupPipeline:
         returns a small dict recorded into the manifest alongside the
         lineage row counts (e.g. the candidate-bucket CollectMetrics — the
         north rule's per-stage metrics, so production runs can see from the
-        manifest alone whether a run entered the >cap heuristic regime).
+        manifest alone whether a run entered the hub + ring heuristic regime).
         Every written stage's metrics also carry ``spark_jobs``: the jobs
         run under the stage's job group."""
         if self.manifest.stage_done(stage, self.config_hash) and self.store.exists(stage):

@@ -1170,11 +1170,11 @@ def test_hot_bucket_ring_preserves_verified_chains(spark):
         cfg = RensaConfig(
             num_perm=perm, seed=1, threshold=0.92, num_bands=4, hot_bucket_cap=cap
         )
-        pairs = verified_pairs_from_band_rows(band_rows, sigs, cfg)
+        pairs = verified_pairs_from_band_rows(band_rows, sigs, cfg, exact_task_cap=8)
         cc = connected_components(pairs)
         return sorted((r["key"], r["cluster_id"]) for r in cc.collect())
 
-    capped = comps(8)       # bucket size 20 > 8: hub + ring lane
+    capped = comps(8)       # bucket size 20 > max(8, 8): hub + ring lane
     uncapped = comps(1 << 30)  # full pairwise lane
     assert capped == uncapped
     # one transitive component rooted at 0 (CC emits non-root members)
@@ -1461,22 +1461,102 @@ def test_hot_bucket_exact_midpath_matches_uncapped(spark):
     assert uncapped == {("k_x", "k_z")}
     assert capped == uncapped
 
-    # and the heuristic regime is observable + correctly scoped: with the
-    # exact mid path available, heuristic_buckets counts only buckets past
-    # exact_task_cap (none here), while capped_buckets still reports the
-    # mid bucket
-    from rensa_spark.operators.lsh import candidate_pairs_from_band_rows
-
+    # and the heuristic regime is observable + correctly scoped:
+    # heuristic_buckets counts only buckets past exact_task_cap (none
+    # here), while capped_buckets still reports the >cap bucket
     obs = Observation("midpath")
-    candidate_pairs_from_band_rows(
-        band_rows,
-        hot_bucket_cap=2,
-        sort_keys=sigs.select("key", F.col("sig").alias("sort_key")),
-        capped_metrics=obs,
-        verify_threshold=0.8,
-    ).count()
+    cfg = RensaConfig(num_perm=perm, seed=1, threshold=0.8, num_bands=8, hot_bucket_cap=2)
+    verified_pairs_from_band_rows(band_rows, sigs, cfg, capped_metrics=obs).count()
     assert obs.get["capped_buckets"] == 1
     assert obs.get["heuristic_buckets"] == 0
+
+
+def test_heuristic_buckets_counts_only_above_both_caps(spark):
+    """heuristic_buckets counts buckets larger than BOTH hot_bucket_cap and
+    exact_task_cap (the only regime verified by hub + ring), also when
+    hot_bucket_cap is the larger cap, as it is by default."""
+    from pyspark.sql import Observation
+
+    from rensa_spark.operators.dedup import verified_pairs_from_band_rows
+
+    cfg = RensaConfig(num_perm=8, seed=1, threshold=0.5, num_bands=2, hot_bucket_cap=16)
+    rows = [(k, 0, 1) for k in range(12)] + [(100 + k, 0, 2) for k in range(20)]
+    band_rows = spark.createDataFrame(rows, "key long, band_idx int, band_hash long")
+    sigs = spark.createDataFrame(
+        [(k, [k % 3] * 8) for k, _, _ in rows], "key long, sig array<int>"
+    )
+
+    def metrics(bucket_hashes):
+        obs = Observation(f"heuristic_{len(bucket_hashes)}")
+        verified_pairs_from_band_rows(
+            band_rows.filter(F.col("band_hash").isin(*bucket_hashes)),
+            sigs,
+            cfg,
+            capped_metrics=obs,
+            exact_task_cap=8,
+        ).count()
+        return obs.get
+
+    between = metrics([1])  # 12 members: 8 < 12 <= 16
+    assert between["heuristic_buckets"] == 0 and between["capped_buckets"] == 0
+    both = metrics([1, 2])  # plus 20 members: above both caps
+    assert both["heuristic_buckets"] == 1 and both["capped_buckets"] == 1
+    assert both["max_bucket_size"] == 20
+
+
+def test_verified_pairs_bucket_split_across_arrow_batches(spark):
+    """A bucket cut at an Arrow batch boundary is carried into the next
+    batch: with 3-row batches every bucket of more than 3 members spans
+    several batches, and the verified pairs still equal a brute-force pass
+    over each bucket (exact and hub + ring buckets)."""
+    import itertools
+
+    from rensa_spark.operators.dedup import verified_pairs_from_band_rows
+
+    rng = np.random.default_rng(5)
+    perm = 16
+    sizes = {1: 7, 2: 2, 3: 11, 4: 25}  # band_hash -> members
+    rows, sig_of = [], {}
+    for h, n in sizes.items():
+        base = rng.integers(-50, 50, size=perm)
+        for m in range(n):
+            key = 1000 * h + m
+            sig = base.copy()
+            sig[rng.random(perm) < 0.3] = rng.integers(-50, 50)
+            sig_of[key] = sig.tolist()
+            rows.append((key, 0, h))
+    band_rows = spark.createDataFrame(rows, "key long, band_idx int, band_hash long")
+    sigs = spark.createDataFrame(list(sig_of.items()), "key long, sig array<int>")
+    cfg = RensaConfig(num_perm=perm, seed=1, threshold=0.6, num_bands=2, hot_bucket_cap=2)
+
+    def sim(a, b):
+        return sum(x == y for x, y in zip(sig_of[a], sig_of[b])) / perm
+
+    want = set()
+    for h, n in sizes.items():
+        keys = [1000 * h + m for m in range(n)]
+        if n <= 12:
+            cands = itertools.combinations(keys, 2)
+        else:
+            ring = sorted(keys, key=lambda k: (sig_of[k], k))
+            cands = [(keys[0], k) for k in keys[1:]] + list(zip(ring, ring[1:]))
+        want |= {
+            (min(a, b), max(a, b), sim(a, b)) for a, b in cands if sim(a, b) >= 0.6
+        }
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        got = {
+            (r["a"], r["b"], r["sim"])
+            for r in verified_pairs_from_band_rows(
+                band_rows, sigs, cfg, exact_task_cap=12
+            ).collect()
+        }
+    finally:
+        spark.conf.set(conf, prev)
+    assert len(want) > 10
+    assert got == want
 
 
 def test_lsh_index_appends_do_not_rewrite(spark, tmp_path):

@@ -265,3 +265,77 @@ def test_rho_densify_np_fuzz_vs_scalar():
                 want = mat[i].tolist()
                 rho_densify_py(want, seed)
                 assert got[i].tolist() == want, (n, seed, i)
+
+
+def _bucket_pairs_py(sigs, keys, bounds, exact_cap, threshold):
+    """Scalar reference of verify_bucket_pairs: every pair of a bucket of
+    <= exact_cap members; hub + (signed signature, key)-sorted ring above."""
+    out = []
+    for lo, hi in zip(bounds[:-1], bounds[1:]):
+        members = list(range(lo, hi))
+        if hi - lo <= exact_cap:
+            cands = [(u, v) for u in members for v in members if u < v]
+        else:
+            hub = min(members, key=lambda r: keys[r])
+            ring = sorted(members, key=lambda r: (tuple(sigs[r]), keys[r]))
+            cands = [(hub, r) for r in members] + list(zip(ring, ring[1:]))
+        for u, v in cands:
+            if keys[u] == keys[v]:
+                continue
+            sim = sum(x == y for x, y in zip(sigs[u], sigs[v])) / len(sigs[u])
+            if sim >= threshold:
+                out.append((min(keys[u], keys[v]), max(keys[u], keys[v]), sim))
+    return sorted(out)
+
+
+@pytest.mark.parametrize("key_kind", ["long", "string"])
+@pytest.mark.parametrize("chunk_elems", [None, 96])
+def test_verify_bucket_pairs_matches_scalar(key_kind, chunk_elems, monkeypatch):
+    """The numpy bucket kernel == the scalar reference, bit for bit in
+    ``sim``: bucket sizes 1-3, both sides of the flat/block boundary, a
+    bucket above the exact bound (hub + ring), negative int32 slots (an
+    unsigned sort would order the ring differently), string and long keys,
+    and (chunk_elems=96) every comparison split into many chunks."""
+    from rensa_spark.kernels import bucket_verify as kb
+
+    if chunk_elems is not None:
+        monkeypatch.setattr(kb, "_CHUNK_ELEMS", chunk_elems)
+    rng = np.random.default_rng(23)
+    perm = 16
+    sizes = [2, 3, 1, 2, 5, kb.FLAT_MAX, kb.FLAT_MAX + 1, 3, 90, 2]
+    sigs = []
+    for s in sizes:
+        # near-duplicate families: members copy a few family bases and
+        # re-draw some slots from a small signed alphabet
+        bases = rng.integers(-2**31, 2**31, size=(3, perm), dtype=np.int64)
+        for _ in range(s):
+            row = bases[rng.integers(3)].copy()
+            redraw = rng.random(perm) < rng.uniform(0.0, 0.5)
+            row[redraw] = rng.integers(-3, 3, size=redraw.sum())
+            sigs.append(row)
+    sig = np.stack(sigs).astype(np.int32)
+    n = len(sig)
+    if key_kind == "long":
+        keys = rng.choice(np.arange(-(2**62), 2**62, 2**40, dtype=np.int64), n, replace=False)
+        keys[1] = keys[0]  # a repeated key pairs with nothing
+    else:
+        keys = np.array([f"k{v:05d}" for v in rng.permutation(n * 7)[:n]], dtype=object)
+    bounds = np.concatenate([[0], np.cumsum(sizes)])
+    sig_py = sig.tolist()
+    keys_py = keys.tolist()
+    for exact_cap, threshold in ((1 << 20, 0.5), (kb.FLAT_MAX, 0.5), (2, 0.75), (10, 0.0)):
+        i, j, sim = kb.verify_bucket_pairs(sig, keys, bounds, exact_cap, threshold)
+        assert sim.dtype == np.float64
+        got = sorted(zip(keys[i].tolist(), keys[j].tolist(), sim.tolist()))
+        want = _bucket_pairs_py(sig_py, keys_py, bounds.tolist(), exact_cap, threshold)
+        assert got == want, (exact_cap, threshold)
+        assert len(want) > 0
+
+
+def test_min_equal_slots_matches_float_division():
+    from rensa_spark.kernels.bucket_verify import min_equal_slots
+
+    for perm in (1, 3, 7, 16, 128, 256):
+        for thr in (0.0, 0.1, 0.3, 0.5, 0.8, 0.92, 1 / 3, 2 / 3, 1.0):
+            need = min_equal_slots(thr, perm)
+            assert all((c / perm >= thr) == (c >= need) for c in range(perm + 1))

@@ -122,9 +122,13 @@ def test_pairs_stage_records_bucket_metrics(spark, corpus_df, tmp_path):
 # Jobs a fresh run of the pipeline takes on ``corpus_df`` (local[4], 8
 # shuffle partitions): signatures 1, bands 1, flags 3, pairs 8, clusters 3
 # (the contraction's shuffle map, the contraction, the write), survivors 2.
+# Pairs is one job per AQE query stage: the identical-signature window, the
+# representative-key broadcast, the bucket-size count, its broadcast, the
+# signature broadcast, the bucket repartition, the distinct, the write.
 # The pipeline before the single sketch pass, footer lineage and band-row
 # pairs took 81.
 FRESH_RUN_JOBS = 18
+PAIRS_JOBS = 8
 
 
 def test_fresh_run_job_count_halved(spark, corpus_df, tmp_path):
@@ -139,6 +143,7 @@ def test_fresh_run_job_count_halved(spark, corpus_df, tmp_path):
     assert set(jobs) == set(STAGES)
     assert all(n >= 1 for n in jobs.values()), jobs
     assert sum(jobs.values()) <= FRESH_RUN_JOBS, jobs
+    assert jobs["pairs"] <= PAIRS_JOBS, jobs
     cc = stages["clusters"]["metrics"]
     assert cc["spark_jobs"] <= 4, cc
     assert cc["contraction_partitions"] == 1 and cc["star_rounds"] == 0, cc

@@ -198,3 +198,30 @@ def test_bucketed_stage_tables_join_without_shuffle(spark, tmp_path):
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         for name in ("sigs_b", "flags_b"):
             spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_verified_pairs_single_python_crossing(spark):
+    """verified_pairs_from_band_rows verifies inside one bucket walk: the
+    executed plan holds exactly one Python node (the MapInPandas walk) and
+    no ArrowEvalPython (no per-pair Jaccard UDF), and the signature table
+    is joined once (to member band rows), never per pair side."""
+    from pyspark.sql import functions as F
+
+    from rensa_spark.operators.dedup import sketch_rminhash, verified_pairs_from_band_rows
+    from rensa_spark.sources.synthetic import generate_corpus
+
+    pdf = generate_corpus(300, seed=4, with_images=False)
+    base = spark.createDataFrame(pdf[["image_id", "caption"]]).select(
+        F.col("image_id").alias("key"), F.col("caption").alias("text")
+    )
+    sk = sketch_rminhash(base, CFG, "key", "text").select("key", "sig", "bands").localCheckpoint()
+    band_rows = sk.select("key", F.posexplode("bands").alias("band_idx", "band_hash"))
+    pairs = verified_pairs_from_band_rows(band_rows, sk.select("key", "sig"), CFG)
+    assert len(pairs.collect()) > 0  # executes this plan: AQE finalizes it
+    plan = _formatted_plan(pairs)
+    # the formatted tree prints the final plan, then the initial one
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert len(re.findall(r"MapInPandas \(", final)) == 1, final
+    assert len(re.findall(r"ArrowEvalPython \(", final)) == 0, final
+    # the bucket-size semi-join and the one signature join
+    assert len(re.findall(r"Join[\w ]* \(\d+\)", final)) == 2, final
