@@ -7,8 +7,12 @@
   shuffle — the right shape for 100 TB: no row-row shuffle at all.
 - LSH-bucketed variant (random hyperplane signs): candidate generation via
   sign-pattern buckets with multiprobe (flip one plane), exact re-rank inside
-  buckets. The scale path when queries are many.
+  buckets. The scale path when queries are many. Bucketing and scoring are
+  the numpy kernels in kernels/ann.py, shared by every hyperplane lane.
 - SimHash near-dup flags/pairs for text (kernels/simhash.py).
+
+The ANN operators drop rows whose vector is null before any Python
+crossing: such rows are neither queries nor candidates.
 """
 
 from __future__ import annotations
@@ -19,7 +23,26 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from rensa_spark.config import RensaConfig
-from rensa_spark.kernels.prng import Xoshiro256PlusPlus
+from rensa_spark.kernels.ann import (
+    QUANT_SCALE,
+    quantize_vecs,
+    quantized_hyperplanes,
+    quantized_topk,
+    sign_pattern,
+)
+
+
+def _stack(vecs) -> np.ndarray:
+    """(rows, dim) float64 matrix from a column of array values."""
+    return np.array([np.asarray(v, dtype=np.float64) for v in vecs])
+
+
+def _pandas_query_schema(df: DataFrame, id_col: str, qids) -> str:
+    """Partial top-k row schema of the lanes taking a pandas query set:
+    string qids stay strings, any other qid is a long."""
+    q_type = "string" if isinstance(qids[0], str) else "long"
+    n_type = df.schema[id_col].dataType.simpleString()
+    return f"qid {q_type}, neighbor_id {n_type}, score double"
 
 
 def _normalize(m: np.ndarray) -> np.ndarray:
@@ -37,20 +60,15 @@ def brute_force_topk(
 ) -> DataFrame:
     """-> (qid, rank, neighbor_id) exact cosine top-k per query."""
     qids = list(queries["qid"])
-    qmat = _normalize(np.array([np.asarray(v, dtype=np.float64) for v in queries["vec"]]))
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    qid_type = "string" if isinstance(qids[0], str) else "long"
-    schema = f"qid {qid_type}, neighbor_id {id_type}, score double"
+    qmat = _normalize(_stack(queries["vec"]))
+    schema = _pandas_query_schema(df, id_col, qids)
 
     def gen(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             ids = pdf[id_col].values
-            m = _normalize(
-                np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            )
+            m = _normalize(_stack(pdf[vec_col]))
             scores = m @ qmat.T  # (rows, nq)
             top = min(k, len(ids))
             part = np.argpartition(-scores, top - 1, axis=0)[:top]  # (top, nq)
@@ -68,9 +86,11 @@ def brute_force_topk(
                 )
             yield pd.concat(out, ignore_index=True)
 
-    partial = df.select(id_col, vec_col).mapInPandas(gen, schema)
-    from pyspark.sql import Window
-
+    partial = (
+        df.select(id_col, vec_col)
+        .filter(F.col(vec_col).isNotNull())
+        .mapInPandas(gen, schema)
+    )
     w = Window.partitionBy("qid").orderBy(
         F.desc("score"), F.asc("neighbor_id")
     )
@@ -82,53 +102,50 @@ def brute_force_topk(
     )
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
-    """Deterministic gaussian-ish hyperplanes from Xoshiro bits (Box-Muller
-    over uniform u64 draws) — no np.random state dependence."""
-    rng = Xoshiro256PlusPlus(seed)
-    n = dim * n_planes
-    u = np.array([rng.next_u64() for _ in range(n * 2)], dtype=np.uint64)
-    u1 = (u[0::2] >> np.uint64(11)).astype(np.float64) / float(1 << 53)
-    u2 = (u[1::2] >> np.uint64(11)).astype(np.float64) / float(1 << 53)
-    u1 = np.clip(u1, 1e-12, 1.0)
-    g = np.sqrt(-2.0 * np.log(u1)) * np.cos(2.0 * np.pi * u2)
-    return g[:n].reshape(n_planes, dim)
-
-
-# fixed-point scale for hyperplane/vector quantization: 2^20 keeps every
-# intermediate exact — |component| < 2^23 after scaling, dot products < 2^53,
-# so int64 never overflows and int->double conversions are lossless
-QUANT_SCALE = 1 << 20
-
-
-def quantized_hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
-    """int64 hyperplanes = floor(gaussian * 2^20). Quantizing the planes (and
-    the vectors, see :func:`quantize_vecs`) makes every bucket sign decision
-    EXACT int64 arithmetic — bit-reproducible across Spark, numpy and the
-    DuckDB oracle (round-2 verdict ask #4: no float sign decisions)."""
-    return np.floor(_hyperplanes(dim, n_planes, seed) * QUANT_SCALE).astype(
-        np.int64
+def _quantize_col(c):
+    """int64 fixed-point vector column, JVM-side: floor(v * 2^20), exact."""
+    return F.transform(
+        c, lambda x: F.floor(x.cast("double") * F.lit(float(QUANT_SCALE))).cast("long")
     )
 
 
-def quantize_vecs(m: np.ndarray) -> np.ndarray:
-    """float -> int64 fixed-point: floor(v * 2^20). float32 inputs widen to
-    float64 exactly and the power-of-two scaling is exact, so floor is the
-    only (deterministic, engine-independent) rounding step."""
-    return np.floor(m.astype(np.float64) * QUANT_SCALE).astype(np.int64)
+def _sign_pattern_udf(dim: int, n_planes: int, extra_planes: int, seed: int):
+    """Arrow-batched pandas UDF: a float vector column's ``sign_pattern``
+    over the ``n_planes`` bucket planes stacked on ``extra_planes``
+    hot-bucket sub-split planes (independent seed: what splits vectors that
+    agree on the first n_planes signs) — the one Python crossing per side of
+    the DataFrame hyperplane lanes. Bits below n_planes are the bucket
+    (:func:`_bucket`), the bits above are the sub-pattern (:func:`_hot_sub`).
+
+    Every caller materializes the pattern (a localCheckpoint) before any
+    join filters on it, so no isnotnull pushdown can duplicate the UDF."""
+    from pyspark.sql.pandas.functions import pandas_udf
+    from pyspark.sql.types import LongType
+
+    planes = np.vstack(
+        [
+            quantized_hyperplanes(dim, n_planes, seed),
+            quantized_hyperplanes(dim, extra_planes, seed + 7919),
+        ]
+    )
+
+    @pandas_udf(LongType())
+    def pattern(vecs: pd.Series) -> pd.Series:
+        return pd.Series(sign_pattern(quantize_vecs(_stack(vecs)), planes))
+
+    return pattern
 
 
-def _quant_scores(mq: np.ndarray, qq: np.ndarray) -> np.ndarray:
-    """(rows, nq) scores = dot / (|a| * |b|) from int64 fixed-point vectors.
-    Every input to the float expression is an exact integer < 2^53 and the
-    expression shape (sqrt, mul, div — each correctly rounded once) is the
-    same one the SQL oracle evaluates, so the doubles are bit-identical."""
-    dots = (mq @ qq.T).astype(np.float64)
-    na = np.sqrt((mq * mq).sum(axis=1).astype(np.float64))  # (rows,)
-    nb = np.sqrt((qq * qq).sum(axis=1).astype(np.float64))  # (nq,)
-    denom = na[:, None] * nb[None, :]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        return np.where(denom > 0, dots / denom, 0.0)
+def _bucket(pat: str, n_planes: int):
+    return F.col(pat).bitwiseAND(F.lit((1 << n_planes) - 1))
+
+
+def _hot_sub(pat: str, n_planes: int, size: str, cap: int):
+    """sub-bucket: the sub-pattern bits of ``pat`` when the row's bucket
+    holds more than ``cap`` rows, else 0."""
+    return F.when(F.col(size) > cap, F.shiftright(pat, n_planes)).otherwise(
+        F.lit(0).cast("long")
+    )
 
 
 def hyperplane_bucket_topk(
@@ -139,83 +156,63 @@ def hyperplane_bucket_topk(
     k: int = 10,
     n_planes: int = 8,
     seed: int = 42,
-    qid_type: str | None = None,
 ) -> DataFrame:
     """ANN top-k: random-hyperplane sign buckets + 1-bit multiprobe, exact
-    re-rank within candidate buckets. Recall < 1 by design; the scale path.
-
-    ``qid_type``: Spark type of the output ``qid`` column; callers whose
-    queries come from a DataFrame pass its schema's type. When omitted it is
-    inferred from the pandas ``qid`` values (string or long).
+    re-rank within candidate buckets. Recall < 1 by design; the scale path
+    for a small pandas query set (``bucketed_topk_join`` serves a query
+    DataFrame).
 
     All math is int64 fixed-point (floor(x * 2^20) planes AND vectors):
     bucket signs are exact integer comparisons and the re-rank score is a
     fixed-shape float expression over exact integers, so the result is
-    bit-reproducible across engines and SQL-checkable (verdict ask #4);
+    bit-reproducible across engines and SQL-checkable;
     sign(dot) is scale-invariant, so skipping normalization changes nothing.
+
+    Transport: the quantized queries are broadcast into one mapInPandas
+    pass over the corpus. Each Arrow batch buckets its rows and scores every
+    probed bucket in it with ``quantized_topk`` against the queries probing
+    that bucket; a per-qid window merges the partial top-k rows.
     """
-    planes = None
-
-    def bucket_of(mq: np.ndarray) -> np.ndarray:
-        signs = (mq @ planes.T) > 0  # (rows, planes) — exact int64
-        powers = (1 << np.arange(n_planes, dtype=np.int64))
-        return signs.astype(np.int64) @ powers
-
     dim = len(np.asarray(queries["vec"].iloc[0]))
     planes = quantized_hyperplanes(dim, n_planes, seed)
-    qq = quantize_vecs(
-        np.array([np.asarray(v, dtype=np.float64) for v in queries["vec"]])
-    )
-    q_buckets = bucket_of(qq)
-    # multiprobe: query bucket + all 1-bit flips
-    probe_sets = []
-    for qi, b in enumerate(q_buckets):
-        probes = {int(b)} | {int(b) ^ (1 << p) for p in range(n_planes)}
-        probe_sets.append(probes)
-    wanted = sorted({p for s in probe_sets for p in s})
-    qids = list(queries["qid"])
+    qq = quantize_vecs(_stack(queries["vec"]))
+    qids = queries["qid"].to_numpy()
+    # multiprobe: query bucket + all 1-bit flips -> the queries probing
+    # each bucket
+    probing = {}
+    for qi, b in enumerate(sign_pattern(qq, planes).tolist()):
+        for p in [b] + [b ^ (1 << j) for j in range(n_planes)]:
+            probing.setdefault(p, []).append(qi)
+    probing = {b: np.array(qs) for b, qs in probing.items()}
+    wanted = np.array(sorted(probing), dtype=np.int64)
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    if qid_type is None:
-        qid_type = "string" if isinstance(qids[0], str) else "long"
-    schema = f"qid {qid_type}, neighbor_id {id_type}, score double"
+    schema = _pandas_query_schema(df, id_col, qids)
 
     def gen(batches):
-        wanted_arr = np.array(wanted, dtype=np.int64)
         for pdf in batches:
             if not len(pdf):
                 continue
-            ids = pdf[id_col].values
-            mq = quantize_vecs(
-                np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            )
-            buckets = bucket_of(mq)
-            keep = np.isin(buckets, wanted_arr)
-            if not keep.any():
-                continue
-            ids, mq, buckets = ids[keep], mq[keep], buckets[keep]
-            scores = _quant_scores(mq, qq)
+            ids = pdf[id_col].to_numpy()
+            mq = quantize_vecs(_stack(pdf[vec_col]))
+            buckets = sign_pattern(mq, planes)
             out = []
-            for qi in range(len(qids)):
-                cand = np.isin(buckets, np.array(sorted(probe_sets[qi]), dtype=np.int64))
-                if not cand.any():
-                    continue
-                s = scores[cand, qi]
-                cids = ids[cand]
-                # TIE-SAFE partition top-k (argpartition would cut score ties
-                # at the k boundary arbitrarily): lexsort on (-score, id)
-                sel = np.lexsort((cids, -s))[: min(k, len(s))]
+            for b in np.intersect1d(buckets, wanted).tolist():
+                cand = buckets == b
+                qsel = probing[b]
+                qi, nid, score = quantized_topk(qq[qsel], mq[cand], ids[cand], k)
                 out.append(
                     pd.DataFrame(
-                        {"qid": qids[qi], "neighbor_id": cids[sel], "score": s[sel]}
+                        {"qid": qids[qsel][qi], "neighbor_id": nid, "score": score}
                     )
                 )
             if out:
                 yield pd.concat(out, ignore_index=True)
 
-    partial = df.select(id_col, vec_col).mapInPandas(gen, schema)
-    from pyspark.sql import Window
-
+    partial = (
+        df.select(id_col, vec_col)
+        .filter(F.col(vec_col).isNotNull())
+        .mapInPandas(gen, schema)
+    )
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
         partial.withColumn("rank", F.row_number().over(w))
@@ -223,43 +220,6 @@ def hyperplane_bucket_topk(
         .select("qid", "rank", "neighbor_id")
         .orderBy("qid", "rank")
     )
-
-
-def _sign_sub_bucket(vq_col: str, planes2: np.ndarray):
-    """Extra-plane sign sub-bucket, JVM-side over an int64 fixed-point
-    vector column: bit j = (vq . planes2[j]) > 0 — the same exact integer
-    sign decision as the Python-side bucket UDFs, so sub-assignment is a
-    pure function of the quantized vector on every engine.
-
-    The constant-plane dots are UNROLLED getItem sums at dim <= 128
-    (higher-order zip_with/aggregate lambdas evaluate interpreted, outside
-    whole-stage codegen — the IVF re-rank measured 3x on the same shape);
-    integer addition is associative, so both forms are bit-identical."""
-    dim = planes2.shape[1]
-    bits = []
-    for j in range(len(planes2)):
-        if dim <= 128:
-            dotj = None
-            for i in range(dim):
-                c = int(planes2[j][i])
-                if c == 0:
-                    continue
-                term = F.col(vq_col).getItem(i) * F.lit(c)
-                dotj = term if dotj is None else dotj + term
-            if dotj is None:
-                dotj = F.lit(0).cast("long")
-        else:
-            pj = F.array(*[F.lit(int(c)) for c in planes2[j]])
-            dotj = F.aggregate(
-                F.zip_with(vq_col, pj, lambda a, b: a * b),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            )
-        bits.append(F.when(dotj > 0, F.lit(1 << j)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
 
 
 def bucketed_topk_join(
@@ -276,30 +236,31 @@ def bucketed_topk_join(
     hot_bucket_cap: int = 2048,
     extra_planes: int = 6,
     capped_metrics="rensa_topk_capped_buckets",
-    broadcast_max_rows: int = 4096,
     query_group_cap: int = 16384,
 ) -> DataFrame:
     """Many-query ANN lane: df <-> df hyperplane-bucket EQUI-JOIN + per-query
     window top-k — no driver-side query collection, so it scales to millions
-    of query vectors (the round-1 ``hyperplane_bucket_topk`` broadcasts a
-    pandas query set; this is its distributed replacement).
+    of query vectors (``hyperplane_bucket_topk`` broadcasts a pandas query
+    set; this is its distributed counterpart, with the same probes, scores
+    and tie-break).
 
-    Plan shape: each side crosses Python once for bucketing (Arrow-batched
-    UDF); the query side explodes to its own bucket plus all 1-bit flips
-    (multiprobe, same probe set as the broadcast lane), the corpus side is
-    keyed by its single bucket, and the ONE data shuffle keys both sides
-    by ``(bucket, sub)`` into a COGROUPED applyInPandas that scores each
-    group with one numpy matmul and emits only the in-group top-k — the
-    candidate set is never materialized as rows (round 5: per-pair
-    expression scoring measured ~3 us/row; the group matmul is BLAS and
-    its output is min(k, nc) rows per (query, probe)). A corpus row
-    occupies exactly one (bucket, sub) and the probe set per query is
-    distinct, so (qid, neighbor) pairs are already unique — the final
-    per-qid window just merges <= probes*k partial rows per query.
+    Plan shape: each side crosses Python once, in an Arrow-batched UDF that
+    computes the vector's sign pattern over the bucket planes AND the
+    ``extra_planes`` sub-split planes; the query side explodes to its own
+    bucket plus all 1-bit flips (multiprobe, same probe set as the
+    broadcast lane), the corpus side is keyed by its single bucket, and the
+    ONE data shuffle brings both sides of each ``(bucket, sub)`` group
+    together for a segment scan that scores the group with
+    ``quantized_topk`` (one numpy matmul per query chunk) and emits only the
+    in-group top-k — the candidate set is never materialized as rows (per-
+    pair expression scoring measured ~3 us/row). A corpus row occupies
+    exactly one (bucket, sub) and the probe set per query is distinct, so
+    (qid, neighbor) pairs are already unique — the final per-qid window
+    just merges <= probes*k partial rows per query.
 
-    Scale shape (round-4 verdict ask #1 — the fixed 2^n_planes bucket
-    domain made the equi-join O(n^2 * probes / 2^n_planes) at large n; the
-    same treatment as ``ann_near_dup_pairs``):
+    Scale shape (the fixed 2^n_planes bucket domain would make the
+    equi-join O(n^2 * probes / 2^n_planes) at large n; the same treatment
+    as ``ann_near_dup_pairs``):
 
     1. EXACT identical-vector collapse on the corpus side: rows with the
        same quantized vector score identically for every query and the
@@ -308,152 +269,82 @@ def bucketed_topk_join(
        degenerate all-same-vector region contributes k rows to the join,
        not its full membership. Never approximate, any SF.
     2. buckets still holding more than ``hot_bucket_cap`` rows after the
-       collapse are subdivided by ``extra_planes`` additional quantized
-       hyperplanes on BOTH join sides (corpus rows by their vector's
-       sub-pattern, probing queries by theirs) — expected membership drops
-       by 2^extra_planes at a recall trade INSIDE hot buckets only.
-       Small-SF oracles never reach the cap, so duck_sql.ann_topk_many_sql
-       is unchanged. Entering the regime is observable via
-       ``capped_metrics`` (capped_buckets, max_bucket_rows; string name
-       (uniquified), Observation, or None — the lsh.bucket_sizes contract).
+       collapse are subdivided by the ``extra_planes`` sub-pattern on BOTH
+       join sides (corpus rows by their vector's sub-pattern, probing
+       queries by theirs) — expected membership drops by 2^extra_planes at
+       a recall trade INSIDE hot buckets only. The sub-pattern comes from
+       the bucket crossing, so choosing it is a column select. Small-SF
+       oracles never reach the cap, so duck_sql.ann_topk_many_sql is
+       unchanged. Entering the regime is observable via ``capped_metrics``
+       (capped_buckets, max_bucket_rows; string name (uniquified),
+       Observation, or None — the lsh.bucket_sizes contract).
 
-    Round-6 optimizations (results bit-identical on every path):
+    Further plan choices (results identical on every path):
 
     - SELF-JOIN SHARING: when ``queries_df is df`` with the same columns
-      (the common "every row is a query" call), the quantize+bucket side is
-      computed ONCE (one scan, one Arrow crossing) and lazily checkpointed;
-      corpus and query sides are projections of it.
-    - SMALL-INPUT BYPASS (round-5 verdict ask #2): a self-join whose corpus
-      has <= ``broadcast_max_rows`` rows (default 4096) and whose largest
-      bucket holds <= ``hot_bucket_cap`` rows dispatches to the broadcast
-      scorer ``hyperplane_bucket_topk`` — the same probe set, the same
-      exact int64 fixed-point scores and the same
-      (score desc, id asc) tie-break, and no bucket the scale path would
-      sub-split, so the output rows are identical — skipping ~5s of
-      collapse/cogroup machinery that only pays for itself at scale. The
-      threshold bounds driver+executor memory at n*(dim*8+8) bytes (~2 MB
-      at dim 64) and the full score matmul at n^2*dim flops (~1 GFLOP) —
-      input-size-adaptive like AQE's broadcast decision, not a local[32]
-      tuning. Taken only when ``capped_metrics`` is None: the broadcast
-      scorer computes no bucket metrics to report.
-    - QUERY-SIDE GROUP BOUND (round-5 verdict ask #1): a one-row probe
-      aggregate decides adaptively whether any bucket's probing-query
-      count exceeds ``query_group_cap`` (default 16384). If so, query
-      rows are salted by ``xxhash64(qid)`` into
-      ``ceil(n_probing_queries / query_group_cap)`` sub-groups per bucket
-      and corpus rows replicate once per salt, so a skewed query workload
-      cannot materialize an unbounded pandas group (group memory <=
+      (the common "every row is a query" call), the quantize+pattern side
+      is computed ONCE (one scan, one Arrow crossing) and lazily
+      checkpointed; corpus and query sides are projections of it.
+    - QUERY-SIDE GROUP BOUND: a one-row probe aggregate decides adaptively
+      whether any bucket's probing-query count exceeds ``query_group_cap``
+      (default 16384). If so, query rows are salted by ``xxhash64(qid)``
+      into ``ceil(n_probing_queries / query_group_cap)`` sub-groups per
+      bucket and corpus rows replicate once per salt, so a skewed query
+      workload cannot materialize an unbounded group (group memory <=
       ~(query_group_cap + hot corpus cap) * dim * 8B). Unskewed workloads
-      keep the salt-free round-5 plan. Each (query, corpus) pair still
-      meets exactly once; the final per-qid window merges partials, so
-      results are unchanged either way.
+      keep the salt-free plan. Each (query, corpus) pair still meets
+      exactly once; the final per-qid window merges partials, so results
+      are unchanged either way.
 
     Runs a Spark job when called (the probe-count aggregate above, which
-    also materializes the query side): the bypass and the salt are decided
-    from the data at that time and frozen into the returned plan.
+    also materializes the query side): the salt is decided from the data
+    at that time and frozen into the returned plan.
     """
-    if dim is None:
-        dim = len(
-            np.asarray(
-                queries_df.select(qvec_col).filter(F.col(qvec_col).isNotNull()).first()[0]
-            )
-        )
-    planes = quantized_hyperplanes(dim, n_planes, seed)
-    planes2 = quantized_hyperplanes(dim, extra_planes, seed + 7919)
-
-    from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.sql.types import LongType
-
-    @pandas_udf(LongType())
-    def bucket_udf(vecs: pd.Series) -> pd.Series:
-        mq = quantize_vecs(np.array([np.asarray(v, dtype=np.float64) for v in vecs]))
-        signs = (mq @ planes.T) > 0  # exact int64 sign decisions
-        powers = 1 << np.arange(n_planes, dtype=np.int64)
-        return pd.Series(signs.astype(np.int64) @ powers)
-
-    def _qvec(c):
-        # int64 fixed-point vector, JVM-side (floor(v * 2^20), exact)
-        return F.transform(
-            c, lambda x: F.floor(x.cast("double") * F.lit(float(QUANT_SCALE))).cast("long")
-        )
-
-    # coalesce makes the join key non-nullable: without it Catalyst pushes an
-    # isnotnull(bucket) filter below the projection and DUPLICATES the Python
-    # UDF (two ArrowEvalPython nodes = 2x Arrow serialization of every
-    # corpus vector; observed in the formatted plan). -1 is unreachable (the
-    # UDF never returns null), it exists only to fix the nullability.
     shared = (queries_df is df) and (qid_col == id_col) and (qvec_col == vec_col)
-    side = None
+    df = df.filter(F.col(vec_col).isNotNull())
+    queries_df = queries_df.filter(F.col(qvec_col).isNotNull())
+    if dim is None:
+        dim = len(np.asarray(queries_df.select(qvec_col).first()[0]))
+    pattern = _sign_pattern_udf(dim, n_planes, extra_planes, seed)
+
     if shared:
-        # one scan + ONE Arrow crossing for both join sides (round 6): the
-        # quantize+bucket projection is computed once and checkpointed
+        # one scan + ONE Arrow crossing for both join sides: the
+        # quantize+pattern projection is computed once and checkpointed
         side = df.select(
             F.col(id_col).alias("vid"),
-            _qvec(F.col(vec_col)).alias("vq"),
-            F.coalesce(bucket_udf(F.col(vec_col)), F.lit(-1)).alias("bucket"),
+            _quantize_col(F.col(vec_col)).alias("vq"),
+            pattern(F.col(vec_col)).alias("pat"),
         ).localCheckpoint(eager=False)
         qbase = side.select(
             F.col("vid").alias("qid"),
             F.col("vq").alias("qvec"),
-            F.col("bucket").alias("qbucket"),
+            F.col("pat").alias("qpat"),
+        )
+        corpus = side.select(
+            F.col("vid").alias("neighbor_id"), F.col("vq").alias("nvec"), "pat"
         )
     else:
         qbase = queries_df.select(
             F.col(qid_col).alias("qid"),
-            _qvec(F.col(qvec_col)).alias("qvec"),
-            F.coalesce(bucket_udf(F.col(qvec_col)), F.lit(-1)).alias("qbucket"),
+            _quantize_col(F.col(qvec_col)).alias("qvec"),
+            pattern(F.col(qvec_col)).alias("qpat"),
         ).localCheckpoint(eager=False)  # consumed by probe counts + the join
+        corpus = df.select(
+            F.col(id_col).alias("neighbor_id"),
+            _quantize_col(F.col(vec_col)).alias("nvec"),
+            pattern(F.col(vec_col)).alias("pat"),
+        )
+    qbase = qbase.withColumn("qbucket", _bucket("qpat", n_planes))
     probe_array = F.array(
         F.col("qbucket"),
         *[F.col("qbucket").bitwiseXOR(F.lit(1 << p)) for p in range(n_planes)],
     )
     qprobes = qbase.withColumn("bucket", F.explode(probe_array))
-    # ONE fused decision aggregate (round 6): per-bucket probing-query
-    # counts collapse map-side; max drives the adaptive query-side salt
-    # (round-5 verdict ask #1) and sum recovers the exact query count
-    # (every query emits exactly n_planes+1 probe rows) for the
-    # small-input bypass, as does the largest own-bucket count (on a
-    # self-join, the corpus bucket size before the identical-vector
-    # collapse) — a single tiny job instead of several driver actions.
-    # It also materializes the side checkpoint.
-    qcnt = qprobes.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n_q"),
-        F.sum((F.col("qbucket") == F.col("bucket")).cast("long")).alias("n_own"),
-    )
-    _stats = qcnt.agg(
-        F.max("n_q").alias("mx"),
-        F.sum("n_q").alias("tot"),
-        F.max("n_own").alias("own_mx"),
-    ).first()
-    max_nq = _stats["mx"]
-    n_queries = (_stats["tot"] or 0) // (n_planes + 1)
-    if (
-        shared
-        and capped_metrics is None
-        and 0 < n_queries <= broadcast_max_rows
-        and _stats["own_mx"] <= hot_bucket_cap
-    ):
-        # small-input bypass: same probes, same exact scores, same
-        # tie-break, no bucket over the cap — identical rows via the
-        # broadcast scorer
-        qpdf = queries_df.select(qid_col, qvec_col).toPandas()
-        q = pd.DataFrame({"qid": qpdf[qid_col], "vec": qpdf[qvec_col]})
-        return hyperplane_bucket_topk(
-            df, id_col, vec_col, q, k=k, n_planes=n_planes, seed=seed,
-            qid_type=queries_df.schema[qid_col].dataType.simpleString(),
-        )
-    if shared:
-        corpus = side.select(
-            F.col("vid").alias("neighbor_id"),
-            F.col("vq").alias("nvec"),
-            "bucket",
-        )
-    else:
-        corpus = df.select(
-            F.col(id_col).alias("neighbor_id"),
-            _qvec(F.col(vec_col)).alias("nvec"),
-            F.coalesce(bucket_udf(F.col(vec_col)), F.lit(-1)).alias("bucket"),
-        )
+    # ONE decision aggregate: per-bucket probing-query counts collapse
+    # map-side and their max drives the adaptive query-side salt — a
+    # single tiny job, which also materializes the side checkpoint
+    qcnt = qprobes.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_q"))
+    max_nq = qcnt.agg(F.max("n_q")).first()[0]
     # EXACT identical-vector collapse (scale step 1 in the docstring):
     # keep only the k smallest neighbor ids per identical quantized vector
     wv = Window.partitionBy("nvec").orderBy("neighbor_id")
@@ -462,6 +353,7 @@ def bucketed_topk_join(
         .filter(F.col("_rn") <= k)
         .drop("_rn")
         .localCheckpoint(eager=False)  # consumed by sizes + the join
+        .withColumn("bucket", _bucket("pat", n_planes))
     )
     sizes_raw = corpus.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_in_bucket")
@@ -483,23 +375,21 @@ def bucketed_topk_join(
             ).alias("capped_buckets"),
             F.max("n_in_bucket").alias("max_bucket_rows"),
         )
-    _hot_sub = lambda vq_name: F.when(  # noqa: E731
-        F.col("n_in_bucket") > hot_bucket_cap,
-        F.coalesce(_sign_sub_bucket(vq_name, planes2), F.lit(0)),
-    ).otherwise(F.lit(0))
     salted = max_nq is not None and max_nq > query_group_cap
     # no broadcast hint on the OBSERVED side: re-executions of a broadcast
     # exchange wrapping a CollectMetrics node spam accumulator-lookup
     # errors after the first job unregisters it (observed in the 50k
     # smoke); AQE still picks a broadcast join for the 2^n_planes-row
     # aggregate on its own, through a path that re-registers cleanly
-    corpus = corpus.join(sizes, "bucket").withColumn("sub", _hot_sub("nvec"))
+    corpus = corpus.join(sizes, "bucket").withColumn(
+        "sub", _hot_sub("pat", n_planes, "n_in_bucket", hot_bucket_cap)
+    )
     qside = (
         qprobes
         # a probe bucket absent from sizes has no candidates anyway — the
-        # inner join drops it before the cogroup instead of after
+        # inner join drops it before the scan instead of after
         .join(F.broadcast(sizes_raw), "bucket")
-        .withColumn("sub", _hot_sub("qvec"))
+        .withColumn("sub", _hot_sub("qpat", n_planes, "n_in_bucket", hot_bucket_cap))
     )
     group_keys = ["bucket", "sub"]
     if salted:
@@ -512,7 +402,7 @@ def bucketed_topk_join(
             .alias("n_salt"),
         )
         # the salts inner join also drops corpus buckets no query probes —
-        # their cogroup groups would have been empty anyway
+        # their groups would have been empty anyway
         corpus = (
             corpus.join(F.broadcast(salts), "bucket")
             .withColumn(
@@ -528,37 +418,17 @@ def bucketed_topk_join(
             .drop("n_salt")
         )
         group_keys = ["bucket", "sub", "qsalt"]
-    corpus = corpus.drop("n_in_bucket")
-    qside = qside.drop("n_in_bucket")
-    # Scoring runs per (bucket, sub) GROUP as one numpy matmul with an
-    # in-group partial top-k — NEVER per candidate row: materializing the
-    # equi-join and evaluating the cosine expression per pair measured
-    # ~3 us/row (the 64-getItem unroll and the HOF lambda both evaluate
-    # outside any fast path at this expression size), i.e. 20s for a
-    # 5.8M-candidate degenerate lane, whereas the group matmul is BLAS and
-    # only min(k, nc) rows per (query, probe) ever leave the group — the
-    # exchange after carries <= probes*k rows per query instead of the
-    # full candidate set.
-    # Exactness: the int64 dot is exact, and score = dot / (sqrt(qn2) *
-    # sqrt(nn2)) is three correctly-rounded float64 ops — bit-identical in
-    # numpy, the JVM, and the DuckDB oracle (the round-3 fixed-point ANN
-    # contract). In-group ties order by (score desc, neighbor_id asc) via
-    # chained stable argsorts, matching the final window exactly.
-    # Group memory ~ (nq + nc) * dim * 8B; nc is bounded by the cap /
-    # sub-split, nq chunks at 4096 rows per matmul.
-    qid_type = queries_df.schema[qid_col].dataType.simpleString()
-    id_type = df.schema[id_col].dataType.simpleString()
+    q_type = queries_df.schema[qid_col].dataType.simpleString()
+    n_type = df.schema[id_col].dataType.simpleString()
 
-    # Round 6: the cogrouped applyInPandas paid a per-GROUP toll (each
-    # (bucket, sub) group is its own Arrow batch + Python call + result
-    # assembly — a cogroup over the 3.6k-group hot benchmark measured
-    # ~4-7s with a TRIVIAL function, i.e. pure machinery). Same per-group
-    # math, different transport: both sides union into one table tagged
-    # is_q, ONE hash repartition on the group keys + a partition-local
-    # sort makes every group a contiguous run, and a mapInPandas segment
-    # scan walks the runs — Python is invoked once per Arrow batch, not
-    # once per group, and a group split across batch boundaries is carried
-    # forward, so peak memory stays one (bounded) group + one batch.
+    # Transport: both sides union into one table tagged is_q, ONE hash
+    # repartition on the group keys + a partition-local sort makes every
+    # group a contiguous run, and a mapInPandas segment scan walks the runs
+    # — Python is invoked once per Arrow batch, not once per group (a
+    # cogrouped applyInPandas paid ~1-2 ms per group: 4-7 s on the
+    # 3.6k-group hot benchmark with a TRIVIAL function), and a group split
+    # across batch boundaries is carried forward, so peak memory stays one
+    # (bounded) group + one batch.
     # typed dummies (not NULLs) for the opposite side's id: a long column
     # holding nulls round-trips Arrow->pandas as float64, which would
     # corrupt 64-bit ids past 2^53
@@ -566,13 +436,13 @@ def bucketed_topk_join(
         *group_keys,
         F.lit(True).alias("is_q"),
         F.col("qid"),
-        F.lit(0).cast(id_type).alias("neighbor_id"),
+        F.lit(0).cast(n_type).alias("neighbor_id"),
         F.col("qvec").alias("vec"),
     )
     crows = corpus.select(
         *group_keys,
         F.lit(False).alias("is_q"),
-        F.lit(0).cast(qid_type).alias("qid"),
+        F.lit(0).cast(q_type).alias("qid"),
         F.col("neighbor_id"),
         F.col("nvec").alias("vec"),
     )
@@ -595,51 +465,36 @@ def bucketed_topk_join(
             keys = np.stack(
                 [pdf[c].to_numpy(dtype=np.int64) for c in key_cols], axis=1
             )
-            vec = np.stack(
-                [np.asarray(v, dtype=np.int64) for v in pdf["vec"]]
-            ) if len(pdf) else np.empty((0, dim), dtype=np.int64)
             return (
                 keys,
                 pdf["is_q"].to_numpy(dtype=bool),
                 pdf["qid"].to_numpy(),
                 pdf["neighbor_id"].to_numpy(),
-                vec,
+                np.stack([np.asarray(v, dtype=np.int64) for v in pdf["vec"]]),
             )
 
         out_q, out_n, out_s = [], [], []
 
-        def emit(keys, isq, qids, nids, V, s, e):
-            m = isq[s:e]
-            if m.all() or not m.any():
+        def emit(isq, qids, nids, V):
+            if isq.all() or not isq.any():
                 return  # query-only or corpus-only run: no candidates
-            rel = np.nonzero(~m)[0] + s
-            C = V[rel]
-            nid = nids[rel]
-            perm0 = np.argsort(nid, kind="stable")  # tie-break order
-            C = C[perm0]
-            nid = nid[perm0]
-            n2c = (C * C).sum(axis=1).astype(np.float64)
-            top = min(k, len(nid))
-            qrel = np.nonzero(m)[0] + s
-            for lo in range(0, len(qrel), 4096):
-                sel = qrel[lo : lo + 4096]
-                Q = V[sel]
-                q2 = (Q * Q).sum(axis=1).astype(np.float64)
-                dots = (Q @ C.T).astype(np.float64)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    S = np.where(
-                        (q2[:, None] > 0) & (n2c[None, :] > 0),
-                        dots / (np.sqrt(q2)[:, None] * np.sqrt(n2c)[None, :]),
-                        0.0,
-                    )
-                # rowwise lexsort(primary -score, secondary neighbor_id):
-                # columns are in nid order, so one stable argsort on
-                # -score preserves the id tie-break
-                order = np.argsort(-S, axis=1, kind="stable")[:, :top]
-                rows = np.arange(S.shape[0])[:, None]
-                out_q.append(np.repeat(qids[sel], top))
-                out_n.append(nid[order].reshape(-1))
-                out_s.append(S[rows, order].reshape(-1))
+            q = np.nonzero(isq)[0]
+            c = np.nonzero(~isq)[0]
+            qi, nid, score = quantized_topk(V[q], V[c], nids[c], k)
+            out_q.append(qids[q][qi])
+            out_n.append(nid)
+            out_s.append(score)
+
+        def flush():
+            frame = pd.DataFrame(
+                {
+                    "qid": np.concatenate(out_q),
+                    "neighbor_id": np.concatenate(out_n),
+                    "score": np.concatenate(out_s),
+                }
+            )
+            out_q.clear(), out_n.clear(), out_s.clear()
+            return frame
 
         carry = None
         for pdf in batches:
@@ -647,41 +502,24 @@ def bucketed_topk_join(
                 continue
             arrs = arrays_of(pdf)
             if carry is not None:
-                arrs = tuple(
-                    np.concatenate([c, a]) for c, a in zip(carry, arrs)
-                )
-                carry = None
-            keys, isq, qids, nids, V = arrs
+                arrs = tuple(np.concatenate([c, a]) for c, a in zip(carry, arrs))
+            keys = arrs[0]
             new_grp = np.ones(len(keys), dtype=bool)
             new_grp[1:] = (keys[1:] != keys[:-1]).any(axis=1)
-            starts = np.nonzero(new_grp)[0]
+            bounds = np.nonzero(new_grp)[0]
             # the last run may continue into the next batch — carry it
-            carry = tuple(a[starts[-1] :] for a in arrs)
-            for i in range(len(starts) - 1):
-                emit(keys, isq, qids, nids, V, starts[i], starts[i + 1])
+            carry = tuple(a[bounds[-1] :] for a in arrs)
+            for s, e in zip(bounds[:-1], bounds[1:]):
+                emit(*(a[s:e] for a in arrs[1:]))
             if out_q:
-                yield pd.DataFrame(
-                    {
-                        "qid": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "score": np.concatenate(out_s),
-                    }
-                )
-                out_q.clear(), out_n.clear(), out_s.clear()
-        if carry is not None and len(carry[0]):
-            keys, isq, qids, nids, V = carry
-            emit(keys, isq, qids, nids, V, 0, len(keys))
+                yield flush()
+        if carry is not None:
+            emit(*carry[1:])
         if out_q:
-            yield pd.DataFrame(
-                {
-                    "qid": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "score": np.concatenate(out_s),
-                }
-            )
+            yield flush()
 
     partial = tagged.mapInPandas(
-        segment_scan, f"qid {qid_type}, neighbor_id {id_type}, score double"
+        segment_scan, f"qid {q_type}, neighbor_id {n_type}, score double"
     )
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
@@ -713,8 +551,8 @@ def ann_near_dup_pairs(
     deliberately omitted to keep the pair set a pure function of the
     bucket assignment.
 
-    Scale shape (round-3 verdict ask #2 — the fixed 2^n_planes bucket
-    domain made the self-join O(n^2/2^n_planes) at large n):
+    Scale shape (the fixed 2^n_planes bucket domain would make the
+    self-join O(n^2/2^n_planes) at large n):
 
     1. identical QUANTIZED vectors collapse to one representative before
        any join (the vq array is the group identity, mirroring the simhash
@@ -726,43 +564,23 @@ def ann_near_dup_pairs(
        pair's score — collapse is EXACT, never approximate.
     2. buckets whose DISTINCT-vector count exceeds ``hot_bucket_cap`` are
        subdivided by ``extra_planes`` additional quantized hyperplanes
-       (independent seed), computed JVM-side from vq; candidates there
-       must share the sub-pattern too. This bounds expected membership by
-       another 2^extra_planes at a recall trade INSIDE hot buckets only —
-       small-SF oracles never reach the cap, so the SQL oracle is
-       unchanged. Entering this regime is observable via
-       ``capped_metrics`` (CollectMetrics: capped_buckets,
+       (independent seed), whose sign pattern the bucket crossing computes
+       alongside the bucket; candidates there must share the sub-pattern
+       too. This bounds expected membership by another 2^extra_planes at a
+       recall trade INSIDE hot buckets only — small-SF oracles never reach
+       the cap, so the SQL oracle is unchanged. Entering this regime is
+       observable via ``capped_metrics`` (CollectMetrics: capped_buckets,
        max_bucket_distinct — same contract as lsh.bucket_sizes).
     """
+    df = df.filter(F.col(vec_col).isNotNull())
     if dim is None:
-        dim = len(
-            np.asarray(df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()[0])
-        )
-    planes = quantized_hyperplanes(dim, n_planes, seed)
-    # independent second bank for hot-bucket subdivision (splitmix-style
-    # seed offset; any fixed distinct seed works — independence from bank 1
-    # is what splits vectors that agree on the first n_planes signs)
-    planes2 = quantized_hyperplanes(dim, extra_planes, seed + 7919)
-
-    from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.sql.types import LongType
-
-    @pandas_udf(LongType())
-    def bucket_udf(vecs: pd.Series) -> pd.Series:
-        mq = quantize_vecs(np.array([np.asarray(v, dtype=np.float64) for v in vecs]))
-        signs = (mq @ planes.T) > 0
-        powers = 1 << np.arange(n_planes, dtype=np.int64)
-        return pd.Series(signs.astype(np.int64) @ powers)
-
-    def _qvec(c):
-        return F.transform(
-            c, lambda x: F.floor(x.cast("double") * F.lit(float(QUANT_SCALE))).cast("long")
-        )
+        dim = len(np.asarray(df.select(vec_col).first()[0]))
+    pattern = _sign_pattern_udf(dim, n_planes, extra_planes, seed)
 
     side = df.select(
         F.col(id_col).alias("vid"),
-        _qvec(F.col(vec_col)).alias("vq"),
-        F.coalesce(bucket_udf(F.col(vec_col)), F.lit(-1)).alias("bucket"),
+        _quantize_col(F.col(vec_col)).alias("vq"),
+        pattern(F.col(vec_col)).alias("pat"),
     ).withColumn(
         "n2", F.aggregate("vq", F.lit(0).cast("long"), lambda acc, x: acc + x * x)
     )
@@ -817,7 +635,7 @@ def ann_near_dup_pairs(
 
     # cross-group candidates over DISTINCT vectors only
     reps = members.filter(F.col("vid") == F.col("gid")).select(
-        "gid", "vq", "bucket", "n2"
+        "gid", "vq", _bucket("pat", n_planes).alias("bucket"), "pat", "n2"
     ).localCheckpoint(eager=False)
     sizes = reps.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_distinct"))
     if capped_metrics is not None:
@@ -828,21 +646,12 @@ def ann_near_dup_pairs(
             ).alias("capped_buckets"),
             F.max("n_distinct").alias("max_bucket_distinct"),
         )
-    # ONE projection assigns sub for both regimes (round 6: the former
-    # small/hot filter+union evaluated the sizes aggregate and the reps
-    # scan twice — When() keeps the expensive sub-bucket expression lazy on
-    # non-hot rows with identical values), and the checkpoint feeds both
-    # sides of the self-join without re-running the join-with-sizes subtree
-    # (it also makes the observed bucket metrics fire exactly once).
+    # ONE projection assigns sub for both regimes, and the checkpoint feeds
+    # both sides of the self-join without re-running the join-with-sizes
+    # subtree (it also makes the observed bucket metrics fire exactly once)
     rep_side = (
         reps.join(sizes, "bucket")
-        .withColumn(
-            "sub",
-            F.when(
-                F.col("n_distinct") > hot_bucket_cap,
-                F.coalesce(_sign_sub_bucket("vq", planes2), F.lit(0)),
-            ).otherwise(F.lit(0)),
-        )
+        .withColumn("sub", _hot_sub("pat", n_planes, "n_distinct", hot_bucket_cap))
         .select("gid", "vq", "bucket", "sub", "n2")
         .localCheckpoint(eager=False)
     )
@@ -1303,16 +1112,11 @@ def ivf_topk(
             np.asarray(df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()[0])
         )
 
-    def _qvec(c):
-        return F.transform(
-            c, lambda x: F.floor(x.cast("double") * F.lit(float(QUANT_SCALE))).cast("long")
-        )
-
     # ONE materialization feeds the 5 training actions + init + serving
     # (lazy localCheckpoint: blocks reclaimed when the result goes out of
     # scope; without it each Lloyd iteration re-quantizes the whole corpus)
     side = (
-        df.select(F.col(id_col).alias("vid"), _qvec(F.col(vec_col)).alias("vq"))
+        df.select(F.col(id_col).alias("vid"), _quantize_col(F.col(vec_col)).alias("vq"))
         .filter(F.col("vq").isNotNull())
         .localCheckpoint(eager=False)
     )

@@ -666,60 +666,167 @@ def test_multimodal_dedup_clusters(spark):
 
 def test_bucketed_topk_join_matches_broadcast_lane(spark, emb_df):
     """The df<->df bucket-join ANN lane must reproduce the broadcast lane's
-    results exactly: same seeded hyperplanes, same 1-bit multiprobe set,
-    same exact cosine re-rank (ties broken by neighbor_id in both)."""
+    rows exactly: same seeded hyperplanes, same 1-bit multiprobe set, same
+    exact fixed-point re-rank, ties broken by neighbor_id in both, and the
+    same qid type. Pinned for a query subset and for the self-join (every
+    row a query), with every bucket under ``hot_bucket_cap``."""
     from rensa_spark.operators.similarity import (
         bucketed_topk_join,
         hyperplane_bucket_topk,
     )
 
-    pdf = emb_df.limit(5).toPandas()
-    queries = pd.DataFrame({"qid": pdf["vec_id"], "vec": pdf["embedding"]})
-    broadcast = hyperplane_bucket_topk(
-        emb_df, "vec_id", "embedding", queries, k=5, n_planes=4
-    ).toPandas()
+    def rows(df):
+        return df.toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
+
     qdf = emb_df.filter("vec_id < 5").select("vec_id", "embedding")
-    joined = bucketed_topk_join(
-        emb_df, "vec_id", "embedding", qdf, "vec_id", "embedding",
-        k=5, n_planes=4, dim=64,
-    ).toPandas()
-    for qid in queries["qid"]:
-        b = set(broadcast[broadcast["qid"] == qid]["neighbor_id"])
-        j = set(joined[joined["qid"] == qid]["neighbor_id"])
-        assert b == j, (qid, b, j)
+    for queries_df, kw in (
+        (qdf, dict(k=5, n_planes=4)),
+        (emb_df, dict(k=3, n_planes=4)),
+    ):
+        qpdf = queries_df.select("vec_id", "embedding").toPandas()
+        queries = pd.DataFrame({"qid": qpdf["vec_id"], "vec": qpdf["embedding"]})
+        broadcast = rows(
+            hyperplane_bucket_topk(emb_df, "vec_id", "embedding", queries, **kw)
+        )
+        joined = rows(
+            bucketed_topk_join(
+                emb_df, "vec_id", "embedding", queries_df, "vec_id", "embedding",
+                dim=64, **kw,
+            )
+        )
+        assert joined["qid"].dtype == broadcast["qid"].dtype
+        pd.testing.assert_frame_equal(joined, broadcast)
+        assert set(joined["qid"]) == set(queries["qid"])
         # rank 1 is the query itself (cosine 1.0)
-        sub = joined[joined["qid"] == qid].sort_values("rank")
-        assert sub.iloc[0]["neighbor_id"] == qid
+        r1 = joined[joined["rank"] == 1]
+        assert (r1["qid"] == r1["neighbor_id"]).all()
 
 
-def test_bucketed_topk_bypass_matches_cogroup(spark, emb_df):
-    """Small-input bypass: the self-join at tiny n dispatches to the
-    broadcast scorer — the rows must be IDENTICAL to the forced scale path
-    (same probes, same exact fixed-point scores, same tie-break). Pinned in
-    both regimes: every bucket under ``hot_bucket_cap`` (the bypass runs),
-    and n <= broadcast_max_rows with buckets over the cap, where only the
-    scale path's sub-split gives the right rows (the bypass must not run).
-    The bypass is taken only without ``capped_metrics``."""
+def _capped_topk_reference(ids, vecs, k, n_planes, hot_bucket_cap, extra_planes, seed=42):
+    """Numpy brute-force reference of bucketed_topk_join's capped semantics
+    (self-join): keep the k smallest ids per identical quantized vector;
+    a query probes its bucket and every 1-bit flip; in a probe bucket
+    holding more than the cap after that collapse, only candidates with
+    the query's extra-plane sign pattern count; rank by exact fixed-point
+    cosine desc, then id. -> ({(qid, rank, neighbor_id)}, max bucket size)."""
+    from rensa_spark.operators.similarity import quantize_vecs, quantized_hyperplanes
+
+    vq = quantize_vecs(vecs.astype(np.float64))
+    dim = vq.shape[1]
+
+    def pattern(planes):
+        return ((vq @ planes.T) > 0).astype(np.int64) @ (
+            1 << np.arange(len(planes), dtype=np.int64)
+        )
+
+    bucket = pattern(quantized_hyperplanes(dim, n_planes, seed))
+    sub = pattern(quantized_hyperplanes(dim, extra_planes, seed + 7919))
+    by_vec = {}
+    for i in np.argsort(ids, kind="stable"):
+        by_vec.setdefault(vq[i].tobytes(), []).append(i)
+    kept = [i for members in by_vec.values() for i in members[:k]]
+    size = {}
+    for i in kept:
+        size[bucket[i]] = size.get(bucket[i], 0) + 1
+    n2 = (vq * vq).sum(axis=1)
+    out = set()
+    for q in range(len(ids)):
+        probes = {bucket[q]} | {bucket[q] ^ (1 << p) for p in range(n_planes)}
+        scored = []
+        for c in kept:
+            if bucket[c] not in probes:
+                continue
+            if size[bucket[c]] > hot_bucket_cap and sub[c] != sub[q]:
+                continue
+            if n2[q] > 0 and n2[c] > 0:
+                s = float(vq[q] @ vq[c]) / (np.sqrt(float(n2[q])) * np.sqrt(float(n2[c])))
+            else:
+                s = 0.0
+            scored.append((-s, ids[c]))
+        for rank, (_, nid) in enumerate(sorted(scored)[:k], start=1):
+            out.add((ids[q], rank, nid))
+    return out, max(size.values())
+
+
+def test_bucketed_topk_hot_regime_matches_reference(spark, emb_df):
+    """Hot regime (500 rows in 4 buckets of ~125 > cap 50): the sub-split
+    rows equal the numpy brute-force reference of the capped semantics
+    exactly — the sub-pattern from the bucket crossing must match the
+    reference's extra-plane signs on both join sides."""
     from rensa_spark.operators.similarity import bucketed_topk_join
 
-    for kw in (
-        dict(k=3, n_planes=4, dim=64),
-        # 500 rows in 4 buckets of ~125 > cap 50
-        dict(k=3, n_planes=2, dim=64, hot_bucket_cap=50, extra_planes=4),
-    ):
-        default = bucketed_topk_join(
-            emb_df, "vec_id", "embedding", emb_df, "vec_id", "embedding",
-            capped_metrics=None, **kw
-        ).toPandas()
-        via_cogroup = bucketed_topk_join(
-            emb_df, "vec_id", "embedding", emb_df, "vec_id", "embedding",
-            broadcast_max_rows=0, **kw
-        ).toPandas()
-        a = default.sort_values(["qid", "rank"]).reset_index(drop=True)
-        b = via_cogroup.sort_values(["qid", "rank"]).reset_index(drop=True)
-        assert a["qid"].dtype == b["qid"].dtype
-        pd.testing.assert_frame_equal(a[["qid", "rank", "neighbor_id"]],
-                                      b[["qid", "rank", "neighbor_id"]])
+    pdf = emb_df.toPandas()
+    ids = pdf["vec_id"].to_numpy()
+    vecs = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
+    kw = dict(k=3, n_planes=2, hot_bucket_cap=50, extra_planes=4)
+    want, max_size = _capped_topk_reference(ids, vecs, **kw)
+    assert max_size > 50  # the regime under test
+    got = bucketed_topk_join(
+        emb_df, "vec_id", "embedding", emb_df, "vec_id", "embedding", dim=64, **kw
+    ).collect()
+    assert {(r["qid"], r["rank"], r["neighbor_id"]) for r in got} == want
+    assert len(got) == len(want)
+
+
+def test_null_vectors_are_neither_queries_nor_candidates(spark):
+    """A null embedding used to crash the bucket/normalize UDFs. Every
+    hyperplane and brute-force operator drops it before the Python
+    crossing: the rows equal those of the same input without it."""
+    from rensa_spark.operators import similarity as S
+
+    rng = np.random.default_rng(50)
+    vecs = rng.normal(size=(50, 8)).astype(np.float32)
+    rows = [(i, v.tolist()) for i, v in enumerate(vecs)]
+    schema = "vec_id long, embedding array<float>"
+    clean = spark.createDataFrame(rows, schema)
+    dirty = spark.createDataFrame(rows[:20] + [(99, None)] + rows[20:], schema)
+    queries = pd.DataFrame(
+        {"qid": [0, 1, 2], "vec": [v.tolist() for v in vecs[:3]]}
+    )
+    lanes = {
+        "bucketed_topk_join": lambda d: S.bucketed_topk_join(
+            d, "vec_id", "embedding", d, "vec_id", "embedding", k=3, n_planes=2
+        ),
+        "ann_near_dup_pairs": lambda d: S.ann_near_dup_pairs(
+            d, "vec_id", "embedding", n_planes=2
+        ),
+        "brute_force_topk": lambda d: S.brute_force_topk(
+            d, "vec_id", "embedding", queries, k=3
+        ),
+        "hyperplane_bucket_topk": lambda d: S.hyperplane_bucket_topk(
+            d, "vec_id", "embedding", queries, k=3, n_planes=2
+        ),
+    }
+    for name, lane in lanes.items():
+        want = sorted(tuple(r) for r in lane(clean).collect())
+        assert want, name
+        assert sorted(tuple(r) for r in lane(dirty).collect()) == want, name
+
+
+def test_ann_sub_split_compiles_without_codegen_fallback(spark, emb_df):
+    """At dim 64 the hot-bucket sub-pattern used to be an unrolled JVM
+    expression past the 64 KB method limit, so whole-stage codegen fell
+    back to interpreted evaluation. With the fallback disabled, the
+    self-join top-k (default and hot regime) and the hot-regime near-dup
+    pairs must still run."""
+    from rensa_spark.operators.similarity import ann_near_dup_pairs, bucketed_topk_join
+
+    key = "spark.sql.codegen.fallback"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        for kw in (dict(k=3), dict(k=3, n_planes=2, hot_bucket_cap=50)):
+            out = bucketed_topk_join(
+                emb_df, "vec_id", "embedding", emb_df, "vec_id", "embedding",
+                dim=64, **kw,
+            )
+            assert out.count() > 0
+        pairs = ann_near_dup_pairs(
+            emb_df, "vec_id", "embedding", n_planes=2, dim=64, hot_bucket_cap=20
+        )
+        assert pairs.count() >= 0
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_bucketed_topk_query_salt_bounds_groups(spark):
@@ -743,7 +850,7 @@ def test_bucketed_topk_query_salt_bounds_groups(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    kw = dict(k=3, n_planes=4, dim=dim, broadcast_max_rows=0)
+    kw = dict(k=3, n_planes=4, dim=dim)
     unsalted = bucketed_topk_join(
         df, "vec_id", "embedding", df, "vec_id", "embedding",
         query_group_cap=10**9, **kw
@@ -784,7 +891,7 @@ def test_bucketed_topk_subsplit_recall_floor(spark):
     df = spark.createDataFrame(pdf).repartition(8)
     split = bucketed_topk_join(
         df, "vec_id", "embedding", df, "vec_id", "embedding",
-        k=5, n_planes=2, dim=dim, broadcast_max_rows=0,  # 4 fat buckets
+        k=5, n_planes=2, dim=dim,  # 4 fat buckets
         hot_bucket_cap=50, extra_planes=4,
     ).toPandas()
     top = split.groupby("qid")["neighbor_id"].agg(set)

@@ -339,3 +339,123 @@ def test_min_equal_slots_matches_float_division():
         for thr in (0.0, 0.1, 0.3, 0.5, 0.8, 0.92, 1 / 3, 2 / 3, 1.0):
             need = min_equal_slots(thr, perm)
             assert all((c / perm >= thr) == (c >= need) for c in range(perm + 1))
+
+
+def _sign_pattern_py(v, planes):
+    """Scalar reference: bit j set iff the exact integer dot with plane j
+    is strictly positive."""
+    return sum(
+        1 << j for j, p in enumerate(planes) if sum(a * b for a, b in zip(v, p)) > 0
+    )
+
+
+def test_sign_pattern_matches_scalar():
+    """sign_pattern == the scalar reference: a dot of exactly 0 sets no
+    bit, negative dots, the zero vector, magnitudes at the fixed-point
+    bound (|component| just under 2^23, where dim-64 dots approach 2^52),
+    and a stacked second bank lands above the first bank's bits."""
+    from rensa_spark.kernels.ann import (
+        QUANT_SCALE,
+        quantize_vecs,
+        quantized_hyperplanes,
+        sign_pattern,
+    )
+
+    dim = 64
+    big = 8 * QUANT_SCALE - 1  # floor((8 - 2^-20) * 2^20)
+    assert quantize_vecs(np.array([[8 - 2.0**-20, -8.0]]))[0].tolist() == [big, -8 * QUANT_SCALE]
+    planes = quantized_hyperplanes(dim, 10, 42)
+    assert np.abs(planes).max() < 8 * QUANT_SCALE
+    rng = np.random.default_rng(3)
+    ones = np.ones(dim, dtype=np.int64)
+    alt = np.tile(np.array([1, -1], dtype=np.int64), dim // 2)
+    rows = [
+        np.zeros(dim, dtype=np.int64),  # zero vector: every dot is 0
+        alt,  # dot with the all-ones plane is exactly 0
+        -alt,
+        np.full(dim, big, dtype=np.int64),
+        np.full(dim, -big, dtype=np.int64),
+        alt * big,
+        -planes[0],  # strictly negative dot with plane 0
+    ]
+    rows += list(rng.integers(-big, big + 1, size=(20, dim), dtype=np.int64))
+    rows += list(quantize_vecs(rng.normal(size=(20, dim))))
+    vq = np.stack(rows)
+    bank = np.vstack([ones, alt, planes, np.full(dim, big, dtype=np.int64)])
+    got = sign_pattern(vq, bank)
+    assert got.dtype == np.int64
+    want = [_sign_pattern_py(v, bank.tolist()) for v in vq.tolist()]
+    assert got.tolist() == want
+    assert got[0] == 0
+    assert got[1] & 1 == 0 and got[2] & 1 == 0  # dot exactly 0 -> bit 0
+    assert got[6] & (1 << 2) == 0  # plane 0 sits at bit 2 of the bank
+    # two stacked banks: the first bank's pattern in the low bits, the
+    # second's shifted above it
+    lo, hi = bank[:5], bank[5:]
+    assert (
+        got == sign_pattern(vq, lo) | (sign_pattern(vq, hi) << len(lo))
+    ).all()
+
+
+def _topk_py(q, c, c_ids, k):
+    """Scalar reference of quantized_topk: exact integer dots, score =
+    dot / (sqrt(|q|^2) * sqrt(|c|^2)) (0.0 when either norm is 0), ranked
+    by score desc then id asc."""
+    import math
+
+    out = []
+    for qi, qv in enumerate(q):
+        n2q = sum(x * x for x in qv)
+        scored = []
+        for cv, cid in zip(c, c_ids):
+            n2c = sum(x * x for x in cv)
+            dot = sum(a * b for a, b in zip(qv, cv))
+            if n2q > 0 and n2c > 0:
+                s = float(dot) / (math.sqrt(float(n2q)) * math.sqrt(float(n2c)))
+            else:
+                s = 0.0
+            scored.append((-s, cid))
+        scored.sort()
+        out += [(qi, cid, -ns) for ns, cid in scored[:k]]
+    return out
+
+
+@pytest.mark.parametrize("id_kind", ["long", "string"])
+@pytest.mark.parametrize("chunk", [None, 2])
+def test_quantized_topk_matches_scalar(id_kind, chunk, monkeypatch):
+    """quantized_topk == the scalar reference, bit for bit in the score:
+    score ties broken by id (a candidate and its exact double score the
+    same cosine), zero-norm queries and candidates scoring 0.0, k larger
+    than the candidate count, long and string ids in non-sorted input
+    order, and (chunk=2) queries split across several matmuls."""
+    from rensa_spark.kernels import ann
+
+    if chunk is not None:
+        monkeypatch.setattr(ann, "QUERY_CHUNK", chunk)
+    rng = np.random.default_rng(17)
+    dim = 8
+    base = ann.quantize_vecs(rng.normal(size=(6, dim)))
+    c = np.vstack(
+        [base, 2 * base[:3], np.zeros((1, dim), dtype=np.int64), -base[:2]]
+    )
+    q = np.vstack(
+        [base[:2], np.zeros((1, dim), dtype=np.int64), ann.quantize_vecs(rng.normal(size=(2, dim)))]
+    )
+    raw = rng.permutation(len(c) * 5)[: len(c)]
+    if id_kind == "long":
+        c_ids = (raw.astype(np.int64) - 20) * (2**40)
+    else:
+        c_ids = np.array([f"n{v:03d}" for v in raw], dtype=object)
+    for k in (1, 3, len(c), len(c) + 4):
+        qi, nid, score = ann.quantized_topk(q, c, c_ids, k)
+        assert score.dtype == np.float64
+        got = list(zip(qi.tolist(), nid.tolist(), score.tolist()))
+        want = _topk_py(q.tolist(), c.tolist(), c_ids.tolist(), k)
+        assert got == want, k
+    # the zero query scores 0.0 against everything and ranks by id alone
+    qi, nid, score = ann.quantized_topk(q[2:3], c, c_ids, len(c))
+    assert (score == 0.0).all() and nid.tolist() == sorted(c_ids.tolist())
+    # exact ties: base[0] and 2*base[0] score the query identically
+    qi, nid, score = ann.quantized_topk(q[:1], c, c_ids, 2)
+    assert score[0] == score[1]
+    assert nid.tolist() == sorted([c_ids[0], c_ids[6]])

@@ -62,16 +62,13 @@ def test_flagship_plan_prunes_bytes_and_single_crossing(image_table):
 
 
 def test_ann_bucket_join_no_udf_duplication(spark, image_table):
-    """bucketed_topk_join: exactly one bucket-UDF evaluation per side (the
-    nullable-join-key isnotnull pushdown used to duplicate the corpus-side
-    UDF; guarded by the coalesce fix in similarity.py). Since round 6 BOTH
-    sides' bucket projections feed a localCheckpoint directly (shared or
-    not), so the served plan shows each side as one ExistingRDD scan and
-    NO ArrowEvalPython node at all — the UDF runs exactly once per side
-    inside its checkpoint lineage, and the old pushdown-duplication shape
-    is structurally impossible. broadcast_max_rows=0 forces the cogroup
-    path so the plan under test is the scale plan, not the round-6
-    small-input bypass."""
+    """bucketed_topk_join: exactly one bucket-UDF evaluation per side (an
+    isnotnull pushdown on a nullable join key would duplicate the UDF if
+    it fed the join directly). BOTH sides' sign-pattern projections feed a
+    localCheckpoint (shared or not), so the served plan shows each side as
+    one ExistingRDD scan and NO ArrowEvalPython node at all — the UDF runs
+    exactly once per side inside its checkpoint lineage, and the
+    pushdown-duplication shape is structurally impossible."""
     from rensa_spark.operators.similarity import bucketed_topk_join
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -79,7 +76,7 @@ def test_ann_bucket_join_no_udf_duplication(spark, image_table):
     plan = _formatted_plan(
         bucketed_topk_join(
             emb, "vec_id", "embedding", emb_q, "vec_id", "embedding",
-            k=3, n_planes=4, dim=64, broadcast_max_rows=0,
+            k=3, n_planes=4, dim=64,
         )
     )
     assert len(re.findall(r"\) ArrowEvalPython", plan)) == 0
@@ -98,7 +95,7 @@ def test_ann_bucket_join_self_join_single_crossing(spark):
     plan = _formatted_plan(
         bucketed_topk_join(
             emb, "vec_id", "embedding", emb, "vec_id", "embedding",
-            k=3, n_planes=4, dim=64, broadcast_max_rows=0,
+            k=3, n_planes=4, dim=64,
         )
     )
     assert len(re.findall(r"\) ArrowEvalPython", plan)) == 0
@@ -120,7 +117,7 @@ def test_ann_bucket_join_scores_in_cogroup_not_per_pair(spark):
     plan = _formatted_plan(
         bucketed_topk_join(
             emb, "vec_id", "embedding", emb, "vec_id", "embedding",
-            k=3, n_planes=4, dim=64, broadcast_max_rows=0,
+            k=3, n_planes=4, dim=64,
         )
     )
     assert len(re.findall(r"\) MapInPandas", plan)) == 1
