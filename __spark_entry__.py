@@ -706,7 +706,7 @@ def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ivf_topk(
             emb, "vec_id", "embedding",
-            k=3, n_centroids=16, n_iters=5, n_probe=2, dim=64,
+            k=3, n_centroids=16, n_iters=5, n_probe=2,
         )
         .select(
             F.col("qid").cast("long").alias("qid"),

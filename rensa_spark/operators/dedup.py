@@ -97,7 +97,7 @@ def verified_pairs_from_band_rows(
     travels once per member band row — never twice per candidate pair, and
     never as a whole signature table per pair join — and no candidate pair
     crosses a shuffle. A task holds at most one bucket plus one Arrow
-    batch: a bucket cut at a batch boundary is carried into the next batch.
+    batch (``kernels/runs.complete_runs``).
 
     Buckets with <= ``max(cfg.hot_bucket_cap, exact_task_cap)`` members
     verify every pair (exact). Larger buckets verify hub edges plus a ring
@@ -136,34 +136,18 @@ def _bucket_walk(exact_cap: int, threshold: float):
         import pandas as pd
 
         from rensa_spark.kernels.bucket_verify import verify_bucket_pairs
+        from rensa_spark.kernels.runs import complete_runs
 
-        def pairs(keys, sig, bounds):
-            i, j, sim = verify_bucket_pairs(sig, keys, bounds, exact_cap, threshold)
-            return pd.DataFrame({"a": keys[i], "b": keys[j], "sim": sim})
-
-        carry = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arrs = (
-                pdf["band_idx"].to_numpy(),
-                pdf["band_hash"].to_numpy(),
-                pdf["key"].to_numpy(),
-                np.stack(pdf["sig"].to_numpy()),
+        def arrays_of(pdf):
+            bucket = np.stack(
+                [pdf["band_idx"].to_numpy(np.int64), pdf["band_hash"].to_numpy(np.int64)],
+                axis=1,
             )
-            if carry is not None:
-                arrs = tuple(np.concatenate([c, a]) for c, a in zip(carry, arrs))
-            bidx, bhash, keys, sig = arrs
-            new = np.ones(len(keys), dtype=bool)
-            new[1:] = (bidx[1:] != bidx[:-1]) | (bhash[1:] != bhash[:-1])
-            starts = np.nonzero(new)[0]
-            # the last bucket may continue into the next batch: carry it
-            cut = starts[-1]
-            carry = tuple(a[cut:] for a in arrs)
-            if cut:
-                yield pairs(keys[:cut], sig[:cut], starts)
-        if carry is not None:
-            yield pairs(carry[2], carry[3], [0, len(carry[2])])
+            return bucket, pdf["key"].to_numpy(), np.stack(pdf["sig"].to_numpy())
+
+        for (keys, sig), bounds in complete_runs(batches, arrays_of):
+            i, j, sim = verify_bucket_pairs(sig, keys, bounds, exact_cap, threshold)
+            yield pd.DataFrame({"a": keys[i], "b": keys[j], "sim": sim})
 
     return walk
 
@@ -331,14 +315,29 @@ def add_if_unique(
         F.col(order_col).alias("ord"),
         F.col(text_col).alias("text"),
     )
-    # the fused sketch is consumed twice by verified_pairs (band rows and
-    # the signature join) — checkpoint it once so the shingle+MinHash UDF
-    # runs once
     sk = (
         sketch_rminhash(base, cfg, "key", "text")
         .select("key", "sig", "bands")
         .localCheckpoint(eager=False)
     )
+    return _greedy_kept(
+        base.select("key", "ord"), sk, cfg,
+        max_rounds, use_lsh, brute_force_max_rows, driver_max_edges,
+    )
+
+
+def _greedy_kept(
+    base: DataFrame,
+    sk: DataFrame,
+    cfg: RensaConfig,
+    max_rounds: int = 30,
+    use_lsh: bool = True,
+    brute_force_max_rows: int = 100_000,
+    driver_max_edges: int = 200_000,
+) -> DataFrame:
+    """:func:`add_if_unique` from (key, ord) rows and their (key, sig,
+    bands) sketch, which the verify reads twice: callers checkpoint it, so
+    the shingle+MinHash UDF runs once."""
     if use_lsh:
         pairs = verified_pairs(sk, cfg)  # a < b by key; re-orient by ord
     else:
@@ -403,7 +402,7 @@ def add_if_unique(
                 if indeg[w] == 0:
                     dq.append(w)
         if seen == len(nodes):  # acyclic (always, by ord orientation)
-            spark = df.sparkSession
+            spark = base.sparkSession
             key_field = base.select("key").schema.fields[0]
             decided = spark.createDataFrame(
                 [(k, bool(v)) for k, v in kept.items()],

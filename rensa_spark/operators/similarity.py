@@ -11,6 +11,12 @@
   the numpy kernels in kernels/ann.py, shared by every hyperplane lane.
 - SimHash near-dup flags/pairs for text (kernels/simhash.py).
 
+Every bucketed lane scores in one of two scans of one shape (:func:`_run_scan`:
+hash-partition by the bucket, sort within partitions, one ``mapInPandas``
+walk over the sorted runs, one numpy kernel per bucket): :func:`_topk_scan`
+(``bucketed_topk_join``, ``ivf_topk``) and :func:`_pair_scan`
+(``ann_near_dup_pairs``, ``embedding_near_dup_pairs``).
+
 The ANN operators drop rows whose vector is null before any Python
 crossing: such rows are neither queries nor candidates.
 """
@@ -25,6 +31,9 @@ from pyspark.sql import functions as F
 from rensa_spark.config import RensaConfig
 from rensa_spark.kernels.ann import (
     QUANT_SCALE,
+    cosine_pairs,
+    float_cosine_pairs,
+    l2_topk,
     quantize_vecs,
     quantized_hyperplanes,
     quantized_topk,
@@ -43,6 +52,15 @@ def _pandas_query_schema(df: DataFrame, id_col: str, qids) -> str:
     q_type = "string" if isinstance(qids[0], str) else "long"
     n_type = df.schema[id_col].dataType.simpleString()
     return f"qid {q_type}, neighbor_id {n_type}, score double"
+
+
+def _rank(partial: DataFrame, k: int, score_order) -> DataFrame:
+    """Partial (qid, neighbor_id, score) rows -> the k best per qid, ranked
+    by (``score_order``, neighbor_id ascending), with a rank column."""
+    w = Window.partitionBy("qid").orderBy(score_order, F.asc("neighbor_id"))
+    return partial.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
 
 
 def _normalize(m: np.ndarray) -> np.ndarray:
@@ -91,12 +109,8 @@ def brute_force_topk(
         .filter(F.col(vec_col).isNotNull())
         .mapInPandas(gen, schema)
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
     return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        _rank(partial, k, F.desc("score"))
         .select("qid", "rank", "neighbor_id")
         .orderBy("qid", "rank")
     )
@@ -213,10 +227,8 @@ def hyperplane_bucket_topk(
         .filter(F.col(vec_col).isNotNull())
         .mapInPandas(gen, schema)
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        _rank(partial, k, F.desc("score"))
         .select("qid", "rank", "neighbor_id")
         .orderBy("qid", "rank")
     )
@@ -418,116 +430,114 @@ def bucketed_topk_join(
             .drop("n_salt")
         )
         group_keys = ["bucket", "sub", "qsalt"]
-    q_type = queries_df.schema[qid_col].dataType.simpleString()
-    n_type = df.schema[id_col].dataType.simpleString()
-
     # Transport: both sides union into one table tagged is_q, ONE hash
     # repartition on the group keys + a partition-local sort makes every
-    # group a contiguous run, and a mapInPandas segment scan walks the runs
-    # — Python is invoked once per Arrow batch, not once per group (a
-    # cogrouped applyInPandas paid ~1-2 ms per group: 4-7 s on the
-    # 3.6k-group hot benchmark with a TRIVIAL function), and a group split
-    # across batch boundaries is carried forward, so peak memory stays one
-    # (bounded) group + one batch.
+    # group a contiguous run, and the top-k scan walks the runs — Python is
+    # invoked once per Arrow batch, not once per group (a cogrouped
+    # applyInPandas paid ~1-2 ms per group: 4-7 s on the 3.6k-group hot
+    # benchmark with a TRIVIAL function). kernels/runs.complete_runs
+    # carries a group split across batch boundaries forward, so peak memory
+    # stays one (bounded) group + one batch.
+    return _topk_scan(
+        qside.select(*group_keys, "qid", F.col("qvec").alias("vec")),
+        corpus.select(*group_keys, "neighbor_id", F.col("nvec").alias("vec")),
+        group_keys,
+        quantized_topk,
+        k,
+        "double",
+        F.desc("score"),
+    ).select("qid", "rank", "neighbor_id").orderBy("qid", "rank")
+
+
+def _run_scan(rows, group_keys, arrays_of, score_run, schema):
+    """``rows`` hash-partitioned by ``group_keys`` and sorted within
+    partitions, so each group is one contiguous run, and ONE mapInPandas
+    walk (:func:`complete_runs`) calling ``score_run(*cols, lo, hi)`` per
+    run for its output columns by name (or None). Python runs once per
+    Arrow batch, not per group, and one batch's output is one frame
+    (per-group frames measured no better)."""
+
+    def scan(batches):
+        from rensa_spark.kernels.runs import complete_runs
+
+        for cols, bounds in complete_runs(batches, arrays_of):
+            parts = [score_run(*cols, lo, hi) for lo, hi in zip(bounds[:-1], bounds[1:])]
+            parts = [p for p in parts if p is not None]
+            if parts:
+                yield pd.DataFrame({n: np.concatenate([p[n] for p in parts]) for n in parts[0]})
+
+    return (
+        rows.repartition(*group_keys)
+        .sortWithinPartitions(*group_keys)
+        .mapInPandas(scan, schema)
+    )
+
+
+def _topk_scan(queries, corpus, group_keys, kernel, k, score_type, score_order):
+    """The top-k scan: ``queries`` (group_keys..., qid, vec) meet
+    ``corpus`` (group_keys..., neighbor_id, vec) in their group, tagged
+    is_q in one union; ``kernel`` (``quantized_topk`` or ``l2_topk``) keeps
+    each group's in-group top-k per query, and :func:`_rank` merges them ->
+    (qid, rank, neighbor_id, score)."""
+    q_type = queries.schema["qid"].dataType.simpleString()
+    n_type = corpus.schema["neighbor_id"].dataType.simpleString()
     # typed dummies (not NULLs) for the opposite side's id: a long column
     # holding nulls round-trips Arrow->pandas as float64, which would
     # corrupt 64-bit ids past 2^53
-    qrows = qside.select(
-        *group_keys,
-        F.lit(True).alias("is_q"),
-        F.col("qid"),
-        F.lit(0).cast(n_type).alias("neighbor_id"),
-        F.col("qvec").alias("vec"),
+    tagged = queries.select(
+        *group_keys, F.lit(True).alias("is_q"), "qid",
+        F.lit(0).cast(n_type).alias("neighbor_id"), "vec",
+    ).unionByName(
+        corpus.select(
+            *group_keys, F.lit(False).alias("is_q"),
+            F.lit(0).cast(q_type).alias("qid"), "neighbor_id", "vec",
+        )
     )
-    crows = corpus.select(
-        *group_keys,
-        F.lit(False).alias("is_q"),
-        F.lit(0).cast(q_type).alias("qid"),
-        F.col("neighbor_id"),
-        F.col("nvec").alias("vec"),
+
+    def arrays_of(pdf):
+        return (
+            np.stack([pdf[c].to_numpy(dtype=np.int64) for c in group_keys], axis=1),
+            pdf["is_q"].to_numpy(dtype=bool),
+            pdf["qid"].to_numpy(),
+            pdf["neighbor_id"].to_numpy(),
+            np.stack([np.asarray(v, dtype=np.int64) for v in pdf["vec"]]),
+        )
+
+    def score_run(isq, qids, nids, vecs, lo, hi):
+        q = lo + np.nonzero(isq[lo:hi])[0]
+        c = lo + np.nonzero(~isq[lo:hi])[0]
+        if len(q) and len(c):
+            qi, nid, score = kernel(vecs[q], vecs[c], nids[c], k)
+            return {"qid": qids[q][qi], "neighbor_id": nid, "score": score}
+
+    partial = _run_scan(
+        tagged, group_keys, arrays_of, score_run,
+        f"qid {q_type}, neighbor_id {n_type}, score {score_type}",
     )
-    tagged = (
-        qrows.unionByName(crows)
-        .repartition(*group_keys)
-        .sortWithinPartitions(*group_keys)
-    )
-    key_cols = list(group_keys)
+    return _rank(partial, k, score_order).select("qid", "rank", "neighbor_id", "score")
 
-    def segment_scan(batches):
-        # numpy-native: each Arrow batch converts to flat arrays ONCE and
-        # the group loop runs on array slices — no per-group pandas frames
-        # (a pandas-sliced variant measured no better than the cogroup it
-        # replaced; the per-group toll had just moved into .iloc)
-        import numpy as np
-        import pandas as pd
 
-        def arrays_of(pdf):
-            keys = np.stack(
-                [pdf[c].to_numpy(dtype=np.int64) for c in key_cols], axis=1
-            )
-            return (
-                keys,
-                pdf["is_q"].to_numpy(dtype=bool),
-                pdf["qid"].to_numpy(),
-                pdf["neighbor_id"].to_numpy(),
-                np.stack([np.asarray(v, dtype=np.int64) for v in pdf["vec"]]),
-            )
+def _pair_scan(rows, group_keys, kernel, min_cosine):
+    """The pair scan: ``rows`` (group_keys..., id, vec) -> (a, b, cosine)
+    for each pair of a group with a < b and ``kernel`` (``cosine_pairs`` or
+    ``float_cosine_pairs``) cosine >= ``min_cosine`` or NaN, unrounded. A
+    group's vectors stack per run, so groups need not share a dimension."""
+    id_type = rows.schema["id"].dataType.simpleString()
 
-        out_q, out_n, out_s = [], [], []
+    def arrays_of(pdf):
+        keys = np.stack([pdf[c].to_numpy() for c in group_keys], axis=1)
+        return keys, pdf["id"].to_numpy(), pdf["vec"].to_numpy()
 
-        def emit(isq, qids, nids, V):
-            if isq.all() or not isq.any():
-                return  # query-only or corpus-only run: no candidates
-            q = np.nonzero(isq)[0]
-            c = np.nonzero(~isq)[0]
-            qi, nid, score = quantized_topk(V[q], V[c], nids[c], k)
-            out_q.append(qids[q][qi])
-            out_n.append(nid)
-            out_s.append(score)
+    def score_run(ids, vecs, lo, hi):
+        if hi - lo >= 2:
+            run_ids = ids[lo:hi]
+            i, j, cos = kernel(np.stack(vecs[lo:hi]), run_ids, min_cosine)
+            return {"a": run_ids[i], "b": run_ids[j], "cosine": cos}
 
-        def flush():
-            frame = pd.DataFrame(
-                {
-                    "qid": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "score": np.concatenate(out_s),
-                }
-            )
-            out_q.clear(), out_n.clear(), out_s.clear()
-            return frame
-
-        carry = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arrs = arrays_of(pdf)
-            if carry is not None:
-                arrs = tuple(np.concatenate([c, a]) for c, a in zip(carry, arrs))
-            keys = arrs[0]
-            new_grp = np.ones(len(keys), dtype=bool)
-            new_grp[1:] = (keys[1:] != keys[:-1]).any(axis=1)
-            bounds = np.nonzero(new_grp)[0]
-            # the last run may continue into the next batch — carry it
-            carry = tuple(a[bounds[-1] :] for a in arrs)
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                emit(*(a[s:e] for a in arrs[1:]))
-            if out_q:
-                yield flush()
-        if carry is not None:
-            emit(*carry[1:])
-        if out_q:
-            yield flush()
-
-    partial = tagged.mapInPandas(
-        segment_scan, f"qid {q_type}, neighbor_id {n_type}, score double"
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "neighbor_id")
-        .orderBy("qid", "rank")
-    )
+    # a NaN cosine crosses Arrow from pandas as null: restore it
+    return _run_scan(
+        rows, group_keys, arrays_of, score_run, f"a {id_type}, b {id_type}, cosine double"
+    ).withColumn("cosine", F.coalesce("cosine", F.lit(float("nan"))))
 
 
 def ann_near_dup_pairs(
@@ -550,6 +560,13 @@ def ann_near_dup_pairs(
     design — pairs in different buckets are not candidates; multiprobe is
     deliberately omitted to keep the pair set a pure function of the
     bucket assignment.
+
+    Scoring: each (bucket, sub) group of representatives is scored in the
+    pair scan (:func:`_pair_scan`) by ``cosine_pairs``, the
+    ``quantized_topk`` formula; no candidate pair becomes a row before it
+    passes, and rounding to 6 places stays JVM-side. A zero vector scores
+    0.0 against everything, so it pairs only when ``min_cosine <= 0``; a
+    null vector pairs with nothing.
 
     Scale shape (the fixed 2^n_planes bucket domain would make the
     self-join O(n^2/2^n_planes) at large n):
@@ -593,27 +610,21 @@ def ann_near_dup_pairs(
         .localCheckpoint(eager=False)
     )  # consumed by reps + both expansions
 
-    def _score(dot, n2a, n2b):
-        return F.when(
-            (n2a > 0) & (n2b > 0),
-            dot.cast("double")
-            / (F.sqrt(n2a.cast("double")) * F.sqrt(n2b.cast("double"))),
-        ).otherwise(F.lit(0.0))
-
     # within-group pairs: identical vq, score = the self-score computed
-    # with the SAME formula as the pair path (bit-identical to the naive
-    # all-pairs join). Output-sized, salted over min(cnt, expand_salts)
-    # reducers per group (left keyed by hash(vid) mod the group's salt
-    # domain, right replicated once per salt — each unordered pair matches
-    # exactly once).
+    # with the SAME formula as cosine_pairs (bit-identical to scoring every
+    # pair). Output-sized, salted over min(cnt, expand_salts) reducers per
+    # group (left keyed by hash(vid) mod the group's salt domain, right
+    # replicated once per salt — each unordered pair matches exactly once).
     # the self-score is computed ONCE per member row and copied through the
     # expansion join — evaluating the sqrt/div/round expression per OUTPUT
     # row instead measured 16.3s vs 3.9s on the 50M-pair degenerate lane
-    multi = members.withColumn(
-        "selfscore", F.round(_score(F.col("n2"), F.col("n2"), F.col("n2")), 6)
-    ).filter(
-        (F.col("cnt") >= 2)
-        & (_score(F.col("n2"), F.col("n2"), F.col("n2")) >= min_cosine)
+    n2 = F.col("n2").cast("double")
+    multi = (
+        members.withColumn(
+            "selfscore", F.when(n2 > 0, n2 / (F.sqrt(n2) * F.sqrt(n2))).otherwise(0.0)
+        )
+        .filter((F.col("cnt") >= 2) & (F.col("selfscore") >= min_cosine))
+        .withColumn("selfscore", F.round("selfscore", 6))
     )
     s_g = F.least(F.col("cnt"), F.lit(expand_salts)).cast("long")
     w_left = multi.select(
@@ -635,7 +646,7 @@ def ann_near_dup_pairs(
 
     # cross-group candidates over DISTINCT vectors only
     reps = members.filter(F.col("vid") == F.col("gid")).select(
-        "gid", "vq", _bucket("pat", n_planes).alias("bucket"), "pat", "n2"
+        "gid", "vq", _bucket("pat", n_planes).alias("bucket"), "pat"
     ).localCheckpoint(eager=False)
     sizes = reps.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_distinct"))
     if capped_metrics is not None:
@@ -646,36 +657,16 @@ def ann_near_dup_pairs(
             ).alias("capped_buckets"),
             F.max("n_distinct").alias("max_bucket_distinct"),
         )
-    # ONE projection assigns sub for both regimes, and the checkpoint feeds
-    # both sides of the self-join without re-running the join-with-sizes
-    # subtree (it also makes the observed bucket metrics fire exactly once)
-    rep_side = (
-        reps.join(sizes, "bucket")
-        .withColumn("sub", _hot_sub("pat", n_planes, "n_distinct", hot_bucket_cap))
-        .select("gid", "vq", "bucket", "sub", "n2")
-        .localCheckpoint(eager=False)
+    # ONE projection assigns sub for both regimes; the pair scan scores
+    # every (bucket, sub) group of representatives
+    rep_side = reps.join(sizes, "bucket").select(
+        "bucket",
+        _hot_sub("pat", n_planes, "n_distinct", hot_bucket_cap).alias("sub"),
+        F.col("gid").alias("id"),
+        F.col("vq").alias("vec"),
     )
-    x = rep_side.alias("x")
-    y = rep_side.alias("y")
-    dot = F.aggregate(
-        F.zip_with(F.col("x.vq"), F.col("y.vq"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    rep_pairs = (
-        x.join(
-            y,
-            (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.sub") == F.col("y.sub"))
-            & (F.col("x.gid") < F.col("y.gid")),
-        )
-        .withColumn("cosine", _score(dot, F.col("x.n2"), F.col("y.n2")))
-        .filter(F.col("cosine") >= min_cosine)
-        .select(
-            F.col("x.gid").alias("gid_a"),
-            F.col("y.gid").alias("gid_b"),
-            "cosine",
-        )
+    rep_pairs = _pair_scan(rep_side, ["bucket", "sub"], cosine_pairs, min_cosine).select(
+        F.col("a").alias("gid_a"), F.col("b").alias("gid_b"), "cosine"
     )
     # multiplicity expansion: every member pair inherits the representative
     # score exactly (cosine is a function of vq alone). Output-sized.
@@ -693,6 +684,31 @@ def ann_near_dup_pairs(
     return within.unionByName(cross)
 
 
+def _block_key(df: DataFrame, block_col: str):
+    """``block_col`` in a form the pair scan's numpy walk compares exactly
+    (numpy cannot stack datetime64 with the int dim key, nor compare array
+    values): equal exactly when an equi-join on the block matches. Strings
+    and integers pass as they are; anything else goes through JSON, with
+    timestamps to the microsecond and with their UTC offset (a local time
+    repeats when clocks go back) and a float zero unsigned (a join matches
+    -0.0 with 0.0)."""
+    from pyspark.sql.types import FractionalType, IntegralType, StringType
+
+    c = F.col(block_col)
+    t = df.select(c).schema[0].dataType
+    if isinstance(t, (StringType, IntegralType)):
+        return c
+    if isinstance(t, FractionalType):
+        c = F.when(c == 0, F.lit(0).cast(t)).otherwise(c)
+    return F.to_json(
+        F.struct(c.alias("b")),
+        {
+            "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+            "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+        },
+    )
+
+
 def embedding_near_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -701,40 +717,24 @@ def embedding_near_dup_pairs(
     min_cosine: float = 0.99,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs (a < b) within a blocking key —
-    the blocked-exact lane of embedding dedup (blocking bounds the join)."""
-    # cast BEFORE the multiply: float32*float32 rounds to float32, which
-    # diverges from any float64 oracle (numpy or SQL) in the last bits.
-    # Norms are per-ROW quantities — compute them once per side before the
-    # join (inside the join each would be re-evaluated per PAIR: O(pairs*dim)
-    # wasted work, ~3x the whole query's cost at 100 members/block).
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            c, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-        )
+    the blocked-exact lane of embedding dedup (blocking bounds the pairs).
+
+    Scored by ``float_cosine_pairs`` (float64, sums left to right as the
+    oracle's ``list_sum``) in the pair scan over (block, vector length)
+    groups, rounded to 6 places JVM-side (numpy rounds half-to-even).
+    Vectors of different lengths never pair, nor do rows with a null id,
+    block or vector; a pair with a zero vector has no cosine, and a vector
+    with a NaN component pairs with NaN cosine (SQL's ``NaN >= x``)."""
+    rows = df.filter(
+        F.col(id_col).isNotNull() & F.col(block_col).isNotNull() & F.col(vec_col).isNotNull()
+    ).select(
+        _block_key(df, block_col).alias("blk"),
+        F.size(vec_col).alias("dim"),
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("vec"),
     )
-    a = df.select(
-        F.col(block_col).alias("blk"),
-        F.col(id_col).alias("a"),
-        F.col(vec_col).alias("va"),
-        norm(F.col(vec_col)).alias("na"),
-    )
-    b = df.select(
-        F.col(block_col).alias("blk"),
-        F.col(id_col).alias("b"),
-        F.col(vec_col).alias("vb"),
-        norm(F.col(vec_col)).alias("nb"),
-    )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        a.join(b, "blk")
-        .filter(F.col("a") < F.col("b"))
-        .withColumn("cosine", dot / (F.col("na") * F.col("nb")))
-        .filter(F.col("cosine") >= min_cosine)
-        .select("a", "b", F.round("cosine", 6).alias("cosine"))
+    return _pair_scan(rows, ["blk", "dim"], float_cosine_pairs, min_cosine).select(
+        "a", "b", F.round("cosine", 6).alias("cosine")
     )
 
 
@@ -1045,9 +1045,7 @@ def ivf_train_centroids(
     x = np.stack([np.asarray(r["vq"], dtype=np.int64) for r in rows])
     cent = x[:n_centroids].copy()
     for _ in range(n_iters):
-        # exact: (x-c)^2 summed; |x-c| < 2^22, dim <= 2^9 -> < 2^53
-        d = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        a = np.argmin(d, axis=1)  # ties -> smaller centroid id
+        a = l2_topk(x, cent, np.arange(n_centroids), 1)[1]
         new = cent.copy()  # empty centroids keep their position
         for c in range(n_centroids):
             members = x[a == c]
@@ -1055,9 +1053,6 @@ def ivf_train_centroids(
                 new[c] = np.floor_divide(members.sum(axis=0), len(members))
         cent = new
     return cent
-
-
-IVF_UNROLL_MAX_DIM = 128
 
 
 def ivf_topk(
@@ -1068,7 +1063,6 @@ def ivf_topk(
     n_centroids: int | None = 16,
     n_iters: int = 5,
     n_probe: int = 2,
-    dim: int | None = None,
     train_sample: int = 4096,
     bucket_metrics="rensa_ivf_buckets",
 ) -> DataFrame:
@@ -1079,18 +1073,19 @@ def ivf_topk(
     -> (qid, neighbor_id, rank, l2sq).
 
     The scale path for many-query ANN when hyperplane buckets are too
-    coarse: ONE equi-join on the centroid id (corpus shuffles once, each
-    side bounded by bucket membership ~n/n_centroids), top-k via a per-qid
+    coarse: each query meets the corpus rows of its probed buckets in the
+    top-k scan (:func:`_topk_scan`: the corpus shuffles once, each group is
+    bounded by bucket membership ~n/n_centroids), top-k via a per-qid
     window. Fully integer end-to-end (quantize -> centroids -> distances),
     deterministic ties (l2sq, then neighbor id), so the DuckDB oracle
     reproduces the exact rows (duck_sql.ivf_topk_sql unrolls the same
     Lloyd iterations).
 
-    Scale knobs (round-4 verdict ask #2 — a FIXED centroid count makes
-    the serving join O(n^2/n_centroids) in candidate rows):
+    Scale knobs (a FIXED centroid count makes the serving scan
+    O(n^2/n_centroids) in candidate pairs):
 
     - ``n_centroids=None`` auto-sizes to ~sqrt(n) (IVF practice: balances
-      probe fan-out against bucket size, keeping candidate rows
+      probe fan-out against bucket size, keeping candidate pairs
       ~n*n_probe*sqrt(n)/n = O(n^1.5) instead of O(n^2)). The driver lane
       pins 16 because the oracle SQL bakes the centroid count into its
       unrolled Lloyd iterations; production callers should pass None or
@@ -1100,18 +1095,14 @@ def ivf_topk(
       (``n_buckets``, ``max_bucket_members``) — skewed quantizers are
       observable without the Spark UI, same contract as lsh.bucket_sizes.
       String name (uniquified), Observation, or None.
-    - re-rank: at dim <= IVF_UNROLL_MAX_DIM the squared-L2 is an UNROLLED
-      sum of dim getItem terms (Spark higher-order lambdas evaluate
-      interpreted — measured 4.3s vs 1.4s on 500k x 64 candidates at
-      sf0.1); beyond it (round-4 verdict ask #5: a dim-768 unroll risks
-      blowing whole-stage codegen / the constant pool) the distance runs
-      as ONE vectorized Arrow-batched pandas UDF over the pair — same
-      exact int64 math, pinned by test_ivf_topk_high_dim."""
-    if dim is None:
-        dim = len(
-            np.asarray(df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()[0])
-        )
-
+    - re-rank: ``l2_topk`` scores each (bucket, probing queries) group
+      with exact int64 matmuls at any dim, each over a chunk of queries
+      holding at most ``_CHUNK_ELEMS`` distances, so the score
+      temporaries stay bounded in any bucket. The bucket itself is not
+      bounded: one task holds a whole bucket (its rows and their probing
+      queries) in memory, so a skewed quantizer whose largest bucket
+      (``max_bucket_members``) outgrows a worker needs more centroids.
+      Nothing spills."""
     # ONE materialization feeds the 5 training actions + init + serving
     # (lazy localCheckpoint: blocks reclaimed when the result goes out of
     # scope; without it each Lloyd iteration re-quantizes the whole corpus)
@@ -1127,23 +1118,21 @@ def ivf_topk(
     cent = ivf_train_centroids(side, n_centroids, n_iters, train_sample)
 
     from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, IntegerType, LongType
+    from pyspark.sql.types import ArrayType, IntegerType
 
     @pandas_udf(ArrayType(IntegerType()))
     def probes(vqs: pd.Series) -> pd.Series:
         if len(vqs) == 0:  # empty Arrow batch: np.stack([]) would raise
             return pd.Series([], dtype=object)
         m = np.stack([np.asarray(v, dtype=np.int64) for v in vqs])
-        d = ((m[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        # argsort with centroid-id tiebreak: stable sort on ids then dist
-        order = np.argsort(d, axis=1, kind="stable")[:, :n_probe]
-        return pd.Series(list(order.astype(np.int32)))
+        near = l2_topk(m, cent, np.arange(len(cent), dtype=np.int32), n_probe)[1]
+        return pd.Series(list(near.reshape(len(m), -1)))
 
     assigned = side.withColumn("probe", probes("vq")).localCheckpoint(eager=False)
     corpus = assigned.select(
-        F.col("vid").alias("nid"),
-        F.col("vq").alias("nvq"),
         F.col("probe").getItem(0).alias("c"),  # home bucket = nearest centroid
+        F.col("vid").alias("neighbor_id"),
+        F.col("vq").alias("vec"),
     )
     if bucket_metrics is not None:
         if bucket_metrics == "rensa_ivf_buckets":
@@ -1160,43 +1149,17 @@ def ivf_topk(
         # the metrics subtree only executes if it feeds the served plan:
         # an equi-join on c (n_centroids rows) is a semantic no-op (every
         # home bucket exists) that keeps the observation live. No explicit
-        # broadcast hint on the OBSERVED aggregate (round-5 advice): a
+        # broadcast hint on the OBSERVED aggregate: a
         # re-executed broadcast exchange wrapping CollectMetrics spams
         # accumulator-lookup errors after the first job unregisters it;
         # AQE broadcasts the tiny aggregate on its own through a path
         # that re-registers cleanly (same treatment as bucketed_topk_join).
         corpus = corpus.join(sizes, "c").drop("_bucket_members")
     queries = assigned.select(
-        F.col("vid").alias("qid"),
-        F.col("vq").alias("qvq"),
         F.explode("probe").alias("c"),
+        F.col("vid").alias("qid"),
+        F.col("vq").alias("vec"),
     )
-    cand = queries.join(corpus, "c")
-    if dim <= IVF_UNROLL_MAX_DIM:
-        # UNROLLED squared-L2 (sum of dim explicit getItem terms): Spark's
-        # higher-order zip_with/aggregate lambdas evaluate interpreted,
-        # outside whole-stage codegen — measured 4.3s vs 1.4s for the same
-        # 500k x 64 candidate set at sf0.1. Bit-identical either way.
-        l2sq = None
-        for i in range(dim):
-            d = F.col("qvq").getItem(i) - F.col("nvq").getItem(i)
-            term = d * d
-            l2sq = term if l2sq is None else l2sq + term
-        cand = cand.withColumn("l2sq", l2sq)
-    else:
-        @pandas_udf(LongType())
-        def l2sq_udf(qs: pd.Series, ns: pd.Series) -> pd.Series:
-            if len(qs) == 0:
-                return pd.Series([], dtype="int64")
-            qm = np.stack([np.asarray(v, dtype=np.int64) for v in qs])
-            nm = np.stack([np.asarray(v, dtype=np.int64) for v in ns])
-            diff = qm - nm
-            return pd.Series(np.einsum("ij,ij->i", diff, diff))
-
-        cand = cand.withColumn("l2sq", l2sq_udf("qvq", "nvq"))
-    w = Window.partitionBy("qid").orderBy(F.col("l2sq"), F.col("nid"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", F.col("nid").alias("neighbor_id"), "rank", "l2sq")
+    return _topk_scan(queries, corpus, ["c"], l2_topk, k, "long", F.asc("score")).select(
+        "qid", "neighbor_id", "rank", F.col("score").alias("l2sq")
     )

@@ -57,27 +57,22 @@ class StreamingDeduplicator:
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """foreachBatch hook: decides kept/dup for the batch, appends the
         batch's kept rows to state, and appends decisions to `decisions`."""
-        from rensa_spark.functions.udfs import jaccard_udf, rminhash_sig_bands_udf
-        from rensa_spark.operators.dedup import add_if_unique
+        from rensa_spark.functions.udfs import jaccard_udf
+        from rensa_spark.operators.dedup import _greedy_kept, sketch_rminhash
 
         cfg = self.cfg
         src = batch_df.select(
             F.col(self.key_col).alias("key"), F.col(self.text_col).alias("text")
         ).localCheckpoint(eager=True)
 
-        # ONE fused sketch pass (round 6): the separate sig UDF +
-        # band-row UDF each re-ran the full shingle+MinHash per batch row;
-        # sig and band hashes are one computation, and the checkpoint
-        # feeds all four consumers (state probe + within-batch + both
-        # state appends) without re-crossing Python
-        sb = rminhash_sig_bands_udf(cfg)
+        # ONE fused sketch pass: the separate sig UDF + band-row UDF each
+        # re-ran the full shingle+MinHash per batch row; sig and band
+        # hashes are one computation, and the checkpoint feeds all four
+        # consumers (state probe + within-batch greedy + both state
+        # appends) without re-crossing Python
         sk = (
-            src.withColumn("_sb", sb("text"))
-            .select(
-                "key",
-                F.col("_sb.sig").alias("sig"),
-                F.col("_sb.bands").alias("bands"),
-            )
+            sketch_rminhash(src, cfg, "key", "text")
+            .select("key", "sig", "bands")
             .localCheckpoint(eager=False)
         )
         sigs = sk.select("key", "sig")
@@ -99,7 +94,7 @@ class StreamingDeduplicator:
                 .distinct()
             )
             jac = jaccard_udf(cfg)
-            dup_vs_state = (
+            dup_keys_vs_state = (
                 cand.join(sigs, "key")
                 .join(
                     kept_sigs.withColumnRenamed("key", "kept_key").withColumnRenamed(
@@ -112,7 +107,6 @@ class StreamingDeduplicator:
                 .select("key")
                 .distinct()
             )
-            dup_keys_vs_state = dup_vs_state
             # keys already present in state are duplicates too
             existing = src.join(kept_sigs, "key", "leftsemi").select("key")
             dup_keys_vs_state = dup_keys_vs_state.unionByName(existing).distinct()
@@ -121,9 +115,14 @@ class StreamingDeduplicator:
 
         survivors_candidates = src.join(dup_keys_vs_state, "key", "left_anti")
 
-        # 2) within-batch sequential add-if-unique over the remaining rows
-        decisions = add_if_unique(
-            survivors_candidates, cfg, "key", "text", order_col="key"
+        # 2) within-batch sequential add-if-unique over the remaining rows,
+        #    from their rows of the batch sketch (no second sketch pass)
+        decisions = _greedy_kept(
+            survivors_candidates.select("key", F.col("key").alias("ord")),
+            sk.join(survivors_candidates, "key", "leftsemi").localCheckpoint(
+                eager=False
+            ),
+            cfg,
         )
         kept_new_keys = decisions.filter("kept").select("key")
 

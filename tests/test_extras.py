@@ -152,6 +152,88 @@ def test_hyperplane_bucket_topk_recall(spark, emb_df):
     assert hits / (5 * 5) >= 0.35
 
 
+def test_embedding_near_dup_zero_and_null_vectors(spark):
+    """A pair with a zero vector has no cosine and a null vector pairs with
+    nothing: adding either to a block changes no output row, at any
+    threshold (under Spark 4's default ANSI mode the former JVM division
+    raised DIVIDE_BY_ZERO on the zero vector). Ids past 2^53 survive."""
+    from rensa_spark.operators.similarity import embedding_near_dup_pairs
+
+    rng = np.random.default_rng(5)
+    base = rng.normal(size=(4, 8))
+    vecs = np.vstack([base, base + 0.01 * rng.normal(size=(4, 8))])
+    schema = "id long, vec array<float>, blk string"
+    rows = [((1 << 60) + i, v.tolist(), "xy"[i % 2]) for i, v in enumerate(vecs)]
+    extra = [
+        ((1 << 60) + 99, [0.0] * 8, "x"),
+        ((1 << 60) + 98, [0.0] * 8, "y"),
+        ((1 << 60) + 97, None, "x"),
+    ]
+
+    def pairs(rs, min_cosine):
+        df = spark.createDataFrame(rs, schema)
+        return sorted(
+            tuple(r)
+            for r in embedding_near_dup_pairs(df, "id", "vec", "blk", min_cosine).collect()
+        )
+
+    for min_cosine in (-1.0, 0.5):
+        want = pairs(rows, min_cosine)
+        assert len(want) >= 4
+        assert pairs(rows + extra, min_cosine) == want
+    assert len(pairs(rows, -1.0)) == 12  # every pair of both 4-row blocks
+
+    # a NaN component makes a NaN cosine, which passes any threshold as
+    # SQL's NaN >= x does: the NaN row pairs with every row of its block,
+    # the zero vector included
+    nan_id = (1 << 60) + 96
+    nan_row = (nan_id, [float("nan")] + [1.0] * 7, "x")
+    block_x = [r[0] for r in rows + extra if r[2] == "x" and r[1] is not None]
+
+    def nan_str(rs):
+        return sorted((a, b, "nan" if c != c else c) for a, b, c in rs)
+
+    for min_cosine in (-1.0, 0.5):
+        want = pairs(rows, min_cosine) + [
+            (min(i, nan_id), max(i, nan_id), float("nan")) for i in block_x
+        ]
+        assert nan_str(pairs(rows + extra + [nan_row], min_cosine)) == nan_str(want)
+
+
+def test_embedding_near_dup_typed_blocks(spark):
+    """Timestamp, array and double blocks group rows as an equi-join on
+    the block does — one microsecond apart is another block, -0.0 is 0.0
+    — so each typed block gives the rows of the same data blocked by an
+    equivalent string label."""
+    import datetime as dt
+
+    from rensa_spark.operators.similarity import embedding_near_dup_pairs
+
+    rng = np.random.default_rng(9)
+    vecs = rng.normal(size=(12, 6))
+    labels = [i % 3 for i in range(12)]
+    t0 = dt.datetime(2021, 3, 4, 5, 6, 7, 1)
+    cases = [
+        ("timestamp", [t0 + dt.timedelta(microseconds=m) for m in labels], labels),
+        ("array<int>", [[1, m] for m in labels], labels),
+        ("double", [[0.0, -0.0, 1.5][m] for m in labels], [m // 2 for m in labels]),
+    ]
+
+    def pairs(blocks, block_type):
+        df = spark.createDataFrame(
+            [(i, v.tolist(), b) for i, (v, b) in enumerate(zip(vecs, blocks))],
+            f"id long, vec array<double>, blk {block_type}",
+        )
+        return sorted(
+            tuple(r) for r in embedding_near_dup_pairs(df, "id", "vec", "blk", -1.0).collect()
+        )
+
+    for block_type, blocks, same in cases:
+        want = pairs([f"b{m}" for m in same], "string")
+        assert len(want) == sum(n * (n - 1) // 2 for n in np.bincount(same)), block_type
+        assert pairs(blocks, block_type) == want, block_type
+
+
 def test_embedding_near_dup_pairs(spark):
     from rensa_spark.operators.similarity import embedding_near_dup_pairs
 
@@ -533,6 +615,45 @@ def test_streaming_dedup_matches_sequential(spark, tmp_path):
     }
     mismatches = [k for k in got if got[k] != want[k]]
     assert not mismatches, mismatches[:10]
+
+
+def test_streaming_batch_is_sketched_once(spark, tmp_path, monkeypatch):
+    """process_batch builds the fused sig+bands sketch once per
+    micro-batch: the within-batch greedy reads the batch's checkpointed
+    sketch instead of re-sketching the surviving rows (counted by the
+    sketch-UDF factory calls), and the decisions equal add_if_unique over
+    the batch."""
+    from rensa_spark.functions import udfs
+    from rensa_spark.operators import dedup as D
+    from rensa_spark.streaming.dedup import StreamingDeduplicator
+
+    pdf = generate_corpus(200, seed=7, with_images=False)[["image_id", "caption"]]
+    pdf = pdf.rename(columns={"image_id": "key", "caption": "text"})
+    calls = []
+    factory = udfs.rminhash_sig_bands_udf
+
+    def counting(cfg):
+        calls.append(cfg)
+        return factory(cfg)
+
+    monkeypatch.setattr(udfs, "rminhash_sig_bands_udf", counting)
+    monkeypatch.setattr(D, "rminhash_sig_bands_udf", counting)
+    dedup = StreamingDeduplicator(spark, CFG, str(tmp_path / "stream"))
+    for epoch, (lo, hi) in enumerate([(0, 120), (120, 200)]):
+        dedup.process_batch(spark.createDataFrame(pdf.iloc[lo:hi]), epoch)
+        assert len(calls) == epoch + 1
+    monkeypatch.undo()
+
+    decisions = spark.read.parquet(str(tmp_path / "stream" / "decisions"))
+    got = {r["key"]: r["kept"] for r in decisions.filter("epoch = 0").collect()}
+    want = {
+        r["key"]: r["kept"]
+        for r in D.add_if_unique(
+            spark.createDataFrame(pdf.iloc[0:120]), CFG, "key", "text"
+        ).collect()
+    }
+    assert got == want
+    assert not all(want.values())  # the batch holds duplicates
 
 
 # ------------------------------------------------------------------ substring
@@ -1666,6 +1787,43 @@ def test_verified_pairs_bucket_split_across_arrow_batches(spark):
     assert got == want
 
 
+def test_scan_lanes_split_across_arrow_batches(spark, emb_df):
+    """The top-k scan (ivf_topk, bucketed_topk_join) and the pair scan
+    (ann_near_dup_pairs, embedding_near_dup_pairs) carry a group cut by an
+    Arrow batch boundary into the next batch: 3-row batches give the same
+    rows as the default batch size."""
+    from rensa_spark.operators import similarity as S
+
+    lanes = {
+        "ivf_topk": lambda: S.ivf_topk(emb_df, "vec_id", "embedding", k=3),
+        "bucketed_topk_join": lambda: S.bucketed_topk_join(
+            emb_df, "vec_id", "embedding", emb_df, "vec_id", "embedding",
+            k=3, n_planes=4, dim=64,
+        ),
+        "ann_near_dup_pairs": lambda: S.ann_near_dup_pairs(
+            emb_df, "vec_id", "embedding", min_cosine=0.3, n_planes=6, dim=64
+        ),
+        "embedding_near_dup_pairs": lambda: S.embedding_near_dup_pairs(
+            emb_df, "vec_id", "embedding", "label", min_cosine=0.3
+        ),
+    }
+
+    def run():
+        return {name: sorted(tuple(r) for r in f().collect()) for name, f in lanes.items()}
+
+    want = run()
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        got = run()
+    finally:
+        spark.conf.set(conf, prev)
+    for name in lanes:
+        assert len(want[name]) > 10, name
+        assert got[name] == want[name], name
+
+
 def test_lsh_index_appends_do_not_rewrite(spark, tmp_path):
     """Round-3 verdict ask #8: N batched inserts append new generations —
     the row files of earlier generations are never rewritten (the round-3
@@ -1802,28 +1960,11 @@ def test_lsh_index_legacy_layout_migration(spark, tmp_path):
     assert sigs == {"b"}
 
 
-def test_ivf_topk_high_dim_and_rerank_parity(spark, emb_df, monkeypatch):
-    """Round-4 verdict ask #5: above IVF_UNROLL_MAX_DIM the re-rank runs as
-    one Arrow-batched pandas UDF instead of a dim-term unrolled expression
-    (codegen/constant-pool risk at dim >= ~256). (a) both paths produce
-    identical rows on the same dim-64 corpus; (b) a dim-256 corpus runs the
-    lane green end-to-end with exact distances."""
+def test_ivf_topk_high_dim_and_rerank_parity(spark, emb_df):
+    """A dim-256 corpus runs the IVF lane green end-to-end with exact
+    squared-L2 distances (the int64 l2_topk re-rank serves every dim)."""
     from rensa_spark.operators import similarity as S
 
-    # (a) parity: force the pandas path on the dim-64 fixture
-    base = sorted(
-        tuple(r)
-        for r in S.ivf_topk(emb_df, "vec_id", "embedding", k=3, dim=64).collect()
-    )
-    monkeypatch.setattr(S, "IVF_UNROLL_MAX_DIM", 0)
-    alt = sorted(
-        tuple(r)
-        for r in S.ivf_topk(emb_df, "vec_id", "embedding", k=3, dim=64).collect()
-    )
-    monkeypatch.undo()
-    assert base == alt
-
-    # (b) dim-256: high-dim corpus end-to-end on the (automatic) pandas path
     rng = np.random.default_rng(7)
     n, dim = 200, 256
     vecs = rng.normal(size=(n, dim)).astype(np.float32)
@@ -1831,7 +1972,7 @@ def test_ivf_topk_high_dim_and_rerank_parity(spark, emb_df, monkeypatch):
         {"vec_id": np.arange(n, dtype=np.int64), "embedding": [v.tolist() for v in vecs]}
     )
     df = spark.createDataFrame(pdf)
-    out = S.ivf_topk(df, "vec_id", "embedding", k=2, n_centroids=8, dim=dim).collect()
+    out = S.ivf_topk(df, "vec_id", "embedding", k=2, n_centroids=8).collect()
     mq = S.quantize_vecs(vecs.astype(np.float64))
     by_id = {int(i): mq[i] for i in range(n)}
     assert len({r["qid"] for r in out}) == n
@@ -1868,7 +2009,7 @@ def test_ivf_train_sample_unbiased_and_buckets_observable(spark):
     df = spark.createDataFrame(pdf)
     obs = Observation("ivf_buckets")
     out = ivf_topk(
-        df, "vec_id", "embedding", k=1, n_centroids=4, dim=dim,
+        df, "vec_id", "embedding", k=1, n_centroids=4,
         train_sample=80, bucket_metrics=obs,
     ).collect()
     assert len(out) == n_a + n_b  # k=1 -> every query finds itself
@@ -1904,7 +2045,7 @@ def test_ivf_auto_size_sqrt_n_and_candidate_bound(spark):
     df = spark.createDataFrame(pdf).repartition(8)
     obs = Observation("ivf_auto_buckets")
     out = ivf_topk(
-        df, "vec_id", "embedding", k=1, n_centroids=None, dim=dim,
+        df, "vec_id", "embedding", k=1, n_centroids=None,
         n_iters=3, bucket_metrics=obs,
     ).collect()
     assert len(out) == n  # k=1 -> every query resolves (itself)
@@ -1932,13 +2073,13 @@ def test_ivf_topk_properties(spark, emb_df):
     out1 = sorted(
         tuple(r)
         for r in ivf_topk(
-            emb_df.repartition(1), "vec_id", "embedding", k=3, dim=64
+            emb_df.repartition(1), "vec_id", "embedding", k=3
         ).collect()
     )
     out16 = sorted(
         tuple(r)
         for r in ivf_topk(
-            emb_df.repartition(16), "vec_id", "embedding", k=3, dim=64
+            emb_df.repartition(16), "vec_id", "embedding", k=3
         ).collect()
     )
     assert out1 == out16

@@ -431,7 +431,7 @@ def test_quantized_topk_matches_scalar(id_kind, chunk, monkeypatch):
     from rensa_spark.kernels import ann
 
     if chunk is not None:
-        monkeypatch.setattr(ann, "QUERY_CHUNK", chunk)
+        monkeypatch.setattr(ann, "_CHUNK_ELEMS", chunk)
     rng = np.random.default_rng(17)
     dim = 8
     base = ann.quantize_vecs(rng.normal(size=(6, dim)))
@@ -459,3 +459,248 @@ def test_quantized_topk_matches_scalar(id_kind, chunk, monkeypatch):
     qi, nid, score = ann.quantized_topk(q[:1], c, c_ids, 2)
     assert score[0] == score[1]
     assert nid.tolist() == sorted([c_ids[0], c_ids[6]])
+
+
+def _l2_topk_py(q, c, c_ids, k):
+    """Scalar reference of l2_topk: exact integer squared L2 distances,
+    ranked by distance then id ascending."""
+    out = []
+    for qi, qv in enumerate(q):
+        scored = sorted(
+            (sum((a - b) ** 2 for a, b in zip(qv, cv)), cid) for cv, cid in zip(c, c_ids)
+        )
+        out += [(qi, cid, d) for d, cid in scored[:k]]
+    return out
+
+
+@pytest.mark.parametrize("id_kind", ["long", "string"])
+@pytest.mark.parametrize("chunk", [None, 2])
+def test_l2_topk_matches_scalar(id_kind, chunk, monkeypatch):
+    """l2_topk == the scalar reference: distance ties broken by id (a
+    repeated candidate vector, and candidates mirrored around a query),
+    k larger than the candidate count, long and string ids in non-sorted
+    input order, components at the fixed-point bound, and (chunk=2)
+    queries split across several matmuls."""
+    from rensa_spark.kernels import ann
+
+    if chunk is not None:
+        monkeypatch.setattr(ann, "_CHUNK_ELEMS", chunk)
+    rng = np.random.default_rng(29)
+    dim = 8
+    big = 8 * ann.QUANT_SCALE - 1
+    base = ann.quantize_vecs(rng.normal(size=(6, dim)))
+    unit = np.zeros(dim, dtype=np.int64)
+    unit[0] = 5
+    c = np.vstack(
+        [base, base[:2], base[0] + unit, base[0] - unit, np.full((1, dim), -big)]
+    )
+    q = np.vstack([base[:1], np.full((1, dim), big), ann.quantize_vecs(rng.normal(size=(3, dim)))])
+    raw = rng.permutation(len(c) * 5)[: len(c)]
+    if id_kind == "long":
+        c_ids = (raw.astype(np.int64) - 20) * (2**40)
+    else:
+        c_ids = np.array([f"n{v:03d}" for v in raw], dtype=object)
+    for k in (1, 3, len(c), len(c) + 4):
+        qi, nid, d = ann.l2_topk(q, c, c_ids, k)
+        assert d.dtype == np.int64
+        got = list(zip(qi.tolist(), nid.tolist(), d.tolist()))
+        assert got == _l2_topk_py(q.tolist(), c.tolist(), c_ids.tolist(), k), k
+    # base[0] is candidates 0 and 6 (distance 0), and candidates 8 and 9
+    # sit at the same distance on either side of it: both ties go by id
+    qi, nid, d = ann.l2_topk(q[:1], c, c_ids, 4)
+    assert d.tolist()[:2] == [0, 0] and d[2] == d[3] == 25
+    assert nid.tolist() == sorted(c_ids[[0, 6]].tolist()) + sorted(c_ids[[8, 9]].tolist())
+
+
+def test_topk_query_chunks_bound_scores(monkeypatch):
+    """_topk sizes each query chunk from the candidate count: no chunk
+    scores more than _CHUNK_ELEMS pairs (or one query against a larger
+    candidate set), and chunking changes no output row."""
+    from rensa_spark.kernels import ann
+
+    rng = np.random.default_rng(41)
+    q = ann.quantize_vecs(rng.normal(size=(50, 4)))
+    for nc in (1, 10, 100):
+        c = ann.quantize_vecs(rng.normal(size=(nc, 4)))
+        ids = rng.permutation(nc).astype(np.int64)
+        want = [a.tolist() for a in ann.l2_topk(q, c, ids, 3)]
+        monkeypatch.setattr(ann, "_CHUNK_ELEMS", 64)
+        seen = []
+
+        def score(qc, cc):
+            seen.append(len(qc))
+            d = ((qc[:, None, :] - cc[None, :, :]) ** 2).sum(axis=2)
+            return d, d
+
+        got = [a.tolist() for a in ann._topk(q, c, ids, 3, score)]
+        monkeypatch.undo()
+        assert got == want, nc
+        assert sum(seen) == len(q) and max(seen) * nc <= max(64, nc), (nc, seen)
+        assert len(seen) == -(-len(q) // max(1, 64 // nc))  # 1, 7, 50 chunks
+
+
+def _pairs_py(vecs, ids, min_cosine, cosine):
+    """Pairs a < b with a score that is not below ``min_cosine`` (a NaN
+    score passes, as SQL's ``NaN >= x``); None is no score."""
+    out = []
+    for u in range(len(vecs)):
+        for v in range(u + 1, len(vecs)):
+            if ids[u] == ids[v]:
+                continue
+            s = cosine(vecs[u], vecs[v])
+            if s is not None and not s < min_cosine:
+                out.append((min(ids[u], ids[v]), max(ids[u], ids[v]), s))
+    return sorted(out)
+
+
+def _nan_str(rows):
+    """NaN never equals itself: compare it as a string."""
+    return [tuple("nan" if x != x else x for x in r) for r in rows]
+
+
+def _fixed_cosine_py(a, b):
+    import math
+
+    n2a, n2b = sum(x * x for x in a), sum(x * x for x in b)
+    if n2a == 0 or n2b == 0:
+        return 0.0
+    dot = sum(x * y for x, y in zip(a, b))
+    return float(dot) / (math.sqrt(float(n2a)) * math.sqrt(float(n2b)))
+
+
+def _float_cosine_py(a, b):
+    """Left-to-right float64 sums from 0.0, as Spark's aggregate and
+    DuckDB's list_sum accumulate them; no cosine for a zero norm product."""
+    import math
+
+    def total(xs):
+        acc = 0.0
+        for x in xs:
+            acc += x
+        return acc
+
+    a, b = [float(x) for x in a], [float(x) for x in b]
+    den = math.sqrt(total(x * x for x in a)) * math.sqrt(total(x * x for x in b))
+    if den == 0:
+        return None
+    return total(x * y for x, y in zip(a, b)) / den
+
+
+def _pair_ids(id_kind, n, rng):
+    raw = rng.permutation(n * 5)[:n]
+    if id_kind == "long":
+        ids = (raw.astype(np.int64) - 2 * n) * (2**40)
+    else:
+        ids = np.array([f"v{x:03d}" for x in raw], dtype=object)
+    ids[3] = ids[2]  # a repeated id pairs with nothing
+    return ids
+
+
+@pytest.mark.parametrize("id_kind", ["long", "string"])
+@pytest.mark.parametrize("chunk_elems", [None, 7])
+def test_cosine_pairs_matches_scalar(id_kind, chunk_elems, monkeypatch):
+    """cosine_pairs == the scalar fixed-point reference, bit for bit:
+    zero-norm rows score 0.0 (so they pair at a threshold <= 0 and never
+    above it), a vector and its double score exactly 1.0, long and
+    string ids (a repeated id pairs with nothing), and (chunk_elems=7)
+    one row block per few rows."""
+    from rensa_spark.kernels import ann
+
+    if chunk_elems is not None:
+        monkeypatch.setattr(ann, "_CHUNK_ELEMS", chunk_elems)
+    rng = np.random.default_rng(31)
+    dim = 6
+    base = ann.quantize_vecs(rng.normal(size=(8, dim)))
+    zero = np.zeros((2, dim), dtype=np.int64)
+    vq = np.vstack([base[:4], zero[:1], 2 * base[:1], base[4:], zero[1:]])
+    ids = _pair_ids(id_kind, len(vq), rng)
+    for min_cosine in (-1.0, 0.0, 0.3, 1.0):
+        i, j, s = ann.cosine_pairs(vq, ids, min_cosine)
+        assert s.dtype == np.float64
+        got = sorted(zip(ids[i].tolist(), ids[j].tolist(), s.tolist()))
+        want = _pairs_py(vq.tolist(), ids.tolist(), min_cosine, _fixed_cosine_py)
+        assert got == want, min_cosine
+        assert len(want) > 0
+    zero_ids = {ids[4], ids[-1]}
+    i, j, s = ann.cosine_pairs(vq, ids, 0.0)
+    assert any({a, b} & zero_ids for a, b in zip(ids[i], ids[j]))
+    i, j, s = ann.cosine_pairs(vq, ids, 1e-9)
+    assert not any({a, b} & zero_ids for a, b in zip(ids[i], ids[j]))
+
+
+@pytest.mark.parametrize("id_kind", ["long", "string"])
+@pytest.mark.parametrize("chunk_elems", [None, 7])
+def test_float_cosine_pairs_matches_scalar(id_kind, chunk_elems, monkeypatch):
+    """float_cosine_pairs == the left-to-right scalar reference, bit for
+    bit, on float32 vectors whose products span many orders: there a
+    pairwise or SIMD sum (np.dot, einsum, matmul, ndarray.sum) rounds
+    differently, which the test checks it does for this data. Zero vectors
+    never pair, at any threshold; a vector with a NaN component pairs with
+    every other vector (a zero one too), with NaN cosine."""
+    from rensa_spark.kernels import ann
+
+    if chunk_elems is not None:
+        monkeypatch.setattr(ann, "_CHUNK_ELEMS", chunk_elems)
+    rng = np.random.default_rng(37)
+    n, dim = 24, 67
+    v = (rng.normal(size=(n, dim)) * 10.0 ** rng.uniform(-6, 6, size=(n, dim))).astype(
+        np.float32
+    )
+    # a 2^60 product first, then small products each under half its ulp:
+    # summed left to right they vanish, grouped first they do not
+    v[:4] = rng.integers(8, 12, size=(4, dim))
+    v[:4, 0] = 2.0**30
+    v[3, 0] = -(2.0**30)
+    v[5] = 0.0
+    v[9] = 0.0
+    v[7, 3] = np.nan
+    ids = _pair_ids(id_kind, n, rng)
+    v64 = v.astype(np.float64)
+    ref = [[_float_cosine_py(a, b) for b in v.tolist()] for a in v.tolist()]
+    with np.errstate(invalid="ignore"):
+        nrm = np.sqrt(np.einsum("ij,ij->i", v64, v64))
+        blas = (v64 @ v64.T) / np.outer(nrm, nrm)
+    assert any(
+        ref[a][b] is not None and ref[a][b] == ref[a][b] and ref[a][b] != blas[a, b]
+        for a in range(n)
+        for b in range(n)
+    )
+    for min_cosine in (-2.0, 0.0, 0.3):
+        i, j, s = ann.float_cosine_pairs(v, ids, min_cosine)
+        got = sorted(zip(ids[i].tolist(), ids[j].tolist(), s.tolist()))
+        want = _pairs_py(v.tolist(), ids.tolist(), min_cosine, _float_cosine_py)
+        assert _nan_str(got) == _nan_str(want), min_cosine
+        assert len(want) > 0
+        nan_pairs = [r for r in got if r[2] != r[2]]
+        assert len(nan_pairs) == n - 1 - (ids[7] in (ids[2], ids[3]))
+    i, j, s = ann.float_cosine_pairs(v, ids, -2.0)
+    zero = np.isin(ids[i], ids[[5, 9]]) | np.isin(ids[j], ids[[5, 9]])
+    assert np.isnan(s[zero]).all() and zero.sum() == 2
+
+
+def test_complete_runs_yields_whole_runs():
+    """complete_runs hands every run over whole and in order: a run split
+    across several batches (including an empty batch between its parts),
+    one-row runs, string keys, 2-D keys, and the final run."""
+    import pandas as pd
+
+    from rensa_spark.kernels.runs import complete_runs
+
+    keys = ["a", "a", "b", "c", "c", "c", "c", "c", "d", "e", "e"]
+    cuts = [0, 1, 3, 3, 5, 7, 8, 11]
+    frame = pd.DataFrame({"k": keys, "n": [1] * 5 + [2] * 6, "v": range(len(keys))})
+    batches = [frame.iloc[lo:hi] for lo, hi in zip(cuts[:-1], cuts[1:])]
+
+    def walk(arrays_of):
+        runs = []
+        for (vals,), bounds in complete_runs(iter(batches), arrays_of):
+            assert bounds[0] == 0 and bounds[-1] == len(vals)
+            runs += [vals[lo:hi].tolist() for lo, hi in zip(bounds[:-1], bounds[1:])]
+        return runs
+
+    by_key = [[0, 1], [2], [3, 4, 5, 6, 7], [8], [9, 10]]
+    assert walk(lambda p: (p["k"].to_numpy(), p["v"].to_numpy())) == by_key
+    # (k, n) keys: "c" spans n=1 and n=2, so it is two runs
+    two = lambda p: (np.stack([p["k"].to_numpy(), p["n"].to_numpy()], axis=1), p["v"].to_numpy())  # noqa: E731
+    assert walk(two) == [[0, 1], [2], [3, 4], [5, 6, 7], [8], [9, 10]]
+    assert list(complete_runs(iter([frame.iloc[:0]]), two)) == []

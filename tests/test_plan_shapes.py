@@ -129,6 +129,44 @@ def test_ann_bucket_join_scores_in_cogroup_not_per_pair(spark):
     assert "Join" not in above.split("== Physical Plan ==")[-1], above[-500:]
 
 
+def test_scan_lanes_score_in_one_map_in_pandas(spark):
+    """ivf_topk (top-k scan), ann_near_dup_pairs and
+    embedding_near_dup_pairs (pair scan) score their candidates inside ONE
+    mapInPandas walk: the served plan has exactly one MapInPandas node, no
+    ArrowEvalPython node (no per-pair UDF) and no higher-order function (no
+    per-pair zip_with / aggregate dot) — candidate pairs never become
+    rows."""
+    import numpy as np
+    import pandas as pd
+
+    from rensa_spark.operators import similarity as S
+
+    rng = np.random.default_rng(8)
+    emb = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "vec_id": np.arange(200, dtype=np.int64),
+                "embedding": [v.tolist() for v in rng.normal(size=(200, 64)).astype(np.float32)],
+                "label": rng.integers(0, 5, size=200).astype(np.int32),
+            }
+        )
+    )
+    lanes = {
+        "ivf_topk": S.ivf_topk(emb, "vec_id", "embedding", k=3),
+        "ann_near_dup_pairs": S.ann_near_dup_pairs(
+            emb, "vec_id", "embedding", min_cosine=0.3, n_planes=6, dim=64
+        ),
+        "embedding_near_dup_pairs": S.embedding_near_dup_pairs(
+            emb, "vec_id", "embedding", "label", min_cosine=0.3
+        ),
+    }
+    for name, df in lanes.items():
+        plan = _formatted_plan(df)
+        assert len(re.findall(r"\) MapInPandas", plan)) == 1, name
+        assert len(re.findall(r"\) ArrowEvalPython", plan)) == 0, name
+        assert "lambdafunction" not in plan, name
+
+
 def test_multimodal_clusters_never_scan_bytes(image_table):
     """The multimodal dedup hot path reads only (image_id, caption, phash)
     even though the table carries pixel payloads (north rule / SURVEY §7
