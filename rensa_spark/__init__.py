@@ -21,7 +21,18 @@ schemes, flag semantics) is reproduced, bit-for-bit, so that duplicate
 decisions match the reference.
 """
 
+import sys
+
 from rensa_spark.config import RensaConfig
 
 __all__ = ["RensaConfig"]
 __version__ = "0.1.0"
+
+# Inside a Spark Python worker (a task is running in this process), stop the
+# per-task zip re-reads once; see rensa_spark/session.py. On the driver
+# pyspark is not imported here and the import state is left alone.
+_taskcontext = sys.modules.get("pyspark.taskcontext")
+if _taskcontext is not None and _taskcontext.TaskContext.get() is not None:
+    from rensa_spark.session import freeze_worker_zip_imports
+
+    freeze_worker_zip_imports()

@@ -175,9 +175,13 @@ def one_shot_dup_flags_rho(
         F.col(token_count_col).alias("token_count"),
         F.col(bands_col).alias("bands"),
         F.col(rescue_bands_col).alias("rescue_bands"),
-    ).localCheckpoint(eager=False)  # consumed by 3 branches — run the rho
+    ).localCheckpoint(eager=True)  # consumed by 3 branches — run the rho
     # sketch UDF lineage once; unlike persist() the blocks are reclaimed by
-    # the ContextCleaner when the result goes out of scope (round-2 advice)
+    # the ContextCleaner when the result goes out of scope (round-2 advice).
+    # Eager: a lazy checkpoint read under the broadcast joins below was
+    # checkpointed by whichever broadcast-exchange thread finished its job
+    # first, and that thread's RDD.doCheckpoint deadlocked against the DAG
+    # scheduler checkpointing the same RDD for a concurrent job.
     # exploded band rows feed 3-4 consumers; re-running the posexplode from
     # the persisted base is measurably cheaper than persisting the 8x-wider
     # exploded rows (A/B on a 200k all-sparse corpus: 9.0s vs 9.7s best-of-3)
@@ -302,7 +306,8 @@ def one_shot_dup_flags_rho(
         # aggregate + two joins outright. AQE cannot make that cut: the
         # rescue subtree's independent stages are materialized eagerly
         # before empty-relation propagation could prove them pointless.
-        flags = flags.localCheckpoint(eager=False)
+        flags = flags.localCheckpoint(eager=False)  # materialized by the
+        # probe below on this thread, before any plan reads it under a broadcast
         rescue_cond = (
             (F.col("matches") == 0)
             & (F.col("required") == 1)

@@ -625,12 +625,15 @@ def add_if_unique_sql(cfg: RensaConfig) -> str:
     src/inline_dedup/rminhash.rs:233-299): process docs in key order; keep a
     doc iff no earlier KEPT doc is an LSH candidate (shares a band bucket)
     with signature jaccard >= threshold. Computed per connected component of
-    the conflict graph with an in-order list_reduce (components are small at
-    oracle SF; the decision never crosses components). Each doc carries its
-    earlier conflict neighbours (``pre``) into the reduce, so the lambda is
-    single-level and captures no outer column: DuckDB 1.0.0 evaluates a
-    nested lambda over an outer per-component column against the wrong
-    row when all components are reduced together."""
+    the conflict graph by a recursive walk in key order (components are
+    small at oracle SF; the decision never crosses components): step ``rn``
+    appends the component's rn-th doc to the kept list unless one of its
+    earlier conflict neighbours (``pre``) is already in it. The walk uses no
+    lambda: an in-order ``list_reduce`` over a per-component
+    ``list({...} ORDER BY doc_id)`` gave a different kept set in up to a
+    third of runs under DuckDB 1.0.0's default threads (the component
+    {45, 267, 413} at sf0.01 kept 413 instead of 45) from identical
+    ``earlier`` rows."""
     thr = cfg.threshold
     return f"""
 WITH RECURSIVE {shingle_hash_ctes(cfg)},
@@ -662,18 +665,18 @@ earlier AS (
     SELECT c.doc_id, c.cid, coalesce(list(k.a), []::BIGINT[]) AS pre
     FROM comp c LEFT JOIN conflict k ON k.b = c.doc_id
     GROUP BY c.doc_id, c.cid),
-greedy AS (
-    SELECT cid,
-           list_reduce(
-               list_prepend({{'v': NULL::BIGINT, 'pre': []::BIGINT[],
-                              'acc': []::BIGINT[]}},
-                            list({{'v': doc_id, 'pre': pre, 'acc': []::BIGINT[]}}
-                                 ORDER BY doc_id)),
-               (s, x) -> {{'v': x.v, 'pre': x.pre,
-                          'acc': CASE WHEN len(list_intersect(s.acc, x.pre)) = 0
-                                 THEN list_append(s.acc, x.v) ELSE s.acc END}}
-           ).acc AS kept_keys
-    FROM earlier GROUP BY cid)
+ranked AS (
+    SELECT doc_id, cid, pre,
+           row_number() OVER (PARTITION BY cid ORDER BY doc_id) AS rn
+    FROM earlier),
+walk(cid, rn, acc) AS (
+    SELECT DISTINCT cid, 0::BIGINT, []::BIGINT[] FROM ranked
+    UNION ALL
+    SELECT w.cid, r.rn,
+           CASE WHEN len(list_intersect(w.acc, r.pre)) = 0
+                THEN list_append(w.acc, r.doc_id) ELSE w.acc END
+    FROM walk w JOIN ranked r ON r.cid = w.cid AND r.rn = w.rn + 1),
+greedy AS (SELECT cid, arg_max(acc, rn) AS kept_keys FROM walk GROUP BY cid)
 SELECT c.doc_id, list_contains(g.kept_keys, c.doc_id) AS kept
 FROM comp c JOIN greedy g ON g.cid = c.cid
 ORDER BY c.doc_id"""
