@@ -139,8 +139,7 @@ class RensaConfig:
         DEFAULT_RHO_RECALL_RESCUE_REQUIRED_BAND_MATCHES
     )
 
-    # Spark-side knobs (no reference counterpart — distribution hygiene)
-    shuffle_partitions: int = 32
+    # Spark-side knob (no reference counterpart — distribution hygiene):
     # buckets above max(hot_bucket_cap, exact_task_cap) pair via hub + ring
     # edges instead of every pair (operators/dedup.verified_pairs_from_band_rows)
     hot_bucket_cap: int = 1 << 20

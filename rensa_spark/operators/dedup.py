@@ -273,10 +273,8 @@ def add_if_unique(
     key_col: str,
     text_col: str,
     order_col: str | None = None,
-    max_rounds: int = 30,
     use_lsh: bool = True,
     brute_force_max_rows: int = 100_000,
-    driver_max_edges: int = 200_000,
 ) -> DataFrame:
     """Batch emulation of RMinHashDeduplicator.add_pairs with use_lsh=True
     (src/inline_dedup/rminhash.rs:233-299): process rows in ``order_col``
@@ -287,25 +285,18 @@ def add_if_unique(
     once and never change, so "LSH candidate at add time" == static band
     co-membership with an earlier kept row. kept(i) is therefore the
     lexicographically-greedy maximal independent set of the DAG of verified
-    conflict edges (j -> i for j earlier), computed here by frontier rounds:
-    a row is decidable once all its earlier conflict-neighbors are decided;
-    decided-kept iff none of them was kept. Duplicate chains are short
-    (SURVEY.md §7 hard part 2), so rounds ~= chain length.
+    conflict edges (j -> i for j earlier). The edges are labelled with
+    their connected component and sorted so that each component is one
+    run of a partition; one ``mapInPandas`` walk decides every component
+    whole with the numpy kernel :func:`rensa_spark.kernels.greedy.greedy_kept`
+    (see its docstring for the round rule). Rows with no conflict edge are
+    kept.
 
-    Round 6: when the verified conflict-edge set is small
-    (``driver_max_edges``, default 200_000 — a few MB collected), the
-    greedy recursion kept(v) = not any(kept(u) for u -> v) is evaluated
-    directly on the driver in
-    topological order and broadcast-joined back: the edge set is already
-    materialized (and counted) for the frontier loop, so the small case
-    replaces rounds of checkpoint+count jobs with one tiny collect. The
-    frontier loop remains the scale path, bit-equal by construction
-    (pinned by test_add_if_unique_driver_greedy_matches_loop).
-
-    Runs Spark jobs when called (the row and edge counts, the edge
-    checkpoint, the driver collect or the frontier rounds): the path is
-    decided from the data at that time and frozen into the returned
-    DataFrame.
+    Runs Spark jobs when called: only :func:`connected_components`' (its
+    contraction checkpoint, which also materializes the sketch and the
+    conflict edges, plus star rounds when the edges span more than one
+    partition), and with ``use_lsh=False`` the row count of the
+    brute-force guard. The greedy walk itself runs when the result is read.
 
     Returns (key, kept boolean).
     """
@@ -321,8 +312,7 @@ def add_if_unique(
         .localCheckpoint(eager=False)
     )
     return _greedy_kept(
-        base.select("key", "ord"), sk, cfg,
-        max_rounds, use_lsh, brute_force_max_rows, driver_max_edges,
+        base.select("key", "ord"), sk, cfg, use_lsh, brute_force_max_rows
     )
 
 
@@ -330,10 +320,8 @@ def _greedy_kept(
     base: DataFrame,
     sk: DataFrame,
     cfg: RensaConfig,
-    max_rounds: int = 30,
     use_lsh: bool = True,
     brute_force_max_rows: int = 100_000,
-    driver_max_edges: int = 200_000,
 ) -> DataFrame:
     """:func:`add_if_unique` from (key, ord) rows and their (key, sig,
     bands) sketch, which the verify reads twice: callers checkpoint it, so
@@ -372,106 +360,43 @@ def _greedy_kept(
             F.when(F.col("ord_a") <= F.col("ord_b"), F.col("a")).otherwise(F.col("b")).alias("early"),
             F.when(F.col("ord_a") <= F.col("ord_b"), F.col("b")).otherwise(F.col("a")).alias("late"),
         )
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)  # read by the labelling and by the walk
+    labels = connected_components(edges, "early", "late")
+    # component minima are not labelled: an unlabelled early end is its
+    # component's minimum, so it names the component itself
+    by_component = (
+        edges.join(labels.withColumnRenamed("key", "early"), "early", "left")
+        .select(F.coalesce("cluster_id", "early").alias("comp"), "early", "late")
+        .repartition("comp")
+        .sortWithinPartitions("comp")
+    )
+    key_type = base.schema["key"].dataType.simpleString()
+    decided = by_component.mapInPandas(_component_walk, f"key {key_type}, kept boolean")
+    return (
+        base.select("key")
+        .join(decided, "key", "left")
+        .select("key", F.coalesce("kept", F.lit(True)).alias("kept"))
+    )
 
-    if edges.count() <= driver_max_edges:
-        from collections import defaultdict, deque
 
-        from pyspark.sql.types import BooleanType, StructField, StructType
+def _component_walk(batches):
+    """mapInPandas body over (comp, early, late) edges sorted so that every
+    conflict component is one contiguous run of a partition. Components
+    share no node, so one :func:`rensa_spark.kernels.greedy.greedy_kept`
+    call decides all the whole components ``complete_runs`` hands over."""
+    import numpy as np
+    import pandas as pd
 
-        preds: dict = defaultdict(list)
-        succs: dict = defaultdict(list)
-        indeg: dict = defaultdict(int)
-        nodes = set()
-        for r in edges.collect():
-            e, l = r["early"], r["late"]
-            preds[l].append(e)
-            succs[e].append(l)
-            indeg[l] += 1
-            nodes.add(e)
-            nodes.add(l)
-        kept: dict = {}
-        dq = deque(sorted(n for n in nodes if indeg[n] == 0))
-        seen = 0
-        while dq:
-            v = dq.popleft()
-            seen += 1
-            kept[v] = not any(kept[u] for u in preds[v])
-            for w in succs[v]:
-                indeg[w] -= 1
-                if indeg[w] == 0:
-                    dq.append(w)
-        if seen == len(nodes):  # acyclic (always, by ord orientation)
-            spark = base.sparkSession
-            key_field = base.select("key").schema.fields[0]
-            decided = spark.createDataFrame(
-                [(k, bool(v)) for k, v in kept.items()],
-                StructType(
-                    [
-                        StructField("key", key_field.dataType),
-                        StructField("kept_d", BooleanType()),
-                    ]
-                ),
-            )
-            return (
-                base.select("key")
-                .join(F.broadcast(decided), "key", "left")
-                .select("key", F.coalesce("kept_d", F.lit(True)).alias("kept"))
-            )
-        # a cycle can only mean corrupted input ordering — fall through to
-        # the frontier loop, which raises after max_rounds
+    from rensa_spark.kernels.greedy import greedy_kept
+    from rensa_spark.kernels.runs import complete_runs
 
-    # ONE fused state table (key, kept: true/false/null=undecided), ONE
-    # localCheckpoint + ONE count per round (round-3: the separate
-    # kept/undecided tables cost two checkpoint jobs per round — fusing
-    # measured ~10% faster at sf0.1 with bit-equal output). A row is
-    # decidable once all its earlier conflict-neighbors are decided
-    # (frontier = undecided minus lates with an undecided early); it is
-    # kept iff no earlier KEPT neighbor reaches it. Keys are unique, so
-    # every set op is a key-join; a non-empty DAG always has a non-empty
-    # frontier, so the loop cannot stall.
-    state = base.select(
-        "key", F.lit(None).cast("boolean").alias("kept")
-    ).localCheckpoint(eager=True)
-    n_undecided = state.filter(F.col("kept").isNull()).count()
-    for _ in range(max_rounds):
-        if n_undecided == 0:
-            break
-        und = state.filter(F.col("kept").isNull()).select("key")
-        live_edges = edges.join(
-            und.withColumnRenamed("key", "late"), "late", "leftsemi"
-        )
-        blocked = (
-            live_edges.join(und.withColumnRenamed("key", "early"), "early", "leftsemi")
-            .select(F.col("late").alias("key"))
-            .distinct()
-        )
-        frontier = und.join(blocked, "key", "left_anti")
-        kept_early = state.filter(F.col("kept") == True).select(  # noqa: E712
-            F.col("key").alias("early")
-        )
-        frontier_dup = (
-            edges.join(kept_early, "early", "leftsemi")
-            .select(F.col("late").alias("key"))
-            .join(frontier, "key", "leftsemi")
-            .distinct()
-            .withColumn("dup", F.lit(True))
-        )
-        newly = frontier.join(frontier_dup, "key", "left").select(
-            "key", F.col("dup").isNull().alias("new_kept")
-        )
-        state = (
-            state.join(newly, "key", "left")
-            .select("key", F.coalesce("kept", "new_kept").alias("kept"))
-            .localCheckpoint(eager=True)
-        )
-        n_undecided = state.filter(F.col("kept").isNull()).count()
-    else:
-        raise RuntimeError(
-            f"add_if_unique did not converge in {max_rounds} rounds; "
-            "conflict chains longer than expected"
-        )
-    return state.select("key", "kept")
+    def arrays_of(pdf):
+        return pdf["comp"].to_numpy(), pdf["early"].to_numpy(), pdf["late"].to_numpy()
+
+    for (early, late), _ in complete_runs(batches, arrays_of):
+        nodes, idx = np.unique(np.concatenate([early, late]), return_inverse=True)
+        kept = greedy_kept(idx[: len(early)], idx[len(early) :], len(nodes))
+        yield pd.DataFrame({"key": nodes, "kept": kept})
 
 
 def exact_dup_flags(

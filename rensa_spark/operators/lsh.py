@@ -26,9 +26,9 @@ captions) makes one giant band bucket. The default flag path aggregates
 bucket sizes with map-side partial counts (only counts move) and decides
 membership through a SALTED semi-join, spreading the hot bucket's rows over
 n_salts reducers — no single-task window sort anywhere on the flag path
-(round-3 change; the window variant survives for low-skew inputs). The
-sparse-member rho path bounds work per bucket at 17 members via a
-WindowGroupLimit; AQE skew-join splitting covers the remaining joins.
+(round-3 change). The sparse-member rho path bounds work per bucket at 17
+members via a WindowGroupLimit; AQE skew-join splitting covers the
+remaining joins.
 """
 
 from __future__ import annotations
@@ -52,9 +52,7 @@ def explode_bands(df: DataFrame, key_col: str, bands_col: str = "bands") -> Data
     )
 
 
-def one_shot_flags_from_bands(
-    bands: DataFrame, keys: DataFrame | None = None
-) -> DataFrame:
+def one_shot_flags_from_bands(bands: DataFrame, keys: DataFrame) -> DataFrame:
     """(key, band_idx, band_hash) rows -> (key, is_dup).
 
     is_dup(key) <=> exists band b where >=2 rows share key's band-b hash
@@ -67,30 +65,23 @@ def one_shot_flags_from_bands(
     everything. Both aggregates combine map-side: a degenerate bucket (e.g.
     100k empty captions sharing every band hash) collapses to one
     (count, min) row per map partition before the shuffle — no member list,
-    no per-bucket sort, no straggler task anywhere (the retired window
-    variant, one full sort partition per bucket, survives as
-    :func:`one_shot_flags_from_bands_window`; a dup-bucket join-back
-    variant measured ~40% worse at 200k rows — it scans the band rows
-    twice). Band rows are consumed EXACTLY ONCE, so the upstream sketch UDF
-    needs no checkpoint/persist.
+    no per-bucket sort, no straggler task anywhere (a window count puts
+    each bucket in one sort partition; a dup-bucket join-back variant
+    measured ~40% worse at 200k rows — it scans the band rows twice). Band
+    rows are consumed EXACTLY ONCE, so the upstream sketch UDF needs no
+    checkpoint/persist.
 
     ``keys``: (key, n_bands) — one row per key with its band-row count;
-    flags are then keys.n_bands minus the key's singleton count. When
-    omitted it is derived from ``bands`` itself, which adds a second scan
-    (the bands are lazily checkpointed in that case).
+    flags are then keys.n_bands minus the key's singleton count.
 
-    CONTRACT when passing ``keys`` explicitly: ``n_bands`` must equal the
-    EXACT number of band rows emitted per key. The R-MinHash and C-MinHash
-    band rows (operators/sketch.py, ``rminhash_sig_bands_udf``) carry
-    ``cfg.num_bands``; only the Rho path folds, and its effective bands
-    number ``cfg.num_bands // fold`` (``cfg.effective_band_fold``).
-    Overstating it (e.g. cfg.num_bands against folded Rho rows) makes
-    sum(inc) < max(n_bands) vacuously true and flags every key a
-    duplicate.
+    CONTRACT: ``n_bands`` must equal the EXACT number of band rows emitted
+    per key. The R-MinHash and C-MinHash band rows (operators/sketch.py,
+    ``rminhash_sig_bands_udf``) carry ``cfg.num_bands``; only the Rho path
+    folds, and its effective bands number ``cfg.num_bands // fold``
+    (``cfg.effective_band_fold``). Overstating it (e.g. cfg.num_bands
+    against folded Rho rows) makes sum(inc) < max(n_bands) vacuously true
+    and flags every key a duplicate.
     """
-    if keys is None:
-        bands = bands.localCheckpoint(eager=False)
-        keys = bands.groupBy("key").agg(F.count(F.lit(1)).alias("n_bands"))
     stats = bands.groupBy("band_idx", "band_hash").agg(
         F.count(F.lit(1)).alias("bucket_size"), F.min("key").alias("only_member")
     )
@@ -109,19 +100,6 @@ def one_shot_flags_from_bands(
         singleton_rows.unionByName(seed_rows)
         .groupBy("key")
         .agg((F.sum("inc") < F.max("n_bands")).alias("is_dup"))
-    )
-
-
-def one_shot_flags_from_bands_window(bands: DataFrame) -> DataFrame:
-    """Window-count variant of :func:`one_shot_flags_from_bands`: exactly two
-    shuffles, but a degenerate band bucket lands in ONE window partition
-    (single-task count). Equal results by construction; kept for the
-    equivalence test and for low-skew inputs where two shuffles win."""
-    w = Window.partitionBy("band_idx", "band_hash")
-    return (
-        bands.withColumn("bucket_size", F.count(F.lit(1)).over(w))
-        .groupBy("key")
-        .agg(F.max(F.col("bucket_size") >= 2).alias("is_dup"))
     )
 
 

@@ -351,7 +351,12 @@ class LshIndex:
             # persist() here pinned executor memory until an explicit
             # unpersist nobody called (round-2 advice, missed at this site)
         ).localCheckpoint(eager=False)
-        intra = one_shot_flags_from_bands(qbands)
+        intra = one_shot_flags_from_bands(
+            qbands,
+            keys=df.select(
+                F.col(key_col).alias("key"), F.lit(self.cfg.num_bands).alias("n_bands")
+            ),
+        )
         vs_index = (
             qbands.join(self.bands().select("band_idx", "band_hash").distinct(),
                         ["band_idx", "band_hash"], "leftsemi")

@@ -124,7 +124,11 @@ class StreamingDeduplicator:
             ),
             cfg,
         )
-        kept_new_keys = decisions.filter("kept").select("key")
+        # three writes read the kept keys: one lazy checkpoint runs the
+        # state probe and the component walk once for all of them
+        kept_new_keys = (
+            decisions.filter("kept").select("key").localCheckpoint(eager=False)
+        )
 
         kept_new_sigs = sigs.join(kept_new_keys, "key", "leftsemi")
         kept_new_bands = bands.join(kept_new_keys, "key", "leftsemi")

@@ -698,27 +698,26 @@ def test_add_if_unique_brute_force_matches_lsh_on_small_input(spark):
 
 
 def test_singleton_count_flags_equal_window_flags(spark):
-    """The (default) single-pass singleton-count flag path must equal the
-    window variant bit-for-bit, with and without an explicit (key, n_bands)
-    side, including a degenerate all-empty-caption block (one giant bucket
-    per band)."""
-    from rensa_spark.operators.lsh import (
-        one_shot_flags_from_bands,
-        one_shot_flags_from_bands_window,
-    )
+    """The single-pass singleton-count flag path equals a direct count of
+    the same band rows' buckets (a key is a duplicate iff one of its
+    buckets has >= 2 members), including a degenerate all-empty-caption
+    block (one giant bucket per band)."""
+    from rensa_spark.operators.lsh import one_shot_flags_from_bands
     from rensa_spark.operators.sketch import rminhash_band_rows
 
     pdf = generate_corpus(250, seed=42, with_images=False)
     pdf.loc[pdf.index[:40], "caption"] = ""  # degenerate block
     df = spark.createDataFrame(pdf[["image_id", "caption"]])
     bands = rminhash_band_rows(df, CFG, "image_id", "caption").localCheckpoint()
-    a = sorted(one_shot_flags_from_bands(bands).collect())
-    b = sorted(one_shot_flags_from_bands_window(bands).collect())
     keys = df.select(
         F.col("image_id").alias("key"), F.lit(CFG.num_bands).alias("n_bands")
     )
-    c = sorted(one_shot_flags_from_bands(bands, keys=keys).collect())
-    assert a == b == c
+    got = dict(one_shot_flags_from_bands(bands, keys=keys).collect())
+    rows = bands.toPandas()
+    size = rows.groupby(["band_idx", "band_hash"])["key"].transform("size")
+    want = (size >= 2).groupby(rows["key"]).any().to_dict()
+    assert got == want
+    assert sum(want.values()) >= 40
 
 
 def test_api_facade(spark):

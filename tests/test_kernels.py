@@ -704,3 +704,86 @@ def test_complete_runs_yields_whole_runs():
     two = lambda p: (np.stack([p["k"].to_numpy(), p["n"].to_numpy()], axis=1), p["v"].to_numpy())  # noqa: E731
     assert walk(two) == [[0, 1], [2], [3, 4], [5, 6, 7], [8], [9, 10]]
     assert list(complete_runs(iter([frame.iloc[:0]]), two)) == []
+
+
+def _sequential_greedy(early, late, order):
+    """add-if-unique one row at a time: ``order`` lists the nodes in
+    processing order; a node is kept iff no kept node has an edge to it."""
+    preds = {v: [] for v in order}
+    for e, l in zip(early, late):
+        preds[l].append(e)
+    kept = {}
+    for v in order:
+        kept[v] = not any(kept[u] for u in preds[v])
+    return np.array([kept[v] for v in range(len(order))])
+
+
+def _ordered_dag(rng, order, n_edges):
+    """Random edges that run forward in ``order`` (duplicates allowed)."""
+    rank = {v: i for i, v in enumerate(order)}
+    early, late = [], []
+    for _ in range(n_edges):
+        a, b = rng.sample(order, 2)
+        if rank[a] > rank[b]:
+            a, b = b, a
+        early.append(a)
+        late.append(b)
+    return np.array(early, dtype=np.int64), np.array(late, dtype=np.int64)
+
+
+def test_greedy_kept_matches_sequential_on_random_dags():
+    from rensa_spark.kernels.greedy import greedy_kept
+
+    rng = random.Random(11)
+    for _ in range(2000):
+        n = rng.randint(2, 40)
+        order = list(range(n))
+        rng.shuffle(order)
+        early, late = _ordered_dag(rng, order, rng.randint(0, 3 * n))
+        got = greedy_kept(early, late, n)
+        assert got.tolist() == _sequential_greedy(early, late, order).tolist()
+    assert greedy_kept(np.array([], np.int64), np.array([], np.int64), 3).all()
+
+
+def test_greedy_kept_cliques_and_chains():
+    """An identical-content clique keeps only its first member; a chain
+    keeps every other node. Node labels are shuffled against the order."""
+    from rensa_spark.kernels.greedy import greedy_kept
+
+    rng = random.Random(5)
+    for n in (2, 40, 1000):
+        order = list(range(n))
+        rng.shuffle(order)
+        i, j = np.triu_indices(n, 1)
+        early, late = np.array(order)[i], np.array(order)[j]
+        got = greedy_kept(early, late, n)
+        assert got.sum() == 1 and got[order[0]]
+    n = 2000
+    order = list(range(n))
+    rng.shuffle(order)
+    early, late = np.array(order[:-1]), np.array(order[1:])
+    got = greedy_kept(early, late, n)
+    assert got.tolist() == _sequential_greedy(early, late, order).tolist()
+    assert got.sum() == n // 2
+
+
+def test_greedy_kept_kept_and_undecided_predecessors():
+    """A node whose predecessors include a kept one and an undecided one is
+    a duplicate: node 3 has kept predecessor 0 and predecessor 2, which
+    waits on 1 in the first round."""
+    from rensa_spark.kernels.greedy import greedy_kept
+
+    early, late = np.array([0, 1, 2]), np.array([3, 2, 3])
+    got = greedy_kept(early, late, 4)
+    assert got.tolist() == [True, True, False, False]
+    assert got.tolist() == _sequential_greedy(early, late, [0, 1, 2, 3]).tolist()
+
+
+def test_greedy_kept_cycle_raises():
+    from rensa_spark.kernels.greedy import greedy_kept
+
+    with pytest.raises(ValueError, match="cycle"):
+        greedy_kept(np.array([0, 1, 2]), np.array([1, 2, 0]), 3)
+    # a cycle behind a kept node is still reported
+    with pytest.raises(ValueError, match="cycle"):
+        greedy_kept(np.array([3, 0, 1, 2]), np.array([0, 1, 2, 1]), 4)

@@ -141,26 +141,6 @@ def test_connected_components_vs_union_find(spark):
     assert connected_components(loops).collect() == []
 
 
-def test_add_if_unique_driver_greedy_matches_loop(spark, corpus):
-    """Round 6: the small-edge-set driver-side greedy must reproduce the
-    distributed frontier loop bit-for-bit (same DAG recursion, different
-    evaluation engines)."""
-    from rensa_spark.operators.dedup import add_if_unique
-
-    df = spark.createDataFrame(corpus[["image_id", "caption"]])
-    greedy = {
-        r["key"]: r["kept"]
-        for r in add_if_unique(df, CFG, "image_id", "caption").collect()
-    }
-    loop = {
-        r["key"]: r["kept"]
-        for r in add_if_unique(
-            df, CFG, "image_id", "caption", driver_max_edges=0
-        ).collect()
-    }
-    assert greedy == loop
-
-
 def test_add_if_unique_matches_sequential_oracle(spark, corpus):
     from rensa_spark.operators.dedup import add_if_unique
 
@@ -193,6 +173,32 @@ def test_add_if_unique_matches_sequential_oracle(spark, corpus):
             kept_idx.append(i)
     mismatches = [k for k in ids if got[k] != want[k]]
     assert not mismatches, f"{len(mismatches)} mismatches: {mismatches[:10]}"
+
+
+def test_add_if_unique_degenerate_groups_match_sequential_oracle(spark):
+    """40 identical captions (one 40-clique of conflict edges), a chain of
+    one-word edits (long, thin components) and unique rows, interleaved in
+    key order, against the same sequential oracle."""
+    import pandas as pd
+
+    rng = random.Random(17)
+    vocab = [f"w{i:03d}" for i in range(400)]
+    words = rng.choices(vocab, k=40)
+    chain = []
+    for _ in range(30):
+        words = list(words)
+        words[rng.randrange(len(words))] = rng.choice(vocab)
+        chain.append(" ".join(words))
+    captions = (
+        ["the same boilerplate caption appears on every one of these rows"] * 40
+        + chain
+        + [" ".join(rng.choices(vocab, k=12)) for _ in range(160)]
+    )
+    rng.shuffle(captions)
+    corpus = pd.DataFrame(
+        {"image_id": [f"img-{i:08d}" for i in range(len(captions))], "caption": captions}
+    )
+    test_add_if_unique_matches_sequential_oracle(spark, corpus)
 
 
 def test_exact_dup_flags(spark, corpus):

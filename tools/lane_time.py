@@ -10,6 +10,8 @@ Usage:
 Lane names match bench.py: every queries() entry plus the synthetic_* lanes
 (reconstructed here with the same seeds/shapes as bench.py so numbers are
 comparable; bench.py itself is never imported or modified).
+``synthetic_aiu_identical_20k`` exists only here: add_if_unique over a
+corpus with one 1,000-member identical-caption group.
 """
 
 from __future__ import annotations
@@ -196,6 +198,23 @@ def synthetic_lanes(spark, cfg):
         return lambda: exact_dup_flags(big_df, "image_id", "caption")
 
     lanes["synthetic_exact_dedup_10kb_20k"] = _exact_10kb
+
+    def _aiu_identical():
+        # add_if_unique over 20k captions, 1,000 of them one identical
+        # caption: a 1,000-member conflict clique (499,500 edges) beside
+        # the corpus' own planted duplicates
+        from rensa_spark.operators.dedup import add_if_unique
+        from rensa_spark.sources.synthetic import generate_corpus
+
+        pdf = generate_corpus(20_000, seed=2024, with_images=False)
+        pdf = pdf[["image_id", "caption"]].copy()
+        same = np.random.default_rng(2024).choice(len(pdf), 1_000, replace=False)
+        pdf.loc[pdf.index[same], "caption"] = "the same boilerplate caption appears everywhere"
+        d = spark.createDataFrame(pdf).repartition(CPUS).cache()
+        d.count()
+        return lambda: add_if_unique(d, cfg, "image_id", "caption")
+
+    lanes["synthetic_aiu_identical_20k"] = _aiu_identical
 
     return lanes
 
