@@ -58,26 +58,6 @@ def dup_flags(df: DataFrame, cfg: RensaConfig, key_col: str, text_col: str) -> D
     )
 
 
-def verified_pairs(
-    sketched: DataFrame,
-    cfg: RensaConfig,
-    key_col: str = "key",
-    capped_metrics="rensa_capped_buckets",
-) -> DataFrame:
-    """Candidate pairs from band co-membership, verified by signature-slot
-    jaccard >= threshold (README.md:100-122 recipe). Input needs `sig` and
-    `bands` columns; the band arrays are exploded into the band-row layout
-    of :func:`verified_pairs_from_band_rows`."""
-    from rensa_spark.operators.lsh import explode_bands
-
-    return verified_pairs_from_band_rows(
-        explode_bands(sketched, key_col),
-        sketched.select(F.col(key_col).alias("key"), "sig"),
-        cfg,
-        capped_metrics=capped_metrics,
-    )
-
-
 def verified_pairs_from_band_rows(
     band_rows: DataFrame,
     sigs: DataFrame,
@@ -85,8 +65,9 @@ def verified_pairs_from_band_rows(
     capped_metrics="rensa_capped_buckets",
     exact_task_cap: int = 8192,
 ) -> DataFrame:
-    """Same, from (key, band_idx, band_hash) rows + a (key, sig) table (band
-    order already positional), in ONE pass over the buckets.
+    """Candidate pairs from band co-membership, verified by signature-slot
+    jaccard >= threshold (README.md:100-122 recipe), from (key, band_idx,
+    band_hash) rows + a (key, sig) table, in ONE pass over the buckets.
 
     Bucket sizes come from a map-side count; each member row of a bucket
     with >= 2 members is joined to its signature once, the rows are
@@ -152,15 +133,17 @@ def _bucket_walk(exact_cap: int, threshold: float):
     return walk
 
 
-def collapse_identical(sketched: DataFrame) -> tuple[DataFrame, DataFrame]:
+def collapse_identical(sketched: DataFrame, order: str) -> tuple[DataFrame, DataFrame]:
     """Identical-signature collapse of (key, sig, ...) rows ->
     (trivial edges (a=rep, b=key), representative rows with the input
     columns).
 
     Rows with IDENTICAL signatures are unconditionally duplicates (equal-slot
-    fraction 1.0 >= any threshold), so each identical-sig group collapses to
-    its min-key representative with trivial (rep, member) edges, and the
-    O(cluster^2) pair expansion runs only over representatives. Exactly
+    fraction 1.0 >= any threshold, and every band shared), so each
+    identical-sig group collapses to one representative, its first member
+    by ``(order, key)``, with trivial (rep, member) edges, and the
+    O(cluster^2) pair expansion runs only over representatives. With
+    ``order="key"`` the representative is the group's min key. Exactly
     component-preserving; on dup-heavy corpora this removes the quadratic
     blowup of exact-duplicate clusters (measured 7.6M -> ~100k verified
     pairs on the 200k benchmark corpus).
@@ -173,7 +156,7 @@ def collapse_identical(sketched: DataFrame) -> tuple[DataFrame, DataFrame]:
     from pyspark.sql import Window
 
     with_rep = sketched.withColumn(
-        "rep", F.min("key").over(Window.partitionBy("sig"))
+        "rep", F.min_by("key", F.struct(order, "key")).over(Window.partitionBy("sig"))
     ).localCheckpoint(eager=False)
     trivial = with_rep.filter(F.col("key") != F.col("rep")).select(
         F.col("rep").alias("a"), F.col("key").alias("b")
@@ -183,16 +166,40 @@ def collapse_identical(sketched: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def dedup_edges(
-    sketched: DataFrame,
+    sigs: DataFrame,
+    band_rows: DataFrame,
     cfg: RensaConfig,
     capped_metrics="rensa_capped_buckets",
 ) -> DataFrame:
-    """Duplicate-graph edges (a, b) for clustering: identical-signature
-    collapse (:func:`collapse_identical`) + verified pairs among
-    representatives."""
-    trivial, reps = collapse_identical(sketched.select("key", "sig", "bands"))
-    rep_pairs = verified_pairs(reps, cfg, capped_metrics=capped_metrics)
+    """Duplicate-graph edges (a, b) from a (key, sig) table and its (key,
+    band_idx, band_hash) rows: identical-signature collapse
+    (:func:`collapse_identical`), verified pairs among the representatives'
+    band rows (:func:`verified_pairs_from_band_rows`), and the trivial
+    (rep, member) edges. The one builder of every MinHash duplicate graph:
+    :func:`dedup_clusters`, :func:`multimodal_dedup_edges` and the
+    pipeline's ``pairs`` stage."""
+    trivial, reps = collapse_identical(sigs.select("key", "sig"), "key")
+    rep_pairs = verified_pairs_from_band_rows(
+        band_rows.join(reps.select("key"), "key", "leftsemi"),
+        reps,
+        cfg,
+        capped_metrics=capped_metrics,
+    )
     return trivial.unionByName(rep_pairs.select("a", "b"))
+
+
+def _sketch_tables(base: DataFrame, cfg: RensaConfig) -> tuple[DataFrame, DataFrame]:
+    """The (key, sig) table and (key, band_idx, band_hash) rows of rows with
+    (key, text) columns, two projections of one fused sketch. The sketch is lazily
+    checkpointed, so the shingle+MinHash UDF runs once per row for both."""
+    from rensa_spark.operators.lsh import explode_bands
+
+    sk = (
+        sketch_rminhash(base, cfg, "key", "text")
+        .select("key", "sig", "bands")
+        .localCheckpoint(eager=False)
+    )
+    return sk.select("key", "sig"), explode_bands(sk, "key")
 
 
 def dedup_clusters(
@@ -201,14 +208,13 @@ def dedup_clusters(
     """(key, cluster_id, is_survivor) — verified-pair connected components
     with min-key survivor selection.
 
-    No sketch persist any more (round 6): dedup_edges consumes the sketch
-    lineage exactly ONCE (its identical-sig window is lazily checkpointed
-    and feeds every downstream branch), so caching the sketch only added a
-    memory-pinning write. The survivor pass reads only the key column from
-    the source again (pruned scan)."""
+    The sketch is lazily checkpointed (:func:`_sketch_tables`) and read
+    twice from there, by the identical-signature collapse and by the band
+    rows; :func:`connected_components` materializes it in the same job as
+    the edges. The survivor pass reads only the key column from the source
+    again (pruned scan)."""
     base = df.select(F.col(key_col).alias("key"), F.col(text_col).alias("text"))
-    sk = sketch_rminhash(base, cfg, "key", "text")
-    edges = dedup_edges(sk, cfg)
+    edges = dedup_edges(*_sketch_tables(base, cfg), cfg)
     clusters = connected_components(edges)  # eager: materializes edges
     return survivors(clusters, base.select("key"))
 
@@ -227,17 +233,9 @@ def multimodal_dedup_clusters(
     - caption near-duplicates: verified MinHash pairs,
     clustered together by connected components; survivor = min key.
     The hot path touches only (key, caption, phash) — never image bytes."""
-    base = df.select(
-        F.col(key_col).alias("key"),
-        F.col(caption_col).alias("text"),
-        F.col(phash_col).alias("phash"),
-    )
-    # no persist (round 6): dedup_edges consumes the sketch exactly once
-    # via its checkpointed identical-sig window
-    sk = sketch_rminhash(base, cfg, "key", "text")
-    edges = multimodal_dedup_edges(df, cfg, key_col, caption_col, phash_col, _sk=sk)
+    edges = multimodal_dedup_edges(df, cfg, key_col, caption_col, phash_col)
     clusters = connected_components(edges)  # eager: materializes edges
-    return survivors(clusters, base.select("key"))
+    return survivors(clusters, df.select(F.col(key_col).alias("key")))
 
 
 def multimodal_dedup_edges(
@@ -246,7 +244,6 @@ def multimodal_dedup_edges(
     key_col: str = "image_id",
     caption_col: str = "caption",
     phash_col: str = "phash",
-    _sk: DataFrame | None = None,
 ) -> DataFrame:
     """The LAZY duplicate-edge set of :func:`multimodal_dedup_clusters`
     (equal-phash ∪ verified caption pairs) — exposed so the plan-shape test
@@ -256,8 +253,7 @@ def multimodal_dedup_edges(
         F.col(caption_col).alias("text"),
         F.col(phash_col).alias("phash"),
     )
-    sk = _sk if _sk is not None else sketch_rminhash(base, cfg, "key", "text")
-    caption_edges = dedup_edges(sk, cfg)
+    caption_edges = dedup_edges(*_sketch_tables(base, cfg), cfg)
     phash_reps = base.groupBy("phash").agg(F.min("key").alias("rep"))
     phash_edges = (
         base.join(phash_reps, "phash")
@@ -292,11 +288,21 @@ def add_if_unique(
     (see its docstring for the round rule). Rows with no conflict edge are
     kept.
 
+    Identical signatures collapse first (:func:`collapse_identical`) to
+    their first member by (order, key), and only these representatives are
+    verified and walked; every other member is a duplicate. This is exact:
+    a member has the same signature and bands as its group's first member,
+    so whatever earlier kept row blocks the first member blocks it too; if
+    the first member is kept, it blocks the member itself; and a row that is
+    never kept blocks no one. (A min-key representative would not do: it
+    can come after a row that the first member blocks.)
+
     Runs Spark jobs when called: only :func:`connected_components`' (its
-    contraction checkpoint, which also materializes the sketch and the
-    conflict edges, plus star rounds when the edges span more than one
-    partition), and with ``use_lsh=False`` the row count of the
-    brute-force guard. The greedy walk itself runs when the result is read.
+    contraction checkpoint, which also materializes the sketch, the
+    collapse and the conflict edges, plus star rounds when the edges span
+    more than one partition), and with ``use_lsh=False`` the row count of
+    the brute-force guard. The greedy walk itself runs when the result is
+    read.
 
     Returns (key, kept boolean).
     """
@@ -306,14 +312,8 @@ def add_if_unique(
         F.col(order_col).alias("ord"),
         F.col(text_col).alias("text"),
     )
-    sk = (
-        sketch_rminhash(base, cfg, "key", "text")
-        .select("key", "sig", "bands")
-        .localCheckpoint(eager=False)
-    )
-    return _greedy_kept(
-        base.select("key", "ord"), sk, cfg, use_lsh, brute_force_max_rows
-    )
+    sk = sketch_rminhash(base, cfg, "key", "text").select("key", "ord", "sig", "bands")
+    return _greedy_kept(base.select("key", "ord"), sk, cfg, use_lsh, brute_force_max_rows)
 
 
 def _greedy_kept(
@@ -323,11 +323,18 @@ def _greedy_kept(
     use_lsh: bool = True,
     brute_force_max_rows: int = 100_000,
 ) -> DataFrame:
-    """:func:`add_if_unique` from (key, ord) rows and their (key, sig,
-    bands) sketch, which the verify reads twice: callers checkpoint it, so
-    the shingle+MinHash UDF runs once."""
+    """:func:`add_if_unique` from (key, ord) rows and their (key, ord, sig,
+    bands) sketch. The identical-signature collapse is the sketch's only
+    reader (its lazy checkpoint feeds the verify and the result), so the
+    shingle+MinHash UDF runs once per row with no checkpoint of its own;
+    the edge orientation and the result read ``base``, which never
+    touches the sketch."""
+    trivial, reps = collapse_identical(sk, "ord")
     if use_lsh:
-        pairs = verified_pairs(sk, cfg)  # a < b by key; re-orient by ord
+        from rensa_spark.operators.lsh import explode_bands
+
+        # a < b by key; re-orient by ord
+        pairs = verified_pairs_from_band_rows(explode_bands(reps, "key"), reps, cfg)
     else:
         # CMinHashDeduplicator semantics: brute-force against ALL kept items
         # (src/inline_dedup/cminhash.rs:165-242 — no LSH index). Cross-join
@@ -344,8 +351,8 @@ def _greedy_kept(
                 f"path) at scale, or raise brute_force_max_rows explicitly."
             )
         jac = jaccard_udf(cfg)
-        left = sk.select(F.col("key").alias("a"), F.col("sig").alias("sig_a"))
-        right = sk.select(F.col("key").alias("b"), F.col("sig").alias("sig_b"))
+        left = reps.select(F.col("key").alias("a"), F.col("sig").alias("sig_a"))
+        right = reps.select(F.col("key").alias("b"), F.col("sig").alias("sig_b"))
         pairs = (
             left.join(right, F.col("a") < F.col("b"))
             .withColumn("sim", jac("sig_a", "sig_b"))
@@ -371,7 +378,9 @@ def _greedy_kept(
         .sortWithinPartitions("comp")
     )
     key_type = base.schema["key"].dataType.simpleString()
-    decided = by_component.mapInPandas(_component_walk, f"key {key_type}, kept boolean")
+    decided = by_component.mapInPandas(
+        _component_walk, f"key {key_type}, kept boolean"
+    ).unionByName(trivial.select(F.col("b").alias("key"), F.lit(False).alias("kept")))
     return (
         base.select("key")
         .join(decided, "key", "left")

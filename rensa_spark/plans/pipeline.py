@@ -20,10 +20,11 @@ The fixed cost per run is kept to the stage writes themselves:
   localCheckpoint, can be rebuilt after an executor loss);
 - lineage row counts come from the written files' parquet footers and are
   appended with no Spark job;
-- pairs come straight from the stage tables (band rows + signatures) after
-  the identical-signature collapse shared with ``dedup_edges``, verified
-  inside each band bucket in one ``mapInPandas`` walk (each member's
-  signature joined once; no candidate pair crosses a shuffle);
+- pairs are ``dedup_edges`` over the stage tables (signatures + band
+  rows), the same builder ``dedup_clusters`` uses: the identical-signature
+  collapse, then the representatives' pairs verified inside each band
+  bucket in one ``mapInPandas`` walk (each member's signature joined once;
+  no candidate pair crosses a shuffle);
 - clusters are one local union-find contraction of the pair table (AQE
   coalesces a small one into a single task, which then labels every
   component with no star round); the manifest metrics record which way it
@@ -249,11 +250,7 @@ class DedupPipeline:
         from pyspark.sql import Observation
 
         from rensa_spark.operators.cc import connected_components, survivors
-        from rensa_spark.operators.dedup import (
-            collapse_identical,
-            sketch_rminhash,
-            verified_pairs_from_band_rows,
-        )
+        from rensa_spark.operators.dedup import dedup_edges, sketch_rminhash
         from rensa_spark.operators.lsh import one_shot_flags_from_bands
 
         src = df.select(F.col(key_col).alias("key"), F.col(text_col).alias("text"))
@@ -293,21 +290,15 @@ class DedupPipeline:
 
         obs = Observation("pipeline_pairs_buckets")
 
-        def _build_pairs():
-            trivial, reps = collapse_identical(sigs)
-            rep_pairs = verified_pairs_from_band_rows(
-                bands.join(reps.select("key"), "key", "leftsemi"),
-                reps,
-                self.cfg,
-                capped_metrics=obs,
-            )
-            return trivial.unionByName(rep_pairs.select("a", "b"))
-
         def _pairs_metrics() -> dict:
             m = dict(obs.get)
             return {k: int(v) if v is not None else 0 for k, v in m.items()}
 
-        pairs = self._run_stage("pairs", _build_pairs, metrics_fn=_pairs_metrics)
+        pairs = self._run_stage(
+            "pairs",
+            lambda: dedup_edges(sigs, bands, self.cfg, capped_metrics=obs),
+            metrics_fn=_pairs_metrics,
+        )
         cc_stats: dict = {}
         clusters = self._run_stage(
             "clusters",

@@ -119,8 +119,8 @@ class StreamingDeduplicator:
         #    from their rows of the batch sketch (no second sketch pass)
         decisions = _greedy_kept(
             survivors_candidates.select("key", F.col("key").alias("ord")),
-            sk.join(survivors_candidates, "key", "leftsemi").localCheckpoint(
-                eager=False
+            sk.join(survivors_candidates, "key", "leftsemi").select(
+                "key", F.col("key").alias("ord"), "sig", "bands"
             ),
             cfg,
         )

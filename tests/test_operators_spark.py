@@ -201,6 +201,80 @@ def test_add_if_unique_degenerate_groups_match_sequential_oracle(spark):
     test_add_if_unique_matches_sequential_oracle(spark, corpus)
 
 
+def _sequential_kept(captions: list[str]) -> list[bool]:
+    """The sequential add-if-unique oracle over captions in add order."""
+    sig = _oracle_sig_matrix(captions, CFG)
+    bands = np.stack(
+        [
+            band_hash_u64(sig[:, i * CFG.band_size : (i + 1) * CFG.band_size])
+            for i in range(CFG.num_bands)
+        ],
+        axis=1,
+    )
+    kept_idx: list[int] = []
+    for i in range(len(captions)):
+        if not any(
+            any(bands[i] == bands[j]) and (sig[i] == sig[j]).mean() >= CFG.threshold
+            for j in kept_idx
+        ):
+            kept_idx.append(i)
+    kept = set(kept_idx)
+    return [i in kept for i in range(len(captions))]
+
+
+def test_add_if_unique_order_col_matches_sequential_oracle(spark):
+    """``order_col`` that reverses key order, over the degenerate corpus:
+    the 40 identical boilerplate captions, blocked as a whole by a
+    near-duplicate placed before all of them; a 20-member identical group
+    with no earlier conflict, whose FIRST member in order (its max key) is
+    the one kept; a one-word-edit chain; unique rows."""
+    import pandas as pd
+
+    from rensa_spark.operators.dedup import add_if_unique
+
+    rng = random.Random(23)
+    vocab = [f"w{i:03d}" for i in range(400)]
+    words = rng.choices(vocab, k=40)
+    chain = []
+    for _ in range(30):
+        words = list(words)
+        words[rng.randrange(len(words))] = rng.choice(vocab)
+        chain.append(" ".join(words))
+    boilerplate = "the same boilerplate caption appears on every one of these rows"
+    repeated = "a second repeated caption that is shared by twenty rows of the table"
+    rest = (
+        [boilerplate] * 40
+        + [repeated] * 20
+        + chain
+        + [" ".join(rng.choices(vocab, k=12)) for _ in range(150)]
+    )
+    rng.shuffle(rest)
+    in_order = [boilerplate + " too"] + rest
+    n = len(in_order)
+    corpus = pd.DataFrame(
+        {
+            "image_id": [f"img-{n - 1 - p:08d}" for p in range(n)],
+            "ord": list(range(n)),
+            "caption": in_order,
+        }
+    )
+    want = dict(zip(corpus["image_id"], _sequential_kept(in_order)))
+    # the corpus does what the docstring says
+    assert want[corpus["image_id"][0]]
+    assert not any(want[k] for k in corpus["image_id"][corpus["caption"] == boilerplate])
+    group = corpus["image_id"][corpus["caption"] == repeated]
+    assert [want[k] for k in group] == [True] + [False] * 19
+    assert not want[min(group)]
+
+    df = spark.createDataFrame(corpus)
+    got = {
+        r["key"]: r["kept"]
+        for r in add_if_unique(df, CFG, "image_id", "caption", order_col="ord").collect()
+    }
+    mismatches = [k for k in want if got[k] != want[k]]
+    assert len(got) == n and not mismatches, f"{len(mismatches)} mismatches: {mismatches[:10]}"
+
+
 def test_exact_dup_flags(spark, corpus):
     from rensa_spark.operators.dedup import exact_dup_flags
 

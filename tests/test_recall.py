@@ -137,7 +137,11 @@ def test_flag_recall_vs_reference_flags(spark, corpus, oracle_state):
 
 
 def test_verified_pairs_match_oracle(spark, corpus, oracle_state):
-    from rensa_spark.operators.dedup import sketch_rminhash, verified_pairs
+    from rensa_spark.operators.dedup import (
+        sketch_rminhash,
+        verified_pairs_from_band_rows,
+    )
+    from rensa_spark.operators.lsh import explode_bands
 
     ids = list(corpus["image_id"])
     sk = sketch_rminhash(
@@ -148,8 +152,9 @@ def test_verified_pairs_match_oracle(spark, corpus, oracle_state):
         "key",
         "caption",
     )
-    got = {
-        (r["a"], r["b"]) for r in verified_pairs(sk, CFG).select("a", "b").collect()
-    }
+    pairs = verified_pairs_from_band_rows(
+        explode_bands(sk, "key"), sk.select("key", "sig"), CFG
+    )
+    got = {(r["a"], r["b"]) for r in pairs.select("a", "b").collect()}
     want = {(ids[i], ids[j]) for i, j in oracle_state["verified"]}
     assert got == want

@@ -10,8 +10,10 @@ Usage:
 Lane names match bench.py: every queries() entry plus the synthetic_* lanes
 (reconstructed here with the same seeds/shapes as bench.py so numbers are
 comparable; bench.py itself is never imported or modified).
-``synthetic_aiu_identical_20k`` exists only here: add_if_unique over a
-corpus with one 1,000-member identical-caption group.
+``synthetic_aiu_identical_20k`` and ``synthetic_stream_identical_4k``
+exist only here: add_if_unique over a corpus with one 1,000-member
+identical-caption group, and two StreamingDeduplicator batches whose first
+holds one 500-member identical-caption group.
 """
 
 from __future__ import annotations
@@ -215,6 +217,44 @@ def synthetic_lanes(spark, cfg):
         return lambda: add_if_unique(d, cfg, "image_id", "caption")
 
     lanes["synthetic_aiu_identical_20k"] = _aiu_identical
+
+    def _stream_identical():
+        # two 2,000-row StreamingDeduplicator batches over 4k captions, 500
+        # rows of the first one identical caption; every trial starts from
+        # a fresh state dir, and the lane reads the decisions table
+        import shutil
+        import tempfile
+
+        from rensa_spark.sources.synthetic import generate_corpus
+        from rensa_spark.streaming.dedup import StreamingDeduplicator
+
+        pdf = generate_corpus(4_000, seed=2024, with_images=False)
+        pdf = pdf[["image_id", "caption"]].rename(columns={"image_id": "key", "caption": "text"})
+        same = np.random.default_rng(2024).choice(2_000, 500, replace=False)
+        pdf.loc[pdf.index[same], "text"] = "the same boilerplate caption appears everywhere"
+        batches = [
+            spark.createDataFrame(pdf.iloc[lo : lo + 2_000]).repartition(CPUS).cache()
+            for lo in (0, 2_000)
+        ]
+        for b in batches:
+            b.count()
+
+        states = []
+
+        def run():
+            # the previous trial's state is no longer read: drop it
+            for old in states:
+                shutil.rmtree(old, ignore_errors=True)
+            state = tempfile.mkdtemp(prefix="rensa_stream_lane_")
+            states[:] = [state]
+            dedup = StreamingDeduplicator(spark, cfg, state)
+            for epoch, batch in enumerate(batches):
+                dedup.process_batch(batch, epoch)
+            return spark.read.parquet(os.path.join(state, "decisions"))
+
+        return run
+
+    lanes["synthetic_stream_identical_4k"] = _stream_identical
 
     return lanes
 
