@@ -16,11 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rensa_spark.config import RensaConfig
-from rensa_spark.functions.udfs import (
-    jaccard_udf,
-    rho_sketch_udf,
-    rminhash_sig_bands_udf,
-)
+from rensa_spark.functions.udfs import rho_sketch_udf, rminhash_sig_bands_udf
 from rensa_spark.operators.cc import connected_components, survivors
 
 
@@ -58,12 +54,16 @@ def dup_flags(df: DataFrame, cfg: RensaConfig, key_col: str, text_col: str) -> D
     )
 
 
+# buckets up to this many members verify every pair in one task
+EXACT_TASK_CAP = 8192
+
+
 def verified_pairs_from_band_rows(
     band_rows: DataFrame,
     sigs: DataFrame,
     cfg: RensaConfig,
     capped_metrics="rensa_capped_buckets",
-    exact_task_cap: int = 8192,
+    exact_task_cap: int = EXACT_TASK_CAP,
 ) -> DataFrame:
     """Candidate pairs from band co-membership, verified by signature-slot
     jaccard >= threshold (README.md:100-122 recipe), from (key, band_idx,
@@ -99,7 +99,11 @@ def verified_pairs_from_band_rows(
         band_rows.select("key", "band_idx", "band_hash")
         .join(sizes.filter(F.col("bucket_size") >= 2), ["band_idx", "band_hash"], "leftsemi")
         .join(sigs.select("key", "sig"), "key")
-        .repartition("band_idx", "band_hash")
+        # on a hash of the bucket, which no input can claim as its
+        # partitioning: AQE drops a repartition its child seems to satisfy,
+        # and a union of separately shuffled band rows (a stream's state and
+        # batch) seems to while its parts sit in different tasks
+        .repartition(F.xxhash64("band_idx", "band_hash"))
         .sortWithinPartitions("band_idx", "band_hash")
     )
     key_type = band_rows.schema["key"].dataType.simpleString()
@@ -297,6 +301,11 @@ def add_if_unique(
     never kept blocks no one. (A min-key representative would not do: it
     can come after a row that the first member blocks.)
 
+    ``use_lsh=False`` is CMinHashDeduplicator's brute force
+    (src/inline_dedup/cminhash.rs:165-242): every representative goes into
+    one bucket whose exact cap is ``brute_force_max_rows``, so every pair is
+    verified; larger inputs raise ``ValueError`` before any verify runs.
+
     Runs Spark jobs when called: only :func:`connected_components`' (its
     contraction checkpoint, which also materializes the sketch, the
     collapse and the conflict edges, plus star rounds when the edges span
@@ -313,12 +322,13 @@ def add_if_unique(
         F.col(text_col).alias("text"),
     )
     sk = sketch_rminhash(base, cfg, "key", "text").select("key", "ord", "sig", "bands")
-    return _greedy_kept(base.select("key", "ord"), sk, cfg, use_lsh, brute_force_max_rows)
+    return _greedy_kept(base.select("key", "ord"), sk, None, cfg, use_lsh, brute_force_max_rows)
 
 
 def _greedy_kept(
     base: DataFrame,
     sk: DataFrame,
+    earlier: tuple[DataFrame, DataFrame] | None,
     cfg: RensaConfig,
     use_lsh: bool = True,
     brute_force_max_rows: int = 100_000,
@@ -328,44 +338,64 @@ def _greedy_kept(
     reader (its lazy checkpoint feeds the verify and the result), so the
     shingle+MinHash UDF runs once per row with no checkpoint of its own;
     the edge orientation and the result read ``base``, which never
-    touches the sketch."""
+    touches the sketch.
+
+    ``earlier``: None, or kept rows ordered before all of ``base`` (a
+    stream's state) as (key, band_idx, band_hash) rows and a (key, sig)
+    table, no key in ``base``. Their band rows join the verify; an edge
+    with one end among them starts there, and pairs with both ends among
+    them are dropped. With no incoming edge they are all kept, so a row of
+    ``base`` is a duplicate exactly when an earlier kept row, from either
+    side, shares a bucket with it and passes the verify. That holds while
+    no bucket, state and batch rows together, has more than
+    ``max(cfg.hot_bucket_cap, EXACT_TASK_CAP)`` members: a larger bucket
+    gets the verify's hub+ring heuristic, which can miss a pair, and is
+    counted in its ``heuristic_buckets`` metric."""
+    from rensa_spark.operators.lsh import explode_bands
+
     trivial, reps = collapse_identical(sk, "ord")
     if use_lsh:
-        from rensa_spark.operators.lsh import explode_bands
-
-        # a < b by key; re-orient by ord
-        pairs = verified_pairs_from_band_rows(explode_bands(reps, "key"), reps, cfg)
+        band_rows, exact_task_cap = explode_bands(reps, "key"), EXACT_TASK_CAP
     else:
-        # CMinHashDeduplicator semantics: brute-force against ALL kept items
-        # (src/inline_dedup/cminhash.rs:165-242 — no LSH index). Cross-join
-        # of signatures; only viable for small kept sets, kept for API
-        # parity. jaccard >= threshold is the only gate. Guarded: the O(n^2)
-        # join must never ship at scale by accident.
+        # the guard must fire before the O(n^2) verify is ever scheduled
         n_rows = base.count()
         if n_rows > brute_force_max_rows:
             raise ValueError(
-                f"add_if_unique(use_lsh=False) is an O(n^2) brute-force "
-                f"cross join (CMinHashDeduplicator API parity); input has "
+                f"add_if_unique(use_lsh=False) verifies every pair "
+                f"(CMinHashDeduplicator API parity); input has "
                 f"{n_rows} rows > brute_force_max_rows="
                 f"{brute_force_max_rows}. Use use_lsh=True (the banded-LSH "
                 f"path) at scale, or raise brute_force_max_rows explicitly."
             )
-        jac = jaccard_udf(cfg)
-        left = reps.select(F.col("key").alias("a"), F.col("sig").alias("sig_a"))
-        right = reps.select(F.col("key").alias("b"), F.col("sig").alias("sig_b"))
-        pairs = (
-            left.join(right, F.col("a") < F.col("b"))
-            .withColumn("sim", jac("sig_a", "sig_b"))
-            .filter(F.col("sim") >= cfg.threshold)
-            .select("a", "b", "sim")
+        band_rows = reps.select(
+            "key", F.lit(0).alias("band_idx"), F.lit(0).cast("long").alias("band_hash")
         )
-    ords = base.select("key", "ord")
+        exact_task_cap = brute_force_max_rows
+    sigs = reps.select("key", "sig")
+    if earlier is not None:
+        band_rows = band_rows.unionByName(earlier[0])
+        sigs = sigs.unionByName(earlier[1])
+    # a < b by key; re-orient by ord, earlier kept rows first
+    pairs = verified_pairs_from_band_rows(band_rows, sigs, cfg, exact_task_cap=exact_task_cap)
+
+    def ends(col):  # an end outside base has a null in_{col}
+        return base.select(
+            F.col("key").alias(col),
+            F.col("ord").alias(f"ord_{col}"),
+            F.lit(True).alias(f"in_{col}"),
+        )
+
+    a_first = F.col("in_a").isNull() | (
+        F.col("in_b").isNotNull() & (F.col("ord_a") <= F.col("ord_b"))
+    )
     edges = (
-        pairs.join(ords.withColumnRenamed("key", "a").withColumnRenamed("ord", "ord_a"), "a")
-        .join(ords.withColumnRenamed("key", "b").withColumnRenamed("ord", "ord_b"), "b")
+        pairs.join(ends("a"), "a", "left")
+        .join(ends("b"), "b", "left")
+        # a pair of two earlier rows goes, so earlier rows stay kept
+        .filter(F.col("in_a").isNotNull() | F.col("in_b").isNotNull())
         .select(
-            F.when(F.col("ord_a") <= F.col("ord_b"), F.col("a")).otherwise(F.col("b")).alias("early"),
-            F.when(F.col("ord_a") <= F.col("ord_b"), F.col("b")).otherwise(F.col("a")).alias("late"),
+            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("early"),
+            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("late"),
         )
     ).localCheckpoint(eager=False)  # read by the labelling and by the walk
     labels = connected_components(edges, "early", "late")

@@ -186,46 +186,37 @@ class LshIndex:
         jaccard-verified queries. Re-insert semantics (remove old first,
         src/lsh/index.rs:145-165) via tombstone + append at one new
         generation — existing row files are never rewritten."""
-        from rensa_spark.functions.udfs import rminhash_sig_udf
-        from rensa_spark.operators.sketch import rminhash_band_rows
+        from rensa_spark.operators.dedup import sketch_rminhash
+        from rensa_spark.operators.lsh import explode_bands
 
         self._require_sigs_consistent()
         base = df.select(F.col(cfg_key).alias("key"), F.col(text_col).alias("text"))
-        new_bands = rminhash_band_rows(base, self.cfg, "key", "text")
-        sig = rminhash_sig_udf(self.cfg)
-        new_sigs = base.select("key", sig(F.col("text")).alias("sig"))
+        # one fused sig+bands pass feeds both writes
+        sk = sketch_rminhash(base, self.cfg, "key", "text").select("key", "sig", "bands").persist()
         existed = self._exists()
         if existed:
             self._migrate_if_legacy()
         g = self._next_gen()
         gen = F.lit(g).cast("long")
-        if existed:
-            # Append ORDER is the crash-safety contract (round-4 advice):
-            # data rows FIRST, tombstone LAST. Rows at gen G are live with
-            # or without the same-gen tombstone (_live keeps gen >= tgen),
-            # so every intermediate crash state merely duplicates the
-            # re-inserted keys (set-valued readers absorb that) — the old
-            # ordering (tombstone first) silently DELETED every existing
-            # row of those keys if the job died before the data appends.
-            # A retried insert self-heals duplicates: it takes gen G+1 and
-            # its tombstone kills all gen < G+1 rows, orphans included.
-            new_bands.withColumn("gen", gen).write.mode("append").parquet(
+        mode = "append" if existed else "overwrite"
+        # crash safety: data rows FIRST, tombstone LAST. Rows at gen G are
+        # live with or without the same-gen tombstone, so a crash between
+        # them only duplicates re-inserted keys, and a retried insert (gen
+        # G+1) tombstones the orphans; tombstone-first lost those keys.
+        try:
+            explode_bands(sk, "key").withColumn("gen", gen).write.mode(mode).parquet(
                 self._path("bands")
             )
-            new_sigs.withColumn("gen", gen).write.mode("append").parquet(
+            sk.select("key", "sig").withColumn("gen", gen).write.mode(mode).parquet(
                 self._path("sigs")
             )
+        finally:
+            sk.unpersist()
+        if existed:
             base.select("key").distinct().withColumn("gen", gen).write.mode(
                 "append"
             ).parquet(self._path("tombs"))
             self._maybe_compact()
-        else:
-            new_bands.withColumn("gen", gen).write.mode("overwrite").parquet(
-                self._path("bands")
-            )
-            new_sigs.withColumn("gen", gen).write.mode("overwrite").parquet(
-                self._path("sigs")
-            )
 
     def clear(self) -> None:
         """Drop all index state (Deduplicator.clear,
@@ -298,25 +289,29 @@ class LshIndex:
         not enough — each candidate's stored signature is checked against
         the query signature with the equal-slot-fraction jaccard."""
         self._require_sigs_consistent()
-        from rensa_spark.functions.udfs import jaccard_udf, rminhash_sig_udf
-        from rensa_spark.operators.sketch import rminhash_band_rows
+        from rensa_spark.functions.udfs import jaccard_udf
+        from rensa_spark.operators.dedup import sketch_rminhash
 
         base = df.select(F.col(key_col).alias("key"), F.col(text_col).alias("text"))
-        qbands = rminhash_band_rows(base, self.cfg, "key", "text")
-        sig = rminhash_sig_udf(self.cfg)
-        qsigs = base.select("key", sig(F.col("text")).alias("qsig"))
+        # band rows carry the query's sig: one sketch for candidates and
+        # verify. A plain explode gets an inferred size(bands) > 0 filter
+        # that runs the UDF twice; every row has num_bands bands
+        qbands = sketch_rminhash(base, self.cfg, "key", "text").select(
+            "key",
+            F.col("sig").alias("qsig"),
+            F.posexplode_outer("bands").alias("band_idx", "band_hash"),
+        )
         cand = (
             qbands.join(
                 self.bands().withColumnRenamed("key", "index_key"),
                 ["band_idx", "band_hash"],
             )
-            .select("key", "index_key")
-            .distinct()
+            .select("key", "index_key", "qsig")
+            .dropDuplicates(["key", "index_key"])
         )
         jac = jaccard_udf(self.cfg)
         verified = (
-            cand.join(qsigs, "key")
-            .join(self.sigs().withColumnRenamed("key", "index_key"), "index_key")
+            cand.join(self.sigs().withColumnRenamed("key", "index_key"), "index_key")
             .withColumn("sim", jac("qsig", "sig"))
             .filter(F.col("sim") >= self.cfg.threshold)
             .groupBy("key")

@@ -9,8 +9,8 @@ tables, checkpointed as parquet (Iceberg on a real deployment), exactly like
 the batch pipeline's stage tables — so the stream can resume.
 
 Use with Structured Streaming via ``foreachBatch`` (micro-batch order stands
-in for the reference's sequential add order; within a batch the emulation is
-the exact batch algorithm from operators.dedup.add_if_unique):
+in for the reference's sequential add order, key order within a batch; each
+batch is decided by ``operators.dedup.add_if_unique``'s walk, state first):
 
     dedup = StreamingDeduplicator(spark, cfg, state_dir)
     stream.writeStream.foreachBatch(dedup.process_batch).start()
@@ -56,82 +56,50 @@ class StreamingDeduplicator:
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """foreachBatch hook: decides kept/dup for the batch, appends the
-        batch's kept rows to state, and appends decisions to `decisions`."""
-        from rensa_spark.functions.udfs import jaccard_udf
+        batch's kept rows to state, and appends decisions to `decisions`.
+
+        The batch is sketched once. A key already in state is a duplicate
+        and blocks no one. The rest go through ``add_if_unique``'s walk
+        (:func:`rensa_spark.operators.dedup._greedy_kept`) with the state's
+        kept rows the batch touches as earlier kept rows: the ``kept_bands``
+        rows in a bucket that holds a batch row (a left-semi join) and
+        ``kept_sigs``, joined by key in the verify."""
         from rensa_spark.operators.dedup import _greedy_kept, sketch_rminhash
+        from rensa_spark.operators.lsh import explode_bands
 
         cfg = self.cfg
         src = batch_df.select(
             F.col(self.key_col).alias("key"), F.col(self.text_col).alias("text")
         ).localCheckpoint(eager=True)
-
-        # ONE fused sketch pass: the separate sig UDF + band-row UDF each
-        # re-ran the full shingle+MinHash per batch row; sig and band
-        # hashes are one computation, and the checkpoint feeds all four
-        # consumers (state probe + within-batch greedy + both state
-        # appends) without re-crossing Python
         sk = (
             sketch_rminhash(src, cfg, "key", "text")
             .select("key", "sig", "bands")
             .localCheckpoint(eager=False)
         )
-        sigs = sk.select("key", "sig")
-        bands = sk.select(
-            "key", F.posexplode("bands").alias("band_idx", "band_hash")
-        )
 
-        # 1) duplicates against the existing kept state (LSH candidates ->
-        #    jaccard verify), matching is_duplicate(key, mh) semantics
+        fresh, fresh_sk, earlier = src, sk, None
         if self._has_state():
             kept_sigs = self.kept()
-            kept_bands = self.spark.read.parquet(self._state_path("kept_bands"))
-            cand = (
-                bands.join(
-                    kept_bands.withColumnRenamed("key", "kept_key"),
-                    ["band_idx", "band_hash"],
-                )
-                .select("key", "kept_key")
-                .distinct()
+            fresh = src.join(kept_sigs, "key", "left_anti")
+            fresh_sk = sk.join(fresh, "key", "leftsemi")
+            touched = self.spark.read.parquet(self._state_path("kept_bands")).join(
+                explode_bands(fresh_sk, "key"), ["band_idx", "band_hash"], "leftsemi"
             )
-            jac = jaccard_udf(cfg)
-            dup_keys_vs_state = (
-                cand.join(sigs, "key")
-                .join(
-                    kept_sigs.withColumnRenamed("key", "kept_key").withColumnRenamed(
-                        "sig", "kept_sig"
-                    ),
-                    "kept_key",
-                )
-                .withColumn("sim", jac("sig", "kept_sig"))
-                .filter(F.col("sim") >= cfg.threshold)
-                .select("key")
-                .distinct()
-            )
-            # keys already present in state are duplicates too
-            existing = src.join(kept_sigs, "key", "leftsemi").select("key")
-            dup_keys_vs_state = dup_keys_vs_state.unionByName(existing).distinct()
-        else:
-            dup_keys_vs_state = src.select("key").limit(0)
-
-        survivors_candidates = src.join(dup_keys_vs_state, "key", "left_anti")
-
-        # 2) within-batch sequential add-if-unique over the remaining rows,
-        #    from their rows of the batch sketch (no second sketch pass)
+            earlier = (touched, kept_sigs)
         decisions = _greedy_kept(
-            survivors_candidates.select("key", F.col("key").alias("ord")),
-            sk.join(survivors_candidates, "key", "leftsemi").select(
-                "key", F.col("key").alias("ord"), "sig", "bands"
-            ),
+            fresh.select("key", F.col("key").alias("ord")),
+            fresh_sk.select("key", F.col("key").alias("ord"), "sig", "bands"),
+            earlier,
             cfg,
         )
         # three writes read the kept keys: one lazy checkpoint runs the
-        # state probe and the component walk once for all of them
+        # decision once for all of them
         kept_new_keys = (
             decisions.filter("kept").select("key").localCheckpoint(eager=False)
         )
 
-        kept_new_sigs = sigs.join(kept_new_keys, "key", "leftsemi")
-        kept_new_bands = bands.join(kept_new_keys, "key", "leftsemi")
+        kept_new_sigs = sk.select("key", "sig").join(kept_new_keys, "key", "leftsemi")
+        kept_new_bands = explode_bands(sk, "key").join(kept_new_keys, "key", "leftsemi")
         kept_new_sigs.write.mode("append").parquet(self._state_path("kept_sigs"))
         kept_new_bands.write.mode("append").parquet(self._state_path("kept_bands"))
 

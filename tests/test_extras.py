@@ -591,20 +591,31 @@ def test_lsh_index_insert_query_remove(spark, tmp_path):
 
 # ------------------------------------------------------------------ streaming
 def test_streaming_dedup_matches_sequential(spark, tmp_path):
+    """Three ordered micro-batches against add_if_unique over the whole
+    ordered input, with an identical ten-row group across the first batch
+    boundary, near-duplicates in the last batch of rows from the first, and
+    a kept key re-sent in the last batch: a duplicate by key, whose text
+    (a near-duplicate of a later row) blocks no one."""
     from rensa_spark.operators.dedup import add_if_unique
     from rensa_spark.streaming.dedup import StreamingDeduplicator
 
     pdf = generate_corpus(300, seed=42, with_images=False)[["image_id", "caption"]]
     pdf = pdf.rename(columns={"image_id": "key", "caption": "text"})
+    pdf["text"] = pdf["text"].astype(object)
+    pdf.loc[95:104, "text"] = "one caption that ten rows share across the first batch boundary"
+    sources = [i for i in range(90) if len(pdf.at[i, "text"].split()) >= 30][:8]
+    near = list(range(260, 260 + len(sources)))
+    for i, j in zip(sources, near):
+        pdf.at[j, "text"] = pdf.at[i, "text"] + " again"
+    resent = pd.DataFrame({"key": [pdf.at[95, "key"]], "text": [pdf.at[290, "text"] + " again"]})
+    batches = [pdf.iloc[0:100], pdf.iloc[100:200], pd.concat([pdf.iloc[200:300], resent])]
 
     dedup = StreamingDeduplicator(spark, CFG, str(tmp_path / "stream"))
-    # feed in three ordered micro-batches
-    for epoch, (lo, hi) in enumerate([(0, 100), (100, 200), (200, 300)]):
-        dedup.process_batch(spark.createDataFrame(pdf.iloc[lo:hi]), epoch)
+    for epoch, batch in enumerate(batches):
+        dedup.process_batch(spark.createDataFrame(batch), epoch)
 
     decisions = spark.read.parquet(str(tmp_path / "stream" / "decisions"))
-    got = {r["key"]: r["kept"] for r in decisions.collect()}
-    assert len(got) == 300
+    got = {(r["epoch"], r["key"]): r["kept"] for r in decisions.collect()}
 
     # oracle: one-shot batch emulation over the full ordered input
     want = {
@@ -613,8 +624,66 @@ def test_streaming_dedup_matches_sequential(spark, tmp_path):
             spark.createDataFrame(pdf), CFG, "key", "text"
         ).collect()
     }
-    mismatches = [k for k in got if got[k] != want[k]]
-    assert not mismatches, mismatches[:10]
+    # the corpus does what the docstring says
+    assert want[pdf.at[95, "key"]] and not any(want[k] for k in pdf["key"][96:105])
+    assert len(sources) == 8 and not any(want[k] for k in pdf["key"][near])
+    assert want[pdf.at[290, "key"]]
+    expected = {
+        (epoch, k): want[k] for epoch, batch in enumerate(batches[:2]) for k in batch["key"]
+    }
+    expected.update({(2, k): want[k] for k in pdf["key"][200:300]})
+    expected[(2, pdf.at[95, "key"])] = False
+    mismatches = [k for k in expected if got.get(k) != expected[k]]
+    assert len(got) == 301 and not mismatches, mismatches[:10]
+
+
+def test_streaming_state_rows_that_conflict_stay_kept(spark, tmp_path):
+    """State that holds two rows which conflict with each other (appended
+    to kept_sigs and kept_bands by hand): each still blocks its own
+    near-duplicate in the batch, which conflicts with no other row. One
+    batch row shares a bucket with both state rows, so their pair is
+    verified in the batch's walk too."""
+    import random
+
+    from test_operators_spark import _band_matrix, _conflicts, _oracle_sig_matrix
+
+    from rensa_spark.operators.dedup import sketch_rminhash
+    from rensa_spark.operators.lsh import explode_bands
+    from rensa_spark.streaming.dedup import StreamingDeduplicator
+
+    # a one-word-edit chain x1 - s1 - s2 - x2: neighbours conflict, nothing
+    # else does, and x1, s1 and s2 share a bucket
+    rng = random.Random(149)
+    vocab = [f"w{i:03d}" for i in range(400)]
+    words = rng.choices(vocab, k=40)
+    chain = []
+    for _ in range(4):
+        chain.append(" ".join(words))
+        words = list(words)
+        words[rng.randrange(len(words))] = rng.choice(vocab)
+    conflict = _conflicts(chain, banded=True)
+    assert conflict[0, 1] and conflict[1, 2] and conflict[2, 3]
+    assert not (conflict[0, 2] or conflict[1, 3] or conflict[0, 3])
+    bands = _band_matrix(_oracle_sig_matrix(chain, CFG))
+    assert ((bands[0] == bands[1]) & (bands[1] == bands[2])).any()
+
+    state = str(tmp_path / "stream")
+    held = spark.createDataFrame([("s1", chain[1]), ("s2", chain[2])], "key string, text string")
+    sk = sketch_rminhash(held, CFG, "key", "text")
+    sk.select("key", "sig").write.mode("append").parquet(f"{state}/kept_sigs")
+    explode_bands(sk, "key").write.mode("append").parquet(f"{state}/kept_bands")
+
+    batch = spark.createDataFrame(
+        [("x1", chain[0]), ("x2", chain[3]), ("x3", "an unrelated caption")],
+        "key string, text string",
+    )
+    StreamingDeduplicator(spark, CFG, state).process_batch(batch, 0)
+    decisions = spark.read.parquet(f"{state}/decisions")
+    assert {r["key"]: r["kept"] for r in decisions.collect()} == {
+        "x1": False,
+        "x2": False,
+        "x3": True,
+    }
 
 
 def test_streaming_batch_is_sketched_once(spark, tmp_path, monkeypatch):
@@ -678,23 +747,24 @@ def test_substring_overlap_pairs(spark):
 
 
 def test_add_if_unique_brute_force_matches_lsh_on_small_input(spark):
+    """use_lsh=False equals the sequential oracle with no band requirement
+    (every earlier kept row is a candidate), and use_lsh=True the banded
+    one."""
+    from test_operators_spark import _sequential_kept
+
     from rensa_spark.operators.dedup import add_if_unique
 
     pdf = generate_corpus(120, seed=42, with_images=False)[["image_id", "caption"]]
+    pdf = pdf.sort_values("image_id")
     df = spark.createDataFrame(pdf)
-    lsh = {
-        r["key"]: r["kept"]
-        for r in add_if_unique(df, CFG, "image_id", "caption", use_lsh=True).collect()
-    }
-    brute = {
-        r["key"]: r["kept"]
-        for r in add_if_unique(df, CFG, "image_id", "caption", use_lsh=False).collect()
-    }
-    # brute force can only find MORE duplicates (LSH misses some candidates);
-    # every brute-kept row must be LSH-kept
-    for k, kept in brute.items():
-        if kept:
-            assert lsh[k], k
+    for use_lsh in (True, False):
+        got = {
+            r["key"]: r["kept"]
+            for r in add_if_unique(df, CFG, "image_id", "caption", use_lsh=use_lsh).collect()
+        }
+        want = dict(zip(pdf["image_id"], _sequential_kept(list(pdf["caption"]), use_lsh)))
+        assert got == want, use_lsh
+        assert not all(want.values())
 
 
 def test_singleton_count_flags_equal_window_flags(spark):
@@ -1168,6 +1238,36 @@ def test_lsh_index_get_duplicates_verified(spark, tmp_path):
     idx.remove(spark.createDataFrame(pd.DataFrame({"key": ["a"]})))
     dups2 = {r["key"]: list(r["duplicates"]) for r in idx.get_duplicates(q).collect()}
     assert dups2["q1"] == ["b"]
+
+
+def test_lsh_index_sketches_each_row_once(spark, tmp_path, monkeypatch):
+    """insert (first and appending) and get_duplicates run the batch sketch
+    kernel once per row: an accumulator counts the rows it sketches, and
+    get_duplicates still finds each query's verified index rows."""
+    from rensa_spark.functions import udfs
+    from rensa_spark.operators import sketch
+    from rensa_spark.operators.lsh_index import LshIndex
+
+    sketched = spark.sparkContext.accumulator(0)
+    kernel = udfs.rminhash_batch
+
+    def counting(col, cfg, *args):
+        sketched.add(len(col))
+        return kernel(col, cfg, *args)
+
+    monkeypatch.setattr(udfs, "rminhash_batch", counting)
+    monkeypatch.setattr(sketch, "rminhash_batch", counting)
+    pdf = generate_corpus(150, seed=3, with_images=False)[["image_id", "caption"]]
+    pdf = pdf.rename(columns={"image_id": "key", "caption": "text"})
+    idx = LshIndex(spark, CFG, str(tmp_path / "lsh_once"), compact_every=0)
+    idx.insert(spark.createDataFrame(pdf.iloc[:100]))
+    assert sketched.value == 100
+    idx.insert(spark.createDataFrame(pdf.iloc[100:]))
+    assert sketched.value == 150
+    q = spark.createDataFrame(pdf.iloc[::5])
+    dups = {r["key"]: r["duplicates"] for r in idx.get_duplicates(q).collect()}
+    assert sketched.value == 180
+    assert len(dups) == 30 and all(k in d for k, d in dups.items())
 
 
 def test_connected_components_fuzz_large(spark):

@@ -201,22 +201,34 @@ def test_add_if_unique_degenerate_groups_match_sequential_oracle(spark):
     test_add_if_unique_matches_sequential_oracle(spark, corpus)
 
 
-def _sequential_kept(captions: list[str]) -> list[bool]:
-    """The sequential add-if-unique oracle over captions in add order."""
-    sig = _oracle_sig_matrix(captions, CFG)
-    bands = np.stack(
+def _band_matrix(sig: np.ndarray) -> np.ndarray:
+    return np.stack(
         [
             band_hash_u64(sig[:, i * CFG.band_size : (i + 1) * CFG.band_size])
             for i in range(CFG.num_bands)
         ],
         axis=1,
     )
+
+
+def _conflicts(captions: list[str], banded: bool) -> np.ndarray:
+    """conflict[i, j]: rows i and j pass the signature verify and, when
+    ``banded``, share a band."""
+    sig = _oracle_sig_matrix(captions, CFG)
+    conflict = (sig[:, None, :] == sig[None, :, :]).mean(axis=2) >= CFG.threshold
+    if banded:
+        bands = _band_matrix(sig)
+        conflict &= (bands[:, None, :] == bands[None, :, :]).any(axis=2)
+    return conflict
+
+
+def _sequential_kept(captions: list[str], banded: bool) -> list[bool]:
+    """The sequential add-if-unique oracle over captions in add order; with
+    ``banded=False`` every earlier kept row is a candidate (brute force)."""
+    conflict = _conflicts(captions, banded)
     kept_idx: list[int] = []
     for i in range(len(captions)):
-        if not any(
-            any(bands[i] == bands[j]) and (sig[i] == sig[j]).mean() >= CFG.threshold
-            for j in kept_idx
-        ):
+        if not conflict[i, kept_idx].any():
             kept_idx.append(i)
     kept = set(kept_idx)
     return [i in kept for i in range(len(captions))]
@@ -258,7 +270,7 @@ def test_add_if_unique_order_col_matches_sequential_oracle(spark):
             "caption": in_order,
         }
     )
-    want = dict(zip(corpus["image_id"], _sequential_kept(in_order)))
+    want = dict(zip(corpus["image_id"], _sequential_kept(in_order, banded=True)))
     # the corpus does what the docstring says
     assert want[corpus["image_id"][0]]
     assert not any(want[k] for k in corpus["image_id"][corpus["caption"] == boilerplate])

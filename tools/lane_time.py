@@ -4,6 +4,7 @@ isolate with the noop sink, capture explain("formatted")).
 
 Usage:
   python tools/lane_time.py lane [lane ...]          # best-of-N noop timing
+                                                     # and Spark jobs per trial
   python tools/lane_time.py --explain OUTDIR lane..  # write <lane>.txt plans
   env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, BENCH_TRIALS (default 3)
 
@@ -322,18 +323,24 @@ def main() -> None:
                 f.write(plan)
             print(f"wrote {path}")
             continue
-        best, samples = float("inf"), []
-        spark.sparkContext.setJobDescription(f"lane: {name}")
-        for _ in range(TRIALS):
+        best, samples, jobs = float("inf"), [], []
+        sc = spark.sparkContext
+        for trial in range(TRIALS):
+            # one job group per trial: the status tracker lists its jobs
+            # without running one
+            group = f"lane {name} trial {trial}"
+            sc.setJobGroup(group, f"lane: {name}")
             t0 = time.perf_counter()
             mk().write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             samples.append(round(dt, 3))
             best = min(best, dt)
-        spark.sparkContext.setJobDescription(None)
-        results[name] = {"best": round(best, 3), "samples": samples,
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+        results[name] = {"best": round(best, 3), "samples": samples, "jobs": jobs,
                          "load": round(os.getloadavg()[0], 2)}
-        print(f"{name}: best={best:.3f} samples={samples}")
+        print(f"{name}: best={best:.3f} samples={samples} jobs={jobs}")
     spark.stop()
     print(json.dumps(results))
 
