@@ -170,40 +170,24 @@ def collapse_identical(sketched: DataFrame, order: str) -> tuple[DataFrame, Data
 
 
 def dedup_edges(
-    sigs: DataFrame,
-    band_rows: DataFrame,
-    cfg: RensaConfig,
-    capped_metrics="rensa_capped_buckets",
+    sk: DataFrame, cfg: RensaConfig, capped_metrics="rensa_capped_buckets"
 ) -> DataFrame:
-    """Duplicate-graph edges (a, b) from a (key, sig) table and its (key,
-    band_idx, band_hash) rows: identical-signature collapse
-    (:func:`collapse_identical`), verified pairs among the representatives'
-    band rows (:func:`verified_pairs_from_band_rows`), and the trivial
-    (rep, member) edges. The one builder of every MinHash duplicate graph:
+    """Duplicate-graph edges (a, b) from a (key, sig, bands) sketch:
+    identical-signature collapse (:func:`collapse_identical`), verified
+    pairs among the representatives' own exploded bands
+    (:func:`verified_pairs_from_band_rows`), and the trivial (rep, member)
+    edges. The collapse's lazy checkpoint is the sketch's only reader, so
+    the shingle+MinHash UDF runs once per row with no checkpoint of its
+    own. The one builder of every MinHash duplicate graph:
     :func:`dedup_clusters`, :func:`multimodal_dedup_edges` and the
     pipeline's ``pairs`` stage."""
-    trivial, reps = collapse_identical(sigs.select("key", "sig"), "key")
-    rep_pairs = verified_pairs_from_band_rows(
-        band_rows.join(reps.select("key"), "key", "leftsemi"),
-        reps,
-        cfg,
-        capped_metrics=capped_metrics,
-    )
-    return trivial.unionByName(rep_pairs.select("a", "b"))
-
-
-def _sketch_tables(base: DataFrame, cfg: RensaConfig) -> tuple[DataFrame, DataFrame]:
-    """The (key, sig) table and (key, band_idx, band_hash) rows of rows with
-    (key, text) columns, two projections of one fused sketch. The sketch is lazily
-    checkpointed, so the shingle+MinHash UDF runs once per row for both."""
     from rensa_spark.operators.lsh import explode_bands
 
-    sk = (
-        sketch_rminhash(base, cfg, "key", "text")
-        .select("key", "sig", "bands")
-        .localCheckpoint(eager=False)
+    trivial, reps = collapse_identical(sk.select("key", "sig", "bands"), "key")
+    rep_pairs = verified_pairs_from_band_rows(
+        explode_bands(reps, "key"), reps, cfg, capped_metrics=capped_metrics
     )
-    return sk.select("key", "sig"), explode_bands(sk, "key")
+    return trivial.unionByName(rep_pairs.select("a", "b"))
 
 
 def dedup_clusters(
@@ -212,13 +196,13 @@ def dedup_clusters(
     """(key, cluster_id, is_survivor) — verified-pair connected components
     with min-key survivor selection.
 
-    The sketch is lazily checkpointed (:func:`_sketch_tables`) and read
-    twice from there, by the identical-signature collapse and by the band
-    rows; :func:`connected_components` materializes it in the same job as
-    the edges. The survivor pass reads only the key column from the source
-    again (pruned scan)."""
+    The sketch is read once, by :func:`dedup_edges`' identical-signature
+    collapse. Under AQE its lazy checkpoint runs the sketch and the
+    collapse's shuffle as soon as it is built; :func:`connected_components`
+    computes the rest in the same job as the edges. The survivor pass reads
+    only the key column from the source again (pruned scan)."""
     base = df.select(F.col(key_col).alias("key"), F.col(text_col).alias("text"))
-    edges = dedup_edges(*_sketch_tables(base, cfg), cfg)
+    edges = dedup_edges(sketch_rminhash(base, cfg, "key", "text"), cfg)
     clusters = connected_components(edges)  # eager: materializes edges
     return survivors(clusters, base.select("key"))
 
@@ -257,7 +241,7 @@ def multimodal_dedup_edges(
         F.col(caption_col).alias("text"),
         F.col(phash_col).alias("phash"),
     )
-    caption_edges = dedup_edges(*_sketch_tables(base, cfg), cfg)
+    caption_edges = dedup_edges(sketch_rminhash(base, cfg, "key", "text"), cfg)
     phash_reps = base.groupBy("phash").agg(F.min("key").alias("rep"))
     phash_edges = (
         base.join(phash_reps, "phash")
@@ -349,8 +333,9 @@ def _greedy_kept(
     side, shares a bucket with it and passes the verify. That holds while
     no bucket, state and batch rows together, has more than
     ``max(cfg.hot_bucket_cap, EXACT_TASK_CAP)`` members: a larger bucket
-    gets the verify's hub+ring heuristic, which can miss a pair, and is
-    counted in its ``heuristic_buckets`` metric."""
+    gets the verify's hub+ring heuristic, which can miss a pair. The
+    verify here observes no bucket metrics (``capped_metrics=None``):
+    nothing reads them, so no metric counts such buckets."""
     from rensa_spark.operators.lsh import explode_bands
 
     trivial, reps = collapse_identical(sk, "ord")
@@ -376,7 +361,9 @@ def _greedy_kept(
         band_rows = band_rows.unionByName(earlier[0])
         sigs = sigs.unionByName(earlier[1])
     # a < b by key; re-orient by ord, earlier kept rows first
-    pairs = verified_pairs_from_band_rows(band_rows, sigs, cfg, exact_task_cap=exact_task_cap)
+    pairs = verified_pairs_from_band_rows(
+        band_rows, sigs, cfg, capped_metrics=None, exact_task_cap=exact_task_cap
+    )
 
     def ends(col):  # an end outside base has a null in_{col}
         return base.select(

@@ -15,16 +15,20 @@ stage).
 The fixed cost per run is kept to the stage writes themselves:
 
 - the text is sketched ONCE: the fused sig+bands UDF result is persisted,
-  ``signatures`` writes its (key, sig) columns and ``bands`` a JVM
-  posexplode of its band array, then it is unpersisted (a persist, unlike a
-  localCheckpoint, can be rebuilt after an executor loss);
+  ``signatures`` writes its (key, sig) columns, ``bands`` a JVM posexplode
+  of its band array and ``pairs`` reads it whole, then it is unpersisted (a
+  persist, unlike a localCheckpoint, can be rebuilt after an executor
+  loss);
 - lineage row counts come from the written files' parquet footers and are
   appended with no Spark job;
-- pairs are ``dedup_edges`` over the stage tables (signatures + band
-  rows), the same builder ``dedup_clusters`` uses: the identical-signature
-  collapse, then the representatives' pairs verified inside each band
-  bucket in one ``mapInPandas`` walk (each member's signature joined once;
-  no candidate pair crosses a shuffle);
+- pairs are ``dedup_edges`` over the same persisted sketch, the builder
+  ``dedup_clusters`` uses: the identical-signature collapse, then the
+  representatives' own bands exploded and their pairs verified inside each
+  band bucket in one ``mapInPandas`` walk (each member's signature joined
+  once; no candidate pair crosses a shuffle). The ``signatures`` and
+  ``bands`` tables feed ``flags``, ``survivors`` and resume; a resumed run
+  whose ``pairs`` stage is not done sketches the text once more, as
+  ``bands`` does after a resume past ``signatures`` alone;
 - clusters are one local union-find contraction of the pair table (AQE
   coalesces a small one into a single task, which then labels every
   component with no star round); the manifest metrics record which way it
@@ -257,8 +261,8 @@ class DedupPipeline:
         sketch: list[DataFrame] = []
 
         def sketched() -> DataFrame:
-            # built on first use, so a resumed run whose `signatures` stage
-            # is skipped still rebuilds `bands` from the same fused UDF
+            # built on first use, so a resumed run rebuilds `bands` and
+            # `pairs` from the same fused UDF, whichever stages it skips
             if not sketch:
                 sketch.append(
                     sketch_rminhash(src, self.cfg, "key", "text")
@@ -266,6 +270,12 @@ class DedupPipeline:
                     .persist()
                 )
             return sketch[0]
+
+        obs = Observation("pipeline_pairs_buckets")
+
+        def _pairs_metrics() -> dict:
+            m = dict(obs.get)
+            return {k: int(v) if v is not None else 0 for k, v in m.items()}
 
         try:
             sigs = self._run_stage(
@@ -277,28 +287,21 @@ class DedupPipeline:
                     "key", F.posexplode("bands").alias("band_idx", "band_hash")
                 ),
             )
+            self._run_stage(
+                "flags",
+                lambda: one_shot_flags_from_bands(
+                    bands,
+                    keys=sigs.select("key", F.lit(self.cfg.num_bands).alias("n_bands")),
+                ),
+            )
+            pairs = self._run_stage(
+                "pairs",
+                lambda: dedup_edges(sketched(), self.cfg, capped_metrics=obs),
+                metrics_fn=_pairs_metrics,
+            )
         finally:
             if sketch:
                 sketch[0].unpersist()
-        self._run_stage(
-            "flags",
-            lambda: one_shot_flags_from_bands(
-                bands,
-                keys=sigs.select("key", F.lit(self.cfg.num_bands).alias("n_bands")),
-            ),
-        )
-
-        obs = Observation("pipeline_pairs_buckets")
-
-        def _pairs_metrics() -> dict:
-            m = dict(obs.get)
-            return {k: int(v) if v is not None else 0 for k, v in m.items()}
-
-        pairs = self._run_stage(
-            "pairs",
-            lambda: dedup_edges(sigs, bands, self.cfg, capped_metrics=obs),
-            metrics_fn=_pairs_metrics,
-        )
         cc_stats: dict = {}
         clusters = self._run_stage(
             "clusters",

@@ -120,15 +120,15 @@ def test_pairs_stage_records_bucket_metrics(spark, corpus_df, tmp_path):
 
 
 # Jobs a fresh run of the pipeline takes on ``corpus_df`` (local[4], 8
-# shuffle partitions): signatures 1, bands 1, flags 3, pairs 8, clusters 3
+# shuffle partitions): signatures 1, bands 1, flags 3, pairs 7, clusters 3
 # (the contraction's shuffle map, the contraction, the write), survivors 2.
 # Pairs is one job per AQE query stage: the identical-signature window, the
-# representative-key broadcast, the bucket-size count, its broadcast, the
-# signature broadcast, the bucket repartition, the distinct, the write.
+# bucket-size count, its broadcast, the signature broadcast, the bucket
+# repartition, the distinct, the write.
 # The pipeline before the single sketch pass, footer lineage and band-row
 # pairs took 81.
-FRESH_RUN_JOBS = 18
-PAIRS_JOBS = 8
+FRESH_RUN_JOBS = 17
+PAIRS_JOBS = 7
 
 
 def test_fresh_run_job_count_halved(spark, corpus_df, tmp_path):
@@ -215,10 +215,11 @@ def _union_find_clusters(texts, cfg):
 
 
 def test_pipeline_matches_dedup_clusters_and_union_find(spark, tmp_path):
-    """The pipeline's pairs come from the band-row tables, the array path
-    (dedup_clusters) from per-row band arrays: both must give the clusters
-    of a union-find over all exact verified pairs, on a corpus where the
-    identical-signature collapse and long chains both matter."""
+    """The pipeline's pairs stage and dedup_clusters both build their
+    duplicate graph with dedup_edges, the pipeline from its persisted
+    sketch: both must give the clusters of a union-find over all exact
+    verified pairs, on a corpus where the identical-signature collapse and
+    long chains both matter."""
     from rensa_spark.operators.dedup import dedup_clusters
     from rensa_spark.plans.pipeline import DedupPipeline
 
@@ -243,6 +244,40 @@ def test_pipeline_matches_dedup_clusters_and_union_find(spark, tmp_path):
     pipe = DedupPipeline(spark, CFG, str(tmp_path / "ckpt_uf"))
     assert rows(pipe.run(df, "key", "text")) == expected
     assert rows(dedup_clusters(df, CFG, "key", "text")) == expected
+
+
+def test_each_row_is_sketched_once(spark, tmp_path, monkeypatch):
+    """dedup_clusters, multimodal_dedup_clusters and a fresh pipeline run
+    each run the batch sketch kernel once per input row: the identical-
+    signature collapse's lazy checkpoint (in the pipeline, its persisted
+    sketch) is the only reader of the sketch. An accumulator counts the
+    rows the kernel sketches."""
+    from rensa_spark.functions import udfs
+    from rensa_spark.operators import sketch
+    from rensa_spark.operators.dedup import dedup_clusters, multimodal_dedup_clusters
+    from rensa_spark.plans.pipeline import DedupPipeline
+
+    sketched = spark.sparkContext.accumulator(0)
+    kernel = udfs.rminhash_batch
+
+    def counting(col, cfg, *args):
+        sketched.add(len(col))
+        return kernel(col, cfg, *args)
+
+    monkeypatch.setattr(udfs, "rminhash_batch", counting)
+    monkeypatch.setattr(sketch, "rminhash_batch", counting)
+    pdf = generate_corpus(300, seed=42, with_images=True)
+    df = spark.createDataFrame(pdf[["image_id", "caption", "phash"]])
+
+    def rows_sketched(out):
+        before = sketched.value
+        out().collect()
+        return sketched.value - before
+
+    assert rows_sketched(lambda: dedup_clusters(df, CFG, "image_id", "caption")) == 300
+    assert rows_sketched(lambda: multimodal_dedup_clusters(df, CFG)) == 300
+    pipe = DedupPipeline(spark, CFG, str(tmp_path / "ckpt_once"))
+    assert rows_sketched(lambda: pipe.run(df, "image_id", "caption")) == 300
 
 
 def _survivor_rows(spark, base):
