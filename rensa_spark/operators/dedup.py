@@ -12,6 +12,8 @@ all three are implemented here:
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -67,18 +69,10 @@ def verified_pairs_from_band_rows(
 ) -> DataFrame:
     """Candidate pairs from band co-membership, verified by signature-slot
     jaccard >= threshold (README.md:100-122 recipe), from (key, band_idx,
-    band_hash) rows + a (key, sig) table, in ONE pass over the buckets.
-
-    Bucket sizes come from a map-side count; each member row of a bucket
-    with >= 2 members is joined to its signature once, the rows are
-    hash-partitioned by (band_idx, band_hash) and sorted within partitions,
-    and one ``mapInPandas`` walk hands every bucket to the numpy kernel
-    :func:`rensa_spark.kernels.bucket_verify.verify_bucket_pairs`, which
-    emits (a < b, sim) for pairs with sim >= threshold. A signature thus
-    travels once per member band row — never twice per candidate pair, and
-    never as a whole signature table per pair join — and no candidate pair
-    crosses a shuffle. A task holds at most one bucket plus one Arrow
-    batch (``kernels/runs.complete_runs``).
+    band_hash) rows + a (key, sig) table, as (a < b, sim) rows, in ONE walk
+    over the buckets (:func:`rensa_spark.operators.lsh.verified_bucket_pairs`):
+    a signature travels once per member band row — never twice per
+    candidate pair — and no candidate pair crosses a shuffle.
 
     Buckets with <= ``max(cfg.hot_bucket_cap, exact_task_cap)`` members
     verify every pair (exact). Larger buckets verify hub edges plus a ring
@@ -91,50 +85,12 @@ def verified_pairs_from_band_rows(
     exact_task_cap)``, the only regime with approximate results) and
     ``max_bucket_size``; a name, a ``pyspark.sql.Observation`` or None, as
     for :func:`rensa_spark.operators.lsh.bucket_sizes`."""
-    from rensa_spark.operators.lsh import bucket_sizes
+    from rensa_spark.operators.lsh import verified_bucket_pairs
 
     exact_cap = max(cfg.hot_bucket_cap, exact_task_cap)
-    sizes = bucket_sizes(band_rows, cfg.hot_bucket_cap, exact_cap, capped_metrics)
-    members = (
-        band_rows.select("key", "band_idx", "band_hash")
-        .join(sizes.filter(F.col("bucket_size") >= 2), ["band_idx", "band_hash"], "leftsemi")
-        .join(sigs.select("key", "sig"), "key")
-        # on a hash of the bucket, which no input can claim as its
-        # partitioning: AQE drops a repartition its child seems to satisfy,
-        # and a union of separately shuffled band rows (a stream's state and
-        # batch) seems to while its parts sit in different tasks
-        .repartition(F.xxhash64("band_idx", "band_hash"))
-        .sortWithinPartitions("band_idx", "band_hash")
+    return verified_bucket_pairs(
+        band_rows, sigs, cfg.hot_bucket_cap, exact_cap, cfg.threshold, capped_metrics
     )
-    key_type = band_rows.schema["key"].dataType.simpleString()
-    return members.mapInPandas(
-        _bucket_walk(exact_cap, cfg.threshold), f"a {key_type}, b {key_type}, sim double"
-    ).distinct()
-
-
-def _bucket_walk(exact_cap: int, threshold: float):
-    """mapInPandas body over (key, band_idx, band_hash, sig) rows sorted so
-    that every bucket is one contiguous run of a partition."""
-
-    def walk(batches):
-        import numpy as np
-        import pandas as pd
-
-        from rensa_spark.kernels.bucket_verify import verify_bucket_pairs
-        from rensa_spark.kernels.runs import complete_runs
-
-        def arrays_of(pdf):
-            bucket = np.stack(
-                [pdf["band_idx"].to_numpy(np.int64), pdf["band_hash"].to_numpy(np.int64)],
-                axis=1,
-            )
-            return bucket, pdf["key"].to_numpy(), np.stack(pdf["sig"].to_numpy())
-
-        for (keys, sig), bounds in complete_runs(batches, arrays_of):
-            i, j, sim = verify_bucket_pairs(sig, keys, bounds, exact_cap, threshold)
-            yield pd.DataFrame({"a": keys[i], "b": keys[j], "sim": sim})
-
-    return walk
 
 
 def collapse_identical(sketched: DataFrame, order: str) -> tuple[DataFrame, DataFrame]:
@@ -156,16 +112,28 @@ def collapse_identical(sketched: DataFrame, order: str) -> tuple[DataFrame, Data
     (round 6): the former groupBy(sig) + join-back-on-sig shuffled the
     128-slot signature twice; min-over-partition needs a single exchange.
     The lazy checkpoint feeds both consumers (trivial edges + rep rows)
-    without re-running the shuffle."""
+    without re-running the shuffle. It is lazy only in name under AQE:
+    building it runs the sketch and the window's shuffle-map stage as one
+    Spark job at once; the window itself runs in the first job that reads
+    the checkpoint.
+
+    Both results hold the checkpointed plan (``_pin``; callers that build
+    on them pass it on): the first readers of the checkpoint run its
+    lineage, whose SQL metrics belong to that plan and are registered
+    weakly, so once one reader's job had checkpointed the rows and the
+    plan was freed, a concurrent reader's task would report to freed
+    metrics (``non-existent accumulator`` ERROR lines)."""
     from pyspark.sql import Window
 
-    with_rep = sketched.withColumn(
+    pre = sketched.withColumn(
         "rep", F.min_by("key", F.struct(order, "key")).over(Window.partitionBy("sig"))
-    ).localCheckpoint(eager=False)
+    )
+    with_rep = pre.localCheckpoint(eager=False)
     trivial = with_rep.filter(F.col("key") != F.col("rep")).select(
         F.col("rep").alias("a"), F.col("key").alias("b")
     )
     reps = with_rep.filter(F.col("key") == F.col("rep")).drop("rep")
+    trivial._pin = reps._pin = pre
     return trivial, reps
 
 
@@ -178,16 +146,19 @@ def dedup_edges(
     (:func:`verified_pairs_from_band_rows`), and the trivial (rep, member)
     edges. The collapse's lazy checkpoint is the sketch's only reader, so
     the shingle+MinHash UDF runs once per row with no checkpoint of its
-    own. The one builder of every MinHash duplicate graph:
-    :func:`dedup_clusters`, :func:`multimodal_dedup_edges` and the
-    pipeline's ``pairs`` stage."""
+    own; building it runs one Spark job under AQE (see
+    :func:`collapse_identical`), and the result holds its plan. Every
+    MinHash duplicate graph comes from here: :func:`dedup_clusters`,
+    :func:`multimodal_dedup_edges` and the pipeline's ``pairs`` stage."""
     from rensa_spark.operators.lsh import explode_bands
 
     trivial, reps = collapse_identical(sk.select("key", "sig", "bands"), "key")
     rep_pairs = verified_pairs_from_band_rows(
         explode_bands(reps, "key"), reps, cfg, capped_metrics=capped_metrics
     )
-    return trivial.unionByName(rep_pairs.select("a", "b"))
+    edges = trivial.unionByName(rep_pairs.select("a", "b"))
+    edges._pin = reps._pin
+    return edges
 
 
 def dedup_clusters(
@@ -197,10 +168,11 @@ def dedup_clusters(
     with min-key survivor selection.
 
     The sketch is read once, by :func:`dedup_edges`' identical-signature
-    collapse. Under AQE its lazy checkpoint runs the sketch and the
-    collapse's shuffle as soon as it is built; :func:`connected_components`
-    computes the rest in the same job as the edges. The survivor pass reads
-    only the key column from the source again (pruned scan)."""
+    collapse. Runs Spark jobs when called: under AQE the collapse's lazy
+    checkpoint runs the sketch and the collapse's shuffle as soon as it is
+    built, and :func:`connected_components` runs the rest of the edges and
+    labels them. The survivor pass reads only the key column from the
+    source again (pruned scan)."""
     base = df.select(F.col(key_col).alias("key"), F.col(text_col).alias("text"))
     edges = dedup_edges(sketch_rminhash(base, cfg, "key", "text"), cfg)
     clusters = connected_components(edges)  # eager: materializes edges
@@ -233,9 +205,12 @@ def multimodal_dedup_edges(
     caption_col: str = "caption",
     phash_col: str = "phash",
 ) -> DataFrame:
-    """The LAZY duplicate-edge set of :func:`multimodal_dedup_clusters`
-    (equal-phash ∪ verified caption pairs) — exposed so the plan-shape test
-    can assert the hot path never scans image bytes on the un-executed plan."""
+    """The duplicate-edge set of :func:`multimodal_dedup_clusters`
+    (equal-phash ∪ verified caption pairs), exposed so the plan-shape test
+    can assert the hot path never scans image bytes. Not lazy: building it
+    runs the caption collapse's Spark job (:func:`dedup_edges`), so the
+    returned plan reads the captions from that checkpoint and shows only
+    the phash side's scans unexecuted."""
     base = df.select(
         F.col(key_col).alias("key"),
         F.col(caption_col).alias("text"),
@@ -248,7 +223,9 @@ def multimodal_dedup_edges(
         .filter(F.col("key") != F.col("rep"))
         .select(F.col("rep").alias("a"), F.col("key").alias("b"))
     )
-    return caption_edges.unionByName(phash_edges)
+    edges = caption_edges.unionByName(phash_edges)
+    edges._pin = caption_edges._pin
+    return edges
 
 
 def add_if_unique(
@@ -270,11 +247,11 @@ def add_if_unique(
     co-membership with an earlier kept row. kept(i) is therefore the
     lexicographically-greedy maximal independent set of the DAG of verified
     conflict edges (j -> i for j earlier). The edges are labelled with
-    their connected component and sorted so that each component is one
-    run of a partition; one ``mapInPandas`` walk decides every component
-    whole with the numpy kernel :func:`rensa_spark.kernels.greedy.greedy_kept`
-    (see its docstring for the round rule). Rows with no conflict edge are
-    kept.
+    their connected component, and the sorted-run walk
+    (:func:`rensa_spark.operators.lsh.sorted_run_walk`, grouped by
+    component) decides every component whole with the numpy kernel
+    :func:`rensa_spark.kernels.greedy.greedy_kept` (see its docstring for
+    the round rule). Rows with no conflict edge are kept.
 
     Identical signatures collapse first (:func:`collapse_identical`) to
     their first member by (order, key), and only these representatives are
@@ -290,12 +267,14 @@ def add_if_unique(
     one bucket whose exact cap is ``brute_force_max_rows``, so every pair is
     verified; larger inputs raise ``ValueError`` before any verify runs.
 
-    Runs Spark jobs when called: only :func:`connected_components`' (its
-    contraction checkpoint, which also materializes the sketch, the
-    collapse and the conflict edges, plus star rounds when the edges span
-    more than one partition), and with ``use_lsh=False`` the row count of
-    the brute-force guard. The greedy walk itself runs when the result is
-    read.
+    Runs Spark jobs when called. Under AQE the two lazy checkpoints run
+    every shuffle stage under them as soon as they are built: the
+    collapse's (the sketch and the collapse's shuffle) and the conflict
+    edges' (the verify and its walk); then :func:`connected_components`
+    runs its contraction (plus star rounds when the edges span more than
+    one partition), and with ``use_lsh=False`` the row count of the
+    brute-force guard runs first. The greedy walk itself runs when the
+    result is read.
 
     Returns (key, kept boolean).
     """
@@ -336,7 +315,8 @@ def _greedy_kept(
     gets the verify's hub+ring heuristic, which can miss a pair. The
     verify here observes no bucket metrics (``capped_metrics=None``):
     nothing reads them, so no metric counts such buckets."""
-    from rensa_spark.operators.lsh import explode_bands
+    from rensa_spark.kernels.greedy import greedy_kept
+    from rensa_spark.operators.lsh import explode_bands, sorted_run_walk
 
     trivial, reps = collapse_identical(sk, "ord")
     if use_lsh:
@@ -388,41 +368,29 @@ def _greedy_kept(
     labels = connected_components(edges, "early", "late")
     # component minima are not labelled: an unlabelled early end is its
     # component's minimum, so it names the component itself
-    by_component = (
-        edges.join(labels.withColumnRenamed("key", "early"), "early", "left")
-        .select(F.coalesce("cluster_id", "early").alias("comp"), "early", "late")
-        .repartition("comp")
-        .sortWithinPartitions("comp")
-    )
+    by_component = edges.join(
+        labels.withColumnRenamed("key", "early"), "early", "left"
+    ).select(F.coalesce("cluster_id", "early").alias("comp"), "early", "late")
+
+    def decide(early, late, bounds):
+        # components share no node: one call decides every whole component
+        nodes, idx = np.unique(np.concatenate([early, late]), return_inverse=True)
+        kept = greedy_kept(idx[: len(early)], idx[len(early) :], len(nodes))
+        return pd.DataFrame({"key": nodes, "kept": kept})
+
     key_type = base.schema["key"].dataType.simpleString()
-    decided = by_component.mapInPandas(
-        _component_walk, f"key {key_type}, kept boolean"
+    decided = sorted_run_walk(
+        by_component,
+        ["comp"],
+        lambda pdf: (pdf["early"].to_numpy(), pdf["late"].to_numpy()),
+        decide,
+        f"key {key_type}, kept boolean",
     ).unionByName(trivial.select(F.col("b").alias("key"), F.lit(False).alias("kept")))
     return (
         base.select("key")
         .join(decided, "key", "left")
         .select("key", F.coalesce("kept", F.lit(True)).alias("kept"))
     )
-
-
-def _component_walk(batches):
-    """mapInPandas body over (comp, early, late) edges sorted so that every
-    conflict component is one contiguous run of a partition. Components
-    share no node, so one :func:`rensa_spark.kernels.greedy.greedy_kept`
-    call decides all the whole components ``complete_runs`` hands over."""
-    import numpy as np
-    import pandas as pd
-
-    from rensa_spark.kernels.greedy import greedy_kept
-    from rensa_spark.kernels.runs import complete_runs
-
-    def arrays_of(pdf):
-        return pdf["comp"].to_numpy(), pdf["early"].to_numpy(), pdf["late"].to_numpy()
-
-    for (early, late), _ in complete_runs(batches, arrays_of):
-        nodes, idx = np.unique(np.concatenate([early, late]), return_inverse=True)
-        kept = greedy_kept(idx[: len(early)], idx[len(early) :], len(nodes))
-        yield pd.DataFrame({"key": nodes, "kept": kept})
 
 
 def exact_dup_flags(

@@ -29,19 +29,29 @@ n_salts reducers — no single-task window sort anywhere on the flag path
 (round-3 change). The sparse-member rho path bounds work per bucket at 17
 members via a WindowGroupLimit; AQE skew-join splitting covers the
 remaining joins.
+
+Pairs: every bucket walk of the package is :func:`sorted_run_walk` (a
+shuffle on ``xxhash64`` of the group keys, a sort within partitions, one
+``mapInPandas`` over whole runs). The MinHash pair verify
+(:func:`verified_bucket_pairs`) and the candidate set
+(:func:`candidate_pairs_from_band_rows`, the same verify over a constant
+signature) walk band buckets with it; ``add_if_unique``'s conflict
+components and the ANN top-k and pair scans walk their own groups.
 """
 
 from __future__ import annotations
 
 import itertools
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from rensa_spark.config import RensaConfig
 
 # suffix source for per-call default CollectMetrics names (see
-# bucket_sizes)
+# observe_metrics)
 _METRICS_SEQ = itertools.count()
 
 
@@ -326,36 +336,38 @@ def one_shot_dup_flags_rho(
     )
 
 
+def observe_metrics(df: DataFrame, metrics, default: str, *exprs) -> DataFrame:
+    """``df`` observed under ``metrics``: a string name (for every
+    QueryExecutionListener and the Spark UI event log), a
+    ``pyspark.sql.Observation`` (read after the first action) or None. The
+    ``default`` string gets a fresh suffix per call (``<default>_<n>``):
+    Spark's analyzer rejects two CollectMetrics nodes of one name in a
+    plan, so two operators left at their default could not be unioned."""
+    if metrics is None:
+        return df
+    if metrics == default:
+        metrics = f"{default}_{next(_METRICS_SEQ)}"
+    return df.observe(metrics, *exprs)
+
+
 def bucket_sizes(
     bands: DataFrame, hot_bucket_cap: int, heuristic_cap: int, capped_metrics
 ) -> DataFrame:
     """(band_idx, band_hash, bucket_size) by a map-side count.
 
-    ``capped_metrics``: observable signal (round-3 advice): a
-    CollectMetrics node over the bucket sizes emitting ``capped_buckets``
-    (count over ``hot_bucket_cap``), ``heuristic_buckets`` (count over
-    ``heuristic_cap`` — the only regime with approximate semantics) and
-    ``max_bucket_size``. Pass a string name to ship the metrics to every
-    QueryExecutionListener / the Spark UI event log, a
-    ``pyspark.sql.Observation`` to read them programmatically after the
-    first action, or None to disable. The DEFAULT string is uniquified
-    per call (``rensa_capped_buckets_<n>``) so composing several pair
-    operators in one plan never collides on observed-metric names."""
-    if capped_metrics == "rensa_capped_buckets":
-        # Spark's analyzer rejects two CollectMetrics nodes with the SAME
-        # name in one plan (round-4 advice: unioning two pair operators
-        # both left at the default would fail to analyze) — the string
-        # default derives a fresh name per call. Pass an explicit string
-        # to pin a name for QueryExecutionListener consumers, an
-        # Observation to read values programmatically, or None to disable.
-        capped_metrics = f"rensa_capped_buckets_{next(_METRICS_SEQ)}"
+    ``capped_metrics``: a CollectMetrics node over the bucket sizes
+    emitting ``capped_buckets`` (count over ``hot_bucket_cap``),
+    ``heuristic_buckets`` (count over ``heuristic_cap`` — the only regime
+    with approximate semantics) and ``max_bucket_size``; a name, an
+    Observation or None, as for :func:`observe_metrics` (default
+    ``"rensa_capped_buckets"``)."""
     sizes = bands.groupBy("band_idx", "band_hash").agg(
         F.count(F.lit(1)).alias("bucket_size")
     )
-    if capped_metrics is None:
-        return sizes
-    return sizes.observe(
+    return observe_metrics(
+        sizes,
         capped_metrics,
+        "rensa_capped_buckets",
         F.sum(
             F.when(F.col("bucket_size") > hot_bucket_cap, 1).otherwise(0)
         ).alias("capped_buckets"),
@@ -366,6 +378,79 @@ def bucket_sizes(
     )
 
 
+def sorted_run_walk(rows: DataFrame, group_keys, arrays_of, kernel, schema: str) -> DataFrame:
+    """The one walk over the groups of ``rows``: a shuffle on
+    ``xxhash64(*group_keys)`` and a sort within partitions on ``group_keys``
+    make each group one contiguous run of one task, and ONE
+    ``mapInPandas`` hands each chunk of whole runs
+    (:func:`rensa_spark.kernels.runs.complete_runs`: at most one run plus
+    one Arrow batch in memory) to ``kernel(*cols, bounds)``, which returns
+    a pandas frame of ``schema`` or None. ``arrays_of(pdf)`` maps a batch
+    to its column arrays ``cols``; ``bounds`` are the run offsets.
+
+    The shuffle is on a hash no input can claim as its partitioning: AQE
+    drops a repartition its child seems to satisfy, and a union of
+    separately shuffled rows (a stream's state and batch) seems to while
+    its parts sit in different tasks (PLANS.md, "One co-location rule")."""
+
+    def walk(batches):
+        from rensa_spark.kernels.runs import complete_runs
+
+        def split(pdf):
+            keys = np.stack([pdf[c].to_numpy() for c in group_keys], axis=1)
+            return (keys, *arrays_of(pdf))
+
+        for cols, bounds in complete_runs(batches, split):
+            out = kernel(*cols, bounds)
+            if out is not None:
+                yield out
+
+    return (
+        rows.repartition(F.xxhash64(*group_keys))
+        .sortWithinPartitions(*group_keys)
+        .mapInPandas(walk, schema)
+    )
+
+
+def verified_bucket_pairs(
+    band_rows: DataFrame, sigs, hot_bucket_cap: int, exact_cap: int, threshold: float,
+    capped_metrics,
+) -> DataFrame:
+    """Distinct (a < b, sim) pairs of band-bucket co-members whose
+    equal-slot fraction ``sim`` is >= ``threshold``, from (key, band_idx,
+    band_hash) rows. Each member row of a bucket with >= 2 members
+    (:func:`bucket_sizes`, observed as ``capped_metrics``) takes its
+    signature from the (key, sig) table ``sigs`` by one join, or one
+    constant slot when ``sigs`` is None; the sorted-run walk hands every
+    bucket to :func:`rensa_spark.kernels.bucket_verify.verify_bucket_pairs`,
+    which checks every pair of a bucket up to ``exact_cap`` members and hub
+    + (signature, key)-sorted ring edges above it. No candidate pair
+    crosses a shuffle."""
+    sizes = bucket_sizes(band_rows, hot_bucket_cap, exact_cap, capped_metrics)
+    members = band_rows.select("key", "band_idx", "band_hash").join(
+        sizes.filter(F.col("bucket_size") >= 2), ["band_idx", "band_hash"], "leftsemi"
+    )
+    if sigs is None:
+        members = members.withColumn("sig", F.array(F.lit(0)))
+    else:
+        members = members.join(sigs.select("key", "sig"), "key")
+    key_type = band_rows.schema["key"].dataType.simpleString()
+
+    def arrays_of(pdf):
+        return pdf["key"].to_numpy(), np.stack(pdf["sig"].to_numpy())
+
+    def verify(keys, sig, bounds):
+        from rensa_spark.kernels.bucket_verify import verify_bucket_pairs
+
+        i, j, sim = verify_bucket_pairs(sig, keys, bounds, exact_cap, threshold)
+        return pd.DataFrame({"a": keys[i], "b": keys[j], "sim": sim})
+
+    return sorted_run_walk(
+        members, ["band_idx", "band_hash"], arrays_of, verify,
+        f"a {key_type}, b {key_type}, sim double",
+    ).distinct()
+
+
 def candidate_pairs_from_band_rows(
     bands: DataFrame,
     hot_bucket_cap: int = 4096,
@@ -374,13 +459,16 @@ def candidate_pairs_from_band_rows(
     """Distinct candidate pairs (a < b) sharing >=1 band bucket, from
     (key, band_idx, band_hash) rows.
 
-    Buckets larger than ``hot_bucket_cap`` would emit O(n^2) pairs through
-    the bucket self-join; they emit hub edges (min key to each member) PLUS
-    ring edges over members sorted by key instead: O(2n) edges that keep
-    every member connected. Verified pairs do not come from here (see
+    The verify's own bucket walk (:func:`verified_bucket_pairs`) over a
+    constant one-slot signature at threshold 0, so every candidate passes:
+    buckets of up to ``hot_bucket_cap`` members emit every pair; a larger
+    bucket would emit O(n^2) pairs, so it emits hub edges (min key to each
+    member) plus a ring over its members sorted by key instead: O(2n)
+    edges that keep every member connected. Verified pairs do not come
+    from here (see
     :func:`rensa_spark.operators.dedup.verified_pairs_from_band_rows`,
-    which verifies inside each bucket); this operator measures the
-    candidate set.
+    which verifies real signatures in the same walk); this operator
+    measures the candidate set.
 
     The reference never materializes pairs at all for flags (flags need
     only bucket size >= 2).
@@ -388,37 +476,6 @@ def candidate_pairs_from_band_rows(
     ``capped_metrics``: see :func:`bucket_sizes`; ``heuristic_buckets``
     equals ``capped_buckets`` here.
     """
-    sizes = bucket_sizes(bands, hot_bucket_cap, hot_bucket_cap, capped_metrics)
-    bands_sized = bands.join(
-        sizes.filter(F.col("bucket_size") >= 2), ["band_idx", "band_hash"]
-    )
-
-    small = bands_sized.filter(F.col("bucket_size") <= hot_bucket_cap)
-    left = small.select("band_idx", "band_hash", F.col("key").alias("a"))
-    right = small.select("band_idx", "band_hash", F.col("key").alias("b"))
-    small_pairs = left.join(right, ["band_idx", "band_hash"]).filter(
-        F.col("a") < F.col("b")
-    )
-
-    big = bands_sized.filter(F.col("bucket_size") > hot_bucket_cap)
-    hubs = big.groupBy("band_idx", "band_hash").agg(F.min("key").alias("hub"))
-    big_pairs = (
-        big.join(hubs, ["band_idx", "band_hash"])
-        .filter(F.col("key") != F.col("hub"))
-        .select(F.col("hub").alias("a"), F.col("key").alias("b"))
-    )
-    w = Window.partitionBy("band_idx", "band_hash").orderBy("key")
-    ring_pairs = (
-        big.withColumn("prev", F.lag("key").over(w))
-        .filter(F.col("prev").isNotNull() & (F.col("prev") != F.col("key")))
-        .select(
-            F.least("prev", "key").alias("a"),
-            F.greatest("prev", "key").alias("b"),
-        )
-    )
-    return (
-        small_pairs.select("a", "b")
-        .unionByName(big_pairs.select("a", "b"))
-        .unionByName(ring_pairs)
-        .distinct()
-    )
+    return verified_bucket_pairs(
+        bands, None, hot_bucket_cap, hot_bucket_cap, 0.0, capped_metrics
+    ).select("a", "b")

@@ -11,11 +11,13 @@
   the numpy kernels in kernels/ann.py, shared by every hyperplane lane.
 - SimHash near-dup flags/pairs for text (kernels/simhash.py).
 
-Every bucketed lane scores in one of two scans of one shape (:func:`_run_scan`:
-hash-partition by the bucket, sort within partitions, one ``mapInPandas``
-walk over the sorted runs, one numpy kernel per bucket): :func:`_topk_scan`
-(``bucketed_topk_join``, ``ivf_topk``) and :func:`_pair_scan`
-(``ann_near_dup_pairs``, ``embedding_near_dup_pairs``).
+Every bucketed lane scores in the one sorted-run walk that also verifies
+MinHash band buckets (:func:`rensa_spark.operators.lsh.sorted_run_walk`:
+shuffle on ``xxhash64`` of the bucket, sort within partitions, one
+``mapInPandas`` walk over the sorted runs, one numpy kernel per bucket),
+through a top-k kernel (:func:`_topk_scan`: ``bucketed_topk_join``,
+``ivf_topk``) or a pair kernel (:func:`_pair_scan`: ``ann_near_dup_pairs``,
+``embedding_near_dup_pairs``).
 
 The ANN operators drop rows whose vector is null before any Python
 crossing: such rows are neither queries nor candidates.
@@ -39,6 +41,7 @@ from rensa_spark.kernels.ann import (
     quantized_topk,
     sign_pattern,
 )
+from rensa_spark.operators.lsh import observe_metrics, sorted_run_walk
 
 
 def _stack(vecs) -> np.ndarray:
@@ -374,19 +377,15 @@ def bucketed_topk_join(
     # the bucket sizes, but routing one CollectMetrics subtree into two
     # joins would either double-count its sum on re-execution or trip the
     # duplicate-observed-metrics analyzer check
-    sizes = sizes_raw
-    if capped_metrics is not None:
-        if capped_metrics == "rensa_topk_capped_buckets":
-            from rensa_spark.operators.lsh import _METRICS_SEQ
-
-            capped_metrics = f"rensa_topk_capped_buckets_{next(_METRICS_SEQ)}"
-        sizes = sizes_raw.observe(
-            capped_metrics,
-            F.sum(
-                F.when(F.col("n_in_bucket") > hot_bucket_cap, 1).otherwise(0)
-            ).alias("capped_buckets"),
-            F.max("n_in_bucket").alias("max_bucket_rows"),
-        )
+    sizes = observe_metrics(
+        sizes_raw,
+        capped_metrics,
+        "rensa_topk_capped_buckets",
+        F.sum(
+            F.when(F.col("n_in_bucket") > hot_bucket_cap, 1).otherwise(0)
+        ).alias("capped_buckets"),
+        F.max("n_in_bucket").alias("max_bucket_rows"),
+    )
     salted = max_nq is not None and max_nq > query_group_cap
     # no broadcast hint on the OBSERVED side: re-executions of a broadcast
     # exchange wrapping a CollectMetrics node spam accumulator-lookup
@@ -430,9 +429,9 @@ def bucketed_topk_join(
             .drop("n_salt")
         )
         group_keys = ["bucket", "sub", "qsalt"]
-    # Transport: both sides union into one table tagged is_q, ONE hash
-    # repartition on the group keys + a partition-local sort makes every
-    # group a contiguous run, and the top-k scan walks the runs — Python is
+    # Transport: both sides union into one table tagged is_q, and the
+    # sorted-run walk (ONE shuffle on a hash of the group keys + a
+    # partition-local sort) hands the top-k kernel whole groups — Python is
     # invoked once per Arrow batch, not once per group (a cogrouped
     # applyInPandas paid ~1-2 ms per group: 4-7 s on the 3.6k-group hot
     # benchmark with a TRIVIAL function). kernels/runs.complete_runs
@@ -449,28 +448,20 @@ def bucketed_topk_join(
     ).select("qid", "rank", "neighbor_id").orderBy("qid", "rank")
 
 
-def _run_scan(rows, group_keys, arrays_of, score_run, schema):
-    """``rows`` hash-partitioned by ``group_keys`` and sorted within
-    partitions, so each group is one contiguous run, and ONE mapInPandas
-    walk (:func:`complete_runs`) calling ``score_run(*cols, lo, hi)`` per
-    run for its output columns by name (or None). Python runs once per
-    Arrow batch, not per group, and one batch's output is one frame
-    (per-group frames measured no better)."""
+def _per_run(score_run):
+    """A :func:`rensa_spark.operators.lsh.sorted_run_walk` kernel calling
+    ``score_run(*cols, lo, hi)`` per run for its output columns by name (or
+    None); one chunk's output is one frame (per-group frames measured no
+    better)."""
 
-    def scan(batches):
-        from rensa_spark.kernels.runs import complete_runs
+    def kernel(*cols_bounds):
+        *cols, bounds = cols_bounds
+        parts = [score_run(*cols, lo, hi) for lo, hi in zip(bounds[:-1], bounds[1:])]
+        parts = [p for p in parts if p is not None]
+        if parts:
+            return pd.DataFrame({n: np.concatenate([p[n] for p in parts]) for n in parts[0]})
 
-        for cols, bounds in complete_runs(batches, arrays_of):
-            parts = [score_run(*cols, lo, hi) for lo, hi in zip(bounds[:-1], bounds[1:])]
-            parts = [p for p in parts if p is not None]
-            if parts:
-                yield pd.DataFrame({n: np.concatenate([p[n] for p in parts]) for n in parts[0]})
-
-    return (
-        rows.repartition(*group_keys)
-        .sortWithinPartitions(*group_keys)
-        .mapInPandas(scan, schema)
-    )
+    return kernel
 
 
 def _topk_scan(queries, corpus, group_keys, kernel, k, score_type, score_order):
@@ -496,7 +487,6 @@ def _topk_scan(queries, corpus, group_keys, kernel, k, score_type, score_order):
 
     def arrays_of(pdf):
         return (
-            np.stack([pdf[c].to_numpy(dtype=np.int64) for c in group_keys], axis=1),
             pdf["is_q"].to_numpy(dtype=bool),
             pdf["qid"].to_numpy(),
             pdf["neighbor_id"].to_numpy(),
@@ -510,8 +500,8 @@ def _topk_scan(queries, corpus, group_keys, kernel, k, score_type, score_order):
             qi, nid, score = kernel(vecs[q], vecs[c], nids[c], k)
             return {"qid": qids[q][qi], "neighbor_id": nid, "score": score}
 
-    partial = _run_scan(
-        tagged, group_keys, arrays_of, score_run,
+    partial = sorted_run_walk(
+        tagged, group_keys, arrays_of, _per_run(score_run),
         f"qid {q_type}, neighbor_id {n_type}, score {score_type}",
     )
     return _rank(partial, k, score_order).select("qid", "rank", "neighbor_id", "score")
@@ -525,8 +515,7 @@ def _pair_scan(rows, group_keys, kernel, min_cosine):
     id_type = rows.schema["id"].dataType.simpleString()
 
     def arrays_of(pdf):
-        keys = np.stack([pdf[c].to_numpy() for c in group_keys], axis=1)
-        return keys, pdf["id"].to_numpy(), pdf["vec"].to_numpy()
+        return pdf["id"].to_numpy(), pdf["vec"].to_numpy()
 
     def score_run(ids, vecs, lo, hi):
         if hi - lo >= 2:
@@ -535,8 +524,8 @@ def _pair_scan(rows, group_keys, kernel, min_cosine):
             return {"a": run_ids[i], "b": run_ids[j], "cosine": cos}
 
     # a NaN cosine crosses Arrow from pandas as null: restore it
-    return _run_scan(
-        rows, group_keys, arrays_of, score_run, f"a {id_type}, b {id_type}, cosine double"
+    return sorted_run_walk(
+        rows, group_keys, arrays_of, _per_run(score_run), f"a {id_type}, b {id_type}, cosine double"
     ).withColumn("cosine", F.coalesce("cosine", F.lit(float("nan"))))
 
 
@@ -649,14 +638,15 @@ def ann_near_dup_pairs(
         "gid", "vq", _bucket("pat", n_planes).alias("bucket"), "pat"
     ).localCheckpoint(eager=False)
     sizes = reps.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_distinct"))
-    if capped_metrics is not None:
-        sizes = sizes.observe(
-            capped_metrics,
-            F.sum(
-                F.when(F.col("n_distinct") > hot_bucket_cap, 1).otherwise(0)
-            ).alias("capped_buckets"),
-            F.max("n_distinct").alias("max_bucket_distinct"),
-        )
+    sizes = observe_metrics(
+        sizes,
+        capped_metrics,
+        "rensa_ann_capped_buckets",
+        F.sum(
+            F.when(F.col("n_distinct") > hot_bucket_cap, 1).otherwise(0)
+        ).alias("capped_buckets"),
+        F.max("n_distinct").alias("max_bucket_distinct"),
+    )
     # ONE projection assigns sub for both regimes; the pair scan scores
     # every (bucket, sub) group of representatives
     rep_side = reps.join(sizes, "bucket").select(
@@ -961,26 +951,16 @@ def simhash_dup_flags(
     def gen(batches):
         from rensa_spark.kernels.shingle import shingle_hashes_batch
         from rensa_spark.kernels.simhash import simhash_from_flat
+        from rensa_spark.operators.sketch import band_rows_frame
 
+        bits = 64 // n_chunks
+        shifts = np.arange(n_chunks, dtype=np.uint64) * np.uint64(bits)
+        mask = np.uint64((1 << bits) - 1)
         for pdf in batches:
             flat, offs = shingle_hashes_batch(pdf[text_col], cfg.ngram_size)
-            sh = simhash_from_flat(flat, offs)
-            n = len(sh)
-            chunks = np.empty((n, n_chunks), dtype=np.int64)
-            bits = 64 // n_chunks
-            mask = (1 << bits) - 1
-            u = sh.view(np.uint64)
-            for c in range(n_chunks):
-                chunks[:, c] = ((u >> np.uint64(c * bits)) & np.uint64(mask)).astype(
-                    np.int64
-                )
-            yield pd.DataFrame(
-                {
-                    "key": np.repeat(pdf[key_col].values, n_chunks),
-                    "band_idx": np.tile(np.arange(n_chunks, dtype=np.int32), n),
-                    "band_hash": chunks.reshape(-1),
-                }
-            )
+            u = simhash_from_flat(flat, offs).view(np.uint64)
+            chunks = (u[:, None] >> shifts[None, :]) & mask
+            yield band_rows_frame(pdf[key_col].values, chunks)
 
     key_type = df.schema[key_col].dataType.simpleString()
     bands = df.select(key_col, text_col).mapInPandas(
@@ -1135,14 +1115,10 @@ def ivf_topk(
         F.col("vq").alias("vec"),
     )
     if bucket_metrics is not None:
-        if bucket_metrics == "rensa_ivf_buckets":
-            from rensa_spark.operators.lsh import _METRICS_SEQ
-
-            bucket_metrics = f"rensa_ivf_buckets_{next(_METRICS_SEQ)}"
-        sizes = corpus.groupBy("c").agg(
-            F.count(F.lit(1)).alias("_bucket_members")
-        ).observe(
+        sizes = observe_metrics(
+            corpus.groupBy("c").agg(F.count(F.lit(1)).alias("_bucket_members")),
             bucket_metrics,
+            "rensa_ivf_buckets",
             F.count(F.lit(1)).alias("n_buckets"),
             F.max("_bucket_members").alias("max_bucket_members"),
         )

@@ -15,10 +15,10 @@ stage).
 The fixed cost per run is kept to the stage writes themselves:
 
 - the text is sketched ONCE: the fused sig+bands UDF result is persisted,
-  ``signatures`` writes its (key, sig) columns, ``bands`` a JVM posexplode
-  of its band array and ``pairs`` reads it whole, then it is unpersisted (a
-  persist, unlike a localCheckpoint, can be rebuilt after an executor
-  loss);
+  ``signatures`` writes its (key, sig) columns, ``bands`` its band array
+  exploded by ``explode_bands`` and ``pairs`` reads it whole, then it is
+  unpersisted (a persist, unlike a localCheckpoint, can be rebuilt after
+  an executor loss);
 - lineage row counts come from the written files' parquet footers and are
   appended with no Spark job;
 - pairs are ``dedup_edges`` over the same persisted sketch, the builder
@@ -255,7 +255,7 @@ class DedupPipeline:
 
         from rensa_spark.operators.cc import connected_components, survivors
         from rensa_spark.operators.dedup import dedup_edges, sketch_rminhash
-        from rensa_spark.operators.lsh import one_shot_flags_from_bands
+        from rensa_spark.operators.lsh import explode_bands, one_shot_flags_from_bands
 
         src = df.select(F.col(key_col).alias("key"), F.col(text_col).alias("text"))
         sketch: list[DataFrame] = []
@@ -281,12 +281,7 @@ class DedupPipeline:
             sigs = self._run_stage(
                 "signatures", lambda: sketched().select("key", "sig")
             )
-            bands = self._run_stage(
-                "bands",
-                lambda: sketched().select(
-                    "key", F.posexplode("bands").alias("band_idx", "band_hash")
-                ),
-            )
+            bands = self._run_stage("bands", lambda: explode_bands(sketched(), "key"))
             self._run_stage(
                 "flags",
                 lambda: one_shot_flags_from_bands(

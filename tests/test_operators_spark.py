@@ -368,3 +368,63 @@ def test_capped_bucket_observation(spark):
     # capped vs not must agree on the connected keys (star+ring covers all)
     assert pairs.selectExpr("a AS k").union(pairs.selectExpr("b")).distinct().count() == \
         pairs2.selectExpr("a AS k").union(pairs2.selectExpr("b")).distinct().count()
+
+
+def _reference_candidate_pairs(rows, cap):
+    """The candidate rule in pure Python: every pair of a bucket with up to
+    ``cap`` members; above it hub (min key) edges plus a ring over the
+    members sorted by key."""
+    buckets = {}
+    for key, band_idx, band_hash in rows:
+        buckets.setdefault((band_idx, band_hash), []).append(key)
+    out = set()
+    for members in buckets.values():
+        ks = sorted(members)
+        if len(ks) <= cap:
+            out |= {(a, b) for i, a in enumerate(ks) for b in ks[i + 1 :]}
+        else:
+            out |= {(ks[0], b) for b in ks[1:]} | set(zip(ks, ks[1:]))
+    return out
+
+
+@pytest.mark.parametrize("key_kind", ["long", "string"])
+def test_candidate_pairs_match_reference(spark, key_kind):
+    """candidate_pairs_from_band_rows emits exactly the candidate rule, in
+    both regimes (buckets up to the cap and above it), with no repeated
+    pair. String keys order by code point ("k10" < "k2")."""
+    from rensa_spark.operators.lsh import candidate_pairs_from_band_rows
+
+    rng = random.Random(11)
+    rows = []
+    for i in range(80):
+        key = i if key_kind == "long" else f"k{i}"
+        # band 0: a few large buckets; bands 1-2: many small ones
+        for band_idx, n_hashes in ((0, 3), (1, 25), (2, 40)):
+            rows.append((key, band_idx, rng.randrange(n_hashes) - n_hashes // 2))
+    bands = spark.createDataFrame(rows, f"key {key_kind}, band_idx int, band_hash long")
+    cap = 6
+    sizes = {}
+    for _, band_idx, band_hash in rows:
+        sizes[(band_idx, band_hash)] = sizes.get((band_idx, band_hash), 0) + 1
+    assert max(sizes.values()) > cap and any(2 <= n <= cap for n in sizes.values())
+
+    got = [(r["a"], r["b"]) for r in candidate_pairs_from_band_rows(bands, cap, None).collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == _reference_candidate_pairs(rows, cap)
+
+
+def test_default_metrics_names_are_unique_per_call(spark):
+    """Two ANN pair calls left at their default metrics name union in one
+    plan: each default CollectMetrics name is made unique per call."""
+    from rensa_spark.operators.similarity import ann_near_dup_pairs
+
+    def pairs(seed):
+        rng = np.random.default_rng(seed)
+        df = spark.createDataFrame(
+            [(i, v.tolist()) for i, v in enumerate(rng.normal(size=(40, 8)))],
+            "id long, vec array<double>",
+        )
+        return ann_near_dup_pairs(df, "id", "vec", min_cosine=0.3, n_planes=2, dim=8)
+
+    one, two = pairs(1), pairs(2)
+    assert one.unionByName(two).count() == one.count() + two.count()

@@ -129,17 +129,44 @@ def test_ann_bucket_join_scores_in_cogroup_not_per_pair(spark):
     assert "Join" not in above.split("== Physical Plan ==")[-1], above[-500:]
 
 
+def _walk_shuffle_keys(df) -> list[tuple[list[str], list[str]]]:
+    """(sort keys, xxhash64 arguments) of every MapInPandas -> Sort ->
+    Exchange chain in ``df``'s physical plan, attribute ids stripped."""
+
+    def names(args: str) -> list[str]:
+        return [re.sub(r"#\d+L?$", "", a.strip().split(" ")[0]) for a in args.split(",")]
+
+    lines = df._jdf.queryExecution().executedPlan().treeString().splitlines()
+    chains = []
+    for n, line in enumerate(lines):
+        if "MapInPandas" not in line:
+            continue
+        sort = re.search(r"Sort \[(.*)\], false", lines[n + 1])
+        exch = re.search(r"Exchange hashpartitioning\(xxhash64\((.*), 42\), \d+\)", lines[n + 2])
+        chains.append(
+            (names(sort.group(1)) if sort else [], names(exch.group(1)) if exch else [])
+        )
+    return chains
+
+
 def test_scan_lanes_score_in_one_map_in_pandas(spark):
-    """ivf_topk (top-k scan), ann_near_dup_pairs and
-    embedding_near_dup_pairs (pair scan) score their candidates inside ONE
+    """Every sorted-run walk — the top-k scan (ivf_topk,
+    bucketed_topk_join), the pair scan (ann_near_dup_pairs,
+    embedding_near_dup_pairs), the candidate pairs' bucket walk and
+    add_if_unique's component walk — scores its groups inside ONE
     mapInPandas walk: the served plan has exactly one MapInPandas node, no
     ArrowEvalPython node (no per-pair UDF) and no higher-order function (no
-    per-pair zip_with / aggregate dot) — candidate pairs never become
-    rows."""
+    per-pair zip_with / aggregate dot), so candidate pairs never become
+    rows. The walk's sort sits on an Exchange partitioned on xxhash64 of
+    the same group keys, the one co-location rule of every walk."""
     import numpy as np
     import pandas as pd
+    from pyspark.sql import functions as F
 
     from rensa_spark.operators import similarity as S
+    from rensa_spark.operators.dedup import add_if_unique
+    from rensa_spark.operators.lsh import candidate_pairs_from_band_rows, explode_bands
+    from rensa_spark.sources.synthetic import generate_corpus
 
     rng = np.random.default_rng(8)
     emb = spark.createDataFrame(
@@ -151,28 +178,51 @@ def test_scan_lanes_score_in_one_map_in_pandas(spark):
             }
         )
     )
+    docs = spark.createDataFrame(generate_corpus(200, seed=5, with_images=False)[["image_id", "caption"]])
+    band_rows = explode_bands(
+        spark.range(200).select(
+            F.col("id").alias("key"), F.array(F.col("id") % 7, F.col("id") % 11).alias("bands")
+        ),
+        "key",
+    )
     lanes = {
-        "ivf_topk": S.ivf_topk(emb, "vec_id", "embedding", k=3),
-        "ann_near_dup_pairs": S.ann_near_dup_pairs(
-            emb, "vec_id", "embedding", min_cosine=0.3, n_planes=6, dim=64
+        "ivf_topk": (S.ivf_topk(emb, "vec_id", "embedding", k=3), ["c"]),
+        "bucketed_topk_join": (
+            S.bucketed_topk_join(
+                emb, "vec_id", "embedding", emb, "vec_id", "embedding", k=3, n_planes=4, dim=64
+            ),
+            ["bucket", "sub"],
         ),
-        "embedding_near_dup_pairs": S.embedding_near_dup_pairs(
-            emb, "vec_id", "embedding", "label", min_cosine=0.3
+        "ann_near_dup_pairs": (
+            S.ann_near_dup_pairs(emb, "vec_id", "embedding", min_cosine=0.3, n_planes=6, dim=64),
+            ["bucket", "sub"],
         ),
+        "embedding_near_dup_pairs": (
+            S.embedding_near_dup_pairs(emb, "vec_id", "embedding", "label", min_cosine=0.3),
+            ["blk", "dim"],
+        ),
+        "candidate_pairs_from_band_rows": (
+            candidate_pairs_from_band_rows(band_rows, hot_bucket_cap=8),
+            ["band_idx", "band_hash"],
+        ),
+        "add_if_unique": (add_if_unique(docs, CFG, "image_id", "caption"), ["comp"]),
     }
-    for name, df in lanes.items():
+    for name, (df, group_keys) in lanes.items():
         plan = _formatted_plan(df)
         assert len(re.findall(r"\) MapInPandas", plan)) == 1, name
         assert len(re.findall(r"\) ArrowEvalPython", plan)) == 0, name
         assert "lambdafunction" not in plan, name
+        assert _walk_shuffle_keys(df) == [(group_keys, group_keys)], (name, plan)
 
 
 def test_multimodal_clusters_never_scan_bytes(image_table):
     """The multimodal dedup hot path reads only (image_id, caption, phash)
     even though the table carries pixel payloads (north rule / SURVEY §7
-    hard part 6). Asserted on the LAZY edge plan — the clusters operator
-    eagerly runs CC internally (scoped persist), so its returned plan no
-    longer exposes the sketch scan."""
+    hard part 6). Asserted on the edge plan: the clusters operator runs CC
+    internally, so its returned plan no longer exposes a scan. The edge
+    plan is not lazy either: building it runs the caption collapse's
+    checkpoint job (the sketch), so the scans left to read here are the
+    phash side's, over the same (image_id, caption, phash) projection."""
     from rensa_spark.operators.dedup import multimodal_dedup_edges
 
     plan = _formatted_plan(
