@@ -137,9 +137,12 @@ def _q_cminhash_dup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rensa_spark.operators.sketch import cminhash_band_rows
 
     docs = _docs(spark, sf_dir)
-    bands = cminhash_band_rows(docs, CFG, "doc_id", "text").localCheckpoint(
-        eager=False
-    )  # two consumers (flags + min agg): sketch the corpus ONCE
+    # two consumers (flags + min agg): sketch the corpus ONCE. Eager, as
+    # lsh.one_shot_dup_flags_rho's base: a lazy checkpoint read by both
+    # branches at once was computed by two tasks (``Block ... already
+    # exists``), whose freed plan's metrics then logged ``non-existent
+    # accumulator`` errors
+    bands = cminhash_band_rows(docs, CFG, "doc_id", "text").localCheckpoint(eager=True)
     flags = one_shot_flags_from_bands(
         bands,
         keys=docs.select(

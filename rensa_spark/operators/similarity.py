@@ -91,11 +91,10 @@ def brute_force_topk(
             ids = pdf[id_col].values
             m = _normalize(_stack(pdf[vec_col]))
             scores = m @ qmat.T  # (rows, nq)
-            top = min(k, len(ids))
-            part = np.argpartition(-scores, top - 1, axis=0)[:top]  # (top, nq)
             out = []
             for qi in range(len(qids)):
-                sel = part[:, qi]
+                # (score desc, id asc): the batch keeps the rows _rank keeps
+                sel = np.lexsort((ids, -scores[:, qi]))[:k]
                 out.append(
                     pd.DataFrame(
                         {
@@ -555,19 +554,19 @@ def ann_near_dup_pairs(
     ``quantized_topk`` formula; no candidate pair becomes a row before it
     passes, and rounding to 6 places stays JVM-side. A zero vector scores
     0.0 against everything, so it pairs only when ``min_cosine <= 0``; a
-    null vector pairs with nothing.
+    row with a null id or vector pairs with nothing.
 
     Scale shape (the fixed 2^n_planes bucket domain would make the
     self-join O(n^2/2^n_planes) at large n):
 
-    1. identical QUANTIZED vectors collapse to one representative before
-       any join (the vq array is the group identity, mirroring the simhash
-       identical-sig collapse): a degenerate all-same-vector region
-       contributes ONE row to candidate generation; its output-sized
-       within-group pair expansion (cosine is exactly the self-score) is
-       salted over ``expand_salts`` reducers. Cosine is a pure function of
-       (vq_a, vq_b), so every member pair inherits its representative
-       pair's score — collapse is EXACT, never approximate.
+    1. rows with an identical QUANTIZED vector collapse to one
+       representative before any join
+       (:func:`rensa_spark.operators.dedup.collapse_identical` on ``vq``),
+       and :func:`rensa_spark.operators.dedup.expand_identical` expands the
+       representative pairs and each group's own pairs. Cosine is a pure
+       function of (vq_a, vq_b), so the collapse is EXACT: every member
+       pair inherits its representative pair's score, and two members of
+       one group score the self-score.
     2. buckets whose DISTINCT-vector count exceeds ``hot_bucket_cap`` are
        subdivided by ``extra_planes`` additional quantized hyperplanes
        (independent seed), whose sign pattern the bucket crossing computes
@@ -578,65 +577,32 @@ def ann_near_dup_pairs(
        observable via ``capped_metrics`` (CollectMetrics: capped_buckets,
        max_bucket_distinct — same contract as lsh.bucket_sizes).
     """
-    df = df.filter(F.col(vec_col).isNotNull())
+    from rensa_spark.operators.dedup import collapse_identical, expand_identical
+
+    df = df.filter(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull())
     if dim is None:
         dim = len(np.asarray(df.select(vec_col).first()[0]))
     pattern = _sign_pattern_udf(dim, n_planes, extra_planes, seed)
 
     side = df.select(
-        F.col(id_col).alias("vid"),
+        F.col(id_col).alias("key"),
         _quantize_col(F.col(vec_col)).alias("vq"),
         pattern(F.col(vec_col)).alias("pat"),
     ).withColumn(
         "n2", F.aggregate("vq", F.lit(0).cast("long"), lambda acc, x: acc + x * x)
     )
-    # group identity = the vq value itself; gid/cnt ride along via ONE
-    # window over the vq partitioning (no array-keyed join anywhere)
-    wv = Window.partitionBy("vq")
-    members = (
-        side.withColumn("gid", F.min("vid").over(wv))
-        .withColumn("cnt", F.count(F.lit(1)).over(wv))
-        .localCheckpoint(eager=False)
-    )  # consumed by reps + both expansions
-
-    # within-group pairs: identical vq, score = the self-score computed
-    # with the SAME formula as cosine_pairs (bit-identical to scoring every
-    # pair). Output-sized, salted over min(cnt, expand_salts) reducers per
-    # group (left keyed by hash(vid) mod the group's salt domain, right
-    # replicated once per salt — each unordered pair matches exactly once).
-    # the self-score is computed ONCE per member row and copied through the
-    # expansion join — evaluating the sqrt/div/round expression per OUTPUT
-    # row instead measured 16.3s vs 3.9s on the 50M-pair degenerate lane
+    # the within-group score: the self-score by cosine_pairs' formula
+    # (bit-identical to scoring every pair), computed ONCE per row and
+    # copied through the expansion join — evaluating the sqrt/div/round
+    # expression per OUTPUT row instead measured 16.3s vs 3.9s on the
+    # 50M-pair degenerate lane
     n2 = F.col("n2").cast("double")
-    multi = (
-        members.withColumn(
-            "selfscore", F.when(n2 > 0, n2 / (F.sqrt(n2) * F.sqrt(n2))).otherwise(0.0)
-        )
-        .filter((F.col("cnt") >= 2) & (F.col("selfscore") >= min_cosine))
-        .withColumn("selfscore", F.round("selfscore", 6))
-    )
-    s_g = F.least(F.col("cnt"), F.lit(expand_salts)).cast("long")
-    w_left = multi.select(
-        "gid",
-        F.col("vid").alias("a"),
-        F.pmod(F.xxhash64("vid"), s_g).cast("int").alias("salt"),
-        "selfscore",
-    )
-    w_right = multi.select(
-        "gid",
-        F.col("vid").alias("b"),
-        F.explode(F.sequence(F.lit(0), (s_g - 1).cast("int"))).alias("salt"),
-    )
-    within = (
-        w_left.join(w_right, ["gid", "salt"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", F.col("selfscore").alias("cosine"))
-    )
+    self_score = F.when(n2 > 0, n2 / (F.sqrt(n2) * F.sqrt(n2))).otherwise(0.0)
+    within = F.when(self_score >= min_cosine, F.round(self_score, 6)).alias("cosine")
+    members, reps = collapse_identical(side.select("key", "vq", "pat", within), "key", "vq")
 
     # cross-group candidates over DISTINCT vectors only
-    reps = members.filter(F.col("vid") == F.col("gid")).select(
-        "gid", "vq", _bucket("pat", n_planes).alias("bucket"), "pat"
-    ).localCheckpoint(eager=False)
+    reps = reps.select("key", "vq", _bucket("pat", n_planes).alias("bucket"), "pat")
     sizes = reps.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_distinct"))
     sizes = observe_metrics(
         sizes,
@@ -652,26 +618,12 @@ def ann_near_dup_pairs(
     rep_side = reps.join(sizes, "bucket").select(
         "bucket",
         _hot_sub("pat", n_planes, "n_distinct", hot_bucket_cap).alias("sub"),
-        F.col("gid").alias("id"),
+        F.col("key").alias("id"),
         F.col("vq").alias("vec"),
     )
-    rep_pairs = _pair_scan(rep_side, ["bucket", "sub"], cosine_pairs, min_cosine).select(
-        F.col("a").alias("gid_a"), F.col("b").alias("gid_b"), "cosine"
-    )
-    # multiplicity expansion: every member pair inherits the representative
-    # score exactly (cosine is a function of vq alone). Output-sized.
-    ma = members.select(F.col("gid").alias("gid_a"), F.col("vid").alias("va"))
-    mb = members.select(F.col("gid").alias("gid_b"), F.col("vid").alias("vb"))
-    cross = (
-        rep_pairs.join(ma, "gid_a")
-        .join(mb, "gid_b")
-        .select(
-            F.least("va", "vb").alias("a"),
-            F.greatest("va", "vb").alias("b"),
-            F.round("cosine", 6).alias("cosine"),
-        )
-    )
-    return within.unionByName(cross)
+    rep_pairs = _pair_scan(rep_side, ["bucket", "sub"], cosine_pairs, min_cosine)
+    rep_pairs = rep_pairs.withColumn("cosine", F.round("cosine", 6))
+    return expand_identical(rep_pairs, members, "rep", "cosine", expand_salts)
 
 
 def _block_key(df: DataFrame, block_col: str):
@@ -868,77 +820,30 @@ def simhash_near_pairs(
     SQL-checkable. Verification is one JVM bit_count over the xor; only
     (key, sig) longs ever shuffle.
 
-    Scale shape (round-3 hardening): identical signatures are collapsed to
-    one representative BEFORE any join — a degenerate corpus (10k empty /
-    boilerplate docs => one sig) contributes ONE row to candidate
-    generation, and its (output-sized, unavoidable) hamming-0 pair expansion
-    is salted over ``expand_salts`` reducers instead of one straggler task.
-    Distinct-sig chunk buckets above ``hot_chunk_cap`` recurse on a second
-    pigeonhole over the remaining 48 bits (see _simhash_group_pairs). The
-    result set is bit-identical to the naive all-rows self-join.
+    Scale shape: identical signatures collapse to one representative
+    before any join (:func:`rensa_spark.operators.dedup.collapse_identical`),
+    so a degenerate corpus (10k empty / boilerplate docs => one sig)
+    contributes ONE row to candidate generation, and
+    :func:`rensa_spark.operators.dedup.expand_identical` expands the
+    distinct-sig pairs and each group's own hamming-0 pairs. Distinct-sig
+    chunk buckets above ``hot_chunk_cap`` recurse on a second pigeonhole
+    over the remaining 48 bits (see _simhash_group_pairs). The result set is
+    bit-identical to the naive all-rows self-join.
     """
+    from rensa_spark.operators.dedup import collapse_identical, expand_identical
+
     if max_hamming >= n_chunks:
         raise ValueError(
             "max_hamming must be < n_chunks for the chunk-bucket candidates "
             "to be complete (pigeonhole)"
         )
-    # Each checkpoint is consumed by >=2 downstream branches; a LAZY
-    # localCheckpoint materializes the (narrow) rows once inside the first
-    # consuming job (no extra scheduling barrier) and — unlike persist() —
-    # its blocks are reclaimed by the ContextCleaner when the DataFrame
-    # goes out of scope, so repeated invocations in one session don't
-    # accumulate pinned cache (round-2 advice).
-    sigs = simhash_signatures(df, cfg, key_col, text_col).localCheckpoint(
-        eager=False
-    )  # one Python crossing, consumed by the group agg + expansions
-    groups = (
-        sigs.groupBy("sig")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)
-    )  # the sig VALUE is the group identity — no member re-join needed
-
-    # within-group pairs: hamming 0 by construction. Output-sized work —
-    # spread over min(cnt, expand_salts) tasks per group (left side keyed by
-    # hash(key) mod the group's salt domain, right side replicated once per
-    # salt: each unordered pair matches exactly once). Sizing the salt
-    # domain by the GROUP's multiplicity keeps the replication factor at
-    # cnt for small groups (the common case) while a degenerate 10k-member
-    # block still fans out over the full expand_salts reducers.
-    multi = groups.filter(F.col("cnt") >= 2).select("sig", "cnt")
-    m = sigs.join(multi, "sig")
-    s_g = F.least(F.col("cnt"), F.lit(expand_salts)).cast("long")
-    left = m.select(
-        "sig",
-        F.col("key").alias("a"),
-        F.pmod(F.xxhash64("key"), s_g).cast("int").alias("salt"),
-    )
-    right = m.select(
-        "sig",
-        F.col("key").alias("b"),
-        F.explode(F.sequence(F.lit(0), (s_g - 1).cast("int"))).alias("salt"),
-    )
-    within = (
-        left.join(right, ["sig", "salt"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", F.lit(0).cast("long").alias("hamming"))
-    )
-
-    # cross-group pairs over DISTINCT sigs only, then multiplicity expansion
-    gpairs = _simhash_group_pairs(
-        groups.select("sig"), n_chunks, max_hamming, hot_chunk_cap
-    )
-    ma = sigs.select(F.col("sig").alias("sig_a"), F.col("key").alias("ka"))
-    mb = sigs.select(F.col("sig").alias("sig_b"), F.col("key").alias("kb"))
-    cross = (
-        gpairs.join(ma, "sig_a")
-        .join(mb, "sig_b")
-        .select(
-            F.least("ka", "kb").alias("a"),
-            F.greatest("ka", "kb").alias("b"),
-            "hamming",
-        )
-    )
-    return within.unionByName(cross)
+    # the sig VALUE is the group identity: the group pairs join the
+    # members on it, and two members of one group are hamming 0 apart
+    sigs = simhash_signatures(df, cfg, key_col, text_col)
+    members, reps = collapse_identical(sigs.withColumn("hamming", F.lit(0).cast("long")), "key")
+    gpairs = _simhash_group_pairs(reps.select("sig"), n_chunks, max_hamming, hot_chunk_cap)
+    gpairs = gpairs.select(F.col("sig_a").alias("a"), F.col("sig_b").alias("b"), "hamming")
+    return expand_identical(gpairs, members, "sig", "hamming", expand_salts)
 
 
 def simhash_dup_flags(

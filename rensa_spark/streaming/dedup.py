@@ -160,128 +160,3 @@ def sessionize_events(
         )
         .select("user_id", "session_start", "n_events", "value_cents")
     )
-
-
-def band_state_flag_rows(
-    stream_df: DataFrame,
-    cfg: RensaConfig,
-    key_col: str,
-    text_col: str,
-    max_members_per_bucket: int | None = None,
-) -> DataFrame:
-    """TRUE streaming-state continuous duplicate detection (round-3 verdict
-    ask #6): ``applyInPandasWithState`` keyed by the LSH band hash, each
-    group holding its bucket's (key, signature) members as managed state —
-    the shape SURVEY §2.6 names for the reference's continuous dedup
-    (src/inline_dedup/rminhash.rs:233-299) at streaming scale: state lives
-    in the state store (checkpointed, partitioned by band hash across
-    executors), NOT re-read from parquet per micro-batch like the
-    foreachBatch emulation (StreamingDeduplicator, which remains the
-    resume-friendly default).
-
-    Semantics: continuous flags VS EVERYTHING SEEN — an arriving row
-    conflicts in a bucket iff some EARLIER row (previous batch, or smaller
-    key within this batch) shares the bucket and its signature jaccard >=
-    cfg.threshold; every arrival is then admitted to the bucket. A row's
-    overall verdict is the OR of its bucket conflicts — reduce the returned
-    per-band rows with ``groupBy(key).agg(max(conflict))`` (kept as rows so
-    a single stateful operator suffices; chaining a second stateful
-    aggregation needs watermark plumbing the caller owns). This is the
-    flags/is_duplicate family (insert-all), NOT kept-set add-if-unique:
-    kept-only admission needs a per-key global decision before state
-    admission, which a band-partitioned stateful operator cannot learn
-    within the batch — that feedback is exactly what foreachBatch provides.
-
-    State per bucket rides as (keys, flattened sigs); ``num_perm`` slots
-    per signature. ``max_members_per_bucket`` optionally caps state growth
-    per bucket (oldest-first retention, the reference's row-order candidate
-    cap analogue; None = unbounded like the reference kept-set).
-
-    Returns per-band verdict rows (key, band_idx, conflict). Works on a
-    batch DataFrame too? No — applyInPandasWithState requires a streaming
-    DataFrame; equivalence vs the sequential oracle is pinned by
-    test_band_state_flags_matches_sequential (including a
-    checkpoint-restart crossing batches).
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    key_type = stream_df.schema[key_col].dataType.simpleString()
-    num_perm = cfg.num_perm
-    thr = cfg.threshold
-
-    def gen(batches):
-        import numpy as np
-
-        from rensa_spark.functions.udfs import _band_hash_matrix, rminhash_batch
-        from rensa_spark.operators.sketch import band_rows_frame
-
-        for pdf in batches:
-            sig = rminhash_batch(pdf[text_col], cfg)
-            bands = _band_hash_matrix(sig, cfg.num_bands, 1)
-            rows = band_rows_frame(pdf[key_col].values, bands)
-            rows["sig"] = list(np.repeat(sig.astype(np.int64), bands.shape[1], axis=0))
-            yield rows
-
-    band_rows = stream_df.select(key_col, text_col).mapInPandas(
-        gen, f"key {key_type}, band_idx int, band_hash long, sig array<long>"
-    )
-
-    def fn(group_key, pdf_iter, state: "GroupState"):
-        import numpy as np
-        import pandas as pd
-
-        if state.exists:
-            keys_st, flat_st = state.get
-            keys_st = list(keys_st)
-            sigs_st = np.asarray(flat_st, dtype=np.int64).reshape(-1, num_perm)
-        else:
-            keys_st, sigs_st = [], np.empty((0, num_perm), dtype=np.int64)
-
-        pdf = pd.concat(list(pdf_iter), ignore_index=True)
-        pdf = pdf.sort_values("key", kind="mergesort")
-        arr = np.stack([np.asarray(s, dtype=np.int64) for s in pdf["sig"]])
-        # vectorized sequential scan (round-4 verdict ask #6 — the per-row
-        # loop re-concatenated state + earlier rows per arrival): ONE
-        # arrivals-vs-(state + batch) equality count, then row i conflicts
-        # iff any column j < m + i clears the threshold — the column bound
-        # encodes "earlier row" exactly, so sequential semantics are
-        # unchanged (test_band_state_flags_matches_sequential). Row-chunked
-        # to bound the (chunk, m+n, num_perm) broadcast at ~64 MB.
-        n = arr.shape[0]
-        m = sigs_st.shape[0]
-        full = np.concatenate([sigs_st, arr], axis=0)
-        need = int(np.ceil(thr * num_perm - 1e-9))
-        cols = np.arange(m + n)
-        out_conf = np.empty(n, dtype=bool)
-        chunk = max(1, (1 << 26) // max((m + n) * num_perm, 1))
-        for lo in range(0, n, chunk):
-            hi = min(n, lo + chunk)
-            eq = (arr[lo:hi, None, :] == full[None, :, :]).sum(
-                axis=2, dtype=np.int32
-            )
-            mask = cols[None, :] < (np.arange(lo, hi)[:, None] + m)
-            out_conf[lo:hi] = ((eq >= need) & mask).any(axis=1)
-        out_conf = list(out_conf)
-        new_keys = keys_st + list(pdf["key"])
-        new_sigs = np.concatenate([sigs_st, arr], axis=0)
-        if max_members_per_bucket is not None and len(new_keys) > max_members_per_bucket:
-            # oldest-first retention: earliest members are the candidate
-            # anchors (reference row-order cap analogue) — keep the HEAD
-            new_keys = new_keys[:max_members_per_bucket]
-            new_sigs = new_sigs[:max_members_per_bucket]
-        state.update((new_keys, [int(v) for v in new_sigs.reshape(-1)]))
-        yield pd.DataFrame(
-            {
-                "key": pdf["key"].values,
-                "band_idx": pdf["band_idx"].values,
-                "conflict": out_conf,
-            }
-        )
-
-    return band_rows.groupBy("band_idx", "band_hash").applyInPandasWithState(
-        fn,
-        outputStructType=f"key {key_type}, band_idx int, conflict boolean",
-        stateStructType=f"keys array<{key_type}>, sigs array<long>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

@@ -128,6 +128,21 @@ def test_brute_force_topk_exact(spark, emb_df):
         assert sub.iloc[0]["neighbor_id"] == qid
 
 
+def test_brute_force_topk_breaks_ties_by_id(spark):
+    """Tied scores rank by neighbor_id ascending even when a batch holds
+    more tied rows than k in descending id order: each batch must keep the
+    rows the final ranking keeps."""
+    from rensa_spark.operators.similarity import brute_force_topk
+
+    vec = [0.5, -1.0, 2.0, 0.25]
+    df = spark.createDataFrame(
+        [(i, vec) for i in range(99, -1, -1)], "vec_id long, embedding array<float>"
+    ).coalesce(1)
+    queries = pd.DataFrame({"qid": [7], "vec": [vec]})
+    got = brute_force_topk(df, "vec_id", "embedding", queries, k=3).toPandas()
+    assert list(got.sort_values("rank")["neighbor_id"]) == [0, 1, 2]
+
+
 def test_hyperplane_bucket_topk_recall(spark, emb_df):
     from rensa_spark.operators.similarity import (
         brute_force_topk,
@@ -1678,16 +1693,28 @@ def _naive_bucket_pairs(spark, emb_df, min_cosine):
 def test_ann_near_dup_collapse_equals_naive(spark, emb_df):
     """The round-4 collapsed/sub-bucketed ann_near_dup_pairs is
     bit-identical to the naive bucket self-join when no bucket exceeds the
-    cap (the small-SF/oracle regime)."""
+    cap (the small-SF/oracle regime). The input also holds an
+    identical-vector group larger than ``expand_salts`` and a repeated zero
+    vector, and at ``min_cosine=0.0`` zero vectors pair."""
     from rensa_spark.operators.similarity import ann_near_dup_pairs
 
-    got = {
-        (r["a"], r["b"], r["cosine"])
-        for r in ann_near_dup_pairs(
-            emb_df, "vec_id", "embedding", min_cosine=0.3, n_planes=6, dim=64
-        ).collect()
-    }
-    assert got == _naive_bucket_pairs(spark, emb_df, 0.3)
+    rng = np.random.default_rng(16)
+    block = rng.normal(size=64).astype(np.float32).tolist()
+    extra = spark.createDataFrame(
+        [(1000 + i, block) for i in range(20)] + [(1100 + i, [0.0] * 64) for i in range(3)],
+        emb_df.select("vec_id", "embedding").schema,
+    )
+    df = emb_df.select("vec_id", "embedding").unionByName(extra)
+    for min_cosine in (0.3, 0.0):
+        got = {
+            (r["a"], r["b"], r["cosine"])
+            for r in ann_near_dup_pairs(
+                df, "vec_id", "embedding", min_cosine=min_cosine, n_planes=6, dim=64
+            ).collect()
+        }
+        want = _naive_bucket_pairs(spark, df, min_cosine)
+        assert (1000, 1019, 1.0) in want and ((1100, 1101, 0.0) in want) == (min_cosine <= 0)
+        assert got == want, min_cosine
 
 
 def test_ann_near_dup_hot_bucket_split(spark):

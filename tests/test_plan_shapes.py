@@ -215,22 +215,32 @@ def test_scan_lanes_score_in_one_map_in_pandas(spark):
         assert _walk_shuffle_keys(df) == [(group_keys, group_keys)], (name, plan)
 
 
-def test_multimodal_clusters_never_scan_bytes(image_table):
+def test_multimodal_clusters_never_scan_bytes(spark, image_table):
     """The multimodal dedup hot path reads only (image_id, caption, phash)
     even though the table carries pixel payloads (north rule / SURVEY §7
-    hard part 6). Asserted on the edge plan: the clusters operator runs CC
-    internally, so its returned plan no longer exposes a scan. The edge
-    plan is not lazy either: building it runs the caption collapse's
-    checkpoint job (the sketch), so the scans left to read here are the
-    phash side's, over the same (image_id, caption, phash) projection."""
+    hard part 6). Asserted on the edge plan (the clusters operator runs CC
+    internally, so its returned plan no longer exposes a scan) and on the
+    plans of the SQL executions that building it ran: the build runs the
+    caption collapse's checkpoint job, whose plan holds the sketch's scan.
+    Those plans are read from the SQL status store, which runs no job."""
     from rensa_spark.operators.dedup import multimodal_dedup_edges
 
-    plan = _formatted_plan(
-        multimodal_dedup_edges(image_table, CFG, "image_id", "caption", "phash")
+    sql = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        execs = sql.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    before = {e.executionId() for e in executions()}
+    edges = multimodal_dedup_edges(image_table, CFG, "image_id", "caption", "phash")
+    built = "\n".join(
+        e.physicalPlanDescription() for e in executions() if e.executionId() not in before
     )
-    scans = [l for l in plan.splitlines() if "ReadSchema" in l]
-    assert scans
-    for line in scans:
+    built_scans = [l for l in built.splitlines() if "ReadSchema" in l]
+    assert any("caption" in l for l in built_scans)  # the sketch's scan
+    edge_scans = [l for l in _formatted_plan(edges).splitlines() if "ReadSchema" in l]
+    for line in built_scans + edge_scans:
         assert "bytes" not in line, line
 
 
