@@ -63,7 +63,7 @@ def _flat_from_byte_series(series: pd.Series) -> tuple[np.ndarray, np.ndarray]:
     """Series of binary-token lists (array<binary> columns) -> (flat uint64
     fxhash64 hashes, offsets). Raw bytes are hashed exactly like the
     reference's bytes-token input path (src/py_input.rs:11-18 — PyBytes
-    tokens feed calculate_hash_fast unchanged; kernels/fxhash.py:189-222)."""
+    tokens feed calculate_hash_fast unchanged; kernels/fxhash.fxhash64)."""
     rows = len(series)
     all_tokens: list[bytes] = []
     lens = np.empty(rows, dtype=np.int64)

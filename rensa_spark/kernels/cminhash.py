@@ -16,60 +16,24 @@ from __future__ import annotations
 import numpy as np
 
 from rensa_spark.kernels.prng import cminhash_params, cminhash_pi_precomputed
+from rensa_spark.kernels.rminhash import slab_min
 
 U32 = np.uint32
 U64 = np.uint64
-U64_MAX = np.uint64(0xFFFFFFFFFFFFFFFF)
-
-# see kernels/rminhash.py — same sweep, same winner; the round-1 8<<20
-# setting was ~3.5x slower (64 MiB u64 slab thrashes every cache level)
-_SLAB_ELEMS = 1 << 16
 
 
 def cminhash_matrix64(
     flat_hashes: np.ndarray, offsets: np.ndarray, num_perm: int, seed: int
 ) -> np.ndarray:
-    """(rows, num_perm) uint64 C-MinHash signature matrix."""
+    """(rows, num_perm) uint64 C-MinHash signature matrix: the slab-min core
+    of kernels/rminhash.py over x = pi_c*sigma(h), slot k adding pi_pre[k]."""
     sigma_a, sigma_b, pi_c, pi_d = cminhash_params(seed)
     pi_pre = cminhash_pi_precomputed(num_perm, pi_c, pi_d)
-    offsets = np.asarray(offsets, dtype=np.int64)
-    flat = np.ascontiguousarray(flat_hashes, dtype=U64)
-    rows = len(offsets) - 1
-    out = np.full((rows, num_perm), U64_MAX, dtype=U64)
-    n = len(flat)
-    if rows == 0 or n == 0:
-        return out
 
-    rows_per_slab_tokens = max(_SLAB_ELEMS // max(num_perm, 1), 1)
-    row_start = 0
-    while row_start < rows:
-        row_end = row_start + 1
-        while (
-            row_end < rows
-            and offsets[row_end + 1] - offsets[row_start] <= rows_per_slab_tokens
-        ):
-            row_end += 1
-        t0, t1 = int(offsets[row_start]), int(offsets[row_end])
-        if t1 > t0:
-            h = flat[t0:t1]
-            # distinct-token pre-map (see rminhash.py): exact rewrite
-            uniq, inverse = np.unique(h, return_inverse=True)
-            use_premap = len(uniq) <= 0.7 * len(h)
-            hh = uniq if use_premap else h
-            with np.errstate(over="ignore"):
-                base = U64(pi_c) * (U64(sigma_a) * hh + U64(sigma_b))
-                values = base[:, None] + pi_pre[None, :]
-            if use_premap:
-                values = values[inverse]
-            seg = offsets[row_start : row_end + 1] - t0
-            starts = seg[:-1]
-            valid = seg[1:] > starts
-            # see rminhash.py: reduceat over non-empty rows only
-            mins = np.minimum.reduceat(values, starts[valid], axis=0)
-            slab = out[row_start:row_end]
-            slab[valid] = mins
-        row_start = row_end
-    return out
+    def pre(h: np.ndarray) -> np.ndarray:
+        return U64(pi_c) * (U64(sigma_a) * h + U64(sigma_b))
+
+    return slab_min(flat_hashes, offsets, pi_pre, pre=pre)
 
 
 def cminhash_digest32(sig64: np.ndarray) -> np.ndarray:

@@ -10,10 +10,12 @@ Reference: /root/reference/src/utils.rs
   ``rotl(state, 26)``.
 
 Vectorization strategy (no per-token Python in the hot path): tokens are
-grouped by byte length; for each distinct length the whole group is hashed as
-one (group, length) uint8 matrix with numpy uint64 arithmetic. The 128-bit
-product inside ``multiply_mix`` is decomposed into 32-bit limbs. The loop
-count per group is ceil(length/16), i.e. O(max_token_len), not O(n_tokens).
+(start, length) ranges of one byte buffer, grouped by the word positions
+``hash_bytes`` reads; each group's words come from one fancy index into
+unaligned little-endian u64/u32 views of the buffer, and the hash runs as
+numpy uint64 arithmetic. The 128-bit product inside ``multiply_mix`` is
+decomposed into 32-bit limbs. The loop count per group is ceil(length/16),
+i.e. O(max_token_len), not O(n_tokens).
 """
 
 from __future__ import annotations
@@ -30,9 +32,6 @@ ROTATE = 26  # utils.rs:11
 SEED1 = 0x243F6A8885A308D3  # utils.rs:15
 SEED2 = 0x13198A2E03707344  # utils.rs:16
 PREVENT_TRIVIAL_ZERO_COLLAPSE = 0xA4093822299F31D0  # utils.rs:17
-
-_POW8 = (np.uint64(256) ** np.arange(8, dtype=U64)).astype(U64)
-_POW4 = (np.uint64(256) ** np.arange(4, dtype=U64)).astype(U64)
 
 
 def _mul_hi_lo(x: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -55,48 +54,6 @@ def _multiply_mix(x: np.ndarray, y: np.ndarray) -> np.ndarray:
     return hi ^ lo
 
 
-def _read_u64_le(m: np.ndarray, off: int) -> np.ndarray:
-    """LE u64 from columns [off, off+8) of a (k, L) uint8 matrix."""
-    return (m[:, off : off + 8].astype(U64) * _POW8).sum(axis=1, dtype=U64)
-
-
-def _read_u32_le(m: np.ndarray, off: int) -> np.ndarray:
-    return (m[:, off : off + 4].astype(U64) * _POW4).sum(axis=1, dtype=U64)
-
-
-def _hash_bytes_fixed_len(m: np.ndarray) -> np.ndarray:
-    """hash_bytes (utils.rs:129-165) vectorized over a (k, L) uint8 matrix."""
-    k, length = m.shape
-    s0 = np.full(k, SEED1, dtype=U64)
-    s1 = np.full(k, SEED2, dtype=U64)
-    if length <= 16:
-        if length >= 8:
-            s0 ^= _read_u64_le(m, 0)
-            s1 ^= _read_u64_le(m, length - 8)
-        elif length >= 4:
-            s0 ^= _read_u32_le(m, 0)
-            s1 ^= _read_u32_le(m, length - 4)
-        elif length > 0:
-            lo = m[:, 0].astype(U64)
-            mid = m[:, length // 2].astype(U64)
-            hi = m[:, length - 1].astype(U64)
-            s0 ^= lo
-            s1 ^= (hi << U64(8)) | mid
-    else:
-        ptzc = U64(PREVENT_TRIVIAL_ZERO_COLLAPSE)
-        off = 0
-        while off < length - 16:
-            x = _read_u64_le(m, off)
-            y = _read_u64_le(m, off + 8)
-            t = _multiply_mix(s0 ^ x, ptzc ^ y)
-            s0 = s1
-            s1 = t
-            off += 16
-        s0 = s0 ^ _read_u64_le(m, length - 16)
-        s1 = s1 ^ _read_u64_le(m, length - 8)
-    return _multiply_mix(s0, s1) ^ U64(length)
-
-
 def _finalize(compressed: np.ndarray) -> np.ndarray:
     """calculate_hash_fast finalizer: rotl(compressed * K, 26) (utils.rs:168-178)."""
     with np.errstate(over="ignore"):
@@ -104,15 +61,11 @@ def _finalize(compressed: np.ndarray) -> np.ndarray:
     return (h << U64(ROTATE)) | (h >> U64(64 - ROTATE))
 
 
-def _gather_u64(buf: np.ndarray, pos: np.ndarray) -> np.ndarray:
-    """LE u64 at arbitrary byte offsets ``pos`` of a uint8 buffer."""
-    idx = pos[:, None] + np.arange(8, dtype=np.int64)[None, :]
-    return (buf[idx].astype(U64) * _POW8).sum(axis=1, dtype=U64)
-
-
-def _gather_u32(buf: np.ndarray, pos: np.ndarray) -> np.ndarray:
-    idx = pos[:, None] + np.arange(4, dtype=np.int64)[None, :]
-    return (buf[idx].astype(U64) * _POW4).sum(axis=1, dtype=U64)
+def _word_view(buf: np.ndarray, dtype: str) -> np.ndarray:
+    """``dtype`` words starting at every byte offset of a uint8 buffer: an
+    unaligned view with strides=(1,), so one fancy index reads them all."""
+    width = np.dtype(dtype).itemsize
+    return np.ndarray((max(len(buf) - width + 1, 0),), dtype=dtype, buffer=buf, strides=(1,))
 
 
 def fxhash64_ranges(buf: np.ndarray, starts: np.ndarray, lengths: np.ndarray) -> np.ndarray:
@@ -129,6 +82,9 @@ def fxhash64_ranges(buf: np.ndarray, starts: np.ndarray, lengths: np.ndarray) ->
     out = np.empty(n, dtype=U64)
     if n == 0:
         return out
+    buf = np.ascontiguousarray(buf, dtype=U8)
+    u64 = _word_view(buf, "<u8")
+    u32 = _word_view(buf, "<u4")
     starts = np.asarray(starts, dtype=np.int64)
     lengths = np.asarray(lengths, dtype=np.int64)
     len64 = lengths.astype(U64)
@@ -151,15 +107,15 @@ def fxhash64_ranges(buf: np.ndarray, starts: np.ndarray, lengths: np.ndarray) ->
     sel = (lengths >= 4) & (lengths <= 7)
     if sel.any():
         s, l = starts[sel], lengths[sel]
-        s0 = U64(SEED1) ^ _gather_u32(buf, s)
-        s1 = U64(SEED2) ^ _gather_u32(buf, s + l - 4)
+        s0 = U64(SEED1) ^ u32[s].astype(U64)
+        s1 = U64(SEED2) ^ u32[s + l - 4].astype(U64)
         out[sel] = _finalize(_multiply_mix(s0, s1) ^ len64[sel])
 
     sel = (lengths >= 8) & (lengths <= 16)
     if sel.any():
         s, l = starts[sel], lengths[sel]
-        s0 = U64(SEED1) ^ _gather_u64(buf, s)
-        s1 = U64(SEED2) ^ _gather_u64(buf, s + l - 8)
+        s0 = U64(SEED1) ^ u64[s]
+        s1 = U64(SEED2) ^ u64[s + l - 8]
         out[sel] = _finalize(_multiply_mix(s0, s1) ^ len64[sel])
 
     long_sel = lengths > 16
@@ -175,51 +131,21 @@ def fxhash64_ranges(buf: np.ndarray, starts: np.ndarray, lengths: np.ndarray) ->
             s1 = np.full(len(sub), SEED2, dtype=U64)
             for k in range(int(it)):
                 off = 16 * k
-                x = _gather_u64(buf, s + off)
-                y = _gather_u64(buf, s + off + 8)
-                t = _multiply_mix(s0 ^ x, ptzc ^ y)
+                t = _multiply_mix(s0 ^ u64[s + off], ptzc ^ u64[s + off + 8])
                 s0 = s1
                 s1 = t
-            s0 = s0 ^ _gather_u64(buf, s + l - 16)
-            s1 = s1 ^ _gather_u64(buf, s + l - 8)
+            s0 = s0 ^ u64[s + l - 16]
+            s1 = s1 ^ u64[s + l - 8]
             out[sub] = _finalize(_multiply_mix(s0, s1) ^ len64[sub])
     return out
 
 
 def fxhash64(tokens: Sequence[bytes]) -> np.ndarray:
-    """calculate_hash_fast over a batch of byte strings -> uint64[n].
-
-    Tokens are length-bucketed; each bucket is hashed fully vectorized.
-    """
-    n = len(tokens)
-    out = np.empty(n, dtype=U64)
-    if n == 0:
-        return out
-    lengths = np.fromiter((len(t) for t in tokens), dtype=np.int64, count=n)
-    total = int(lengths.sum())
-    if total == 0:
-        # len==0: hash_bytes = multiply_mix(SEED1, SEED2) ^ 0
-        empty = _finalize(
-            _multiply_mix(np.array([SEED1], dtype=U64), np.array([SEED2], dtype=U64))
-        )[0]
-        out.fill(empty)
-        return out
-    blob = b"".join(tokens)
-    buf = np.frombuffer(blob, dtype=U8)
-    ends = np.cumsum(lengths)
-    starts = ends - lengths
-    for length in np.unique(lengths):
-        sel = np.nonzero(lengths == length)[0]
-        if length == 0:
-            empty = _finalize(
-                _multiply_mix(np.array([SEED1], dtype=U64), np.array([SEED2], dtype=U64))
-            )[0]
-            out[sel] = empty
-            continue
-        idx = starts[sel][:, None] + np.arange(length, dtype=np.int64)[None, :]
-        m = buf[idx]
-        out[sel] = _finalize(_hash_bytes_fixed_len(m))
-    return out
+    """calculate_hash_fast over a batch of byte strings -> uint64[n]: the
+    tokens are joined into one buffer and hashed as its ranges."""
+    lengths = np.fromiter((len(t) for t in tokens), dtype=np.int64, count=len(tokens))
+    starts = np.cumsum(lengths) - lengths
+    return fxhash64_ranges(np.frombuffer(b"".join(tokens), dtype=U8), starts, lengths)
 
 
 def fxhash64_strs(tokens: Iterable[str]) -> np.ndarray:

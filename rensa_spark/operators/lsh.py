@@ -75,9 +75,14 @@ def one_shot_flags_from_bands(bands: DataFrame, keys: DataFrame) -> DataFrame:
     everything. Both aggregates combine map-side: a degenerate bucket (e.g.
     100k empty captions sharing every band hash) collapses to one
     (count, min) row per map partition before the shuffle — no member list,
-    no per-bucket sort, no straggler task anywhere (a window count puts
-    each bucket in one sort partition; a dup-bucket join-back variant
-    measured ~40% worse at 200k rows — it scans the band rows twice). Band
+    no window, no straggler task anywhere (a window count puts each bucket
+    in one sort partition; a dup-bucket join-back variant measured ~40%
+    worse at 200k rows — it scans the band rows twice). ``min`` over a
+    string key has no HashAggregate form, so Spark plans a SortAggregate
+    with a partition-local Sort on each side of this exchange: one over
+    each map partition's band rows, one over each reduce partition's
+    already-combined (count, min) rows. The second exchange, after the
+    union below, is fed by a map-side-combining HashAggregate. Band
     rows are consumed EXACTLY ONCE, so the upstream sketch UDF needs no
     checkpoint/persist.
 

@@ -47,6 +47,46 @@ def test_fxhash_utf8_strings():
     assert got.tolist() == want
 
 
+def _ranges_match_oracle(blob: bytes, spans: list[tuple[int, int]]) -> None:
+    starts = np.array([s for s, _ in spans], dtype=np.int64)
+    lengths = np.array([n for _, n in spans], dtype=np.int64)
+    got = kf.fxhash64_ranges(np.frombuffer(blob, dtype=np.uint8), starts, lengths)
+    assert got.tolist() == [oracle.fxhash64_py(blob[s : s + n]) for s, n in spans]
+
+
+def test_fxhash_ranges_token_at_blob_end():
+    """Each length class read through the unaligned word views, with its last
+    word ending at the blob's last byte."""
+    rng = random.Random(5)
+    blob = _rand_bytes(rng, 77)
+    _ranges_match_oracle(blob, [(77 - n, n) for n in BOUNDARY_LENGTHS if n <= 77])
+    _ranges_match_oracle(blob, [(0, 77), (1, 76), (60, 17), (61, 16), (69, 8), (70, 7), (73, 4), (74, 3)])
+
+
+def test_fxhash_ranges_blob_shorter_than_a_word():
+    for size in range(8):
+        blob = bytes(range(1, size + 1))
+        spans = [(s, n) for s in range(size + 1) for n in range(size - s + 1)]
+        _ranges_match_oracle(blob, spans)
+
+
+def test_fxhash_ranges_zero_length():
+    _ranges_match_oracle(b"", [(0, 0), (0, 0)])
+    _ranges_match_oracle(b"abcdefghijklmnopq", [(0, 0), (5, 0), (17, 0), (0, 17), (17, 0)])
+
+
+def test_fxhash_ranges_multibyte_utf8():
+    text = "naïve café ☃ 日本語テキスト 🦀🦀 ok"
+    blob = text.encode("utf-8")
+    spans, pos = [], 0
+    for word in text.split(" "):
+        n = len(word.encode("utf-8"))
+        spans.append((pos, n))
+        pos += n + 1
+    spans.append((0, len(blob)))
+    _ranges_match_oracle(blob, spans)
+
+
 def test_splitmix64_np_matches_scalar():
     rng = random.Random(7)
     vals = np.array([rng.getrandbits(64) for _ in range(1000)], dtype=np.uint64)
@@ -105,33 +145,103 @@ def test_rminhash_matrix_matches_oracle():
         assert got[i].tolist() == want, f"row {i}"
 
 
-def test_rminhash_matrix_chunking_invariance():
-    """Slab boundaries must not change results (reference analogue:
-    chunked pipeline == scalar, pipeline.rs:370-623). Interleaves empty rows
-    everywhere so that slabs end in empty rows for some slab size (regression:
-    trailing-empty-row slab corruption of the previous row's segment)."""
-    rng = random.Random(13)
-    base = _random_docs(rng, 30)
-    docs = []
-    for d in base:
-        docs.append(d)
-        docs.append([])  # empty after every doc
-    docs.append([])
-    a, b = rminhash_permutations(128, 42)
-    flat, offsets = _flat(docs)
-    want = [
-        oracle.rminhash_sig_py(d, [int(x) for x in a], [int(x) for x in b])
+def _repetitive_doc(rng: random.Random, n_tokens: int, n_distinct: int) -> list[int]:
+    """A row whose tokens repeat, so every chunk of it holds fewer distinct
+    tokens than tokens and the distinct-token premap has work to do."""
+    vocab = [rng.getrandbits(64) for _ in range(n_distinct)]
+    return [rng.choice(vocab) for _ in range(n_tokens)]
+
+
+def _both_oracles(docs: list[list[int]], num_perm: int):
+    """(R-MinHash u32, C-MinHash u64) oracle signatures of each doc at seed 42."""
+    a, b = rminhash_permutations(num_perm, 42)
+    al, bl = [int(x) for x in a], [int(x) for x in b]
+    sa, sb, pc, pd = cminhash_params(42)
+    return [
+        (oracle.rminhash_sig_py(d, al, bl), oracle.cminhash_sig64_py(d, sa, sb, pc, pd, num_perm))
         for d in docs
     ]
-    old = km._SLAB_ELEMS
+
+
+def _assert_both_match(docs: list[list[int]], num_perm: int, want, tag: str = "") -> None:
+    a, b = rminhash_permutations(num_perm, 42)
+    flat, offsets = _flat(docs)
+    got_r = km.rminhash_matrix(flat, offsets, a, b)
+    got_c = kc.cminhash_matrix64(flat, offsets, num_perm, 42)
+    for i, (want_r, want_c) in enumerate(want):
+        assert got_r[i].tolist() == want_r, f"{tag} R-MinHash row={i}"
+        assert got_c[i].tolist() == want_c, f"{tag} C-MinHash row={i}"
+
+
+def test_minhash_matrix_chunking_invariance():
+    """Slab boundaries must not change R- or C-MinHash results (reference
+    analogue: chunked pipeline == scalar, pipeline.rs:370-623). The rows hold
+    ~21k tokens, so the slab caps fall on both sides of numpy's 8,192-element
+    buffer; caps below a row's length send it through the chunked long-row
+    path. Empty rows sit everywhere, so that slabs end in empty rows for some
+    cap (regression: trailing-empty-row slab corruption of the previous
+    row's segment), and one repetitive row makes the distinct-token premap
+    fire wherever it is chunked. The work buffers hold from one slot per
+    block to all 64, and some cut the slots into a ragged last block."""
+    rng = random.Random(13)
+    docs = []
+    for d in _random_docs(rng, 450):
+        docs.append(d)
+        docs.append([])  # empty after every doc
+    rep = _repetitive_doc(rng, 3000, 20)
+    assert len(set(rep[:50])) < 50  # the premap shrinks even the smallest chunk
+    docs.insert(101, rep)
+    docs.append([])
+    assert sum(map(len, docs)) > 2 * 8193
+    want = _both_oracles(docs, 64)
+    old = km._SLAB_TOKENS, km._WORK_ELEMS
     try:
-        for slab in [256, 1024, 4096, 1 << 20]:
-            km._SLAB_ELEMS = slab
-            got = km.rminhash_matrix(flat, offsets, a, b)
-            for i in range(len(docs)):
-                assert got[i].tolist() == want[i], f"slab={slab} row={i}"
+        for slab, work in [
+            (1, 1 << 17),
+            (50, 1000),
+            (1000, 1),
+            (8191, 1 << 17),
+            (8193, 100_000),
+            (1 << 14, 1 << 17),
+            (1 << 20, 1 << 17),
+        ]:
+            km._SLAB_TOKENS, km._WORK_ELEMS = slab, work
+            _assert_both_match(docs, 64, want, f"slab={slab} work={work}")
     finally:
-        km._SLAB_ELEMS = old
+        km._SLAB_TOKENS, km._WORK_ELEMS = old
+
+
+def test_minhash_row_longer_than_slabs_matches_oracle():
+    """A row of three slabs plus one token, between short rows, through the
+    chunked long-row path at the production slab size; its tokens repeat, so
+    each chunk is premapped."""
+    rng = random.Random(19)
+    long_row = _repetitive_doc(rng, 3 * km._SLAB_TOKENS + 1, 500)
+    docs = [[rng.getrandbits(64) for _ in range(7)], long_row, [], [rng.getrandbits(64)]]
+    _assert_both_match(docs, 16, _both_oracles(docs, 16))
+
+
+def test_minhash_long_row_memory_is_bounded():
+    """A 400k-token row peaks under twice the work buffer, not at a
+    (tokens, num_perm) matrix of its own (~400 MiB at num_perm=128)."""
+    import tracemalloc
+
+    num_perm = 128
+    a, b = rminhash_permutations(num_perm, 42)
+    flat = np.random.default_rng(5).integers(0, 1 << 63, 400_000, dtype=np.uint64)
+    offsets = np.array([0, len(flat)], dtype=np.int64)
+    work_bytes = km._WORK_ELEMS * 8
+    for name, run in [
+        ("R-MinHash", lambda: km.rminhash_matrix(flat, offsets, a, b)),
+        ("C-MinHash", lambda: kc.cminhash_matrix64(flat, offsets, num_perm, 42)),
+    ]:
+        tracemalloc.start()
+        try:
+            run()
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < 2 * work_bytes, f"{name} peak {peak} B"
 
 
 def test_rminhash_empty_doc_is_all_max():

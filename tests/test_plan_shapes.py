@@ -37,10 +37,12 @@ def image_table(spark, tmp_path_factory):
 
 def test_flagship_plan_prunes_bytes_and_single_crossing(image_table):
     """dup_flags hot path, round-3 singleton-count shape: no image bytes at
-    any scan, exactly one Python crossing, exactly TWO exchanges (both fed
-    by map-side-combining HashAggregates), and NO window/sort/join anywhere
-    — the skew-proof replacement for the round-1 per-bucket window sort
-    (PLANS.md round-3 flagship audit)."""
+    any scan, exactly one Python crossing, exactly TWO exchanges (the first
+    fed by a map-side SortAggregate, since string ``min(key)`` has no
+    HashAggregate form, so a partition-local Sort sits on each side of it;
+    the second fed by a map-side HashAggregate), and NO window/join
+    anywhere — the skew-proof replacement for the round-1 per-bucket window
+    sort (PLANS.md round-3 flagship audit)."""
     from rensa_spark.operators.dedup import dup_flags
 
     plan = _formatted_plan(dup_flags(image_table, CFG, "image_id", "caption"))
